@@ -5,7 +5,8 @@ Runs every registered query at ``$SPARK_GRAFT_SF_DIR`` (default
 ``{"metric": ..., "value": total_sec, "unit": "sec", "queries": {...}, "sf": ...}``.
 
 Each query is fully materialized via the noop sink (plan executes end-to-end,
-nothing is collected to the driver — the 100 TB discipline even in a bench).
+nothing is collected to the driver — the 100 TB discipline even in a bench),
+one ``measure.run_pass`` per query per pass.
 """
 
 from __future__ import annotations
@@ -14,11 +15,11 @@ import json
 import os
 import re
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import __spark_entry__ as entrymod
+from sqlserver2pgsql_spark.measure import run_pass
 from sqlserver2pgsql_spark.session import get_spark
 
 
@@ -31,38 +32,22 @@ def main() -> None:
     # warm the JVM + parquet footers so per-query numbers measure the queries
     spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet")).count()
 
-    def release_leftover_blocks() -> None:
-        """Unpersist storage blocks leaked by already-finished queries.
+    #: per-query (jobs, stages) of every measured warm pass
+    counts: dict[str, list[tuple[int, int]]] = {}
 
-        Python refcounting frees each query's DataFrames as soon as its
-        noop write returns, but their localCheckpoint BLOCKS stay in the
-        executor block manager until a JVM GC lets the ContextCleaner's
-        reference queue see the dead RDDs — across 400 queries x 5 passes
-        that accretes gigabytes of storage and later queries measure
-        memory pressure instead of their plans (profiled: the same query
-        ran 2-4x slower late in a 40-query session than fresh; a forced
-        System.gc() per pass measured WORSE — the cleanup flood runs
-        inside the next timed pass). No result caching is involved: only
-        blocks of queries that already finished are dropped, every timed
-        query still computes from the parquet inputs.
-        """
-        for jrdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-            jrdd.unpersist(False)
-
-    def run_all() -> dict[str, float]:
+    def run_all(record: bool = False) -> dict[str, float]:
         timings: dict[str, float] = {}
         for name, fn in sorted(entrymod.queries().items()):
-            release_leftover_blocks()
-            t0 = time.time()
             try:
-                fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-                timings[name] = round(time.time() - t0, 3)
+                p = run_pass(spark, fn, sf_dir, name)
             except Exception as e:  # noqa: BLE001
                 print(f"bench: {name} failed: {e}", file=sys.stderr)
                 timings[name] = -1.0
+                continue
+            timings[name] = round(p.wall_s, 3)
+            if record:
+                counts.setdefault(name, []).append((p.jobs, p.stages))
         return timings
-
-    import gc
 
     cold = run_all()  # pass 1: includes JVM/codegen compilation
     # pass 2: DISCARDED settling pass. One cold pass is not enough to reach
@@ -71,25 +56,28 @@ def main() -> None:
     # recorded monotonically decreasing warm passes (q254: 8.64/5.09/2.07s;
     # the median reported warm-up, not the plan — VERDICT r5 #2). Burn one
     # full pass so the 3 measured passes start from steady state.
-    gc.collect()
     warmup = run_all()
     # passes 3-5: steady state. Report the per-query MEDIAN of 3 warm passes
     # so a single sandbox-contended run can't distort the round signal
     # (round-2 lesson: one contended pass recorded q21 at 19.4s vs 1.2s real).
     warm_passes = []
     for _ in range(3):
-        # release unreachable DataFrames' lazy localCheckpoint RDDs between
-        # passes — Python GC latency otherwise accretes executor storage
-        # across 131 queries x 4 passes and later passes measure memory
-        # pressure, not the queries (warm > cold observed without this)
-        gc.collect()
-        warm_passes.append(run_all())
+        warm_passes.append(run_all(record=True))
 
     def median3(name: str) -> float:
         vals = sorted(p[name] for p in warm_passes)
         return vals[1]
 
     warm = {name: median3(name) for name in warm_passes[0]}
+    # jobs/stages of each query's measured passes (median): a plan or loop
+    # regression shows up here without any timing
+    warm_counts = {
+        name: {
+            "jobs": sorted(j for j, _ in c)[len(c) // 2],
+            "stages": sorted(s for _, s in c)[len(c) // 2],
+        }
+        for name, c in sorted(counts.items())
+    }
     total = round(sum(v for v in warm.values() if v >= 0), 3)
     cold_total = round(sum(v for v in cold.values() if v >= 0), 3)
     # min-of-warm: jitter-free floor for round-over-round comparison — a
@@ -128,6 +116,7 @@ def main() -> None:
                 "warm_median": warm,
                 "warm_min": min_warm,
                 "warm_passes": warm_passes,
+                "warm_counts": warm_counts,
                 "failed": failed,
                 "sf": sf,
             },

@@ -3,13 +3,14 @@
 The driver benches at sf0.1, where the suite is overhead-bound (8-core
 total == 32-core total in r6) — data-path wins are invisible there. This
 probe rebuilds the sf directory at Nx scale by replicating every parquet
-table with key-domain-consistent id shifts (the same trick as
-scale_probe.py, but materialized to parquet so the UNMODIFIED registered
-queries run against it via their normal sf_dir argument), then times each
-requested query at 1x and Nx.
+table with key-domain-consistent id shifts, materialized to parquet so the
+UNMODIFIED registered queries run against it via their normal sf_dir
+argument, then times each requested query at 1x and Nx through
+``measure.run_pass``.
 
 Reported per query: wall at 1x and Nx (median of --passes warm passes
-after one discarded), the Nx/1x ratio, and the per-row ratio
+after one discarded) with the median pass's Spark job count, the Nx/1x
+ratio, and the per-row ratio
 (ratio / N) — a per-row ratio ≫ 1 means the query's cost grows
 super-linearly in data volume and it becomes a next-round target
 (quadratic pair cores, unguarded windows); ≪ 1 means the query is still
@@ -43,6 +44,7 @@ sys.path.insert(0, REPO)
 from pyspark.sql import functions as F  # noqa: E402
 
 import __spark_entry__ as entrymod  # noqa: E402
+from sqlserver2pgsql_spark.measure import run_pass  # noqa: E402
 from sqlserver2pgsql_spark.session import get_spark  # noqa: E402
 
 #: per-table (column -> stride) id shifts; strides exceed every sf0.1 key
@@ -126,11 +128,11 @@ def main() -> None:
     ap.add_argument("queries", nargs="+")
     args = ap.parse_args()
 
-    spark = get_spark("scale_query_probe")
     qs = entrymod.queries()
     unknown = [q for q in args.queries if q not in qs]
     if unknown:
         sys.exit(f"unknown queries: {unknown}")
+    spark = get_spark("scale_query_probe")
 
     big_dir = tempfile.mkdtemp(prefix="spark_graft_scaleq_")
     results: dict[str, dict] = {}
@@ -144,18 +146,11 @@ def main() -> None:
             fn = qs[name]
             row: dict = {}
             for label, d in (("1x", args.sf), (f"{args.replicas}x", big_dir)):
-                times = []
-                for i in range(args.passes + 1):
-                    spark.sparkContext.setJobDescription(
-                        f"scaleq {name} {label} pass {i}"
-                    )
-                    t0 = time.time()
-                    fn(spark, d).write.format("noop").mode(
-                        "overwrite"
-                    ).save()
-                    times.append(time.time() - t0)
-                warm = sorted(times[1:])
-                row[label] = round(warm[len(warm) // 2], 3)
+                passes = [run_pass(spark, fn, d, name) for _ in range(args.passes + 1)]
+                warm = sorted(passes[1:], key=lambda p: p.wall_s)
+                med = warm[len(warm) // 2]
+                row[label] = round(med.wall_s, 3)
+                row[f"{label}_jobs"] = med.jobs
             ratio = row[f"{args.replicas}x"] / max(row["1x"], 1e-9)
             row["ratio"] = round(ratio, 2)
             row["per_row_ratio"] = round(ratio / args.replicas, 3)
@@ -163,7 +158,8 @@ def main() -> None:
             print(
                 f"{name:38s} 1x={row['1x']:7.2f}s {args.replicas}x="
                 f"{row[f'{args.replicas}x']:8.2f}s ratio={row['ratio']:6.2f}"
-                f" per-row={row['per_row_ratio']:5.2f}",
+                f" per-row={row['per_row_ratio']:5.2f}"
+                f" jobs={row['1x_jobs']}/{row[f'{args.replicas}x_jobs']}",
                 flush=True,
             )
     finally:

@@ -10,8 +10,8 @@ call site), task count and shuffle read/write — and the GAPS between stages
 Usage:
     python scripts/stage_profile.py [--sf SF_DIR] [--passes N] query [query ...]
 
-``--passes N`` runs one warmup pass plus N measured passes (N+1 total);
-the report covers the LAST pass only.
+``--passes N`` runs one warmup pass plus N measured passes (N+1 total),
+each through ``measure.run_pass``; the report covers the LAST pass only.
 """
 
 from __future__ import annotations
@@ -21,37 +21,15 @@ import glob
 import json
 import os
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+import __spark_entry__ as entrymod  # noqa: E402
+from sqlserver2pgsql_spark.measure import run_pass  # noqa: E402
+from sqlserver2pgsql_spark.session import get_spark  # noqa: E402
+
 EVDIR = "/tmp/spark_graft_eventlog"
-
-
-def get_spark_with_eventlog():
-    import os as _os
-
-    from pyspark.sql import SparkSession
-
-    cpus = int(_os.environ.get("SPARK_GRAFT_CPUS", _os.cpu_count() or 8))
-    _os.makedirs(EVDIR, exist_ok=True)
-    return (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("stage_profile")
-        .config("spark.sql.shuffle.partitions", str(cpus))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", _os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.parquet.int96RebaseModeInRead", "CORRECTED")
-        .config("spark.eventLog.enabled", "true")
-        .config("spark.eventLog.dir", EVDIR)
-        .getOrCreate()
-    )
 
 
 def _open_eventlog(path: str):
@@ -127,31 +105,20 @@ def main() -> None:
     ap.add_argument("queries", nargs="+")
     args = ap.parse_args()
 
-    import gc
-
-    spark = get_spark_with_eventlog()
+    os.makedirs(EVDIR, exist_ok=True)
+    spark = get_spark(
+        "stage_profile",
+        {"spark.eventLog.enabled": "true", "spark.eventLog.dir": EVDIR},
+    )
     sc = spark.sparkContext
-    import __spark_entry__ as entrymod
-
     spark.read.parquet(os.path.join(args.sf, "lineitem.parquet")).count()
     qs = entrymod.queries()
     app_id = sc.applicationId
 
     for name in args.queries:
         fn = qs[name]
-        windows = []
-        for i in range(args.passes + 1):
-            gc.collect()
-            for jrdd in sc._jsc.getPersistentRDDs().values():
-                jrdd.unpersist(False)
-            sc.setJobDescription(f"{name} pass {i}")
-            t0 = time.time()
-            tb0 = time.time()
-            df = fn(spark, args.sf)
-            build = time.time() - tb0
-            df.write.format("noop").mode("overwrite").save()
-            dt = time.time() - t0
-            windows.append((t0 * 1000, time.time() * 1000, dt, build))
+        for _ in range(args.passes + 1):
+            last = run_pass(spark, fn, args.sf, name)
 
         # flush the event log
         sc._jsc.sc().listenerBus().waitUntilEmpty()
@@ -161,7 +128,9 @@ def main() -> None:
         path = max(logs, key=os.path.getmtime)
 
         # report the LAST pass (steady state)
-        t_lo, t_hi, wall, build = windows[-1]
+        wall, build = last.wall_s, last.build_s
+        t_lo = last.started * 1000
+        t_hi = t_lo + wall * 1000
         stages = parse_eventlog(path, t_lo, t_hi)
         stage_sum = sum(s["ms"] for s in stages) / 1000.0
         # serialized (gap) view: time not covered by any stage = driver/AQE
@@ -178,7 +147,7 @@ def main() -> None:
                 cursor = hi
         gaps = max(0.0, (t_hi - t_lo - covered) / 1000.0)
         print(f"\n=== {name}: wall={wall:.2f}s build={build:.2f}s "
-              f"stages={len(stages)} stage_wall_sum={stage_sum:.2f}s "
+              f"jobs={last.jobs} stages={len(stages)} stage_wall_sum={stage_sum:.2f}s "
               f"uncovered(driver/AQE gaps)={gaps:.2f}s ===")
         for s in sorted(stages, key=lambda s: -s["ms"])[: args.top]:
             nm = s["name"].split("\n")[0][:80]

@@ -14,10 +14,18 @@ CLUSTER. Two interchangeable engines, same output contract
 
 Scale shape (both): every iteration is a bounded number of shuffles over
 the EDGE list (≪ corpus for near-dup graphs), sized explicitly via
-``repartition`` on the loop inputs — no session-global conf writes, so
-concurrent queries on a shared session are unaffected. The only
-driver-side values are per-iteration scalar counts. Lineage is truncated
-every iteration via localCheckpoint so plans don't grow unboundedly.
+``repartition`` on the loop inputs. The only driver-side values are
+per-iteration scalar counts. Lineage is truncated every iteration via
+localCheckpoint so plans don't grow unboundedly.
+
+SESSION-EXCLUSIVE while ``connected_components`` loops: its driver
+actions run with ``spark.sql.adaptive.enabled`` switched off in the
+SESSION conf (``_no_aqe``) — Spark has no per-query override for it. The
+conf is set for the (synchronous) loop and restored in ``finally``; a
+query started concurrently on the same session mid-loop runs without
+AQE, and two overlapping loops can race on the save/restore, so don't
+share the session with concurrent work during the call. The other loops
+in this module write no session conf.
 
 Loop-shape discipline (r7, guide §2.4/§5): ``localCheckpoint`` erases
 outputPartitioning (the checkpointed frame scans as an ExistingRDD with
@@ -59,10 +67,6 @@ def _no_aqe(df: DataFrame):
         yield
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", old)
-
-#: rounds executed by the most recent call of each engine (scale-probe
-#: introspection only — not part of the operator contract)
-LAST_ROUNDS: dict[str, int] = {}
 
 
 def _edge_partitions(n_edges: int) -> int:
@@ -128,7 +132,6 @@ def connected_components(
         .localCheckpoint(eager=False)
     )
     labels = nodes.select("node", F.col("node").alias("cluster_id"))
-    LAST_ROUNDS["minlabel"] = 0
 
     def _step(sym_p: DataFrame, lbl: DataFrame) -> DataFrame:
         """One min-label step over ``lbl`` (node, cluster_id, __old).
@@ -172,7 +175,6 @@ def connected_components(
                 "node", "cluster_id", F.col("cluster_id").alias("__old")
             ).repartition(n_part, "node")
             for _half in range(2):
-                LAST_ROUNDS["minlabel"] += 1
                 cur = _step(sym_p, cur)
             cur = cur.localCheckpoint(eager=False)
             changed = cur.filter(F.col("cluster_id") != F.col("__old")).count()
@@ -192,7 +194,7 @@ def connected_components_star(
     """Alternating large-star/small-star CC (Kiveris et al., SOCC'14) —
     the high-diameter scale path. Same output contract as
     ``connected_components``; also returns the number of alternation
-    rounds executed (for the scale probe's round-count comparison).
+    rounds executed.
 
     large-star: every node hooks its LARGER neighbors onto the minimum of
     its closed neighborhood. small-star: every node hooks its smaller-or-
@@ -285,7 +287,6 @@ def connected_components_star(
     )
     children = cur.select(F.col("u").alias("node"), F.col("v").alias("cluster_id"))
     labels = children.unionByName(roots).distinct()
-    LAST_ROUNDS["star"] = rounds
     return labels, rounds
 
 

@@ -22,6 +22,7 @@ from .operators.bloom import bloom_build, bloom_probe
 from .operators.graph import pagerank_fixed_point
 from .operators.scd import cdc_apply_latest, scd2_history
 from .queries import DEC, _t, register
+from .sources.tables import spread
 
 # ---------------------------------------------------------------------------
 # Migration/sync history operators (the reference's incremental-mode domain)
@@ -4166,12 +4167,12 @@ def q156_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     order-free, so the replica means are bit-identical to the previous
     formulation."""
     ev = _t(spark, sf_dir, "events")
-    pts = ev.select(
-        "event_id", F.floor(F.col("value") * 100 + 0.5).cast("long").alias("cents")
     # the md5 stage is CPU-bound; spread the narrow (id, cents) rows across
     # cores up front — the events parquet is a handful of input splits, and
     # AQE's small-bytes coalescing would otherwise keep the hash loop on one
-    ).repartition(spark.sparkContext.defaultParallelism)
+    pts = spread(ev.select(
+        "event_id", F.floor(F.col("value") * 100 + 0.5).cast("long").alias("cents")
+    ))
     # one md5 yields EIGHT 16-bit draws (4 hex chars each): 8x fewer hash
     # evaluations than md5-per-(event, replica) — the hash is the hot loop
     chunks = pts.select(
@@ -5230,13 +5231,12 @@ def q168_char_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     # docs shorter than 2 chars have no bigram: the filter mirrors the
     # oracle's empty range(1, len) for len < 2 (Spark's sequence() would
     # otherwise run DESCENDING for len-1 < 1 and fabricate grams)
+    # the corpus parquet is a handful of input splits; without a spread the
+    # per-doc folds all land on one task (an explicit width is also exempt
+    # from AQE's small-bytes coalescing, which would fold this CPU-bound
+    # stage back to one partition)
     stats = (
-        d.filter(F.length("text") >= 2)
-        # the corpus parquet is a handful of input splits; without a spread
-        # the per-doc folds all land on one task. Explicit width = executor
-        # cores (cluster-adaptive, exempt from AQE's small-bytes coalescing
-        # which would fold this CPU-bound stage back to one partition).
-        .repartition(spark.sparkContext.defaultParallelism)
+        spread(d.filter(F.length("text") >= 2))
         .select(
             "doc_id",
             F.expr(
@@ -8123,8 +8123,6 @@ def q209_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     span hash (count-distinct-docs), one hash join back, one doc window
     — no suffix array, no global sort; the span table is ~|tokens| rows,
     linear in corpus size."""
-    from .sources.tables import spread
-
     # span hashing is the hot loop and the documents scan is one split —
     # spread the narrow (id, text) rows before the tokenize + explode
     d = spread(_t(spark, sf_dir, "documents").select("doc_id", "text")).select(
@@ -11661,7 +11659,10 @@ def q250_knn_loo_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # product <= 2^42 and a 64-term sum <= 2^48 — exact in BIGINT at any
     # corpus size (unlike q246's corpus-sized Gram sums, which need
     # DECIMAL). Long arithmetic keeps the hot inner loop out of BigDecimal.
-    norms = fx.select(
+    # spread the corpus across cores BEFORE the checkpoint: the embeddings
+    # parquet is one split, and the 400k-pair dot-product crossJoin below
+    # otherwise inherits that single partition for its whole hot loop
+    norms = spread(fx.select(
         "vec_id",
         "label",
         "fx",
@@ -11670,12 +11671,7 @@ def q250_knn_loo_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(0).cast("long"),
             lambda acc, x: acc + x,
         ).alias("n2"),
-    # spread the corpus across cores BEFORE the checkpoint: the embeddings
-    # parquet is one split, and the 400k-pair dot-product crossJoin below
-    # otherwise inherits that single partition for its whole hot loop
-    ).repartition(
-        spark.sparkContext.defaultParallelism
-    ).localCheckpoint(eager=False)  # query side + corpus side
+    )).localCheckpoint(eager=False)  # query side + corpus side
     q = norms.filter(F.col("vec_id") % 10 == 0).select(
         F.col("vec_id").alias("qid"),
         F.col("label").alias("q_label"),
@@ -14006,8 +14002,8 @@ def q276_revenue_recognition(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan shape: lineitem is pre-aggregated to max(shipdate) per order BEFORE
     the orders join (the corpus-sized exchange carries only (key, date)
     pairs and collapses map-side), and the join is pinned shuffled-hash with
-    the aggregate as the streamed side, so the join output KEEPS
-    hash(orderkey) partitioning. The month explode preserves that
+    the aggregate as the build side (orders is streamed), so the join output
+    KEEPS hash(orderkey) partitioning. The month explode preserves that
     partitioning, so both per-order windows ride it — the pre-rework plan
     exchanged the fully exploded frame (~31 months/order, 4.6 M rows at
     sf0.1) just to re-cluster it by the key it was generated under. An

@@ -23,7 +23,11 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
 
-def get_spark(app_name: str = "sqlserver2pgsql_spark") -> SparkSession:
+def get_spark(
+    app_name: str = "sqlserver2pgsql_spark", conf: dict[str, str] | None = None
+) -> SparkSession:
+    """This engine's local session; ``conf`` adds settings on top (e.g. the
+    event log a stage profile reads)."""
     cpus = default_parallelism()
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
@@ -40,6 +44,8 @@ def get_spark(app_name: str = "sqlserver2pgsql_spark") -> SparkSession:
         .config("spark.sql.warehouse.dir", os.environ.get("SPARK_GRAFT_WAREHOUSE", "/tmp/spark_graft_warehouse"))
         .config("spark.driver.extraJavaOptions", "-Dderby.system.home=/tmp/spark_graft_derby")
     )
+    for key, value in (conf or {}).items():
+        builder = builder.config(key, value)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

@@ -11,14 +11,15 @@ when fixed; VERDICT r5 #5). The shape contract is lazy checkpoints on the
 RAW aggregate + broadcast node-sized sides, so the whole loop rides a
 near-constant number of jobs.
 
-This test runs each query end-to-end under a dedicated job group and pins
-the TOTAL job count. Budgets are measured-current + small headroom (job
+This test runs each query end-to-end through ``measure.run_pass`` (its own
+job group, so build-time loop actions count too) and pins the TOTAL job
+count. Budgets are measured-current + small headroom (job
 scheduling has ±1 jitter from broadcast-job timing); an eager-checkpoint
 regression adds at least one job per checkpointed iteration (+4 on q358's
 every-4th-iterate cadence, +iterations elsewhere), which blows the pin.
-Re-pin by running the query under a job group and counting
-``statusTracker().getJobIdsForGroup(group)`` — and only after confirming
-the new jobs are not per-iteration barriers.
+Re-pin from ``run_pass(...).jobs`` (``scripts/profile_query.py`` prints
+it) — and only after confirming the new jobs are not per-iteration
+barriers.
 """
 
 from __future__ import annotations
@@ -26,6 +27,7 @@ from __future__ import annotations
 import sqlserver2pgsql_spark.queries_r4  # noqa: F401 — fills the registry
 import sqlserver2pgsql_spark.queries_r5  # noqa: F401 — fills the registry
 import sqlserver2pgsql_spark.queries_r6  # noqa: F401 — fills the registry
+from sqlserver2pgsql_spark.measure import run_pass
 from sqlserver2pgsql_spark.queries import QUERIES
 from tests.conftest import SF_DIR
 
@@ -65,18 +67,9 @@ JOB_BUDGETS = [
 
 
 def test_loop_query_job_budgets(spark):
-    sc = spark.sparkContext
     over = []
     for name, budget in JOB_BUDGETS:
-        group = f"job-budget-{name}"
-        sc.setJobGroup(group, name)
-        try:
-            QUERIES[name](spark, SF_DIR).write.format("noop").mode(
-                "overwrite"
-            ).save()
-        finally:
-            sc.setJobGroup("job-budget-idle", "idle")
-        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        jobs = run_pass(spark, QUERIES[name], SF_DIR, name).jobs
         assert jobs > 0, f"{name}: job-group tracking recorded nothing"
         if jobs > budget:
             over.append((name, jobs, budget))
