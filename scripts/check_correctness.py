@@ -16,29 +16,13 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-import duckdb
-import pandas as pd
-
 import __spark_entry__ as entrymod
+from sqlserver2pgsql_spark import compare
 from sqlserver2pgsql_spark.session import get_spark
-from sqlserver2pgsql_spark.sources.tables import TABLE_NAMES
 
-
-def _normalize(df: pd.DataFrame) -> pd.DataFrame:
-    df = df.reindex(sorted(df.columns), axis=1)
-    for c in df.columns:
-        if str(df[c].dtype).startswith("datetime64"):
-            dt = df[c]
-            if getattr(dt.dt, "tz", None) is not None:
-                dt = dt.dt.tz_convert("UTC").dt.tz_localize(None)
-            df[c] = dt.astype("datetime64[ns]")
-        # NOTE: deliberately NO Decimal→float coercion here. The driver's hash
-        # is representation-sensitive: Spark toPandas renders DECIMAL as
-        # decimal.Decimal objects while DuckDB fetchdf renders DECIMAL/HUGEINT
-        # as float64 — coercing would mask exactly the mismatch the driver
-        # fails on (round-1 lesson). Queries must emit DOUBLE/BIGINT finals.
-    df = df.sort_values(by=list(df.columns), kind="mergesort", ignore_index=True)
-    return df
+#: ``perfbench/workloads.py`` loads this script by file path and normalizes
+#: its query-check results with this
+_normalize = compare.normalize
 
 
 def main() -> int:
@@ -46,11 +30,7 @@ def main() -> int:
     only = set(sys.argv[2:])
 
     spark = get_spark("check_correctness")
-    con = duckdb.connect()
-    for t in TABLE_NAMES:
-        con.execute(
-            f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-        )
+    con = compare.duck_views(sf_dir)
 
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
@@ -76,40 +56,12 @@ def main() -> int:
             print(f"FAIL  {name}: oracle error: {e}")
             failures.append(name)
             continue
-        s, o = _normalize(sdf), _normalize(odf)
-        if list(s.columns) != list(o.columns):
-            print(f"FAIL  {name}: columns {list(s.columns)} != {list(o.columns)}")
+        err = compare.mismatch(sdf, odf)
+        if err:
+            print(f"FAIL  {name}: {err}")
             failures.append(name)
-            continue
-        # Driver-hash parity: float-vs-int dtype divergence is exactly the
-        # class the driver's representation-sensitive hash fails on (DuckDB
-        # HUGEINT -> pandas float64 vs Spark int64 — VERDICT r4 #1), and
-        # `check_dtype=False` below is blind to it. Datetime-resolution and
-        # integer-width divergence are driver-proven safe; float-vs-int is not.
-        mixed = [
-            c for c in s.columns
-            if (pd.api.types.is_float_dtype(s[c]) and pd.api.types.is_integer_dtype(o[c]))
-            or (pd.api.types.is_integer_dtype(s[c]) and pd.api.types.is_float_dtype(o[c]))
-        ]
-        if mixed:
-            print(
-                f"FAIL  {name}: float-vs-int dtype divergence on {mixed} "
-                f"(spark {[str(s[c].dtype) for c in mixed]} vs "
-                f"oracle {[str(o[c].dtype) for c in mixed]}) — the driver's "
-                f"hash will mismatch even if values are equal"
-            )
-            failures.append(name)
-            continue
-        if len(s) != len(o):
-            print(f"FAIL  {name}: rowcount {len(s)} != {len(o)}")
-            failures.append(name)
-            continue
-        try:
-            pd.testing.assert_frame_equal(s, o, check_dtype=False, check_exact=True)
-            print(f"ok    {name}: {len(s)} rows exact-match ({time.time()-t0:.1f}s)")
-        except AssertionError as e:
-            print(f"FAIL  {name}: value mismatch:\n{str(e)[:2000]}")
-            failures.append(name)
+        else:
+            print(f"ok    {name}: {len(sdf)} rows exact-match ({time.time()-t0:.1f}s)")
 
     print(f"\n{ran - len(failures)}/{ran} passed ({len(qs)} registered)")
     return 1 if failures or ran == 0 else 0

@@ -1,19 +1,9 @@
 """Static Spark-vs-DuckDB output-type parity scan for every registered query.
 
-The driver's value hash is representation-sensitive: DuckDB ``fetchdf``
-renders HUGEINT and DECIMAL as float64 and integer division as DOUBLE,
-while Spark ``toPandas`` keeps int64 / decimal.Decimal — so a float-vs-int
-(or decimal) divergence fails the driver even when every value is equal
-(VERDICT r4 #1; q252's ``n / 2`` was an 8th carrier the HUGEINT-only scan
-missed). This scan needs no row execution on the SQL side (DuckDB bind
-types) and only plan construction on the Spark side (df.schema — streaming
-queries do execute their small sf0.001 replay during construction).
-
-Flags per query:
-  * column-set mismatch between the two engines
-  * float-vs-int divergence on a shared column (either direction)
-  * DECIMAL in either engine's OUTPUT (Spark -> decimal.Decimal objects,
-    DuckDB -> float64: never hash-compatible; cast finals to DOUBLE/BIGINT)
+Applies ``compare.type_problems`` (column-set drift, float-vs-int, DECIMAL
+on either side, any HUGEINT oracle column) to each query with an oracle.
+No rows run: DuckDB bind types on the SQL side, ``df.dtypes`` on the Spark
+side (streaming queries do replay their small input while they build).
 
 Usage:  python scripts/lint_type_parity.py [sf_dir] [query ...]
 """
@@ -26,64 +16,26 @@ import sys
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-import duckdb
-
-SPARK_INT = {"tinyint", "smallint", "int", "bigint"}
-SPARK_FLOAT = {"float", "double"}
-DUCK_INT = {"TINYINT", "SMALLINT", "INTEGER", "BIGINT", "HUGEINT",
-            "UTINYINT", "USMALLINT", "UINTEGER", "UBIGINT", "UHUGEINT"}
-DUCK_FLOAT = {"FLOAT", "DOUBLE", "REAL"}
-
-
-def classify_spark(t: str) -> str:
-    t = t.lower()
-    if t in SPARK_INT:
-        return "int"
-    if t in SPARK_FLOAT:
-        return "float"
-    if t.startswith("decimal"):
-        return "decimal"
-    return "other"
-
-
-def classify_duck(t: str) -> str:
-    t = t.upper()
-    if t in DUCK_INT:
-        return "int"
-    if t in DUCK_FLOAT:
-        return "float"
-    if t.startswith("DECIMAL"):
-        return "decimal"
-    return "other"
-
 
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     only = set(sys.argv[2:])
 
     import __spark_entry__ as entrymod
+    from sqlserver2pgsql_spark.compare import bind_types, duck_views, type_problems
     from sqlserver2pgsql_spark.session import get_spark
-    from sqlserver2pgsql_spark.sources.tables import TABLE_NAMES
 
     spark = get_spark("lint_type_parity")
-    con = duckdb.connect()
-    for t in TABLE_NAMES:
-        con.execute(
-            f"CREATE OR REPLACE VIEW {t} AS "
-            f"SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-        )
+    con = duck_views(sf_dir)
 
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
     bad: list[str] = []
     checked = 0
     for name in sorted(qs):
-        if only and name not in only:
-            continue
-        if name not in oracles:
+        if (only and name not in only) or name not in oracles:
             continue
         checked += 1
-        problems: list[str] = []
         try:
             sdt = dict(qs[name](spark, sf_dir).dtypes)
         except Exception as e:  # noqa: BLE001
@@ -91,28 +43,12 @@ def main() -> int:
             bad.append(name)
             continue
         try:
-            rel = con.sql(oracles[name])
-            odt = dict(zip(rel.columns, (str(t) for t in rel.types)))
+            odt = bind_types(con, oracles[name])
         except Exception as e:  # noqa: BLE001
             print(f"FAIL  {name}: oracle bind error: {e}")
             bad.append(name)
             continue
-        if set(sdt) != set(odt):
-            problems.append(
-                f"column sets differ: spark-only {sorted(set(sdt) - set(odt))}, "
-                f"oracle-only {sorted(set(odt) - set(sdt))}"
-            )
-        for c in sorted(set(sdt) & set(odt)):
-            ks, ko = classify_spark(sdt[c]), classify_duck(odt[c])
-            if {ks, ko} == {"int", "float"}:
-                problems.append(
-                    f"{c}: float-vs-int (spark {sdt[c]} vs oracle {odt[c]})"
-                )
-            elif "decimal" in (ks, ko):
-                problems.append(
-                    f"{c}: DECIMAL output (spark {sdt[c]} vs oracle {odt[c]}) "
-                    f"— cast finals to DOUBLE/BIGINT"
-                )
+        problems = type_problems(odt, sdt)
         if problems:
             print(f"FAIL  {name}: " + "; ".join(problems))
             bad.append(name)

@@ -12,8 +12,6 @@ Usage: python scripts/plan_audit_report.py [sf_dir] [out_md]
 
 from __future__ import annotations
 
-import contextlib
-import io
 import os
 import re
 import sys
@@ -23,6 +21,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 import __spark_entry__ as entrymod
+from sqlserver2pgsql_spark.measure import plan_text
 from sqlserver2pgsql_spark.session import get_spark
 
 #: queries that drive a stream or iterate with driver-side loop control —
@@ -60,11 +59,7 @@ def main() -> None:
             rows.append((name, None))
             continue
         try:
-            df = fn(spark, sf_dir)
-            buf = io.StringIO()
-            with contextlib.redirect_stdout(buf):
-                df.explain("formatted")
-            rows.append((name, audit(buf.getvalue())))
+            rows.append((name, audit(plan_text(fn(spark, sf_dir)))))
         except Exception as e:  # noqa: BLE001
             rows.append((name, {"error": str(e)[:80]}))
 

@@ -15,8 +15,6 @@ Usage:
 from __future__ import annotations
 
 import argparse
-import contextlib
-import io
 import os
 import sys
 
@@ -24,7 +22,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 import __spark_entry__ as entrymod  # noqa: E402
-from sqlserver2pgsql_spark.measure import run_pass  # noqa: E402
+from sqlserver2pgsql_spark.measure import plan_text, run_pass  # noqa: E402
 from sqlserver2pgsql_spark.session import get_spark  # noqa: E402
 
 
@@ -47,11 +45,8 @@ def main() -> None:
         fn = qs[name]
         if args.explain_dir:
             os.makedirs(args.explain_dir, exist_ok=True)
-            buf = io.StringIO()
-            with contextlib.redirect_stdout(buf):
-                fn(spark, args.sf).explain("formatted")
             with open(os.path.join(args.explain_dir, f"{name}.txt"), "w") as fh:
-                fh.write(buf.getvalue())
+                fh.write(plan_text(fn(spark, args.sf)))
         cold, *warm = [run_pass(spark, fn, args.sf, name) for _ in range(args.passes + 1)]
         med = sorted(warm, key=lambda p: p.wall_s)[len(warm) // 2]
         total_build += med.build_s

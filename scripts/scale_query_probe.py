@@ -23,6 +23,15 @@ preserve the dedup structure (documents stride divisible by 20 keeps the
 near/exact-dup classes; event stride divisible by 37000 keeps q227's
 chunking and corruption pattern).
 
+Two queries do not scale the way their names suggest:
+  * q379_dbscan_grid: embeddings are replicated by shifting ``vec_id``
+    only, so every vector lands in the same grid cell as its copies and
+    the cells get N times denser at Nx. Its per-row ratio measures that
+    quadratic replica artifact, not the operator.
+  * q169_pointer_doubling: ``user_id`` is shifted per replica, so Nx
+    adds N times as many chains of the same length; the chain depth, and
+    with it the loop's round count, does not grow with N.
+
 Usage:
     python scripts/scale_query_probe.py [--replicas N] [--sf SF_DIR]
         [--out JSON] [--passes N] query [query ...]

@@ -8,11 +8,14 @@ Spark jobs here), then write it to the noop sink (the plan executes end
 to end, nothing is collected to the driver). The whole pass runs under
 its own job group, so ``statusTracker`` attributes every Spark job and
 stage it launched — build-time loop actions included — to that pass.
+``plan_text`` is the one way a plan is read as text for counting.
 """
 
 from __future__ import annotations
 
+import contextlib
 import gc
+import io
 import time
 import uuid
 from typing import Callable, NamedTuple
@@ -55,6 +58,15 @@ def release_blocks(spark: SparkSession) -> None:
     gc.collect()
     for jrdd in spark.sparkContext._jsc.getPersistentRDDs().values():
         jrdd.unpersist(False)
+
+
+def plan_text(df: DataFrame) -> str:
+    """``df.explain("formatted")`` as text: the plan the audits, shuffle
+    budgets and ``--explain-dir`` dumps read."""
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain("formatted")
+    return buf.getvalue()
 
 
 def run_pass(

@@ -14,6 +14,8 @@ import os
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import from_arrow_schema
 
 TABLE_NAMES = (
     "region",
@@ -55,9 +57,10 @@ _RELATIONS: dict[tuple[str, str, str], tuple[SparkSession, DataFrame]] = {}
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Parquet scan. TIMESTAMP(NANOS) columns (which Spark rejects,
-    PARQUET_TYPE_ILLEGAL) are read as nanosecond longs and truncated to
-    microsecond timestamps — lossless for micro-aligned data, and integer
-    `div` keeps the conversion exact beyond 2^53."""
+    PARQUET_TYPE_ILLEGAL) are read as nanosecond longs through an explicit
+    schema — no session conf is written — and truncated to microsecond
+    timestamps: lossless for micro-aligned data, and integer `div` keeps
+    the conversion exact beyond 2^53."""
     key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir), name)
     hit = _RELATIONS.get(key)
     if hit is not None and hit[0] is spark:
@@ -67,8 +70,12 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if not nanos:
         df = spark.read.parquet(path)
     else:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(path)
+        # every other column keeps its inferred type; inference reads a
+        # tz-less timestamp as timestamp_ntz, hence prefer_timestamp_ntz
+        schema = from_arrow_schema(pq.read_schema(path), prefer_timestamp_ntz=True)
+        df = spark.read.schema(T.StructType([
+            T.StructField(f.name, T.LongType()) if f.name in nanos else f for f in schema
+        ])).parquet(path)
         for c in nanos:
             df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
     _RELATIONS[key] = (spark, df)

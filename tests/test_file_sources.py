@@ -3,12 +3,10 @@ parquet sink + reader-side partition pruning (the §4 physical technique)."""
 
 from __future__ import annotations
 
-import contextlib
-import io
-
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from sqlserver2pgsql_spark.measure import plan_text
 from sqlserver2pgsql_spark.sources.files import (
     read_csv,
     read_jsonl,
@@ -57,10 +55,7 @@ def test_partitioned_write_prunes_on_read(spark, tmp_path):
     write_partitioned(ev, out, ["event_type"], sort_cols=["event_id"])
 
     back = spark.read.parquet(out).filter(F.col("event_type") == "click")
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        back.explain("formatted")
-    plan = buf.getvalue()
+    plan = plan_text(back)
     # the filter must become a PartitionFilter on the directory layout, not
     # a post-scan Filter over all partitions
     assert "PartitionFilters" in plan
@@ -81,10 +76,7 @@ def test_orc_roundtrip_and_pushdown(spark, tmp_path):
     assert back.count() == 100
     assert sorted(r.id for r in back.collect()) == list(range(100))
     # predicate pushdown reaches the ORC scan
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        back.filter(F.col("id") > 50).select("id").explain("formatted")
-    plan = buf.getvalue()
+    plan = plan_text(back.filter(F.col("id") > 50).select("id"))
     assert "PushedFilters" in plan and "id" in plan.split("PushedFilters")[1][:120]
 
 
@@ -156,3 +148,32 @@ def test_fixed_width_empty_numeric_is_null_not_quarantined(spark, tmp_path):
     rows = {r.id: r.amount for r in good.collect()}
     assert rows == {1: None, 2: 3.14}
     assert quarantine.count() == 0
+
+
+def test_load_table_reads_nanos_without_session_conf(spark, tmp_path):
+    """A TIMESTAMP(NANOS) column loads truncated to microseconds through an
+    explicit schema: the other columns keep their inferred types and the
+    session conf is the same before and after."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from sqlserver2pgsql_spark.sources.tables import load_table
+
+    tbl = pa.table({
+        "t_ns": pa.array([1_600_000_000_123_456_789, -1_999], pa.timestamp("ns")),
+        "t_us": pa.array([1_700_000_000_000_001, 5], pa.timestamp("us")),
+        "s": ["a", None],
+    })
+    pq.write_table(tbl, str(tmp_path / "nanos.parquet"))
+    pq.write_table(tbl.drop(["t_ns"]), str(tmp_path / "rest.parquet"))
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    before = spark.conf.get(key, None)
+
+    df = load_table(spark, str(tmp_path), "nanos")
+
+    assert spark.conf.get(key, None) == before
+    inferred = dict(spark.read.parquet(str(tmp_path / "rest.parquet")).dtypes)
+    assert {c: t for c, t in df.dtypes if c != "t_ns"} == inferred
+    got = df.select(F.unix_micros("t_ns").alias("us")).collect()
+    # `div` truncates toward zero: -1999 ns -> -1 us
+    assert sorted(r.us for r in got) == [-1, 1_600_000_000_123_456]

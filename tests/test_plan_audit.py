@@ -7,21 +7,12 @@ from __future__ import annotations
 
 from sqlserver2pgsql_spark import queries as Q
 from sqlserver2pgsql_spark import queries_llm as QL
+from sqlserver2pgsql_spark.measure import plan_text
 from tests.conftest import SF_DIR
 
 
-def _plan(df) -> str:
-    import contextlib
-    import io
-
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    return buf.getvalue()
-
-
 def test_q01_filter_pushdown_and_pruning(spark):
-    plan = _plan(Q.q01_pricing_summary(spark, SF_DIR))
+    plan = plan_text(Q.q01_pricing_summary(spark, SF_DIR))
     assert "PushedFilters" in plan and "l_shipdate" in plan.split("PushedFilters")[1][:200]
     read_schema = plan.split("ReadSchema")[1][:400]
     assert "l_quantity" in read_schema
@@ -31,35 +22,35 @@ def test_q01_filter_pushdown_and_pruning(spark):
 
 
 def test_q02_broadcasts_small_dims(spark):
-    plan = _plan(Q.q02_segment_revenue(spark, SF_DIR))
+    plan = plan_text(Q.q02_segment_revenue(spark, SF_DIR))
     assert "BroadcastHashJoin" in plan
 
 
 def test_q04_semi_join_strategy(spark):
-    plan = _plan(Q.q04_orders_with_big_lineitems_semi(spark, SF_DIR))
+    plan = plan_text(Q.q04_orders_with_big_lineitems_semi(spark, SF_DIR))
     assert "LeftSemi" in plan
     # quantity filter pushed into the lineitem scan
     assert "l_quantity" in plan.split("PushedFilters")[1][:300]
 
 
 def test_q11_topk_is_take_ordered(spark):
-    plan = _plan(Q.q11_topk_orders(spark, SF_DIR))
+    plan = plan_text(Q.q11_topk_orders(spark, SF_DIR))
     assert "TakeOrderedAndProject" in plan  # no global sort for LIMIT k
 
 
 def test_q06_diff_single_join_no_presort(spark):
-    plan = _plan(Q.q06_incremental_diff(spark, SF_DIR))
+    plan = plan_text(Q.q06_incremental_diff(spark, SF_DIR))
     # one full-outer join; no Kettle-style pre-sort operators feeding it
     assert plan.count("SortMergeJoin FullOuter") + plan.count("ShuffledHashJoin FullOuter") == 1
 
 
 def test_q14_fk_validation_broadcast_anti(spark):
-    plan = _plan(Q.q14_fk_validation(spark, SF_DIR))
+    plan = plan_text(Q.q14_fk_validation(spark, SF_DIR))
     assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
 
 
 def test_q21_ann_broadcasts_queries(spark):
-    plan = _plan(QL.q21_ann_bruteforce_topk(spark, SF_DIR))
+    plan = plan_text(QL.q21_ann_bruteforce_topk(spark, SF_DIR))
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
     assert "CartesianProduct" not in plan  # corpus must not shuffle
 
@@ -94,7 +85,7 @@ def test_bucketed_join_avoids_shuffle(spark, tmp_path_factory):
             spark.table("b_orders"),
             F.col("l_orderkey") == F.col("o_orderkey"),
         )
-        plan = _plan(joined)
+        plan = plan_text(joined)
         assert "SortMergeJoin" in plan
         assert "Exchange hashpartitioning" not in plan, plan  # no shuffle: co-located buckets
         assert "Bucketed: true" in plan
@@ -113,14 +104,14 @@ def test_source_cap_uses_window_group_limit(spark):
     from sqlserver2pgsql_spark.sources.tables import load_table
 
     d = load_table(spark, SF_DIR, "documents").select("source", "doc_id")
-    plan = _plan(stratified_cap(d, "source", "doc_id", cap=10))
+    plan = plan_text(stratified_cap(d, "source", "doc_id", cap=10))
     assert "WindowGroupLimit" in plan, plan
 
 
 def test_q53_tfidf_window_group_limit_no_python(spark):
     """tf-idf top-k must compile the rnk<=k filter to WindowGroupLimit and
     stay entirely JVM-side."""
-    plan = _plan(QL.q53_tfidf_top_terms(spark, SF_DIR))
+    plan = plan_text(QL.q53_tfidf_top_terms(spark, SF_DIR))
     assert "WindowGroupLimit" in plan, plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
@@ -135,14 +126,14 @@ def test_q54_sample_is_shuffle_free(spark):
     from sqlserver2pgsql_spark.sources.tables import load_table
 
     d = load_table(spark, SF_DIR, "documents").select("doc_id", "source")
-    plan = _plan(stratified_sample(d, "source", "doc_id", F.lit(50)))
+    plan = plan_text(stratified_sample(d, "source", "doc_id", F.lit(50)))
     assert "Exchange" not in plan, plan
 
 
 def test_q56_decontamination_broadcasts_benchmark(spark):
     """The benchmark shingle set must broadcast — the training side never
     shuffles for the join."""
-    plan = _plan(QL.q56_decontaminate(spark, SF_DIR))
+    plan = plan_text(QL.q56_decontaminate(spark, SF_DIR))
     assert "BroadcastHashJoin" in plan, plan
 
 
@@ -150,6 +141,6 @@ def test_q60_rollup_broadcasts_grid(spark):
     """Gap-fill broadcasts the bounded agg side (BuildRight of the left-outer
     join — the preserved left side can't broadcast); the only full-data
     exchange is the rollup aggregation's."""
-    plan = _plan(QL.q60_hypertable_rollup(spark, SF_DIR))
+    plan = plan_text(QL.q60_hypertable_rollup(spark, SF_DIR))
     assert "BroadcastHashJoin" in plan, plan
     assert "BuildRight" in plan, plan

@@ -5,22 +5,18 @@ shows up as a bench regression. Counts mirror scripts/plan_audit_report.py."""
 
 from __future__ import annotations
 
-import contextlib
-import io
 import re
 
 import sqlserver2pgsql_spark.queries_r4  # noqa: F401 — fills the registry
 import sqlserver2pgsql_spark.queries_r5  # noqa: F401 — fills the registry
 import sqlserver2pgsql_spark.queries_r6  # noqa: F401 — fills the registry
+from sqlserver2pgsql_spark.measure import plan_text
 from sqlserver2pgsql_spark.queries import QUERIES
 from tests.conftest import SF_DIR
 
 
 def _counts(df) -> dict[str, int]:
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    plan = buf.getvalue()
+    plan = plan_text(df)
     return {
         "shuffles": len(re.findall(r"Arguments: (?:hash|range)partitioning", plan)),
         "python": len(re.findall(r"\b(?:Batch|Arrow)EvalPython\b", plan)),

@@ -6,6 +6,7 @@ from __future__ import annotations
 import pytest
 
 import __spark_entry__ as entrymod
+from sqlserver2pgsql_spark.compare import bind_types, type_problems
 from tests.conftest import SF_DIR, assert_matches_oracle
 
 _QUERIES = entrymod.queries()
@@ -34,16 +35,11 @@ def test_entry_smoke(spark):
 
 @pytest.mark.parametrize("name", sorted(_ORACLES))
 def test_oracle_no_hugeint(name, duck):
-    """No oracle may yield a DuckDB HUGEINT/UHUGEINT column: fetchdf renders
-    those as float64 while Spark emits int64, and the driver's representation-
-    sensitive hash fails on the dtype alone (VERDICT r4 #1 — q61/q85/q96 red,
-    q113/q118/q119/q127 latent). Cheap bind-only check, no Spark, no fetch."""
-    rel = duck.sql(_ORACLES[name])
-    bad = [
-        c for c, t in zip(rel.columns, rel.types)
-        if str(t).upper() in {"HUGEINT", "UHUGEINT"}
-    ]
-    assert not bad, (
-        f"{name}: HUGEINT column(s) {bad} — wrap the final integer "
-        f"aggregate in CAST(... AS BIGINT)"
-    )
+    """No oracle may yield a DuckDB HUGEINT/UHUGEINT (or DECIMAL) column:
+    fetchdf renders those as float64 while Spark emits int64, and the
+    driver's representation-sensitive hash fails on the dtype alone
+    (VERDICT r4 #1 — q61/q85/q96 red, q113/q118/q119/q127 latent). Cheap
+    bind-only check of the oracle side of the shared type rule, no Spark,
+    no fetch."""
+    problems = type_problems(bind_types(duck, _ORACLES[name]))
+    assert not problems, f"{name}: " + "; ".join(problems)

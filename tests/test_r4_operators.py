@@ -4,23 +4,14 @@ physical-plan audits for the new queries."""
 
 from __future__ import annotations
 
-import contextlib
-import io
-
 from pyspark.sql import functions as F
 
 from sqlserver2pgsql_spark import queries_r4 as QR
+from sqlserver2pgsql_spark.measure import plan_text
 from sqlserver2pgsql_spark.operators.bloom import bloom_build, bloom_probe
 from sqlserver2pgsql_spark.operators.graph import PR_SCALE, pagerank_fixed_point
 from sqlserver2pgsql_spark.operators.scd import cdc_apply_latest, scd2_history
 from tests.conftest import SF_DIR
-
-
-def _plan(df) -> str:
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    return buf.getvalue()
 
 
 # --- SCD2 / CDC -------------------------------------------------------------
@@ -147,29 +138,29 @@ def test_minhash_join_matches_exact_jaccard(spark, duck):
 
 
 def test_q99_broadcasts_unigram_vocab(spark):
-    plan = _plan(QR.q99_pmi_collocations(spark, SF_DIR))
+    plan = plan_text(QR.q99_pmi_collocations(spark, SF_DIR))
     assert "BroadcastHashJoin" in plan
     assert "TakeOrderedAndProject" in plan  # top-100, no global sort
 
 
 def test_q103_broadcasts_centroids(spark):
-    plan = _plan(QR.q103_kmeans_assign(spark, SF_DIR))
+    plan = plan_text(QR.q103_kmeans_assign(spark, SF_DIR))
     assert "BroadcastHashJoin" in plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
 def test_q105_bloom_probe_is_broadcast_semi(spark):
-    plan = _plan(QR.q105_bloom_decontaminate(spark, SF_DIR))
+    plan = plan_text(QR.q105_bloom_decontaminate(spark, SF_DIR))
     assert "BroadcastHashJoin" in plan and "LeftSemi" in plan
 
 
 def test_q106_histogram_single_agg_no_join(spark):
-    plan = _plan(QR.q106_price_histogram(spark, SF_DIR))
+    plan = plan_text(QR.q106_price_histogram(spark, SF_DIR))
     assert "Join" not in plan
     read_schema = plan.split("ReadSchema")[1][:200]
     assert "o_totalprice" in read_schema and "o_custkey" not in read_schema
 
 
 def test_q97_single_window_shuffle(spark):
-    plan = _plan(QR.q97_scd2_history(spark, SF_DIR))
+    plan = plan_text(QR.q97_scd2_history(spark, SF_DIR))
     assert "Join" not in plan  # pure window pipeline

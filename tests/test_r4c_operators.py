@@ -12,6 +12,7 @@ import random
 from pyspark.sql import functions as F
 
 import __spark_entry__ as entrymod
+from sqlserver2pgsql_spark.measure import plan_text
 from tests.conftest import SF_DIR
 
 # --- q163: reciprocal-rank fusion -------------------------------------------
@@ -276,15 +277,12 @@ def test_last_touch_attribution_boundaries(spark):
 
 
 def test_tpch_shapes_keep_dims_broadcast(spark):
-    import contextlib, io, re
+    import re
 
     for name in ("q171_local_supplier_volume", "q172_returned_item_ranking",
                  "q173_large_volume_customer"):
         df = entrymod.queries()[name](spark, SF_DIR)
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            df.explain("formatted")
-        plan = buf.getvalue()
+        plan = plan_text(df)
         assert not re.search(r"\bSortMergeJoin\b", plan), name
         assert re.search(r"\bBroadcastHashJoin\b", plan), name
 
@@ -476,14 +474,11 @@ def test_compaction_plan_bins_capped_and_complete(spark):
 
 
 def test_tpch_q6_and_q14_shapes_zero_shuffle(spark):
-    import contextlib, io, re
+    import re
 
     for name in ("q183_forecast_revenue_change", "q185_promo_revenue_share"):
         df = entrymod.queries()[name](spark, SF_DIR)
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            df.explain("formatted")
-        plan = buf.getvalue()
+        plan = plan_text(df)
         assert not re.search(r"Arguments: (?:hash|range)partitioning", plan), name
         assert "PushedFilters" in plan, name
 

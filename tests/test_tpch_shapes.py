@@ -6,23 +6,14 @@ compilation of IN subqueries, and zero Python evaluation anywhere."""
 from __future__ import annotations
 
 from sqlserver2pgsql_spark import queries_r4 as QR
+from sqlserver2pgsql_spark.measure import plan_text
 from tests.conftest import SF_DIR
-
-
-def _plan(df) -> str:
-    import contextlib
-    import io
-
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    return buf.getvalue()
 
 
 def test_q196_min_cost_join_back_broadcasts(spark):
     """Q2 shape: the per-part min joins back via broadcast; dims broadcast;
     no window over the eligible set."""
-    plan = _plan(QR.q196_min_cost_supplier(spark, SF_DIR))
+    plan = plan_text(QR.q196_min_cost_supplier(spark, SF_DIR))
     assert "BroadcastHashJoin" in plan, plan
     assert "Window" not in plan, plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
@@ -31,7 +22,7 @@ def test_q196_min_cost_join_back_broadcasts(spark):
 def test_q197_market_share_single_big_shuffle(spark):
     """Q8 shape: every dimension broadcasts — the only SortMergeJoin/
     ShuffledHashJoin permitted is lineitem->orders."""
-    plan = _plan(QR.q197_national_market_share(spark, SF_DIR))
+    plan = plan_text(QR.q197_national_market_share(spark, SF_DIR))
     n_shuffle_joins = plan.count("SortMergeJoin") + plan.count("ShuffledHashJoin")
     assert n_shuffle_joins <= 1, plan
     assert plan.count("BroadcastHashJoin") >= 5, plan
@@ -40,7 +31,7 @@ def test_q197_market_share_single_big_shuffle(spark):
 def test_q203_disjunction_stays_hash_join(spark):
     """Q19 shape: the OR-of-ANDs must ride the partkey equi-join as a
     residual — never a nested-loop fallback."""
-    plan = _plan(QR.q203_disjunctive_revenue(spark, SF_DIR))
+    plan = plan_text(QR.q203_disjunctive_revenue(spark, SF_DIR))
     assert "BroadcastNestedLoopJoin" not in plan, plan
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastHashJoin" in plan, plan
@@ -55,7 +46,7 @@ def test_q203_disjunction_stays_hash_join(spark):
 def test_q204_in_subquery_compiles_to_semi(spark):
     """Q20 shape: the supplier IN (...) chain compiles to LEFT SEMI, and
     the PROMO part filter pushes into the part scan."""
-    plan = _plan(QR.q204_part_promotion_suppliers(spark, SF_DIR))
+    plan = plan_text(QR.q204_part_promotion_suppliers(spark, SF_DIR))
     assert "LeftSemi" in plan, plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
@@ -87,7 +78,7 @@ def test_q200_left_join_preserves_zero_customers(spark, tmp_path):
 def test_q201_scalar_max_is_broadcast(spark):
     """Q15 shape: the scalar max joins via a 1-row broadcast, and the tie
     comparison happens in DECIMAL space (no double equality)."""
-    plan = _plan(QR.q201_top_supplier(spark, SF_DIR))
+    plan = plan_text(QR.q201_top_supplier(spark, SF_DIR))
     assert "Broadcast" in plan, plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
@@ -95,9 +86,6 @@ def test_q201_scalar_max_is_broadcast(spark):
 def test_q210_orc_filter_pushdown(spark, tmp_path):
     """The ORC read-back path must push the date predicate into the ORC
     scan (stripe-statistics pruning at scale)."""
-    import contextlib
-    import io
-
     from pyspark.sql import functions as F
     from sqlserver2pgsql_spark.sources.tables import load_table
 
@@ -105,10 +93,7 @@ def test_q210_orc_filter_pushdown(spark, tmp_path):
     out = str(tmp_path / "orc")
     li.write.orc(out)
     back = spark.read.orc(out).filter(F.col("l_shipdate") >= "1997-01-01")
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        back.explain("formatted")
-    plan = buf.getvalue()
+    plan = plan_text(back)
     assert "PushedFilters" in plan and "l_shipdate" in plan.split("PushedFilters")[1][:200], plan
 
 
@@ -152,9 +137,6 @@ def test_runtime_bloom_filter_join_injection(spark):
     input at 100 TB. Local fixtures sit under the default 10 GB
     application-side threshold, so the test lowers it to prove the
     session supports the rewrite; production keeps the default."""
-    import contextlib
-    import io
-
     from pyspark.sql import functions as F
     from sqlserver2pgsql_spark.sources.tables import load_table
 
@@ -181,10 +163,8 @@ def test_runtime_bloom_filter_join_injection(spark):
             .groupBy("o_orderstatus")
             .count()
         )
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            j.explain("formatted")
-        assert "might_contain" in buf.getvalue().lower(), buf.getvalue()[:2000]
+        plan = plan_text(j)
+        assert "might_contain" in plan.lower(), plan[:2000]
     finally:
         for k, v in saved.items():
             if v is None:
@@ -201,9 +181,6 @@ def test_aqe_skew_join_split(spark):
     handles skew discovered mid-job, salting handles skew known upfront.
     Thresholds are lowered so fixture-scale bytes trigger the detector;
     production keeps the defaults."""
-    import contextlib
-    import io
-
     from pyspark.sql import functions as F
 
     keys = (
@@ -229,10 +206,8 @@ def test_aqe_skew_join_split(spark):
         )
         j = left.join(right, "k").groupBy().agg(F.count(F.lit(1)).alias("n"))
         j.collect()  # AQE marks skew only in the EXECUTED plan
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            j.explain("formatted")
-        assert "skew=true" in buf.getvalue(), buf.getvalue()[:2000]
+        plan = plan_text(j)
+        assert "skew=true" in plan, plan[:2000]
     finally:
         for k, v in saved.items():
             if v is None:
