@@ -23,11 +23,12 @@ preserve the dedup structure (documents stride divisible by 20 keeps the
 near/exact-dup classes; event stride divisible by 37000 keeps q227's
 chunking and corruption pattern).
 
-Two queries do not scale the way their names suggest:
-  * q379_dbscan_grid: embeddings are replicated by shifting ``vec_id``
-    only, so every vector lands in the same grid cell as its copies and
-    the cells get N times denser at Nx. Its per-row ratio measures that
-    quadratic replica artifact, not the operator.
+Embeddings shift the first ``embedding`` coordinate by ``replica *
+EMBEDDING_STRIDE`` as well as ``vec_id``, so each replica lands in its own
+region of the coordinate space: q379_dbscan_grid's grid cells keep their
+1x density and its ratio measures the operator, not N-fold denser cells.
+
+One query does not scale the way its name suggests:
   * q169_pointer_doubling: ``user_id`` is shifted per replica, so Nx
     adds N times as many chains of the same length; the chain depth, and
     with it the loop's round count, does not grow with N.
@@ -80,6 +81,10 @@ SHIFTS = {
     "embeddings": {"vec_id": 1_000_000},
 }
 
+#: per-replica shift of the first embedding coordinate; the fixture
+#: coordinates lie within (-1, 1), so replicas never share a grid cell
+EMBEDDING_STRIDE = 10.0
+
 
 def replicate_dir(spark, sf_dir: str, out_dir: str, replicas: int) -> None:
     for table, shifts in SHIFTS.items():
@@ -110,6 +115,15 @@ def replicate_dir(spark, sf_dir: str, out_dir: str, replicas: int) -> None:
                             lambda t: F.concat(tag, t),
                         ),
                         " ",
+                    ),
+                )
+            if table == "embeddings":
+                first = F.element_at("embedding", 1) + F.col("__r") * EMBEDDING_STRIDE
+                rep = rep.withColumn(
+                    "embedding",
+                    F.concat(
+                        F.array(first.cast("float")),
+                        F.slice("embedding", 2, F.size("embedding") - 1),
                     ),
                 )
             rep = rep.drop("__r")

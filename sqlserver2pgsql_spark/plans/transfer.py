@@ -12,7 +12,12 @@ orchestrator is driver-side Python:
 - hooks = the init/teardown SQL slots (A13; cast install / trigger disable
   have no Spark-side meaning, but sinks may need session SQL).
 - metrics mirror kettle_report.pl (B20): per-table duration + rows/sec,
-  sorted by duration descending.
+  sorted by duration descending. Like kettle_report's step log, the row
+  count comes from the write itself (a ``DataFrame.observe`` on the
+  written frame), not from reading the target back.
+- the target table is swapped in crash-safe: the old copy is moved
+  aside, the new one renamed into place, then the old copy deleted; a
+  run interrupted between the steps is repaired by the next one.
 
 Stores are pluggable: ParquetStore for local fixtures/tests, JDBC via
 sources.jdbc options for real databases.
@@ -21,11 +26,13 @@ sources.jdbc options for real databases.
 from __future__ import annotations
 
 import os
+import shutil
 import time
 from collections.abc import Callable
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 from ..catalog.model import Catalog, Table
 from ..operators.cleanse import cleanse_strings
@@ -53,6 +60,30 @@ class ParquetStore:
     def exists(self, schema: str, table: str) -> bool:
         return os.path.exists(self.path(schema, table))
 
+    def swap_in(self, schema: str, table: str, new: str) -> None:
+        """Make the directory ``new`` the table: move the old copy aside,
+        rename ``new`` into place, then delete the old copy. At every
+        point one complete copy exists on disk; ``recover`` finishes or
+        undoes a swap that was cut between the steps."""
+        final = self.path(schema, table)
+        aside = final + ".old"
+        if os.path.exists(final):
+            os.replace(final, aside)
+        os.replace(new, final)
+        shutil.rmtree(aside, ignore_errors=True)
+
+    def recover(self, schema: str, table: str) -> None:
+        """Repair a cut ``swap_in``: an aside copy with no table is put
+        back; an aside copy next to the table is the old one, deleted."""
+        final = self.path(schema, table)
+        aside = final + ".old"
+        if not os.path.exists(aside):
+            return
+        if os.path.exists(final):
+            shutil.rmtree(aside)
+        else:
+            os.replace(aside, final)
+
 
 @dataclass
 class TableTransfer:
@@ -64,6 +95,11 @@ class TableTransfer:
 
 @dataclass
 class TransferMetrics:
+    """One table's transfer. ``rows`` is the number of rows written,
+    counted by an observation on the write itself (as kettle_report.pl
+    takes it from the transfer step's log), never by re-reading the
+    target."""
+
     schema: str
     table: str
     mode: str
@@ -111,6 +147,7 @@ class Orchestrator:
     def _run_one(self, plan: TableTransfer) -> TransferMetrics:
         t0 = time.time()
         s, tname = plan.schema, plan.table.name
+        self.target.recover(s, tname)
         src = self.source.read(s, tname)
         if plan.cleanse:
             src = cleanse_strings(src)  # A5 — the only row-level transform
@@ -125,20 +162,18 @@ class Orchestrator:
         else:
             out = src
 
-        # write via a temp path then move — the parquet overwrite would
+        # the row count rides the write as one CollectMetrics node: no
+        # extra job, and no re-read of the target
+        obs = Observation()
+        out = out.observe(obs, F.count(F.lit(1)).alias("rows"))
+        # write via a temp path then swap — the parquet overwrite would
         # otherwise clobber the input it is still reading (self-join on target)
         tmp = self.target.path(s, tname) + ".tmp"
         out.write.mode("overwrite").parquet(tmp)
-        final = self.target.path(s, tname)
-        import shutil
-
-        if os.path.exists(final):
-            shutil.rmtree(final)
-        os.replace(tmp, final)
-
-        rows = self.target.read(s, tname).count()
+        self.target.swap_in(s, tname, tmp)
         return TransferMetrics(
-            schema=s, table=tname, mode=plan.mode, rows=rows, seconds=time.time() - t0
+            schema=s, table=tname, mode=plan.mode, rows=obs.get["rows"],
+            seconds=time.time() - t0,
         )
 
     def run(self, plans: list[TableTransfer]) -> list[TransferMetrics]:

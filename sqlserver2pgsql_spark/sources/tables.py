@@ -9,6 +9,7 @@ pushdown the reference hand-builds into its generated SELECT lists
 
 from __future__ import annotations
 
+import json
 import os
 
 import pyarrow.parquet as pq
@@ -34,11 +35,19 @@ DEFAULT_SF_DIR = "/root/testdata/sf0.001"
 
 
 def _nano_ts_columns(path: str) -> list[str]:
-    schema = pq.read_schema(path)
+    """Top-level columns stored as TIMESTAMP(NANOS): physical INT64 with a
+    nanosecond Timestamp logical type. Arrow reports legacy INT96
+    timestamps as ``timestamp[ns]`` too, but Spark reads those natively,
+    so the arrow type cannot tell the two apart; the parquet schema can."""
+    schema = pq.read_metadata(path).schema
+    cols = (schema.column(i) for i in range(len(schema)))
     return [
-        n
-        for n, t in zip(schema.names, schema.types)
-        if str(t).startswith("timestamp[ns")
+        c.name
+        for c in cols
+        if c.path == c.name
+        and c.physical_type == "INT64"
+        and c.logical_type.type == "TIMESTAMP"
+        and json.loads(c.logical_type.to_json())["timeUnit"] == "nanoseconds"
     ]
 
 

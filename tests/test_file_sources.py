@@ -177,3 +177,29 @@ def test_load_table_reads_nanos_without_session_conf(spark, tmp_path):
     got = df.select(F.unix_micros("t_ns").alias("us")).collect()
     # `div` truncates toward zero: -1999 ns -> -1 us
     assert sorted(r.us for r in got) == [-1, 1_600_000_000_123_456]
+
+
+def test_load_table_reads_int96_like_spark(spark, tmp_path):
+    """Legacy INT96 timestamps surface in arrow as ``timestamp[ns]`` like
+    TIMESTAMP(NANOS) does, but Spark reads them natively: load_table gives
+    what ``spark.read.parquet`` gives."""
+    import datetime
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from sqlserver2pgsql_spark.sources.tables import load_table
+
+    tbl = pa.table({
+        "t": pa.array([datetime.datetime(2020, 1, 2, 3, 4, 5, 678901), None],
+                      pa.timestamp("ns")),
+        "k": [1, 2],
+    })
+    pq.write_table(tbl, str(tmp_path / "int96.parquet"),
+                   use_deprecated_int96_timestamps=True)
+
+    df = load_table(spark, str(tmp_path), "int96")
+    plain = spark.read.parquet(str(tmp_path / "int96.parquet"))
+
+    assert df.dtypes == plain.dtypes
+    assert sorted(df.collect(), key=lambda r: r.k) == sorted(plain.collect(), key=lambda r: r.k)

@@ -3,6 +3,10 @@ incremental orchestration end-to-end."""
 
 from __future__ import annotations
 
+import os
+import uuid
+
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import Row
 
@@ -14,6 +18,7 @@ from sqlserver2pgsql_spark.plans import (
     build_transfer_plans,
     format_report,
 )
+from sqlserver2pgsql_spark.plans import transfer
 from sqlserver2pgsql_spark.sources.jdbc import (
     JdbcConfig,
     MSSQL_DRIVER,
@@ -150,6 +155,122 @@ def test_full_load_and_incremental_orchestration(spark, catalog, tmp_path):
 
     report = format_report(m2)
     assert "rows/sec" in report and "public.items" in report
+
+
+_ITEMS = "id int, uid string, name string, born date, blob binary"
+
+
+def _items(spark, ids):
+    return spark.createDataFrame(
+        [Row(id=i, uid=f"u{i}", name=f"n{i}", born=None, blob=None) for i in ids],
+        schema=_ITEMS,
+    )
+
+
+def _stores(spark, tmp_path):
+    return (ParquetStore(spark, str(tmp_path / "src")),
+            ParquetStore(spark, str(tmp_path / "tgt")))
+
+
+def _written(store, table):
+    return pq.read_table(store.path("public", table)).num_rows
+
+
+def test_rows_are_the_written_rows(spark, catalog, tmp_path):
+    # TransferMetrics.rows comes from an observation on the write; it must
+    # equal the rows in the files the write left, in every mode
+    src, tgt = _stores(spark, tmp_path)
+    src.write(_items(spark, range(50)), "public", "items")
+    src.write(spark.createDataFrame([], schema="a int, b string"), "public", "nopk")
+    orch = Orchestrator(src, tgt)
+
+    full = orch.run(build_transfer_plans(catalog))  # full load; nopk empty
+    assert {m.table: m.rows for m in full} == {"items": 50, "nopk": 0}
+    for m in full:
+        assert m.rows == _written(tgt, m.table)
+
+    src.write(_items(spark, range(10, 70)), "public", "items")  # drift
+    synced = orch.run(build_transfer_plans(catalog, incremental=True))
+    assert [m.mode for m in synced] == ["incremental", "full"]
+    assert {m.table: m.rows for m in synced} == {"items": 60, "nopk": 0}
+    for m in synced:
+        assert m.rows == _written(tgt, m.table)
+
+    src.write(spark.createDataFrame([Row(a=i, b="x") for i in range(7)],
+                                    schema="a int, b string"), "public", "nopk")
+    both = Orchestrator(src, tgt, max_workers=2).run(
+        build_transfer_plans(catalog, incremental=True))
+    assert {m.table: m.rows for m in both} == {"items": 60, "nopk": 7}
+    for m in both:
+        assert m.rows == _written(tgt, m.table)
+
+
+def _jobs(spark, orch, plan) -> int:
+    sc = spark.sparkContext
+    group = f"transfer-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, plan.table.name)
+    try:
+        orch.run([plan])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_transfer_job_budget(spark, catalog, tmp_path):
+    # measured on Spark 4.1: an incremental PK table runs 2 schema-inference
+    # reads (source, target) + 3 write jobs (both join sides and the write);
+    # a PK-less full reload 1 read + 1 write. A re-read of the target to
+    # count its rows adds 3 jobs and blows both pins.
+    src, tgt = _stores(spark, tmp_path)
+    src.write(_items(spark, range(40)), "public", "items")
+    src.write(spark.createDataFrame([Row(a=1, b="x")], schema="a int, b string"),
+              "public", "nopk")
+    orch = Orchestrator(src, tgt)
+    orch.run(build_transfer_plans(catalog))
+    src.write(_items(spark, range(5, 45)), "public", "items")
+    plans = {p.table.name: p for p in build_transfer_plans(catalog, incremental=True)}
+    assert _jobs(spark, orch, plans["items"]) <= 5
+    assert _jobs(spark, orch, plans["nopk"]) <= 2
+
+
+def test_swap_cut_between_steps_keeps_the_target(spark, catalog, tmp_path, monkeypatch):
+    src, tgt = _stores(spark, tmp_path)
+    src.write(_items(spark, range(30)), "public", "items")
+    src.write(spark.createDataFrame([Row(a=1, b="x")], schema="a int, b string"),
+              "public", "nopk")
+    orch = Orchestrator(src, tgt)
+    orch.run(build_transfer_plans(catalog))
+    final = tgt.path("public", "items")
+    real_replace = os.replace
+
+    def cut(a, b):  # the rename of the new copy into place fails
+        if a == final + ".tmp":
+            raise OSError("cut between move-aside and swap")
+        real_replace(a, b)
+
+    src.write(_items(spark, range(100, 120)), "public", "items")
+    plan = [p for p in build_transfer_plans(catalog) if p.table.name == "items"]
+    monkeypatch.setattr(transfer.os, "replace", cut)
+    with pytest.raises(OSError, match="cut between"):
+        orch.run(plan)
+    monkeypatch.undo()
+    assert not os.path.exists(final)  # the old copy sits aside
+    # the old rows are intact and come back
+    tgt.recover("public", "items")
+    old = tgt.read("public", "items")
+    assert sorted(r.id for r in old.select("id").collect()) == list(range(30))
+
+    # cut again, then the next run repairs and succeeds
+    monkeypatch.setattr(transfer.os, "replace", cut)
+    with pytest.raises(OSError, match="cut between"):
+        orch.run(plan)
+    monkeypatch.undo()
+    (m,) = orch.run(plan)
+    assert m.rows == 20 == _written(tgt, "items")
+    assert sorted(r.id for r in tgt.read("public", "items").select("id").collect()) \
+        == list(range(100, 120))
+    assert not os.path.exists(final + ".old")
 
 
 def test_datetimeoffset_same_string_contract():
