@@ -25,10 +25,10 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
-from functools import reduce
-
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .sqltext import ident
 
 DIFF_FLAG_COL = "__changed__"
 
@@ -41,13 +41,17 @@ _S_PRESENT = "__src_present__"
 _T_PRESENT = "__tgt_present__"
 
 
-def _row_hash(prefix: str, cols: list[str]) -> Column:
+def _row_hash(side: str, cols: list[str]) -> str:
     # hash values AND null indicators so NULL vs '' vs 0 never collide
-    parts: list[Column] = []
+    parts = []
     for c in cols:
-        parts.append(F.col(f"{prefix}.{c}"))
-        parts.append(F.col(f"{prefix}.{c}").isNull().cast("int"))
-    return F.xxhash64(*parts)
+        col = f"{side}.{ident(c)}"
+        parts += [col, f"CAST({col} IS NULL AS INT)"]
+    return f"xxhash64({', '.join(parts)})"
+
+
+def _all(preds: list[str]) -> str:
+    return " AND ".join(f"({p})" for p in preds) or "true"
 
 
 def diff(
@@ -64,45 +68,43 @@ def diff(
     for deleted rows) plus ``flag_col`` ∈ {identical,new,changed,deleted}.
     Inputs must already be canonicalized (operators.canonicalize) — same
     contract as the reference's sql_convert_column/postgres_convert_column
-    pair (sqlserver2pgsql.pl:442-484).
+    pair (sqlserver2pgsql.pl:442-484). A table whose key covers every
+    column has nothing to compare: two present rows are ``identical``.
+
+    The join condition and the output projection are SQL text, one
+    ``selectExpr`` (operators.sqltext): built through the Column API they
+    cost about 100 py4j round trips per column, and a sync builds one diff
+    per table.
     """
+    if not keys:
+        raise ValueError("diff needs at least one key column")
     if compare_cols is None:
         compare_cols = [c for c in src.columns if c not in keys]
     value_cols = [c for c in src.columns if c not in keys]
 
     s = src.withColumn(_S_PRESENT, F.lit(True)).alias("s")
     t = tgt.withColumn(_T_PRESENT, F.lit(True)).alias("t")
+    cond = _all([f"s.{ident(k)} <=> t.{ident(k)}" for k in keys])
+    joined = s.join(t, F.expr(cond), "full_outer")
 
-    cond = reduce(
-        lambda a, b: a & b,
-        [F.col(f"s.{k}").eqNullSafe(F.col(f"t.{k}")) for k in keys],
-    )
-    joined = s.join(t, cond, "full_outer")
-
-    if use_hash:
-        same = _row_hash("s", compare_cols) == _row_hash("t", compare_cols)
+    if use_hash and compare_cols:
+        same = f"{_row_hash('s', compare_cols)} = {_row_hash('t', compare_cols)}"
     else:
-        same = reduce(
-            lambda a, b: a & b,
-            [F.col(f"s.{c}").eqNullSafe(F.col(f"t.{c}")) for c in compare_cols],
-        )
+        same = _all([f"s.{ident(c)} <=> t.{ident(c)}" for c in compare_cols])
 
-    in_src = F.col(f"s.{_S_PRESENT}").isNotNull()
-    in_tgt = F.col(f"t.{_T_PRESENT}").isNotNull()
+    in_src = f"s.{_S_PRESENT} IS NOT NULL"
+    in_tgt = f"t.{_T_PRESENT} IS NOT NULL"
     flag = (
-        F.when(in_src & ~in_tgt, F.lit(FLAG_NEW))
-        .when(~in_src & in_tgt, F.lit(FLAG_DELETED))
-        .when(same, F.lit(FLAG_IDENTICAL))
-        .otherwise(F.lit(FLAG_CHANGED))
+        f"CASE WHEN {in_src} AND NOT {in_tgt} THEN '{FLAG_NEW}' "
+        f"WHEN NOT {in_src} AND {in_tgt} THEN '{FLAG_DELETED}' "
+        f"WHEN {same} THEN '{FLAG_IDENTICAL}' "
+        f"ELSE '{FLAG_CHANGED}' END"
     )
-
-    out_cols: list[Column] = []
-    for k in keys:
-        out_cols.append(F.when(in_src, F.col(f"s.{k}")).otherwise(F.col(f"t.{k}")).alias(k))
-    for c in value_cols:
-        out_cols.append(F.when(in_src, F.col(f"s.{c}")).otherwise(F.col(f"t.{c}")).alias(c))
-    out_cols.append(flag.alias(flag_col))
-    return joined.select(*out_cols)
+    return joined.selectExpr(
+        *(f"CASE WHEN {in_src} THEN s.{ident(c)} ELSE t.{ident(c)} END AS {ident(c)}"
+          for c in keys + value_cols),
+        f"{flag} AS {ident(flag_col)}",
+    )
 
 
 def diff_counts(
@@ -127,6 +129,6 @@ def diff_key_range(
     range means different rows on each system). At 100 TB this turns a
     full-table sync into a key-window sync, and the range predicate pushes
     into both scans."""
-    k = keys[0]
-    pred = (F.col(k) >= F.lit(lower)) & (F.col(k) < F.lit(upper))
+    k = F.col(ident(keys[0]))
+    pred = (k >= F.lit(lower)) & (k < F.lit(upper))
     return diff(src.filter(pred), tgt.filter(pred), keys, **kwargs)

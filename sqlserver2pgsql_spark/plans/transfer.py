@@ -18,6 +18,13 @@ orchestrator is driver-side Python:
 - the target table is swapped in crash-safe: the old copy is moved
   aside, the new one renamed into place, then the old copy deleted; a
   run interrupted between the steps is repaired by the next one.
+- nothing is paid per table before rows move. Like generate_kettle,
+  which builds each transformation from a schema it already holds, a
+  store read takes its schema from the parquet footer on the driver
+  (sources.footer) instead of a schema-inference Spark job, and the wide
+  projections (cleanse, diff, the column order of the synced frame) are
+  SQL text in one ``selectExpr`` — about one py4j round trip per column
+  where the Column API spends 60-100.
 
 Stores are pluggable: ParquetStore for local fixtures/tests, JDBC via
 sources.jdbc options for real databases.
@@ -38,6 +45,8 @@ from ..catalog.model import Catalog, Table
 from ..operators.cleanse import cleanse_strings
 from ..operators.diff import diff
 from ..operators.merge import apply_diff
+from ..operators.sqltext import ident
+from ..sources.footer import footer_schema
 
 
 class ParquetStore:
@@ -52,7 +61,11 @@ class ParquetStore:
         return os.path.join(self.root, schema, f"{table}.parquet")
 
     def read(self, schema: str, table: str) -> DataFrame:
-        return self.spark.read.parquet(self.path(schema, table))
+        """The table, with the schema its footer records: no Spark job.
+        The footer is read on every call, so a rewritten table is never
+        read with a stale schema."""
+        path = self.path(schema, table)
+        return self.spark.read.schema(footer_schema(path)).parquet(path)
 
     def write(self, df: DataFrame, schema: str, table: str, mode: str = "overwrite") -> None:
         df.write.mode(mode).parquet(self.path(schema, table))
@@ -158,7 +171,7 @@ class Orchestrator:
             synced = apply_diff(diff(src, tgt, keys))
             # rewrite-by-union: for file-backed targets the post-diff state
             # is a full rewrite (Delta MERGE at 100 TB; see operators/merge.py)
-            out = synced.select(*src.columns)
+            out = synced.selectExpr(*map(ident, src.columns))
         else:
             out = src
 

@@ -15,8 +15,9 @@ import os
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from pyspark.sql.pandas.types import from_arrow_schema
+
+from ..operators.sqltext import ident
+from .footer import first_data_file, footer_schema
 
 TABLE_NAMES = (
     "region",
@@ -39,7 +40,7 @@ def _nano_ts_columns(path: str) -> list[str]:
     nanosecond Timestamp logical type. Arrow reports legacy INT96
     timestamps as ``timestamp[ns]`` too, but Spark reads those natively,
     so the arrow type cannot tell the two apart; the parquet schema can."""
-    schema = pq.read_metadata(path).schema
+    schema = pq.read_metadata(first_data_file(path)).schema
     cols = (schema.column(i) for i in range(len(schema)))
     return [
         c.name
@@ -65,28 +66,20 @@ _RELATIONS: dict[tuple[str, str, str], tuple[SparkSession, DataFrame]] = {}
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Parquet scan. TIMESTAMP(NANOS) columns (which Spark rejects,
-    PARQUET_TYPE_ILLEGAL) are read as nanosecond longs through an explicit
-    schema — no session conf is written — and truncated to microsecond
-    timestamps: lossless for micro-aligned data, and integer `div` keeps
-    the conversion exact beyond 2^53."""
+    """Parquet scan with the schema read from the file footer
+    (sources.footer), so no schema-inference job runs. TIMESTAMP(NANOS)
+    columns (which Spark rejects, PARQUET_TYPE_ILLEGAL) are read as
+    nanosecond longs — no session conf is written — and truncated to
+    microsecond timestamps: lossless for micro-aligned data, and integer
+    `div` keeps the conversion exact beyond 2^53."""
     key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir), name)
     hit = _RELATIONS.get(key)
     if hit is not None and hit[0] is spark:
         return hit[1]
     path = os.path.join(sf_dir, f"{name}.parquet")
-    nanos = _nano_ts_columns(path)
-    if not nanos:
-        df = spark.read.parquet(path)
-    else:
-        # every other column keeps its inferred type; inference reads a
-        # tz-less timestamp as timestamp_ntz, hence prefer_timestamp_ntz
-        schema = from_arrow_schema(pq.read_schema(path), prefer_timestamp_ntz=True)
-        df = spark.read.schema(T.StructType([
-            T.StructField(f.name, T.LongType()) if f.name in nanos else f for f in schema
-        ])).parquet(path)
-        for c in nanos:
-            df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
+    df = spark.read.schema(footer_schema(path, nanos_as_long=True)).parquet(path)
+    for c in _nano_ts_columns(path):
+        df = df.withColumn(c, F.timestamp_micros(F.expr(f"{ident(c)} div 1000")))
     _RELATIONS[key] = (spark, df)
     return df
 

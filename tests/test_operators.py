@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
@@ -60,6 +61,92 @@ def test_diff_hash_variant_matches_column_compare(spark):
     a = diff(src, tgt, ["k"]).orderBy("k").collect()
     b = diff(src, tgt, ["k"], use_hash=True).orderBy("k").collect()
     assert a == b
+
+
+@pytest.mark.parametrize("use_hash", [False, True])
+def test_diff_key_only_table(spark, use_hash):
+    # the PK covers every column (a link table): nothing to compare, so two
+    # present rows are identical
+    src = spark.createDataFrame([Row(a=1, b=1), Row(a=1, b=2), Row(a=3, b=None)])
+    tgt = spark.createDataFrame([Row(a=1, b=1), Row(a=2, b=2), Row(a=3, b=None)])
+    d = diff(src, tgt, ["a", "b"], use_hash=use_hash)
+    assert d.columns == ["a", "b", DIFF_FLAG_COL]
+    assert sorted((r.a, r.b, r[DIFF_FLAG_COL]) for r in d.collect()) == sorted([
+        (1, 1, FLAG_IDENTICAL), (1, 2, FLAG_NEW), (2, 2, FLAG_DELETED),
+        (3, None, FLAG_IDENTICAL),
+    ])
+
+
+@pytest.mark.parametrize("use_hash", [False, True])
+def test_diff_and_cleanse_quote_bracketed_names(spark, use_hash):
+    schema = "`Order Date` string, `a.b` int, `we``ird` string"
+    src = spark.createDataFrame([("d1\x00", 1, "x"), ("d2", 2, "y"), ("d4", 4, "z")], schema)
+    tgt = spark.createDataFrame([("d1", 1, "x"), ("d2", 2, "changed"), ("d3", 3, "w")],
+                                schema)
+    clean = cleanse_strings(src)
+    assert clean.columns == ["Order Date", "a.b", "we`ird"]
+    d = diff(clean, tgt, ["a.b"], use_hash=use_hash)
+    assert d.columns == ["a.b", "Order Date", "we`ird", DIFF_FLAG_COL]  # keys first
+    assert sorted(tuple(r) for r in d.collect()) == [
+        (1, "d1", "x", FLAG_IDENTICAL), (2, "d2", "y", FLAG_CHANGED),
+        (3, "d3", "w", FLAG_DELETED), (4, "d4", "z", FLAG_NEW),
+    ]
+
+
+def test_cleanse_pattern_ignores_escaped_string_literals(spark):
+    # the pattern reaches Spark as hex, not as a SQL string literal, so a
+    # session that reads literals without escape processing strips the
+    # same characters; the regex \\ (one backslash) shows the difference
+    df = spark.createDataFrame([Row(a="x\\ny\rz\x00")])
+    key = "spark.sql.parser.escapedStringLiterals"
+    before = spark.conf.get(key)
+    try:
+        for flag in ("true", "false"):
+            spark.conf.set(key, flag)
+            assert cleanse_strings(df, "\\\\").first().a == "xny\rz\x00"
+            assert cleanse_strings(df, "\r").first().a == "x\\nyz\x00"
+            assert cleanse_strings(df).first().a == "x\\ny\rz"
+    finally:
+        spark.conf.set(key, before)
+
+
+def _round_trips(build) -> int:
+    from py4j.clientserver import ClientServerConnection
+
+    calls = 0
+    real = ClientServerConnection.send_command
+
+    def counted(self, command):
+        nonlocal calls
+        calls += 1
+        return real(self, command)
+
+    ClientServerConnection.send_command = counted
+    try:
+        build()
+    finally:
+        ClientServerConnection.send_command = real
+    return calls
+
+
+def _wide(spark, n: int, shift: int = 0):
+    return spark.range(3).selectExpr(
+        "id AS k", *(f"CAST(id + {shift} AS STRING) AS c{i}" for i in range(n)))
+
+
+def test_projection_build_cost_is_flat_per_column(spark):
+    # diff and cleanse build their projections as SQL text: at most 2 py4j
+    # round trips per extra column (the Column API spent about 100 per
+    # column on diff and 60 on cleanse)
+    narrow = (_wide(spark, 4), _wide(spark, 4, 1))
+    wide = (_wide(spark, 40), _wide(spark, 40, 1))
+    for build in (lambda s, t: diff(s, t, ["k"]),
+                  lambda s, t: diff(s, t, ["k"], use_hash=True),
+                  lambda s, t: cleanse_strings(s)):
+        small = _round_trips(lambda: build(*narrow))
+        large = _round_trips(lambda: build(*wide))
+        assert small > 0  # the counter sees the gateway's trips
+        assert large - small <= 2 * 36, (small, large)
 
 
 def test_apply_diff_reproduces_source(spark):
