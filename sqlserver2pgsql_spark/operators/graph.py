@@ -1,9 +1,12 @@
-"""Connected components over a pair graph — dedup *clustering*.
+"""Connected components over a pair graph — dedup *clustering* — and
+exact fixed-point PageRank.
 
 Pair generators (exact Jaccard, MinHash LSH, SimHash, embedding near-dup)
 emit edges; curation needs the transitive closure: one keeper per duplicate
-CLUSTER. Two interchangeable engines, same output contract
-``(node, cluster_id=min node id of the component)``:
+CLUSTER. Two interchangeable engines with one contract: both return
+``(labels, rounds)``, labels being ``(node, cluster_id=min node id of the
+component)``, and both raise once ``max_iter`` is reached without
+convergence, so unconverged labels never leave this module.
 
 - ``connected_components`` — iterative min-label propagation. Rounds ~
   graph diameter; ideal for near-dup graphs (tiny, shallow components).
@@ -12,11 +15,11 @@ CLUSTER. Two interchangeable engines, same output contract
   SOCC'14). Rounds ~ O(log^2 n) regardless of diameter; the scale path
   when LSH buckets chain into long paths.
 
-Scale shape (both): every iteration is a bounded number of shuffles over
+Both loops run on ``loop.fixed_point``, which owns the per-round rules
+(lazy checkpoint, one convergence probe, the round cap); each engine
+brings its own probe. Every iteration is a bounded number of shuffles over
 the EDGE list (≪ corpus for near-dup graphs), sized explicitly via
-``repartition`` on the loop inputs. The only driver-side values are
-per-iteration scalar counts. Lineage is truncated every iteration via
-localCheckpoint so plans don't grow unboundedly.
+``repartition``; the only driver-side values are per-round scalar counts.
 
 SESSION-EXCLUSIVE while ``connected_components`` loops: its driver
 actions run with ``spark.sql.adaptive.enabled`` switched off in the
@@ -27,20 +30,15 @@ AQE, and two overlapping loops can race on the save/restore, so don't
 share the session with concurrent work during the call. The other loops
 in this module write no session conf.
 
-Loop-shape discipline (r7, guide §2.4/§5): ``localCheckpoint`` erases
-outputPartitioning (the checkpointed frame scans as an ExistingRDD with
-unknown partitioning — measured on Spark 4.1, eager and lazy alike), so
-a join/agg that "rides" a pre-checkpoint repartition actually pays hidden
-ENSURE_REQUIREMENTS exchanges plus sort-merge sorts every round. The
-min-label loop therefore (a) folds the "own label" term into the message
-join itself via SELF-LOOP edges, so each iterate is consumed exactly ONCE
-(a second reference would re-derive the whole step subtree — lazy
-checkpoints don't dedupe until an action runs) and the left-outer
-join + coalesce disappears, and (b) re-establishes partitioning with ONE
-explicit repartition per checkpointed input per action; the second step
-of a double round rides the first step's aggregation partitioning with
-no further exchange, and identical repartition subtrees inside one
-action are deduped by ReuseExchange.
+Min-label loop shape (r7, guide §2.4/§5): a checkpoint erases output
+partitioning (loop.py), so the loop (a) folds the "own label" term into the
+message join via SELF-LOOP edges, so each iterate is consumed exactly ONCE
+(a second reference would re-derive the whole step subtree) and no
+left-outer join + coalesce is needed, and (b) re-establishes partitioning
+with ONE explicit repartition per checkpointed input per round; the second
+step of a double round rides the first step's aggregation partitioning,
+and identical repartition subtrees in one action are deduped by
+ReuseExchange.
 """
 
 from __future__ import annotations
@@ -49,6 +47,8 @@ from contextlib import contextmanager
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .loop import fixed_point
 
 
 @contextmanager
@@ -81,15 +81,16 @@ def connected_components(
     src: str = "id1",
     dst: str = "id2",
     max_iter: int = 25,
-) -> DataFrame:
-    """(node, cluster_id) for every node in ``edges``; cluster_id is the
-    component's minimum node id — deterministic, and exactly what a
-    min-keeper dedup policy wants.
+) -> tuple[DataFrame, int]:
+    """((node, cluster_id), rounds) for every node in ``edges``; cluster_id
+    is the component's minimum node id — deterministic, and exactly what a
+    min-keeper dedup policy wants; rounds counts driver rounds of two
+    propagation steps each.
 
-    Min-label propagation: every node starts labeled with itself; each round
+    Min-label propagation: every node starts labeled with itself; each step
     every node takes the min of its own and its neighbors' labels; stop when
-    a round changes nothing (or after ``max_iter`` — a diameter bound, far
-    above any near-dup component's).
+    a round changes nothing. ``max_iter`` steps is a diameter bound, far
+    above any near-dup component's; a graph that needs more raises.
 
     One step is ONE message join + ONE aggregation: the symmetric edge
     list is augmented with a self-loop per node, so ``min(labels of
@@ -156,32 +157,33 @@ def connected_components(
             )
         )
 
-    # TWO propagation steps per driver round, ONE convergence count: on the
+    def _double_step(lbl: DataFrame) -> DataFrame:
+        # both loop inputs come from checkpoints (unknown partitioning):
+        # ONE explicit repartition each per double round; step 2 reuses
+        # step 1's sym_p exchange via ReuseExchange and rides step 1's
+        # output partitioning on the label side
+        sym_p = sym_sl.repartition(n_part, "a")
+        cur = lbl.select(
+            "node", "cluster_id", F.col("cluster_id").alias("__old")
+        ).repartition(n_part, "node")
+        return _step(sym_p, _step(sym_p, cur))
+
+    def _unchanged(new: DataFrame, _old: DataFrame) -> bool:
+        # a count, not isEmpty: it materializes every checkpoint partition
+        return new.filter(F.col("cluster_id") != F.col("__old")).count() == 0
+
+    # TWO propagation steps per driver round, ONE convergence probe: on the
     # shallow near-dup graphs this loop serves, the per-round driver action
-    # (the count that also materializes the checkpoint) costs more wall time
-    # than the tiny message aggregations it gates, so halving the action
-    # count halves the fixed-point overhead. Labels only ever decrease, so
-    # "no change across the double step" implies the intermediate step was
-    # also a fixed point — convergence detection is unchanged. Worst case
-    # one extra (idempotent) propagation executes.
+    # costs more wall time than the tiny message aggregations it gates, so
+    # halving the action count halves the fixed-point overhead. Labels only
+    # ever decrease, so "no change across the double step" implies the
+    # intermediate step was also a fixed point. Worst case one extra
+    # (idempotent) propagation executes.
     with _no_aqe(labels):
-        for _ in range((max_iter + 1) // 2):
-            # both loop inputs come from checkpoints (unknown partitioning):
-            # ONE explicit repartition each per double round; step 2 reuses
-            # step 1's sym_p exchange via ReuseExchange and rides step 1's
-            # output partitioning on the label side
-            sym_p = sym_sl.repartition(n_part, "a")
-            cur = labels.select(
-                "node", "cluster_id", F.col("cluster_id").alias("__old")
-            ).repartition(n_part, "node")
-            for _half in range(2):
-                cur = _step(sym_p, cur)
-            cur = cur.localCheckpoint(eager=False)
-            changed = cur.filter(F.col("cluster_id") != F.col("__old")).count()
-            labels = cur.drop("__old")
-            if changed == 0:
-                break
-    return labels
+        labels, rounds = fixed_point(
+            labels, _double_step, _unchanged, max_rounds=(max_iter + 1) // 2
+        )
+    return labels.drop("__old"), rounds
 
 
 def connected_components_star(
@@ -201,7 +203,8 @@ def connected_components_star(
     equal neighbors (and itself) onto that minimum. Each round halves tall
     trees; converges in O(log^2 n) rounds on any graph. Per round: two
     groupBy + two join shuffles over the edge list plus a distinct — all
-    sized to the edge count, no driver-side data. Pass
+    sized to the edge count, no driver-side data. A graph that needs more
+    than ``max_iter`` rounds raises. Pass
     ``assume_distinct=True`` when the caller's edge list already has no
     duplicate (src, dst) rows (every pair generator in this repo emits
     distinct pairs): the init dedup exchange and its extra
@@ -251,7 +254,6 @@ def connected_components_star(
             .distinct()
         )
 
-    rounds = 0
     if assume_distinct:
         # the caller guarantees no duplicate (u, v) rows; e is the round-0
         # edge set as-is — no dedup exchange, no second checkpoint/count
@@ -259,27 +261,24 @@ def connected_components_star(
     else:
         cur = e.select("u", "v").distinct().localCheckpoint(eager=False)
         n_cur = cur.count()
+
+    def unchanged(new: DataFrame, old: DataFrame) -> bool:
+        # convergence = edge set unchanged. Two-tier check: the count rules
+        # out change in the common case; only equal counts pay an exact
+        # check — and since both sides are deduplicated sets of EQUAL SIZE,
+        # ONE anti-join direction suffices (|A|=|B| and A∖B=∅ ⟹ A=B).
+        nonlocal n_cur
+        n_old, n_cur = n_cur, new.count()
+        return n_cur == n_old and new.join(old, ["u", "v"], "left_anti").isEmpty()
+
     # NOTE: the star loop KEEPS AQE (unlike the min-label loop): its
     # convergence anti-join and the per-round distinct rely on AQE's
     # runtime broadcast/coalesce decisions — measured q90 6.4 → 9.5 s and
     # q379 6.2 → 8.8 s with AQE scoped off here, so the job-count saving
     # is not worth it for this engine.
-    for _ in range(max_iter):
-        rounds += 1
-        nxt = small_star(large_star(cur)).localCheckpoint(eager=False)
-        # convergence = edge set unchanged. Two-tier check: the count (one
-        # cheap action that ALSO materializes the checkpoint) rules out
-        # change in the common case; only equal counts pay an exact check —
-        # and since both sides are deduplicated sets of EQUAL SIZE, ONE
-        # anti-join direction suffices (|A|=|B| and A∖B=∅ ⟹ A=B); the
-        # old symmetric difference ran both exceptAll directions for
-        # nothing.
-        n_nxt = nxt.count()
-        if n_nxt == n_cur:
-            if nxt.join(cur, ["u", "v"], "left_anti").isEmpty():
-                cur = nxt
-                break
-        cur, n_cur = nxt, n_nxt
+    cur, rounds = fixed_point(
+        cur, lambda ed: small_star(large_star(ed)), unchanged, max_rounds=max_iter
+    )
     # at convergence edges form stars (child -> component min); roots label
     # themselves
     roots = cur.select(F.col("v").alias("node")).distinct().select(
@@ -302,6 +301,8 @@ def pagerank_fixed_point(
     dst: str = "dst",
     iterations: int = 3,
     damping_pct: int = 85,
+    seeds: DataFrame | None = None,
+    seed_col: str = "node",
 ) -> DataFrame:
     """Exact-arithmetic PageRank: a fixed number of power iterations with
     all ranks held as BIGINT fixed-point (units of 1/PR_SCALE).
@@ -310,19 +311,28 @@ def pagerank_fixed_point(
     two engines) disagree in the last ulps; integer fixed-point makes the
     iteration exactly reproducible — contributions are floor-divided
     (``rank div out_degree``), the damping mix is
-    ``(100-d)*base + d*sum`` floor-divided by 100, and BIGINT addition is
+    ``(100-d)*base div 100 + d*sum div 100``, and BIGINT addition is
     associative. The tiny mass lost to flooring is deleted, not
     redistributed (documented bias ≤ N*iterations/PR_SCALE).
 
+    Teleport mass goes to the seed set, uniformly: ``base = PR_SCALE //
+    |seeds ∩ nodes|``, and the initial ranks are ``base`` on seeds and 0
+    elsewhere. ``seeds=None`` makes every node a seed (global PageRank);
+    a ``seeds`` frame (column ``seed_col``) gives personalized PageRank —
+    ranks measure graph proximity to the seeds, the related-items query
+    global teleport can't express. Seeds absent from the edge list are
+    ignored; raises ``ValueError`` if none is left.
+
     Scale shape: per iteration one co-partitioned shuffled-hash join of
     ranks onto the edge list plus one groupBy(node) sum over the messages
-    UNIONED with per-node zero rows from the CONSTANT node frame (the
-    zero row keeps rank rows for nodes with no in-edges — same semantics
-    as the old nodes-left-join + coalesce, one exchange instead of three,
-    and the rank iterate is consumed exactly once per iteration so the
-    unmaterialized lineage chain stays linear). Dangling nodes keep only
-    their damped base share (their mass is dropped — the standard
-    sink-handling simplification, stated so the oracle matches).
+    UNIONED with one zero row per node from the CONSTANT node frame. The
+    zero row keeps rank rows for nodes with no in-edges and carries the
+    node's teleport share as ``t`` (messages carry 0), so the teleport term
+    rides the same aggregation, and the rank iterate is consumed exactly
+    once per iteration so the unmaterialized lineage stays linear.
+    Dangling nodes keep only their teleport share (their mass is dropped —
+    the standard sink-handling simplification, stated so the oracle
+    matches).
 
     Returns (node, rank_fp BIGINT) for every node appearing as src or dst.
     """
@@ -339,8 +349,32 @@ def pagerank_fixed_point(
         .dropDuplicates(["node"])
         .localCheckpoint(eager=False)
     )
-    n_nodes = nodes.count()
-    base = PR_SCALE // n_nodes
+    if seeds is None:
+        flagged = nodes.withColumn("is_seed", F.lit(True))
+        n_seeds = nodes.count()
+    else:
+        seed_nodes = (
+            seeds.select(F.col(seed_col).alias("node"), F.lit(True).alias("is_seed"))
+            .distinct()
+            .join(nodes, "node")
+            .localCheckpoint(eager=False)
+        )
+        n_seeds = seed_nodes.count()
+        if n_seeds == 0:
+            raise ValueError("pagerank_fixed_point: no seed intersects the graph")
+        # the seed set is small by contract (a handful of query nodes), so
+        # broadcast — the node side is never reshuffled for this join
+        flagged = (
+            nodes.join(F.broadcast(seed_nodes), "node", "left")
+            .select("node", F.coalesce("is_seed", F.lit(False)).alias("is_seed"))
+            .localCheckpoint(eager=False)
+        )
+    base = PR_SCALE // n_seeds
+    teleport = (100 - damping_pct) * base // 100
+
+    def on_seeds(v: int):
+        return F.when(F.col("is_seed"), F.lit(v)).otherwise(F.lit(0)).cast("long")
+
     # fold out-degree into the edge list ONCE — the per-iteration join is
     # then ranks ⋈ edges only (deg rides e's explicit exchange)
     e_p = e.repartition(n_part, "s")
@@ -349,9 +383,10 @@ def pagerank_fixed_point(
     # ONE explicit post-checkpoint repartition, shared by every iteration's
     # join via ReuseExchange (the checkpoint erased the partitioning)
     e_deg_p = e_deg.repartition(n_part, "s")
-    zero_rows = nodes.select("node", F.lit(0).cast("long").alias("c"))
-    ranks = nodes.select("node", F.lit(base).cast("long").alias("rank_fp"))
-    teleport = (100 - damping_pct) * base // 100
+    zero_rows = flagged.select(
+        "node", F.lit(0).cast("long").alias("c"), on_seeds(teleport).alias("t")
+    )
+    ranks = flagged.select("node", on_seeds(base).alias("rank_fp"))
     for i in range(iterations):
         msgs = (
             e_deg_p.join(
@@ -363,18 +398,16 @@ def pagerank_fixed_point(
             .select(
                 F.col("d").alias("node"),
                 F.expr("rank_fp div deg").alias("c"),
+                F.lit(0).cast("long").alias("t"),
             )
         )
-        # zero rows from the constant node frame keep every node present —
-        # the exact stand-in for the old left join + coalesce(in_sum, 0)
         ranks = (
             msgs.unionByName(zero_rows)
             .repartition(n_part, "node")
             .groupBy("node")
             .agg(
                 (
-                    F.lit(teleport)
-                    + F.expr(f"({damping_pct} * sum(c)) div 100")
+                    F.sum("t") + F.expr(f"({damping_pct} * sum(c)) div 100")
                 ).cast("long").alias("rank_fp")
             )
         )
@@ -383,107 +416,6 @@ def pagerank_fixed_point(
         # a cache write and an extra stage barrier each round. Lineage is
         # still truncated every 4th iteration (the q358 cadence) so plans
         # stay bounded for ANY requested iteration count.
-        if (i + 1) % 4 == 0 and i + 1 < iterations:
-            ranks = ranks.localCheckpoint(eager=False)
-    return ranks
-
-
-def personalized_pagerank_fixed_point(
-    edges: DataFrame,
-    seeds: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    seed_col: str = "node",
-    iterations: int = 3,
-    damping_pct: int = 85,
-) -> DataFrame:
-    """Personalized PageRank in the same BIGINT fixed-point scheme as
-    ``pagerank_fixed_point``: the teleport mass goes ONLY to the seed
-    set (uniformly, ``PR_SCALE // |S ∩ nodes|``), so ranks measure graph
-    proximity to the seeds — the related-items / local-relevance query
-    PageRank's global teleport can't express. Initial ranks equal the
-    seed teleport distribution (zero elsewhere). Seeds not present in
-    the edge list are ignored (they have no edges to carry mass).
-
-    Same exactness contract: floor divisions, BIGINT addition, pinned
-    iteration count — bit-identical on any engine/partitioning. Same
-    loop shape as ``pagerank_fixed_point``: messages ∪ constant zero
-    rows, one aggregation per iteration; the zero rows come from the
-    flagged node frame so the per-node is_seed teleport term rides the
-    same aggregation (exactly one flagged row per node, messages carry
-    NULL, max() recovers the flag)."""
-    e = (
-        edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    n_part = _edge_partitions(e.count())
-    nodes = (
-        e.select(F.col("s").alias("node"))
-        .unionByName(e.select(F.col("d").alias("node")))
-        .repartition(n_part, "node")
-        .dropDuplicates(["node"])
-        .localCheckpoint(eager=False)
-    )
-    seed_nodes = (
-        seeds.select(F.col(seed_col).alias("node"))
-        .distinct()
-        .join(nodes, "node")
-        .localCheckpoint(eager=False)
-    )
-    n_seeds = seed_nodes.count()
-    if n_seeds == 0:
-        raise ValueError("personalized_pagerank: no seed intersects the graph")
-    base = PR_SCALE // n_seeds
-    # seed flags onto the node frame; the seed set is small by contract
-    # (a handful of query nodes), so broadcast — the node side is never
-    # reshuffled for this join
-    flagged = (
-        nodes.join(
-            F.broadcast(seed_nodes.withColumn("is_seed", F.lit(True))),
-            "node",
-            "left",
-        )
-        .select("node", F.coalesce("is_seed", F.lit(False)).alias("is_seed"))
-        .localCheckpoint(eager=False)
-    )
-    e_p = e.repartition(n_part, "s")
-    deg = e_p.groupBy("s").agg(F.count(F.lit(1)).alias("deg"))
-    e_deg = e_p.join(deg.hint("shuffle_hash"), "s").localCheckpoint(eager=False)
-    e_deg_p = e_deg.repartition(n_part, "s")
-    seed_teleport = (100 - damping_pct) * base // 100
-    zero_rows = flagged.select(
-        "node", F.lit(0).cast("long").alias("c"), "is_seed"
-    )
-    ranks = flagged.select(
-        "node",
-        F.when(F.col("is_seed"), F.lit(base)).otherwise(F.lit(0)).cast("long").alias("rank_fp"),
-    )
-    for i in range(iterations):
-        msgs = (
-            e_deg_p.join(
-                ranks.withColumnRenamed("node", "s")
-                .repartition(n_part, "s")
-                .hint("shuffle_hash"),
-                "s",
-            )
-            .select(
-                F.col("d").alias("node"),
-                F.expr("rank_fp div deg").alias("c"),
-                F.lit(None).cast("boolean").alias("is_seed"),
-            )
-        )
-        ranks = (
-            msgs.unionByName(zero_rows)
-            .repartition(n_part, "node")
-            .groupBy("node")
-            .agg(
-                (
-                    F.when(F.max("is_seed"), F.lit(seed_teleport)).otherwise(F.lit(0))
-                    + F.expr(f"({damping_pct} * sum(c)) div 100")
-                ).cast("long").alias("rank_fp")
-            )
-        )
         if (i + 1) % 4 == 0 and i + 1 < iterations:
             ranks = ranks.localCheckpoint(eager=False)
     return ranks

@@ -20,8 +20,10 @@ from .operators import dedup as D
 from .operators.asof import asof_join
 from .operators.bloom import bloom_build, bloom_probe
 from .operators.graph import pagerank_fixed_point
+from .operators.loop import closure
 from .operators.scd import cdc_apply_latest, scd2_history
 from .queries import DEC, _t, register
+from .sources.footer import footer_schema
 from .sources.tables import spread
 
 # ---------------------------------------------------------------------------
@@ -5141,7 +5143,7 @@ def q167_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = D.ngram_jaccard_pairs(
         corpus, "doc_id", "text", n=3, threshold=0.6
     ).select("id1", "id2").localCheckpoint(eager=False)
-    cc = connected_components(pairs, "id1", "id2")
+    cc, _rounds = connected_components(pairs, "id1", "id2")
     assigned = (
         corpus.select("doc_id", F.length("text").cast("long").alias("n_chars"))
         .join(cc.select(F.col("node").alias("doc_id"), "cluster_id"), "doc_id", "left")
@@ -5322,8 +5324,9 @@ def q169_pointer_doubling(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: the naive walk is O(max-depth) sequential rounds; doubling is
     O(log max-depth) rounds of one hash-join + localCheckpoint each — 10
-    rounds cover million-long chains. Convergence is data-driven (the
-    total-depth sum fixpoints), never a hardcoded round count."""
+    rounds cover million-long chains. The round count, ceil(log2) of the
+    longest chain, comes from one aggregate before the loop, so no round
+    runs a convergence probe."""
     import math
 
     ev = _t(spark, sf_dir, "events").select("user_id", "ts", "event_id")
@@ -6659,7 +6662,7 @@ def q188_entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("id1", "id2")
     )
-    cc = connected_components(pairs, "id1", "id2")
+    cc, _rounds = connected_components(pairs, "id1", "id2")
     assigned = corpus.join(
         cc.select(F.col("node").alias("rid"), "cluster_id"), "rid", "left"
     ).select(
@@ -8391,7 +8394,7 @@ def q212_nested_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = tempfile.mkdtemp(prefix="spark_graft_q212_")
     try:
         nested.write.mode("overwrite").parquet(out)
-        back = spark.read.parquet(out)
+        back = spark.read.schema(footer_schema(out)).parquet(out)
         result = (
             back.select("o_orderstatus", F.explode("lines").alias("ln"))
             .groupBy("o_orderstatus")
@@ -9296,11 +9299,13 @@ def q225_compaction_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = tempfile.mkdtemp(prefix="spark_graft_q225_")
     try:
         ev.repartition(64).write.mode("overwrite").parquet(out + "/frag")
-        frag = spark.read.parquet(out + "/frag")
+        frag = spark.read.schema(footer_schema(out + "/frag")).parquet(out + "/frag")
         frag.repartition(4).write.mode("overwrite").parquet(out + "/compact")
         n_files = len(glob.glob(out + "/compact/part-*.parquet"))
         assert n_files <= 4, n_files
-        back = spark.read.parquet(out + "/compact")
+        back = spark.read.schema(footer_schema(out + "/compact")).parquet(
+            out + "/compact"
+        )
         result = (
             back.groupBy("event_type")
             .agg(
@@ -9927,9 +9932,8 @@ def q232_cluster_size_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     corpus = _neardup_corpus(spark, sf_dir)
     pairs = D.ngram_jaccard_pairs(corpus, "doc_id", "text", n=3, threshold=0.6)
-    cc = connected_components(pairs, "id1", "id2").select(
-        F.col("node").alias("doc_id"), "cluster_id"
-    )
+    cc, _rounds = connected_components(pairs, "id1", "id2")
+    cc = cc.select(F.col("node").alias("doc_id"), "cluster_id")
     all_docs = corpus.select("doc_id").join(cc, "doc_id", "left").select(
         "doc_id", F.coalesce("cluster_id", "doc_id").alias("cluster_id")
     )
@@ -10781,6 +10785,11 @@ def q242_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+#: round cap of the part-hierarchy closures (q243, q266, q305): a 5-ary
+#: tree 64 levels deep is beyond any int64 key, so it only bounds the loop.
+_TREE_ROUNDS = 64
+
+
 @register(
     "q243_bom_subtree_rollup",
     oracle="""
@@ -10824,23 +10833,13 @@ def q243_bom_subtree_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("cents"),
     )
-    nodes = val.select("node")
-    pairs = nodes.select("node", F.col("node").alias("anc"))
-    frontier = pairs
-    while True:
-        frontier = (
-            frontier.filter(F.col("anc") > 0)
-            .select(
-                "node",
-                F.floor((F.col("anc") - 1) / 5.0).cast("long").alias("anc"),
-            )
-            # lazy: the isEmpty probe materializes the level anyway; an
-            # eager checkpoint would run a second barrier job per level (r6)
-            .localCheckpoint(eager=False)
-        )
-        if frontier.isEmpty():
-            break
-        pairs = pairs.unionByName(frontier)
+    pairs = closure(
+        val.select("node", F.col("node").alias("anc")),
+        lambda lvl: lvl.filter(F.col("anc") > 0).select(
+            "node", F.floor((F.col("anc") - 1) / 5.0).cast("long").alias("anc")
+        ),
+        max_rounds=_TREE_ROUNDS,
+    )
     joined = pairs.join(val, "node")
     return (
         joined.groupBy(F.col("anc").alias("part_node"))
@@ -13060,11 +13059,11 @@ def q266_critical_path(spark: SparkSession, sf_dir: str) -> DataFrame:
     the critical-path DP of project scheduling / build systems, on a
     synthetic DAG over parts where node k has parents floor((k-1)/5) and
     floor(k/7) (both strictly smaller, so acyclic; node weight = retail
-    cents). Spark runs the relaxation iteratively: each round extends
-    every frontier path one hop toward the root and folds completed paths
-    into a running max — rounds = DAG depth (log_5 N ≈ 6 here, ~10 at
-    100 TB part counts), each round a key-join + agg sized to the
-    frontier, lineage cut per round. The oracle enumerates all ancestor
+    cents). Spark runs the relaxation as a closure: each round extends
+    every frontier path one hop toward the root, and one max over the
+    closure's completed paths ends it — rounds = DAG depth (log_5 N ≈ 6
+    here, ~10 at 100 TB part counts), each round a key-join + agg sized
+    to the frontier, lineage cut per round. The oracle enumerates all ancestor
     paths with a recursive CTE and takes the same max — an independent
     derivation of the identical DP. Exact integer cents."""
     part = _t(spark, sf_dir, "part")
@@ -13090,36 +13089,28 @@ def q266_critical_path(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint(eager=False)
     )
     pval = val.select(F.col("node").alias("parent"), F.col("cents").alias("pcents"))
-    # frontier: (node, cur, total) partial paths; done: best completed total
-    frontier = val.select("node", F.col("node").alias("cur"), F.col("cents").alias("total"))
-    best = None
-    while True:
-        done = frontier.filter(F.col("cur") == 0).groupBy("node").agg(
-            F.max("total").alias("critical_cents")
-        )
-        best = done if best is None else best.unionByName(done)
-        frontier = (
-            frontier.filter(F.col("cur") > 0)
+
+    def extend(paths: DataFrame) -> DataFrame:
+        # one hop toward the root for every (node, cur, total) partial path;
+        # per-(node,cur) max is safe under max-plus: dominated partial
+        # paths can never yield a longer completion
+        return (
+            paths.filter(F.col("cur") > 0)
             .join(edges, F.col("cur") == edges["child"])
             .join(pval, "parent")
-            .select(
-                "node",
-                F.col("parent").alias("cur"),
-                (F.col("total") + F.col("pcents")).alias("total"),
-            )
-            # per-(node,cur) max is safe under max-plus: dominated partial
-            # paths can never yield a longer completion
-            .groupBy("node", "cur")
-            .agg(F.max("total").alias("total"))
-            # lazy: the isEmpty probe below materializes (and caches) the
-            # round — an eager checkpoint was a second dedicated job/round
-            .localCheckpoint(eager=False)
+            .groupBy("node", F.col("parent").alias("cur"))
+            .agg(F.max(F.col("total") + F.col("pcents")).alias("total"))
         )
-        if frontier.isEmpty():
-            break
+
+    paths = closure(
+        val.select("node", F.col("node").alias("cur"), F.col("cents").alias("total")),
+        extend,
+        max_rounds=_TREE_ROUNDS,
+    )
     return (
-        best.groupBy("node")
-        .agg(F.max("critical_cents").cast("long").alias("critical_cents"))
+        paths.filter(F.col("cur") == 0)
+        .groupBy("node")
+        .agg(F.max("total").cast("long").alias("critical_cents"))
         .orderBy("node")
     )
 
@@ -16523,39 +16514,32 @@ def q305_materialized_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same chains with a recursive CTE and takes each node's deepest
     (= complete) expansion. Exact strings and integers."""
     part = _t(spark, sf_dir, "part").select(F.col("p_partkey").alias("node"))
-    state = part.select(
+
+    def climb(lvl: DataFrame) -> DataFrame:
+        # (node, cur, path, depth): path runs from cur down to node; prepend
+        # cur's parent. The root (cur = 0) has no parent and drops out.
+        parent = F.floor((F.col("cur") - 1) / 5.0).cast("long")
+        return lvl.filter(F.col("cur") > 0).select(
+            "node",
+            parent.alias("cur"),
+            F.concat(parent.cast("string"), F.lit("/"), F.col("path")).alias("path"),
+            (F.col("depth") + 1).alias("depth"),
+        )
+
+    # every path starts at its node; the seed is one climb ahead, so the
+    # root itself (cur = node = 0) is the only path that starts complete
+    start = part.select(
         "node",
-        F.floor((F.col("node") - 1) / 5.0).cast("long").alias("cur"),
+        F.col("node").alias("cur"),
         F.col("node").cast("string").alias("path"),
         F.lit(0).cast("long").alias("depth"),
     )
-    # root (node 0) keeps depth 0 and path '0'; everyone else climbs
-    done = state.filter(F.col("node") == 0).select("node", "path", "depth")
-    frontier = state.filter(F.col("node") > 0)
-    while True:
-        finished = frontier.filter(F.col("cur") == 0).select(
-            "node",
-            F.concat(F.lit("0/"), F.col("path")).alias("path"),
-            (F.col("depth") + 1).alias("depth"),
-        )
-        done = done.unionByName(finished)
-        frontier = (
-            frontier.filter(F.col("cur") > 0)
-            .select(
-                "node",
-                F.floor((F.col("cur") - 1) / 5.0).cast("long").alias("cur"),
-                F.concat(F.col("cur").cast("string"), F.lit("/"), F.col("path")).alias(
-                    "path"
-                ),
-                (F.col("depth") + 1).alias("depth"),
-            )
-            # lazy: the isEmpty probe materializes the level anyway; an
-            # eager checkpoint would run a second barrier job per level (r6)
-            .localCheckpoint(eager=False)
-        )
-        if frontier.isEmpty():
-            break
-    return done.select(
+    paths = closure(
+        start.filter(F.col("node") == 0).unionByName(climb(start)),
+        climb,
+        max_rounds=_TREE_ROUNDS,
+    )
+    return paths.filter(F.col("cur") == 0).select(
         "node", F.concat(F.lit("/"), F.col("path")).alias("path"), "depth"
     ).orderBy("node")
 

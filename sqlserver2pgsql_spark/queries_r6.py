@@ -1932,9 +1932,9 @@ def q389_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     related-items primitive behind 'suppliers/parts relevant to X'
     recommendations, which global PageRank (q100) can't express. Same
     BIGINT fixed-point exactness scheme (floor divides, pinned 3
-    iterations — graph.py:personalized_pagerank_fixed_point); top-30
+    iterations — graph.py:pagerank_fixed_point with seeds); top-30
     nonzero ranks. Seed choice (min p_brand) is deterministic."""
-    from .operators.graph import personalized_pagerank_fixed_point
+    from .operators.graph import pagerank_fixed_point
 
     li = _t(spark, sf_dir, "lineitem")
     p = _t(spark, sf_dir, "part")
@@ -1950,9 +1950,7 @@ def q389_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select((F.col("p_partkey") * 2).alias("node"))
         .distinct()
     )
-    pr = personalized_pagerank_fixed_point(
-        fwd.unionByName(rev), seeds, iterations=3
-    )
+    pr = pagerank_fixed_point(fwd.unionByName(rev), iterations=3, seeds=seeds)
     return (
         pr.filter(F.col("rank_fp") > 0)
         .orderBy(F.desc("rank_fp"), "node")

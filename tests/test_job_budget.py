@@ -9,7 +9,10 @@ dedicated barrier job every iteration and double-computes the aggregate
 the broadcast job already materialized (the r4 q364 defect: 11.6s -> 5.7s
 when fixed; VERDICT r5 #5). The shape contract is lazy checkpoints on the
 RAW aggregate + broadcast node-sized sides, so the whole loop rides a
-near-constant number of jobs.
+near-constant number of jobs. The data-driven loops (the CC engines and
+the recursive hierarchy walks) take those rules from one place,
+``sqlserver2pgsql_spark/operators/loop.py`` (``fixed_point`` and
+``closure``): one lazy checkpoint and one probe action per round.
 
 This test runs each query end-to-end through ``measure.run_pass`` (its own
 job group, so build-time loop actions count too) and pins the TOTAL job
@@ -55,8 +58,12 @@ JOB_BUDGETS = [
     ("q337_kcore_peeling", 22),
     # pointer doubling (log2 chain rounds): measured 26 jobs.
     ("q169_pointer_doubling", 29),
-    # critical path relaxation rounds: measured 29 jobs.
-    ("q266_critical_path", 32),
+    # critical path as one closure + one filtered max: measured 25 jobs.
+    ("q266_critical_path", 28),
+    # ancestor closure, one isEmpty probe per tree level: measured 10.
+    ("q243_bom_subtree_rollup", 12),
+    # breadcrumb closure, one isEmpty probe per tree level: measured 7.
+    ("q305_materialized_paths", 9),
     # min-label CC, self-loop message shape + loop-scoped AQE-off (r7):
     # measured 15 jobs; an extra exchange or barrier per double round
     # adds >= 3, and losing the AQE scope roughly doubles the count.

@@ -176,7 +176,7 @@ BUDGETS = [
     ("q263_damerau_levenshtein_linkage", 3, 4),  # vocab agg + pair join; DL UDF
     ("q264_rolling_median_exact", 1, 0),    # daily agg; frame window 1-part
     ("q265_allen_interval_relations", 6, 0),  # iv agg + cust pair join + agg
-    ("q266_critical_path", 7, 0),           # per-round frontier joins (chkpt)
+    ("q266_critical_path", 3, 0),           # closure levels checkpointed; final max + sort
     ("q267_hodges_lehmann", 2, 0),          # per-order collect + sort; HOF pairs
     ("q268_rolling_regression", 1, 0),      # daily agg; frame window 1-part
     ("q269_reciprocal_best_match", 7, 0),   # matrix agg + 2 argmax + join
