@@ -4,9 +4,9 @@ exact fixed-point PageRank.
 Pair generators (exact Jaccard, MinHash LSH, SimHash, embedding near-dup)
 emit edges; curation needs the transitive closure: one keeper per duplicate
 CLUSTER. Two interchangeable engines with one contract: both return
-``(labels, rounds)``, labels being ``(node, cluster_id=min node id of the
-component)``, and both raise once ``max_iter`` is reached without
-convergence, so unconverged labels never leave this module.
+``(node, cluster_id=min node id of the component)``, and both raise once
+``max_iter`` is reached without convergence, so unconverged labels never
+leave this module.
 
 - ``connected_components`` — iterative min-label propagation. Rounds ~
   graph diameter; ideal for near-dup graphs (tiny, shallow components).
@@ -81,11 +81,10 @@ def connected_components(
     src: str = "id1",
     dst: str = "id2",
     max_iter: int = 25,
-) -> tuple[DataFrame, int]:
-    """((node, cluster_id), rounds) for every node in ``edges``; cluster_id
-    is the component's minimum node id — deterministic, and exactly what a
-    min-keeper dedup policy wants; rounds counts driver rounds of two
-    propagation steps each.
+) -> DataFrame:
+    """(node, cluster_id) for every node in ``edges``; cluster_id is the
+    component's minimum node id — deterministic, and exactly what a
+    min-keeper dedup policy wants.
 
     Min-label propagation: every node starts labeled with itself; each step
     every node takes the min of its own and its neighbors' labels; stop when
@@ -180,10 +179,10 @@ def connected_components(
     # intermediate step was also a fixed point. Worst case one extra
     # (idempotent) propagation executes.
     with _no_aqe(labels):
-        labels, rounds = fixed_point(
+        labels, _rounds = fixed_point(
             labels, _double_step, _unchanged, max_rounds=(max_iter + 1) // 2
         )
-    return labels.drop("__old"), rounds
+    return labels.drop("__old")
 
 
 def connected_components_star(
@@ -192,11 +191,10 @@ def connected_components_star(
     dst: str = "id2",
     max_iter: int = 25,
     assume_distinct: bool = False,
-) -> tuple[DataFrame, int]:
+) -> DataFrame:
     """Alternating large-star/small-star CC (Kiveris et al., SOCC'14) —
     the high-diameter scale path. Same output contract as
-    ``connected_components``; also returns the number of alternation
-    rounds executed.
+    ``connected_components``.
 
     large-star: every node hooks its LARGER neighbors onto the minimum of
     its closed neighborhood. small-star: every node hooks its smaller-or-
@@ -276,7 +274,7 @@ def connected_components_star(
     # runtime broadcast/coalesce decisions — measured q90 6.4 → 9.5 s and
     # q379 6.2 → 8.8 s with AQE scoped off here, so the job-count saving
     # is not worth it for this engine.
-    cur, rounds = fixed_point(
+    cur, _rounds = fixed_point(
         cur, lambda ed: small_star(large_star(ed)), unchanged, max_rounds=max_iter
     )
     # at convergence edges form stars (child -> component min); roots label
@@ -285,8 +283,7 @@ def connected_components_star(
         "node", F.col("node").alias("cluster_id")
     )
     children = cur.select(F.col("u").alias("node"), F.col("v").alias("cluster_id"))
-    labels = children.unionByName(roots).distinct()
-    return labels, rounds
+    return children.unionByName(roots).distinct()
 
 
 #: fixed-point scale for exact PageRank: ranks are BIGINTs in units of
@@ -302,7 +299,6 @@ def pagerank_fixed_point(
     iterations: int = 3,
     damping_pct: int = 85,
     seeds: DataFrame | None = None,
-    seed_col: str = "node",
 ) -> DataFrame:
     """Exact-arithmetic PageRank: a fixed number of power iterations with
     all ranks held as BIGINT fixed-point (units of 1/PR_SCALE).
@@ -318,7 +314,7 @@ def pagerank_fixed_point(
     Teleport mass goes to the seed set, uniformly: ``base = PR_SCALE //
     |seeds ∩ nodes|``, and the initial ranks are ``base`` on seeds and 0
     elsewhere. ``seeds=None`` makes every node a seed (global PageRank);
-    a ``seeds`` frame (column ``seed_col``) gives personalized PageRank —
+    a ``seeds`` frame (column ``node``) gives personalized PageRank —
     ranks measure graph proximity to the seeds, the related-items query
     global teleport can't express. Seeds absent from the edge list are
     ignored; raises ``ValueError`` if none is left.
@@ -326,10 +322,12 @@ def pagerank_fixed_point(
     Scale shape: per iteration one co-partitioned shuffled-hash join of
     ranks onto the edge list plus one groupBy(node) sum over the messages
     UNIONED with one zero row per node from the CONSTANT node frame. The
-    zero row keeps rank rows for nodes with no in-edges and carries the
-    node's teleport share as ``t`` (messages carry 0), so the teleport term
-    rides the same aggregation, and the rank iterate is consumed exactly
-    once per iteration so the unmaterialized lineage stays linear.
+    zero row keeps rank rows for nodes with no in-edges and carries
+    ``100 * teleport`` on seeds; messages carry ``d * (rank div deg)``. So
+    the rank is one ``sum(c) div 100`` over (node, c) rows, exactly the mix
+    above (the teleport term is a multiple of 100, so the floor division
+    splits over it), and the rank iterate is consumed exactly once per
+    iteration so the unmaterialized lineage stays linear.
     Dangling nodes keep only their teleport share (their mass is dropped —
     the standard sink-handling simplification, stated so the oracle
     matches).
@@ -354,7 +352,7 @@ def pagerank_fixed_point(
         n_seeds = nodes.count()
     else:
         seed_nodes = (
-            seeds.select(F.col(seed_col).alias("node"), F.lit(True).alias("is_seed"))
+            seeds.select("node", F.lit(True).alias("is_seed"))
             .distinct()
             .join(nodes, "node")
             .localCheckpoint(eager=False)
@@ -383,9 +381,7 @@ def pagerank_fixed_point(
     # ONE explicit post-checkpoint repartition, shared by every iteration's
     # join via ReuseExchange (the checkpoint erased the partitioning)
     e_deg_p = e_deg.repartition(n_part, "s")
-    zero_rows = flagged.select(
-        "node", F.lit(0).cast("long").alias("c"), on_seeds(teleport).alias("t")
-    )
+    zero_rows = flagged.select("node", on_seeds(100 * teleport).alias("c"))
     ranks = flagged.select("node", on_seeds(base).alias("rank_fp"))
     for i in range(iterations):
         msgs = (
@@ -397,19 +393,14 @@ def pagerank_fixed_point(
             )
             .select(
                 F.col("d").alias("node"),
-                F.expr("rank_fp div deg").alias("c"),
-                F.lit(0).cast("long").alias("t"),
+                F.expr(f"{damping_pct} * (rank_fp div deg)").alias("c"),
             )
         )
         ranks = (
             msgs.unionByName(zero_rows)
             .repartition(n_part, "node")
             .groupBy("node")
-            .agg(
-                (
-                    F.sum("t") + F.expr(f"({damping_pct} * sum(c)) div 100")
-                ).cast("long").alias("rank_fp")
-            )
+            .agg(F.expr("sum(c) div 100").cast("long").alias("rank_fp"))
         )
         # each iterate is consumed exactly ONCE (by the next iteration's
         # join), so per-iteration checkpoints buy no reuse — they only cost

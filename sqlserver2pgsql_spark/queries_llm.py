@@ -973,7 +973,7 @@ def q51_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     corpus = _neardup_corpus(spark, sf_dir)
     pairs = D.ngram_jaccard_pairs(corpus, "doc_id", "text", n=3, threshold=0.6)
-    cc, _rounds = connected_components(pairs, "id1", "id2")
+    cc = connected_components(pairs, "id1", "id2")
     return cc.select(
         F.col("node").alias("doc_id"),
         "cluster_id",
@@ -2073,7 +2073,7 @@ def q73_embedding_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = _t(spark, sf_dir, "embeddings")
     pairs = S.embedding_neardup_pairs_lsh(emb, threshold=0.35)
-    cc, _rounds = connected_components(pairs, "id1", "id2")
+    cc = connected_components(pairs, "id1", "id2")
     return cc.select(
         F.col("node").alias("vec_id"),
         "cluster_id",
@@ -2648,7 +2648,7 @@ def q87_cluster_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     corpus = _neardup_corpus(spark, sf_dir)
     pairs = D.ngram_jaccard_pairs(corpus, "doc_id", "text", n=3, threshold=0.6)
-    cc, _rounds = connected_components(pairs, "id1", "id2")
+    cc = connected_components(pairs, "id1", "id2")
     sized = cc.select(F.col("node").alias("doc_id"), "cluster_id").join(
         corpus.select("doc_id", F.length("text").alias("n_chars")), "doc_id"
     )
@@ -3006,7 +3006,7 @@ def q90_dedup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = D.ngram_jaccard_pairs(corpus, "doc_id", "text", n=3, threshold=0.6)
     # ngram_jaccard_pairs emits distinct (id1 < id2) rows — skip the
     # engine's init dedup exchange and its extra checkpoint+count
-    cc, _rounds = connected_components_star(pairs, "id1", "id2", assume_distinct=True)
+    cc = connected_components_star(pairs, "id1", "id2", assume_distinct=True)
     return cc.select(
         F.col("node").alias("doc_id"),
         "cluster_id",

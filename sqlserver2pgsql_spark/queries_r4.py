@@ -5143,7 +5143,7 @@ def q167_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = D.ngram_jaccard_pairs(
         corpus, "doc_id", "text", n=3, threshold=0.6
     ).select("id1", "id2").localCheckpoint(eager=False)
-    cc, _rounds = connected_components(pairs, "id1", "id2")
+    cc = connected_components(pairs, "id1", "id2")
     assigned = (
         corpus.select("doc_id", F.length("text").cast("long").alias("n_chars"))
         .join(cc.select(F.col("node").alias("doc_id"), "cluster_id"), "doc_id", "left")
@@ -6662,7 +6662,7 @@ def q188_entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("id1", "id2")
     )
-    cc, _rounds = connected_components(pairs, "id1", "id2")
+    cc = connected_components(pairs, "id1", "id2")
     assigned = corpus.join(
         cc.select(F.col("node").alias("rid"), "cluster_id"), "rid", "left"
     ).select(
@@ -9932,7 +9932,7 @@ def q232_cluster_size_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     corpus = _neardup_corpus(spark, sf_dir)
     pairs = D.ngram_jaccard_pairs(corpus, "doc_id", "text", n=3, threshold=0.6)
-    cc, _rounds = connected_components(pairs, "id1", "id2")
+    cc = connected_components(pairs, "id1", "id2")
     cc = cc.select(F.col("node").alias("doc_id"), "cluster_id")
     all_docs = corpus.select("doc_id").join(cc, "doc_id", "left").select(
         "doc_id", F.coalesce("cluster_id", "doc_id").alias("cluster_id")

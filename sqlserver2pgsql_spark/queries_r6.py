@@ -948,7 +948,7 @@ def q379_dbscan_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the grid join emits each (pa, pb) ordered pair exactly once (one
     # build cell per point), so the edge rows are already distinct — skip
     # the engine's init dedup exchange
-    cc, _rounds = connected_components_star(core_edges, "pa", "pb", assume_distinct=True)
+    cc = connected_components_star(core_edges, "pa", "pb", assume_distinct=True)
     # isolated cores (no core neighbor) keep their own id as cluster
     core_cluster = (
         cores.join(cc, cores.vec_id == cc.node, "left")

@@ -25,6 +25,23 @@ def duck():
     yield duck_views(SF_DIR)
 
 
+@pytest.fixture
+def loop_rounds(monkeypatch):
+    """Round counts of every ``fixed_point`` loop the graph engines run
+    during the test, in call order (the engines return labels only)."""
+    from sqlserver2pgsql_spark.operators import graph, loop
+
+    seen: list[int] = []
+
+    def recording(*args, **kwargs):
+        state, rounds = loop.fixed_point(*args, **kwargs)
+        seen.append(rounds)
+        return state, rounds
+
+    monkeypatch.setattr(graph, "fixed_point", recording)
+    return seen
+
+
 def assert_matches_oracle(spark_df, duck_con, oracle_sql: str):
     err = mismatch(spark_df.toPandas(), duck_con.execute(oracle_sql).fetchdf())
     assert err is None, err

@@ -349,12 +349,11 @@ def test_connected_components_transitive(spark):
         [Row(id1=5, id2=2), Row(id1=2, id2=9), Row(id1=9, id2=7),  # chain {2,5,7,9}
          Row(id1=30, id2=31)]                                      # island {30,31}
     )
-    labels, _rounds = connected_components(edges)
-    got = {r.node: r.cluster_id for r in labels.collect()}
+    got = {r.node: r.cluster_id for r in connected_components(edges).collect()}
     assert got == {2: 2, 5: 2, 7: 2, 9: 2, 30: 30, 31: 30}
 
 
-def test_connected_components_star_matches_minlabel(spark):
+def test_connected_components_star_matches_minlabel(spark, loop_rounds):
     """Alternating large-star/small-star (Kiveris SOCC'14) produces the same
     (node, min-id) labeling as min-label propagation, and on a long path its
     round count beats the diameter bound that min-label pays."""
@@ -369,9 +368,9 @@ def test_connected_components_star_matches_minlabel(spark):
     # propagation, the case the star algorithm exists for
     path = [Row(id1=i, id2=i + 1) for i in range(1, 12)]
     edges = spark.createDataFrame(path + [Row(id1=50, id2=51)])
-    want = {r.node: r.cluster_id for r in connected_components(edges)[0].collect()}
-    labels, rounds = connected_components_star(edges)
-    got = {r.node: r.cluster_id for r in labels.collect()}
+    want = {r.node: r.cluster_id for r in connected_components(edges).collect()}
+    got = {r.node: r.cluster_id for r in connected_components_star(edges).collect()}
+    rounds = loop_rounds[-1]
     assert got == want
     assert got[11] == 1 and got[51] == 50
     # diameter-11 path needs ~11 propagation rounds; star needs O(log^2)

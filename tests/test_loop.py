@@ -49,30 +49,30 @@ def test_closure_is_the_union_of_every_level(spark):
         closure(seed, step, max_rounds=3)
 
 
-def test_chain_beyond_the_minlabel_cap(spark):
+def test_chain_beyond_the_minlabel_cap(spark, loop_rounds):
     """A 120-node path needs ~119 propagation steps: min-label raises at its
     25-step cap instead of returning partial labels; the star engine, whose
     rounds grow with log^2 n, finds the one component."""
     edges = spark.createDataFrame([(i, i + 1) for i in range(119)], "id1 long, id2 long")
     with pytest.raises(RuntimeError, match="not converged"):
         connected_components(edges)
-    labels, rounds = connected_components_star(edges)
+    labels = connected_components_star(edges)
     assert labels.count() == 120
     assert [r.cluster_id for r in labels.select("cluster_id").distinct().collect()] == [0]
-    assert rounds <= 12
+    assert loop_rounds[-1] <= 12
 
 
-def test_cc_engines_agree_on_the_q51_pair_graph(spark):
+def test_cc_engines_agree_on_the_q51_pair_graph(spark, loop_rounds):
     """Side by side on the near-dup pair graph q51 clusters: identical
     labels; the round counts are the numbers that decide whether both
     engines must stay (printed with -s)."""
     corpus = _neardup_corpus(spark, SF_DIR)
     pairs = D.ngram_jaccard_pairs(corpus, "doc_id", "text", n=3, threshold=0.6)
     pairs = pairs.select("id1", "id2").localCheckpoint()
-    minlabel, r_min = connected_components(pairs)
-    star, r_star = connected_components_star(pairs, assume_distinct=True)
-    want = sorted(map(tuple, minlabel.collect()))
+    want = sorted(map(tuple, connected_components(pairs).collect()))
+    star = connected_components_star(pairs, assume_distinct=True)
     assert want and sorted(map(tuple, star.collect())) == want
+    r_min, r_star = loop_rounds
     print(f"q51 pair graph: {len(want)} nodes, min-label {r_min} double rounds, "
           f"star {r_star} rounds")
 
@@ -119,7 +119,7 @@ def test_pagerank_matches_integer_reference(spark, iterations):
     glob = ranks()
     assert glob == _reference_pagerank(_PR_EDGES, iterations)
     assert ranks(seeds=seeds) == _reference_pagerank(_PR_EDGES, iterations, seeds=[3, 11, 999])
-    every = spark.createDataFrame([(n,) for n in glob], "v long")
-    assert ranks(seeds=every, seed_col="v") == glob
+    every = spark.createDataFrame([(n,) for n in glob], "node long")
+    assert ranks(seeds=every) == glob
     with pytest.raises(ValueError):
         ranks(seeds=spark.createDataFrame([(999,)], "node long"))
