@@ -12,12 +12,6 @@ Scale notes (100 TB):
 - one shuffle on the PK for each side, no pre-sort needed. PKs are unique so
   the join is skew-free by construction; AQE skew-join covers pathological
   layouts.
-- ``use_hash=True`` compares a single xxhash64 of all value columns instead
-  of N column equalities — narrows the comparison expression for very wide
-  tables (the hash is computed map-side, inside whole-stage codegen).
-  NULL-vs-empty-string stays distinguishable because xxhash64 of NULL skips
-  the field while '' contributes a length-0 block; we additionally hash a
-  per-column null-indicator to make this explicit.
 - NULL semantics: the reference *refuses to run* unless Kettle is configured
   so empty string != NULL (check_kettle_properties, :773-802). We honor the
   same contract with null-safe equality (``<=>`` / IS NOT DISTINCT FROM).
@@ -41,15 +35,6 @@ _S_PRESENT = "__src_present__"
 _T_PRESENT = "__tgt_present__"
 
 
-def _row_hash(side: str, cols: list[str]) -> str:
-    # hash values AND null indicators so NULL vs '' vs 0 never collide
-    parts = []
-    for c in cols:
-        col = f"{side}.{ident(c)}"
-        parts += [col, f"CAST({col} IS NULL AS INT)"]
-    return f"xxhash64({', '.join(parts)})"
-
-
 def _all(preds: list[str]) -> str:
     return " AND ".join(f"({p})" for p in preds) or "true"
 
@@ -58,9 +43,7 @@ def diff(
     src: DataFrame,
     tgt: DataFrame,
     keys: list[str],
-    compare_cols: list[str] | None = None,
     flag_col: str = DIFF_FLAG_COL,
-    use_hash: bool = False,
 ) -> DataFrame:
     """Full-outer diff of ``src`` (desired state) vs ``tgt`` (current state).
 
@@ -78,8 +61,6 @@ def diff(
     """
     if not keys:
         raise ValueError("diff needs at least one key column")
-    if compare_cols is None:
-        compare_cols = [c for c in src.columns if c not in keys]
     value_cols = [c for c in src.columns if c not in keys]
 
     s = src.withColumn(_S_PRESENT, F.lit(True)).alias("s")
@@ -87,10 +68,7 @@ def diff(
     cond = _all([f"s.{ident(k)} <=> t.{ident(k)}" for k in keys])
     joined = s.join(t, F.expr(cond), "full_outer")
 
-    if use_hash and compare_cols:
-        same = f"{_row_hash('s', compare_cols)} = {_row_hash('t', compare_cols)}"
-    else:
-        same = _all([f"s.{ident(c)} <=> t.{ident(c)}" for c in compare_cols])
+    same = _all([f"s.{ident(c)} <=> t.{ident(c)}" for c in value_cols])
 
     in_src = f"s.{_S_PRESENT} IS NOT NULL"
     in_tgt = f"t.{_T_PRESENT} IS NOT NULL"
@@ -107,11 +85,9 @@ def diff(
     )
 
 
-def diff_counts(
-    src: DataFrame, tgt: DataFrame, keys: list[str], **kwargs
-) -> DataFrame:
+def diff_counts(src: DataFrame, tgt: DataFrame, keys: list[str]) -> DataFrame:
     """Per-flag row counts — the summary a sync job reports."""
-    d = diff(src, tgt, keys, **kwargs)
+    d = diff(src, tgt, keys)
     return d.groupBy(DIFF_FLAG_COL).agg(F.count(F.lit(1)).alias("n")).orderBy(DIFF_FLAG_COL)
 
 
@@ -121,7 +97,6 @@ def diff_key_range(
     keys: list[str],
     lower,
     upper,
-    **kwargs,
 ) -> DataFrame:
     """Windowed incremental diff: both sides restricted to
     ``lower <= pk < upper`` before diffing — the surviving use of the A11
@@ -131,4 +106,4 @@ def diff_key_range(
     into both scans."""
     k = F.col(ident(keys[0]))
     pred = (k >= F.lit(lower)) & (k < F.lit(upper))
-    return diff(src.filter(pred), tgt.filter(pred), keys, **kwargs)
+    return diff(src.filter(pred), tgt.filter(pred), keys)

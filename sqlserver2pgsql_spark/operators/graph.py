@@ -23,12 +23,15 @@ the EDGE list (≪ corpus for near-dup graphs), sized explicitly via
 
 SESSION-EXCLUSIVE while ``connected_components`` loops: its driver
 actions run with ``spark.sql.adaptive.enabled`` switched off in the
-SESSION conf (``_no_aqe``) — Spark has no per-query override for it. The
-conf is set for the (synchronous) loop and restored in ``finally``; a
-query started concurrently on the same session mid-loop runs without
-AQE, and two overlapping loops can race on the save/restore, so don't
-share the session with concurrent work during the call. The other loops
-in this module write no session conf.
+SESSION conf — Spark has no per-query override for it. Every exchange in
+the loop is explicitly sized (repartition + shuffle_hash hints), so AQE
+has no decision left to improve, but it re-plans and re-materializes every
+query stage of every per-round action: with it on, the loop runs about
+twice the jobs. The window is a ``session.scoped_conf``: it holds the
+shared conf lock for the (synchronous) loop, so two loops on one session
+run one after the other and the caller's value is back afterwards. A
+query started on the session mid-loop without a window of its own still
+runs without AQE. The other loops in this module write no session conf.
 
 Min-label loop shape (r7, guide §2.4/§5): a checkpoint erases output
 partitioning (loop.py), so the loop (a) folds the "own label" term into the
@@ -43,30 +46,11 @@ ReuseExchange.
 
 from __future__ import annotations
 
-from contextlib import contextmanager
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import scoped_conf
 from .loop import fixed_point
-
-
-@contextmanager
-def _no_aqe(df: DataFrame):
-    """Scope adaptive execution OFF for a loop's driver actions. Every
-    exchange inside these loops is explicitly sized (repartition(n_part) +
-    shuffle_hash hints), so AQE has no decision left to improve — but it
-    re-plans and re-materializes every query stage of every per-round
-    action, which at the loops' small per-round data is pure driver-side
-    latency (guide §5). Set + restored around the loop only; the caller's
-    session conf is untouched afterwards."""
-    spark = df.sparkSession
-    old = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", old)
 
 
 def _edge_partitions(n_edges: int) -> int:
@@ -178,7 +162,7 @@ def connected_components(
     # ever decrease, so "no change across the double step" implies the
     # intermediate step was also a fixed point. Worst case one extra
     # (idempotent) propagation executes.
-    with _no_aqe(labels):
+    with scoped_conf(labels.sparkSession, {"spark.sql.adaptive.enabled": "false"}):
         labels, _rounds = fixed_point(
             labels, _double_step, _unchanged, max_rounds=(max_iter + 1) // 2
         )

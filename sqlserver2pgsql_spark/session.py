@@ -10,11 +10,17 @@ same code is right on a 1000-executor cluster:
 - session timezone pinned to UTC so timestamp semantics match the DuckDB
   oracle and are cluster-invariant.
 - Arrow enabled for the pandas-UDF slow path.
+
+Library code outside this module changes a session conf only through
+``scoped_conf``, so the caller's session is left as it was found.
 """
 
 from __future__ import annotations
 
 import os
+import threading
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -61,3 +67,34 @@ def tune_session(spark: SparkSession) -> SparkSession:
     except Exception:
         pass  # immutable on some deployments; AQE default-on in Spark 4
     return spark
+
+
+# One lock for every scoped window in the process: windows on one thread
+# nest, windows from two threads run one after the other.
+_CONF_LOCK = threading.RLock()
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, conf: dict[str, str]) -> Iterator[None]:
+    """Set ``conf`` on the session for the ``with`` body, then put back each
+    key's prior value (``unset`` for a key that had none).
+
+    The window is held under a process-wide reentrant lock, so a nested
+    window on one thread restores level by level and two threads' windows
+    never interleave: every restore puts back the value from before its
+    window. Work started on the session without a window still sees the
+    window's values while it is open."""
+    with _CONF_LOCK:
+        saved: dict[str, str | None] = {}
+        try:
+            for key, value in conf.items():
+                old = spark.conf.get(key, None)
+                spark.conf.set(key, value)
+                saved[key] = old
+            yield
+        finally:
+            for key, value in saved.items():
+                if value is None:
+                    spark.conf.unset(key)
+                else:
+                    spark.conf.set(key, value)

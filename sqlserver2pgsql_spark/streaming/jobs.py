@@ -21,6 +21,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..session import scoped_conf
+
 
 def event_stream_schema() -> T.StructType:
     """events.parquet schema; ts is TIMESTAMP_NTZ (the fixture's physical
@@ -161,37 +163,32 @@ def stateful_user_totals(events: DataFrame) -> DataFrame:
     )
 
 
+# A state store instance is kept PER shuffle partition of a stateful
+# stream, so the width tracks state cardinality (#keys / #windows), not the
+# batch-side core count: 32 stores for 150 users triple the wall time
+# locally (measured 9.5s -> 3.4s on the stream-stream join at 8). On a
+# cluster, size to keys/throughput; the width is fixed for the life of a
+# checkpoint.
+_STATE_PARTITIONS = 8
+
+
 def run_stream_to_memory(
     df: DataFrame,
     name: str,
     output_mode: str = "complete",
-    state_partitions: int | None = 8,
     final_no_data_batch: bool = False,
 ) -> None:
     """Drive a streaming aggregation to completion synchronously against a
-    memory sink (local smoke pattern — one batch over a file source).
+    memory sink (local smoke pattern — one batch over a file source), with
+    ``_STATE_PARTITIONS`` state stores.
 
-    ``state_partitions`` sizes the stateful shuffle: a state store instance
-    is maintained PER shuffle partition, so partitions should track state
-    cardinality (#keys / #windows), not the batch-side core count —
-    32 stores for 150 users triples the wall time locally (measured
-    9.5s → 3.4s on the stream-stream join at 8). On a cluster, size to
-    keys/throughput; the partition count is fixed for the life of a
-    checkpoint. ``None`` leaves the session value untouched.
-
-    SESSION-EXCLUSIVE while running: unlike batch operators (which size
-    their shuffles with scoped ``repartition``, see operators/graph.py), a
-    stateful stream's shuffle width can only come from the session conf at
-    query start — Spark has no per-query override for it. The conf is
-    mutated for the (synchronous) run and restored in ``finally``; don't
-    start concurrent queries on the same session mid-call."""
-    spark = df.sparkSession
-    key = "spark.sql.shuffle.partitions"
-    nd_key = "spark.sql.streaming.noDataMicroBatches.enabled"
-    old = spark.conf.get(key)
-    old_nd = spark.conf.get(nd_key, "true")
-    if state_partitions is not None:
-        spark.conf.set(key, str(state_partitions))
+    SESSION-EXCLUSIVE during ``start()`` only: a stateful stream's shuffle
+    width can only come from the session conf — Spark has no per-query
+    override for it. ``start()`` clones the session for the stream, and the
+    stream reads its shuffle width and no-data-batch setting from that
+    clone, so the ``session.scoped_conf`` window (under the shared conf
+    lock) covers ``start()`` alone; ``processAllAvailable()`` runs after the
+    caller's values are back."""
     # skip the trailing NO-DATA micro-batch by default: for an availableNow
     # drain it only advances the watermark and evicts state after the last
     # data batch — stream-stream inner joins and dropDuplicates emit in
@@ -204,8 +201,10 @@ def run_stream_to_memory(
     # watermark's eviction IS the no-data batch) and OUTER stream-stream
     # joins (their NULL rows surface on final eviction) — such callers
     # pass ``final_no_data_batch=True``.
-    spark.conf.set(nd_key, str(final_no_data_batch).lower())
-    try:
+    no_data = str(final_no_data_batch).lower()
+    conf = {"spark.sql.shuffle.partitions": str(_STATE_PARTITIONS),
+            "spark.sql.streaming.noDataMicroBatches.enabled": no_data}
+    with scoped_conf(df.sparkSession, conf):
         q = (
             df.writeStream.outputMode(output_mode)
             .format("memory")
@@ -213,11 +212,8 @@ def run_stream_to_memory(
             .trigger(availableNow=True)
             .start()
         )
-        q.processAllAvailable()
-        q.stop()
-    finally:
-        spark.conf.set(key, old)
-        spark.conf.set(nd_key, old_nd)
+    q.processAllAvailable()
+    q.stop()
 
 
 def foreach_batch_upsert(store, schema: str, table: str, keys: list[str]):

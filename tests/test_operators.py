@@ -4,7 +4,6 @@ from __future__ import annotations
 
 import threading
 
-import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
@@ -25,6 +24,7 @@ from sqlserver2pgsql_spark.operators.diff import (
     diff,
 )
 from sqlserver2pgsql_spark.operators.merge import apply_diff, merge_sql
+from sqlserver2pgsql_spark.session import scoped_conf
 
 
 def test_cleanse_strips_nul_bytes(spark):
@@ -55,23 +55,12 @@ def test_diff_flags_all_four_states(spark):
     }
 
 
-def test_diff_hash_variant_matches_column_compare(spark):
-    src = spark.createDataFrame([Row(k=i, v=f"v{i}", w=i * 2) for i in range(100)])
-    tgt = spark.createDataFrame(
-        [Row(k=i, v=f"v{i}" if i % 3 else "x", w=i * 2) for i in range(1, 101)]
-    )
-    a = diff(src, tgt, ["k"]).orderBy("k").collect()
-    b = diff(src, tgt, ["k"], use_hash=True).orderBy("k").collect()
-    assert a == b
-
-
-@pytest.mark.parametrize("use_hash", [False, True])
-def test_diff_key_only_table(spark, use_hash):
+def test_diff_key_only_table(spark):
     # the PK covers every column (a link table): nothing to compare, so two
     # present rows are identical
     src = spark.createDataFrame([Row(a=1, b=1), Row(a=1, b=2), Row(a=3, b=None)])
     tgt = spark.createDataFrame([Row(a=1, b=1), Row(a=2, b=2), Row(a=3, b=None)])
-    d = diff(src, tgt, ["a", "b"], use_hash=use_hash)
+    d = diff(src, tgt, ["a", "b"])
     assert d.columns == ["a", "b", DIFF_FLAG_COL]
     assert sorted((r.a, r.b, r[DIFF_FLAG_COL]) for r in d.collect()) == sorted([
         (1, 1, FLAG_IDENTICAL), (1, 2, FLAG_NEW), (2, 2, FLAG_DELETED),
@@ -79,15 +68,14 @@ def test_diff_key_only_table(spark, use_hash):
     ])
 
 
-@pytest.mark.parametrize("use_hash", [False, True])
-def test_diff_and_cleanse_quote_bracketed_names(spark, use_hash):
+def test_diff_and_cleanse_quote_bracketed_names(spark):
     schema = "`Order Date` string, `a.b` int, `we``ird` string"
     src = spark.createDataFrame([("d1\x00", 1, "x"), ("d2", 2, "y"), ("d4", 4, "z")], schema)
     tgt = spark.createDataFrame([("d1", 1, "x"), ("d2", 2, "changed"), ("d3", 3, "w")],
                                 schema)
     clean = cleanse_strings(src)
     assert clean.columns == ["Order Date", "a.b", "we`ird"]
-    d = diff(clean, tgt, ["a.b"], use_hash=use_hash)
+    d = diff(clean, tgt, ["a.b"])
     assert d.columns == ["a.b", "Order Date", "we`ird", DIFF_FLAG_COL]  # keys first
     assert sorted(tuple(r) for r in d.collect()) == [
         (1, "d1", "x", FLAG_IDENTICAL), (2, "d2", "y", FLAG_CHANGED),
@@ -100,16 +88,11 @@ def test_cleanse_pattern_ignores_escaped_string_literals(spark):
     # session that reads literals without escape processing strips the
     # same characters; the regex \\ (one backslash) shows the difference
     df = spark.createDataFrame([Row(a="x\\ny\rz\x00")])
-    key = "spark.sql.parser.escapedStringLiterals"
-    before = spark.conf.get(key)
-    try:
-        for flag in ("true", "false"):
-            spark.conf.set(key, flag)
+    for flag in ("true", "false"):
+        with scoped_conf(spark, {"spark.sql.parser.escapedStringLiterals": flag}):
             assert cleanse_strings(df, "\\\\").first().a == "xny\rz\x00"
             assert cleanse_strings(df, "\r").first().a == "x\\nyz\x00"
             assert cleanse_strings(df).first().a == "x\\ny\rz"
-    finally:
-        spark.conf.set(key, before)
 
 
 def _round_trips(build) -> int:
@@ -147,7 +130,6 @@ def test_projection_build_cost_is_flat_per_column(spark):
     narrow = (_wide(spark, 4), _wide(spark, 4, 1))
     wide = (_wide(spark, 40), _wide(spark, 40, 1))
     for build in (lambda s, t: diff(s, t, ["k"]),
-                  lambda s, t: diff(s, t, ["k"], use_hash=True),
                   lambda s, t: cleanse_strings(s)):
         small = _round_trips(lambda: build(*narrow))
         large = _round_trips(lambda: build(*wide))

@@ -8,6 +8,7 @@ from __future__ import annotations
 from sqlserver2pgsql_spark import queries as Q
 from sqlserver2pgsql_spark import queries_llm as QL
 from sqlserver2pgsql_spark.measure import plan_text
+from sqlserver2pgsql_spark.session import scoped_conf
 from tests.conftest import SF_DIR
 
 
@@ -78,20 +79,18 @@ def test_bucketed_join_avoids_shuffle(spark, tmp_path_factory):
 
     # at this size AQE rightly prefers broadcast (which disables bucket use);
     # force the sort-merge path to observe bucket co-location
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        joined = spark.table("b_lineitem").join(
-            spark.table("b_orders"),
-            F.col("l_orderkey") == F.col("o_orderkey"),
-        )
-        plan = plan_text(joined)
-        assert "SortMergeJoin" in plan
-        assert "Exchange hashpartitioning" not in plan, plan  # no shuffle: co-located buckets
-        assert "Bucketed: true" in plan
-        assert joined.count() == li.count()
+        with scoped_conf(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}):
+            joined = spark.table("b_lineitem").join(
+                spark.table("b_orders"),
+                F.col("l_orderkey") == F.col("o_orderkey"),
+            )
+            plan = plan_text(joined)
+            assert "SortMergeJoin" in plan
+            assert "Exchange hashpartitioning" not in plan, plan  # no shuffle: co-located buckets
+            assert "Bucketed: true" in plan
+            assert joined.count() == li.count()
     finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
         spark.sql("DROP TABLE b_lineitem")
         spark.sql("DROP TABLE b_orders")
 

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 from sqlserver2pgsql_spark import queries_r4 as QR
 from sqlserver2pgsql_spark.measure import plan_text
+from sqlserver2pgsql_spark.session import scoped_conf
 from tests.conftest import SF_DIR
 
 
@@ -140,20 +141,10 @@ def test_runtime_bloom_filter_join_injection(spark):
     from pyspark.sql import functions as F
     from sqlserver2pgsql_spark.sources.tables import load_table
 
-    conf = spark.conf
-    saved = {
-        k: conf.get(k, None)
-        for k in (
-            "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
-            "spark.sql.autoBroadcastJoinThreshold",
-        )
-    }
-    try:
-        conf.set(
-            "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
-            "0",
-        )
-        conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    with scoped_conf(spark, {
+        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "0",
+        "spark.sql.autoBroadcastJoinThreshold": "-1",
+    }):
         li = load_table(spark, SF_DIR, "lineitem")
         o = load_table(spark, SF_DIR, "orders").filter(
             F.col("o_orderpriority") == "1-URGENT"
@@ -165,12 +156,6 @@ def test_runtime_bloom_filter_join_injection(spark):
         )
         plan = plan_text(j)
         assert "might_contain" in plan.lower(), plan[:2000]
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                conf.unset(k)
-            else:
-                conf.set(k, v)
 
 
 def test_aqe_skew_join_split(spark):
@@ -183,20 +168,12 @@ def test_aqe_skew_join_split(spark):
     production keeps the defaults."""
     from pyspark.sql import functions as F
 
-    keys = (
-        "spark.sql.adaptive.skewJoin.skewedPartitionFactor",
-        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-        "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        "spark.sql.autoBroadcastJoinThreshold",
-    )
-    saved = {k: spark.conf.get(k, None) for k in keys}
-    try:
-        spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "1")
-        spark.conf.set(
-            "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "8KB"
-        )
-        spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "8KB")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    with scoped_conf(spark, {
+        "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "1",
+        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": "8KB",
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes": "8KB",
+        "spark.sql.autoBroadcastJoinThreshold": "-1",
+    }):
         left = spark.range(200000).select(
             F.when(F.col("id") % 10 != 0, 0).otherwise(F.col("id")).alias("k"),
             F.col("id").alias("v"),
@@ -208,12 +185,6 @@ def test_aqe_skew_join_split(spark):
         j.collect()  # AQE marks skew only in the EXECUTED plan
         plan = plan_text(j)
         assert "skew=true" in plan, plan[:2000]
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 def test_blocked_pav_equals_direct_minimax(spark):
