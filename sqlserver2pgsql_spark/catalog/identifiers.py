@@ -12,10 +12,13 @@ import re
 
 PG_MAX_IDENT = 63
 
+_WORD_START = re.compile(r"(.)([A-Z][a-z]+)")
+_CASE_CHANGE = re.compile(r"([a-z0-9])([A-Z])")
+
 
 def camel_to_snake(name: str) -> str:
-    s = re.sub(r"(.)([A-Z][a-z]+)", r"\1_\2", name)
-    s = re.sub(r"([a-z0-9])([A-Z])", r"\1_\2", s)
+    s = _WORD_START.sub(r"\1_\2", name)
+    s = _CASE_CHANGE.sub(r"\1_\2", s)
     return s.lower()
 
 

@@ -92,6 +92,17 @@ def _quote(name: str) -> str:
     return '"' + name.replace('"', '""') + '"'
 
 
+_PLAIN_NAME = re.compile(r"[a-z_][a-z0-9_$]*")
+
+
+def _regclass(schema: str, name: str) -> str:
+    """``schema.name`` as regclass text for nextval(): a part PostgreSQL
+    would case-fold or split (``ship.mode`` from ``[Ship.Mode]``) is
+    double-quoted."""
+    parts = (p if _PLAIN_NAME.fullmatch(p) else _quote(p) for p in (schema, name))
+    return ".".join(parts).replace("'", "''")
+
+
 #: Spark-dialect → PostgreSQL spellings for default expressions: the stored
 #: translation targets Spark SQL (current_timestamp() etc.), but PG spells
 #: these as parenthesis-free keywords — current_user() is a syntax error on
@@ -182,11 +193,10 @@ def emit_after(catalog: Catalog, opts: EmitOptions | None = None) -> str:
             for seq in catalog.schemas[sname].sequences.values():
                 if not seq.owner_table:
                     continue
-                seq_lit = f"{sname}.{seq.name}".replace("'", "''")
                 out.append(
                     f"ALTER TABLE {_quote(sname)}.{_quote(seq.owner_table)} "
                     f"ALTER COLUMN {_quote(seq.owner_column)} "
-                    f"SET DEFAULT nextval('{seq_lit}');"
+                    f"SET DEFAULT nextval('{_regclass(sname, seq.name)}');"
                 )
     for sname, table in catalog.all_tables():
         tq = qual(sname, table.name)

@@ -6,7 +6,14 @@ with the same behavior contract: recognized statements are parsed fully,
 listed noise is skipped, anything else raises DdlParseError ("die on all
 error conditions", :7-8).
 
-Validated against every file in /root/reference/regression/ (tests/test_ddl.py).
+Tests: tests/test_ddl_fixture.py parses a hand-written SSMS dump
+(tests/data/ssms_sample.sql) against golden scripts, and tests/test_ddl.py
+pins the type matrix, identifiers, options and error paths on inline text;
+both run anywhere. tests/test_ddl.py also parses the reference's regression
+corpus (regression/*.sql of sqlserver2pgsql) when that checkout is present.
+
+Every pattern is compiled once at import, and all paren/comma scanning goes
+through :mod:`sqlserver2pgsql_spark.scan`.
 """
 
 from __future__ import annotations
@@ -34,96 +41,172 @@ from ..catalog.model import (
 from ..catalog.types import convert_type
 from ..functions.translate import translate_tsql_expr
 from .reader import clean_statements, read_dump
+from ..scan import paren_group, split_top
 
 
 class DdlParseError(Exception):
     pass
 
 
-_IDENT = r"\[?([^\]\s.(]+)\]?"  # [Name] or Name
+#: [Name] (inside brackets anything but ``]``, with ``]]`` for a literal
+#: ``]``) or a bare Name; group 1 is the raw name. The lookarounds keep a
+#: bracketed name from ending anywhere but at its closing bracket.
+_IDENT = r"\[?((?<=\[)[^\]]*(?:\]\][^\]]*)*(?=\])|(?<!\[)[^\[\]\s.(]+)\]?"
 _QIDENT = rf"(?:{_IDENT}\.)?{_IDENT}"  # [schema].[name] or name
 
+
+def _unescape(raw: str) -> str:
+    """A captured ``_IDENT`` → the name it spells (``]]`` → ``]``)."""
+    return raw.replace("]]", "]")
+
+
+def _unbracket(name: str) -> str:
+    """``[Name]`` → the name it spells; a bare name is returned stripped."""
+    name = name.strip()
+    return _unescape(name[1:-1]) if name[:1] == "[" and name[-1:] == "]" else name
+
+
 #: statements skipped wholesale (reference ignore set, :1746-1785, :2424-2570)
-_SKIP = re.compile(
-    r"^\s*(USE\b|SET\b|GRANT\b|DENY\b|REVOKE\b|PRINT\b|DECLARE\b|"
+_SKIP = (
+    r"USE\b|SET\b|GRANT\b|DENY\b|REVOKE\b|PRINT\b|DECLARE\b|"
     r"BEGIN\b|END\b|IF\b|CREATE\s+DATABASE\b|ALTER\s+DATABASE\b|"
     r"CREATE\s+USER\b|ALTER\s+USER\b|CREATE\s+LOGIN\b|ALTER\s+LOGIN\b|"
     r"CREATE\s+ROLE\b|ALTER\s+ROLE\b|"
     r"CREATE\s+FULLTEXT\b|ALTER\s+FULLTEXT\b|"
     r"CREATE\s+XML\s+SCHEMA\s+COLLECTION\b|"
-    r"CREATE\s+(OR\s+ALTER\s+)?(PROC(EDURE)?|FUNCTION|TRIGGER)\b|"
-    r"ALTER\s+(PROC(EDURE)?|FUNCTION|TRIGGER)\b|"
+    r"CREATE\s+(?:OR\s+ALTER\s+)?(?:PROC(?:EDURE)?|FUNCTION|TRIGGER)\b|"
+    r"ALTER\s+(?:PROC(?:EDURE)?|FUNCTION|TRIGGER)\b|"
     r"CREATE\s+PARTITION\b|CREATE\s+ASSEMBLY\b|"
     r"DROP\b|INSERT\b|UPDATE\b|DELETE\b|"
-    r"EXEC(UTE)?\s+(?!sys\.sp_addextendedproperty|sp_addextendedproperty))",
+    r"EXEC(?:UTE)?\s+(?!sys\.sp_addextendedproperty|sp_addextendedproperty)"
+)
+
+#: one match classifies a statement: each group names its ``DdlParser._<kind>``
+#: handler, tried in this order
+_STATEMENT = re.compile(
+    r"\s*(?:"
+    r"(?P<setvar>:setvar\s)"
+    r"|(?P<arithabort>ALTER\s+DATABASE\b(?s:.*)ARITHABORT\s+OFF)"
+    r"|(?P<create_table>CREATE\s+TABLE\b)"
+    r"|(?P<alter_table>ALTER\s+TABLE\b)"
+    r"|(?P<create_index>CREATE\s+(?:UNIQUE\s+)?(?:(?:NON)?CLUSTERED\s+)?INDEX\b)"
+    r"|(?P<alter_index>ALTER\s+INDEX\b)"
+    r"|(?P<create_view>CREATE\s+VIEW\b)"
+    r"|(?P<create_type>CREATE\s+TYPE\b)"
+    r"|(?P<create_schema>CREATE\s+SCHEMA\b)"
+    r"|(?P<create_sequence>CREATE\s+SEQUENCE\b)"
+    r"|(?P<extended_property>EXEC(?:UTE)?\s+(?:sys\.)?sp_addextendedproperty\b)"
+    rf"|(?P<skip>{_SKIP})"
+    r")",
     re.IGNORECASE,
 )
+_SETVAR = re.compile(r':setvar\s+(\S+)\s+"?([^"]*)"?\s*$', re.IGNORECASE)
+
+_INDEX_COL = re.compile(rf"{_IDENT}\s*(ASC|DESC)?\s*$", re.IGNORECASE)
+_TABLE_HEADER = re.compile(rf"\s*CREATE\s+TABLE\s+{_QIDENT}\s*\(", re.IGNORECASE)
+_TABLE_CONSTRAINT = re.compile(
+    r"(CONSTRAINT\b|PRIMARY\s+KEY\b|UNIQUE\b|FOREIGN\s+KEY\b|CHECK\b)", re.IGNORECASE
+)
+_COMPUTED = re.compile(rf"{_IDENT}\s+AS\s+\(", re.IGNORECASE)
+_COLUMN = re.compile(
+    rf"^{_IDENT}\s+"  # column name
+    r"(?:\[(?P<bt>[a-zA-Z_][^\]]*)\]|(?P<ut>[a-zA-Z_]\w*))"  # [type] | type
+    r"\s*(?P<qual>\(\s*(?:\d+|max)\s*(?:,\s*\d+\s*)?\))?"  # qualifier
+    r"(?P<rest>.*)$",
+    re.IGNORECASE | re.DOTALL,
+)
+_PERSISTED = re.compile(r"\bPERSISTED\b", re.IGNORECASE)
+_NOT_NULL = re.compile(r"\bNOT\s+NULL\b", re.IGNORECASE)
+_IDENTITY_ARGS = re.compile(r"\bIDENTITY\s*\(\s*(-?\d+)\s*,\s*(-?\d+)\s*\)", re.IGNORECASE)
+_IDENTITY = re.compile(r"\bIDENTITY\b", re.IGNORECASE)
+_ROWGUIDCOL = re.compile(r"\bROWGUIDCOL\b", re.IGNORECASE)
+_SPARSE = re.compile(r"\bSPARSE\b", re.IGNORECASE)
+_COLLATE = re.compile(r"\bCOLLATE\s+(\S+)", re.IGNORECASE)
+_INLINE_DEFAULT = re.compile(rf"(?:CONSTRAINT\s+{_IDENT}\s+)?DEFAULT\s*\(", re.IGNORECASE)
+_INLINE_PK = re.compile(r"\bPRIMARY\s+KEY\b", re.IGNORECASE)
+_INLINE_UNIQUE = re.compile(r"\bUNIQUE\b", re.IGNORECASE)
+_NUMBER = re.compile(r"-?\d+(\.\d+)?")
+_STRING = re.compile(r"N?('(?:[^']|'')*')")
+_NAMED_CONSTRAINT = re.compile(
+    rf"^CONSTRAINT\s+{_IDENT}\s+(?P<rest>.*)$", re.IGNORECASE | re.DOTALL
+)
+_PRIMARY_KEY = re.compile(r"PRIMARY\s+KEY\b", re.IGNORECASE)
+_UNIQUE = re.compile(r"UNIQUE\b", re.IGNORECASE)
+_FOREIGN_KEY = re.compile(r"FOREIGN\s+KEY\b", re.IGNORECASE)
+_CHECK = re.compile(r"CHECK\b", re.IGNORECASE)
+_DEFAULT = re.compile(r"DEFAULT\b", re.IGNORECASE)
+_REFERENCES = re.compile(rf"REFERENCES\s+{_QIDENT}\s*\(", re.IGNORECASE)
+_ON_DELETE_CASCADE = re.compile(r"ON\s+DELETE\s+CASCADE", re.IGNORECASE)
+_ON_DELETE_SET_NULL = re.compile(r"ON\s+DELETE\s+SET\s+NULL", re.IGNORECASE)
+_ON_UPDATE_CASCADE = re.compile(r"ON\s+UPDATE\s+CASCADE", re.IGNORECASE)
+_ON_UPDATE_SET_NULL = re.compile(r"ON\s+UPDATE\s+SET\s+NULL", re.IGNORECASE)
+_ALTER_TABLE_ADD = re.compile(
+    rf"\s*ALTER\s+TABLE\s+{_QIDENT}\s+(WITH\s+(NO)?CHECK\s+)?ADD\s+(?P<rest>.*)$",
+    re.IGNORECASE | re.DOTALL,
+)
+_DEFAULT_FOR = re.compile(rf"FOR\s+{_IDENT}", re.IGNORECASE)
+_INDEX_HEADER = re.compile(
+    rf"\s*CREATE\s+(?P<u>UNIQUE\s+)?((NON)?CLUSTERED\s+)?INDEX\s+{_IDENT}\s+ON\s+{_QIDENT}\s*\(",
+    re.IGNORECASE,
+)
+_SKIPPED_INDEX = re.compile(r"\s*CREATE\s+(SPATIAL|FULLTEXT|COLUMNSTORE)\b", re.IGNORECASE)
+_INCLUDE = re.compile(r"\bINCLUDE\s*\(", re.IGNORECASE)
+_INDEX_WHERE = re.compile(
+    r"\bWHERE\s+(?P<pred>.*?)(?:\bWITH\s*\(|\bON\s+\[|$)", re.IGNORECASE | re.DOTALL
+)
+_ALTER_INDEX = re.compile(
+    rf"\s*ALTER\s+INDEX\s+{_IDENT}\s+ON\s+{_QIDENT}\s+(?P<action>\w+)", re.IGNORECASE
+)
+_VIEW = re.compile(
+    rf"\s*CREATE\s+VIEW\s+{_QIDENT}\s*(?P<cols>\([^)]*\))?\s*AS\s+(?P<body>.*)$",
+    re.IGNORECASE | re.DOTALL,
+)
+_DOMAIN = re.compile(
+    rf"\s*CREATE\s+TYPE\s+{_QIDENT}\s+FROM\s+\[?(\w+)\]?\s*(\([\d,\s]*\))?", re.IGNORECASE
+)
+_TABLE_TYPE = re.compile(rf"\s*CREATE\s+TYPE\s+{_QIDENT}\s+AS\s+TABLE\s*\(", re.IGNORECASE)
+_TABLE_TYPE_SKIP = re.compile(r"(PRIMARY\s+KEY|UNIQUE|CHECK|INDEX)\b", re.IGNORECASE)
+_SCHEMA = re.compile(rf"\s*CREATE\s+SCHEMA\s+{_IDENT}", re.IGNORECASE)
+_SEQUENCE = re.compile(rf"\s*CREATE\s+SEQUENCE\s+{_QIDENT}", re.IGNORECASE)
+_SEQUENCE_ATTRS = tuple(
+    (attr, re.compile(pat, re.IGNORECASE))
+    for attr, pat in [
+        ("start", r"START\s+WITH\s+(-?\d+)"),
+        ("step", r"INCREMENT\s+BY\s+(-?\d+)"),
+        ("min_value", r"MINVALUE\s+(-?\d+)"),
+        ("max_value", r"MAXVALUE\s+(-?\d+)"),
+        ("cache", r"CACHE\s+(\d+)"),
+    ]
+)
+_EP_ARG = re.compile(r"@(\w+)\s*=\s*N?'((?:[^']|'')*)'", re.IGNORECASE)
 
 
 def _split_top_commas(s: str) -> list[str]:
-    parts, depth, cur, in_str = [], 0, [], False
-    i = 0
-    while i < len(s):
-        ch = s[i]
-        if in_str:
-            cur.append(ch)
-            if ch == "'":
-                if i + 1 < len(s) and s[i + 1] == "'":
-                    cur.append("'")
-                    i += 2
-                    continue
-                in_str = False
-            i += 1
-            continue
-        if ch == "'":
-            in_str = True
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        if ch == "," and depth == 0:
-            parts.append("".join(cur).strip())
-            cur = []
-        else:
-            cur.append(ch)
-        i += 1
-    if "".join(cur).strip():
-        parts.append("".join(cur).strip())
+    """Top-level comma split, parts stripped, a trailing empty part dropped."""
+    parts = [p.strip() for p in split_top(s, ",")]
+    if not parts[-1]:
+        parts.pop()
     return parts
 
 
 def _outer_parens(s: str, start: int = 0) -> tuple[str, int]:
     """Return (inner text, index after closing paren) of the first balanced
     paren group at/after ``start`` (string-literal-aware)."""
-    i = s.index("(", start)
-    depth = 0
-    in_str = False
-    for j in range(i, len(s)):
-        ch = s[j]
-        if in_str:
-            if ch == "'":
-                in_str = False
-            continue
-        if ch == "'":
-            in_str = True
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-            if depth == 0:
-                return s[i + 1 : j], j + 1
-    raise DdlParseError(f"unbalanced parens in: {s[:120]!r}")
+    group = paren_group(s, s.index("(", start))
+    if group is None:
+        raise DdlParseError(f"unbalanced parens in: {s[:120]!r}")
+    return group
 
 
 def _cols_list(inner: str) -> list[IndexColumn]:
     out = []
     for item in _split_top_commas(inner):
-        m = re.match(rf"{_IDENT}\s*(ASC|DESC)?\s*$", item.strip(), re.IGNORECASE)
+        m = _INDEX_COL.match(item.strip())
         if not m:
             raise DdlParseError(f"bad index/key column: {item!r}")
         out.append(
             IndexColumn(
-                name=normalize_identifier(m.group(1)),
+                name=normalize_identifier(_unescape(m.group(1))),
                 ascending=(m.group(2) or "ASC").upper() == "ASC",
             )
         )
@@ -151,9 +234,14 @@ class DdlParser:
     def _norm(self, name: str) -> str:
         return normalize_identifier(name, self.opt.identifier_mode, self.catalog.warnings)
 
+    def _ident(self, raw: str) -> str:
+        """A name captured by ``_IDENT`` → its catalog name."""
+        return self._norm(_unescape(raw))
+
     def _schema_table(self, schema: str | None, table: str) -> tuple[str, str]:
-        s = relabel_schema((schema or "dbo").lower(), self.opt.relabel)
-        return s, self._norm(table)
+        """Captured ``_QIDENT`` parts → (catalog schema, catalog name)."""
+        s = relabel_schema(_unescape(schema or "dbo").lower(), self.opt.relabel)
+        return s, self._ident(table)
 
     def _get_table(self, schema: str | None, table: str) -> Table:
         s, t = self._schema_table(schema, table)
@@ -179,56 +267,36 @@ class DdlParser:
 
     def _dispatch(self, stmt: str) -> None:
         first = stmt.lstrip()
-        if re.match(r"^:setvar\s", first, re.IGNORECASE):
-            m = re.match(r':setvar\s+(\S+)\s+"?([^"]*)"?\s*$', first, re.IGNORECASE)
-            if m:
-                self.catalog.variables[m.group(1)] = m.group(2)
-            return
-        if re.match(r"^\s*ALTER\s+DATABASE\b.*ARITHABORT\s+OFF", first, re.IGNORECASE | re.DOTALL):
-            self.catalog.warnings.append(
-                "ARITHABORT OFF detected — computed-column semantics may differ "
-                "(reference warns, sqlserver2pgsql.pl:2496-2508)"
-            )
-            return
-        handlers = [
-            (r"^\s*CREATE\s+TABLE\b", self._create_table),
-            (r"^\s*ALTER\s+TABLE\b", self._alter_table),
-            (r"^\s*CREATE\s+(UNIQUE\s+)?(NON)?CLUSTERED\s+INDEX\b", self._create_index),
-            (r"^\s*CREATE\s+(UNIQUE\s+)?INDEX\b", self._create_index),
-            (r"^\s*ALTER\s+INDEX\b", self._alter_index),
-            (r"^\s*CREATE\s+VIEW\b", self._create_view),
-            (r"^\s*CREATE\s+TYPE\b", self._create_type),
-            (r"^\s*CREATE\s+SCHEMA\b", self._create_schema),
-            (r"^\s*CREATE\s+SEQUENCE\b", self._create_sequence),
-            (r"^\s*EXEC(UTE)?\s+(sys\.)?sp_addextendedproperty\b", self._extended_property),
-        ]
-        for pat, fn in handlers:
-            if re.match(pat, first, re.IGNORECASE):
-                fn(stmt)
-                return
-        if _SKIP.match(first):
-            return
-        raise DdlParseError(f"unknown statement: {first.splitlines()[0][:120]!r}")
+        m = _STATEMENT.match(first)
+        if m is None:
+            raise DdlParseError(f"unknown statement: {first.splitlines()[0][:120]!r}")
+        getattr(self, f"_{m.lastgroup}")(stmt)
+
+    def _setvar(self, stmt: str) -> None:
+        m = _SETVAR.match(stmt.lstrip())
+        if m:
+            self.catalog.variables[m.group(1)] = m.group(2)
+
+    def _arithabort(self, stmt: str) -> None:
+        self.catalog.warnings.append(
+            "ARITHABORT OFF detected — computed-column semantics may differ "
+            "(reference warns, sqlserver2pgsql.pl:2496-2508)"
+        )
+
+    def _skip(self, stmt: str) -> None:
+        pass
 
     # -- CREATE TABLE -------------------------------------------------------
 
-    _COLUMN_RE = re.compile(
-        rf"^{_IDENT}\s+"  # column name
-        r"(?:\[(?P<bt>[a-zA-Z_][^\]]*)\]|(?P<ut>[a-zA-Z_]\w*))"  # [type] | type
-        r"\s*(?P<qual>\(\s*(?:\d+|max)\s*(?:,\s*\d+\s*)?\))?"  # qualifier
-        r"(?P<rest>.*)$",
-        re.IGNORECASE | re.DOTALL,
-    )
-
     def _create_table(self, stmt: str) -> None:
-        m = re.match(rf"\s*CREATE\s+TABLE\s+{_QIDENT}\s*\(", stmt, re.IGNORECASE)
+        m = _TABLE_HEADER.match(stmt)
         if not m:
             raise DdlParseError(f"bad CREATE TABLE header: {stmt[:120]!r}")
         schema_raw, name_raw = m.group(1), m.group(2)
         s, t = self._schema_table(schema_raw, name_raw)
         body, _ = _outer_parens(stmt, stmt.index("("))
 
-        table = Table(name=t, orig_schema=(schema_raw or "dbo"))
+        table = Table(name=t, orig_schema=_unescape(schema_raw or "dbo"))
         sch = self.catalog.schema(s)
         sch.tables[t] = table
 
@@ -237,11 +305,7 @@ class DdlParser:
             item = item.strip()
             if not item:
                 continue
-            if re.match(
-                r"^(CONSTRAINT\b|PRIMARY\s+KEY\b|UNIQUE\b|FOREIGN\s+KEY\b|CHECK\b)",
-                item,
-                re.IGNORECASE,
-            ):
+            if _TABLE_CONSTRAINT.match(item):
                 self._table_constraint(s, table, item)
             else:
                 pos += 1
@@ -259,7 +323,7 @@ class DdlParser:
 
     def _parse_column(self, schema: str, tname: str, item: str, pos: int) -> Column | None:
         # computed column: [name] AS (expr) [PERSISTED] [NOT NULL] (:1576-1616)
-        m = re.match(rf"^{_IDENT}\s+AS\s+\(", item, re.IGNORECASE)
+        m = _COMPUTED.match(item)
         if m:
             expr, end = _outer_parens(item, item.index("(", m.end() - 1))
             rest = item[end:]
@@ -275,20 +339,20 @@ class DdlParser:
             )
             sql, _unsure = self._translate_with(expr, string_cols)
             return Column(
-                name=self._norm(m.group(1)),
-                orig_name=m.group(1),
+                name=self._ident(m.group(1)),
+                orig_name=_unescape(m.group(1)),
                 type_name="computed",
                 spark_type="string",
                 computed_expr=sql,
-                persisted=bool(re.search(r"\bPERSISTED\b", rest, re.IGNORECASE)),
-                nullable=not re.search(r"\bNOT\s+NULL\b", rest, re.IGNORECASE),
+                persisted=bool(_PERSISTED.search(rest)),
+                nullable=not _NOT_NULL.search(rest),
                 position=pos,
             )
 
-        m = self._COLUMN_RE.match(item)
+        m = _COLUMN.match(item)
         if not m:
             raise DdlParseError(f"bad column definition: {item[:120]!r}")
-        cname_raw = m.group(1)
+        cname_raw = _unescape(m.group(1))
         type_raw = (m.group("bt") or m.group("ut")).strip().lower()
         qual = m.group("qual")
         rest = m.group("rest") or ""
@@ -316,7 +380,7 @@ class DdlParser:
         )
         self.catalog.warnings.extend(conv.warnings)
 
-        mi = re.search(r"\bIDENTITY\s*\(\s*(-?\d+)\s*,\s*(-?\d+)\s*\)", rest, re.IGNORECASE)
+        mi = _IDENTITY_ARGS.search(rest)
         if mi:
             col.identity = IdentitySpec(int(mi.group(1)), int(mi.group(2)))
             seq = Sequence(
@@ -328,12 +392,12 @@ class DdlParser:
                 owner_column=cname,
             )
             sch.sequences[seq.name] = seq
-        elif re.search(r"\bIDENTITY\b", rest, re.IGNORECASE):
+        elif _IDENTITY.search(rest):
             col.identity = IdentitySpec()
 
-        col.is_rowguidcol = bool(re.search(r"\bROWGUIDCOL\b", rest, re.IGNORECASE))
-        col.is_sparse = bool(re.search(r"\bSPARSE\b", rest, re.IGNORECASE))
-        mc = re.search(r"\bCOLLATE\s+(\S+)", rest, re.IGNORECASE)
+        col.is_rowguidcol = bool(_ROWGUIDCOL.search(rest))
+        col.is_sparse = bool(_SPARSE.search(rest))
+        mc = _COLLATE.search(rest)
         if mc:
             col.collation = mc.group(1)
         if conv.spark_type == "string" and type_raw in (
@@ -342,11 +406,9 @@ class DdlParser:
             col.case_insensitive = self.opt.case_insensitive or bool(
                 col.collation and "_CI" in col.collation.upper()
             )
-        col.nullable = not re.search(r"\bNOT\s+NULL\b", rest, re.IGNORECASE)
+        col.nullable = not _NOT_NULL.search(rest)
 
-        md = re.search(
-            rf"(?:CONSTRAINT\s+{_IDENT}\s+)?DEFAULT\s*\(", rest, re.IGNORECASE
-        )
+        md = _INLINE_DEFAULT.search(rest)
         if md:
             raw_default, _ = _outer_parens(rest, rest.index("(", md.end() - 1))
             col.default = self._parse_default(
@@ -357,9 +419,9 @@ class DdlParser:
         # absent for table-type bodies, which aren't registered as tables
         tbl = self.catalog.schema(schema).tables.get(tname)
         if tbl is not None:
-            if re.search(r"\bPRIMARY\s+KEY\b", rest, re.IGNORECASE):
+            if _INLINE_PK.search(rest):
                 self._set_pk(tbl, UniqueConstraint(name=None, cols=[cname], is_primary=True))
-            elif re.search(r"\bUNIQUE\b", rest, re.IGNORECASE):
+            elif _INLINE_UNIQUE.search(rest):
                 tbl.uniques.append(UniqueConstraint(name=None, cols=[cname]))
         return col
 
@@ -374,7 +436,7 @@ class DdlParser:
         inner = raw.strip()
         while inner.startswith("(") and inner.endswith(")"):
             inner = inner[1:-1].strip()
-        if re.fullmatch(r"-?\d+(\.\d+)?", inner):
+        if _NUMBER.fullmatch(inner):
             if col_type == "bit" and inner in ("0", "1"):
                 return DefaultValue(
                     raw=raw,
@@ -384,7 +446,7 @@ class DdlParser:
             return DefaultValue(raw=raw, sql=inner, constraint_name=cons_name)
         if inner.upper() == "NULL":
             return DefaultValue(raw=raw, sql="NULL", constraint_name=cons_name)
-        ms = re.fullmatch(r"N?('(?:[^']|'')*')", inner)
+        ms = _STRING.fullmatch(inner)
         if ms:
             return DefaultValue(raw=raw, sql=ms.group(1), constraint_name=cons_name)
         sql, unsure = self._translate(inner)
@@ -395,12 +457,12 @@ class DdlParser:
 
     def _table_constraint(self, schema: str, table: Table, item: str) -> None:
         name = None
-        m = re.match(rf"^CONSTRAINT\s+{_IDENT}\s+(?P<rest>.*)$", item, re.IGNORECASE | re.DOTALL)
+        m = _NAMED_CONSTRAINT.match(item)
         if m:
-            name = self._norm(m.group(1))
+            name = self._ident(m.group(1))
             item = m.group("rest")
 
-        if re.match(r"^PRIMARY\s+KEY\b", item, re.IGNORECASE):
+        if _PRIMARY_KEY.match(item):
             inner, _ = _outer_parens(item)
             self._set_pk(
                 table,
@@ -408,23 +470,21 @@ class DdlParser:
                     name=name, cols=[c.name for c in _cols_list(inner)], is_primary=True
                 ),
             )
-        elif re.match(r"^UNIQUE\b", item, re.IGNORECASE):
+        elif _UNIQUE.match(item):
             inner, _ = _outer_parens(item)
             table.uniques.append(
                 UniqueConstraint(name=name, cols=[c.name for c in _cols_list(inner)])
             )
-        elif re.match(r"^FOREIGN\s+KEY\b", item, re.IGNORECASE):
+        elif _FOREIGN_KEY.match(item):
             self._add_fk(table, name, item)
-        elif re.match(r"^CHECK\b", item, re.IGNORECASE):
+        elif _CHECK.match(item):
             self._add_check(table, name, item)
         else:
             raise DdlParseError(f"unknown table constraint: {item[:120]!r}")
 
     def _add_fk(self, table: Table, name: str | None, item: str) -> None:
         cols_inner, end = _outer_parens(item)
-        mref = re.search(
-            rf"REFERENCES\s+{_QIDENT}\s*\(", item[end:], re.IGNORECASE
-        )
+        mref = _REFERENCES.search(item[end:])
         if not mref:
             raise DdlParseError(f"FOREIGN KEY without REFERENCES: {item[:120]!r}")
         ref_inner, _ = _outer_parens(item[end:], item[end:].index("(", mref.end() - 1))
@@ -437,13 +497,13 @@ class DdlParser:
             ref_cols=[c.name for c in _cols_list(ref_inner)],
         )
         tail = item[end:]
-        if re.search(r"ON\s+DELETE\s+CASCADE", tail, re.IGNORECASE):
+        if _ON_DELETE_CASCADE.search(tail):
             fk.on_delete = "CASCADE"
-        elif re.search(r"ON\s+DELETE\s+SET\s+NULL", tail, re.IGNORECASE):
+        elif _ON_DELETE_SET_NULL.search(tail):
             fk.on_delete = "SET NULL"
-        if re.search(r"ON\s+UPDATE\s+CASCADE", tail, re.IGNORECASE):
+        if _ON_UPDATE_CASCADE.search(tail):
             fk.on_update = "CASCADE"
-        elif re.search(r"ON\s+UPDATE\s+SET\s+NULL", tail, re.IGNORECASE):
+        elif _ON_UPDATE_SET_NULL.search(tail):
             fk.on_update = "SET NULL"
         table.foreign_keys.append(fk)
 
@@ -458,48 +518,43 @@ class DdlParser:
     # -- ALTER TABLE --------------------------------------------------------
 
     def _alter_table(self, stmt: str) -> None:
-        m = re.match(
-            rf"\s*ALTER\s+TABLE\s+{_QIDENT}\s+(WITH\s+(NO)?CHECK\s+)?ADD\s+(?P<rest>.*)$",
-            stmt,
-            re.IGNORECASE | re.DOTALL,
-        )
+        m = _ALTER_TABLE_ADD.match(stmt)
         if not m:
             # other ALTER TABLE forms (ENABLE/DISABLE TRIGGER, SET …) → skip,
-            # like the reference's ignore list
-            if re.match(r"\s*ALTER\s+TABLE\b", stmt, re.IGNORECASE):
-                return
-            raise DdlParseError(f"bad ALTER TABLE: {stmt[:120]!r}")
+            # like the reference's ignore list; the dispatcher only routes
+            # ALTER TABLE statements here
+            return
         table = self._get_table(m.group(1), m.group(2))
         rest = m.group("rest").strip()
 
         name = None
-        mc = re.match(rf"^CONSTRAINT\s+{_IDENT}\s+(?P<rest>.*)$", rest, re.IGNORECASE | re.DOTALL)
+        mc = _NAMED_CONSTRAINT.match(rest)
         if mc:
-            name = self._norm(mc.group(1))
+            name = self._ident(mc.group(1))
             rest = mc.group("rest").strip()
 
-        if re.match(r"^PRIMARY\s+KEY\b", rest, re.IGNORECASE):
+        if _PRIMARY_KEY.match(rest):
             inner, _ = _outer_parens(rest)
             self._set_pk(
                 table,
                 UniqueConstraint(name=name, cols=[c.name for c in _cols_list(inner)], is_primary=True),
             )
-        elif re.match(r"^UNIQUE\b", rest, re.IGNORECASE):
+        elif _UNIQUE.match(rest):
             inner, _ = _outer_parens(rest)
             table.uniques.append(
                 UniqueConstraint(name=name, cols=[c.name for c in _cols_list(inner)])
             )
-        elif re.match(r"^FOREIGN\s+KEY\b", rest, re.IGNORECASE):
+        elif _FOREIGN_KEY.match(rest):
             self._add_fk(table, name, rest)
-        elif re.match(r"^CHECK\b", rest, re.IGNORECASE):
+        elif _CHECK.match(rest):
             self._add_check(table, name, rest)
-        elif re.match(r"^DEFAULT\b", rest, re.IGNORECASE):
+        elif _DEFAULT.match(rest):
             # ADD CONSTRAINT df DEFAULT (x) FOR [col] (:2178-2205)
             raw, end = _outer_parens(rest)
-            mf = re.search(rf"FOR\s+{_IDENT}", rest[end:], re.IGNORECASE)
+            mf = _DEFAULT_FOR.search(rest[end:])
             if not mf:
                 raise DdlParseError(f"DEFAULT without FOR: {rest[:120]!r}")
-            col = table.columns.get(self._norm(mf.group(1)))
+            col = table.columns.get(self._ident(mf.group(1)))
             if col is not None:
                 col.default = self._parse_default(raw, name, col_type=col.type_name)
         else:
@@ -508,28 +563,24 @@ class DdlParser:
     # -- indexes ------------------------------------------------------------
 
     def _create_index(self, stmt: str) -> None:
-        m = re.match(
-            rf"\s*CREATE\s+(?P<u>UNIQUE\s+)?((NON)?CLUSTERED\s+)?INDEX\s+{_IDENT}\s+ON\s+{_QIDENT}\s*\(",
-            stmt,
-            re.IGNORECASE,
-        )
+        m = _INDEX_HEADER.match(stmt)
         if not m:
             # spatial/fulltext/columnstore → skipped like the reference (:2065-2073)
-            if re.match(r"\s*CREATE\s+(SPATIAL|FULLTEXT|COLUMNSTORE)\b", stmt, re.IGNORECASE):
+            if _SKIPPED_INDEX.match(stmt):
                 return
             raise DdlParseError(f"bad CREATE INDEX: {stmt[:120]!r}")
-        idx_name = self._norm(m.group(4))
+        idx_name = self._ident(m.group(4))
         table = self._get_table(m.group(5), m.group(6))
         inner, end = _outer_parens(stmt, m.end() - 1)
         idx = Index(name=idx_name, unique=bool(m.group("u")), cols=_cols_list(inner))
 
         tail = stmt[end:]
-        mi = re.search(r"\bINCLUDE\s*\(", tail, re.IGNORECASE)
+        mi = _INCLUDE.search(tail)
         if mi:
             inc_inner, inc_end = _outer_parens(tail, tail.index("(", mi.end() - 1))
             idx.include = [c.name for c in _cols_list(inc_inner)]
             tail = tail[:mi.start()] + tail[inc_end:]
-        mw = re.search(r"\bWHERE\s+(?P<pred>.*?)(?:\bWITH\s*\(|\bON\s+\[|$)", tail, re.IGNORECASE | re.DOTALL)
+        mw = _INDEX_WHERE.search(tail)
         if mw:
             pred = mw.group("pred").strip().rstrip(")")
             # rebalance: the corpus contains over-parenthesized predicates
@@ -542,32 +593,24 @@ class DdlParser:
         table.indexes[idx.name] = idx
 
     def _alter_index(self, stmt: str) -> None:
-        m = re.match(
-            rf"\s*ALTER\s+INDEX\s+{_IDENT}\s+ON\s+{_QIDENT}\s+(?P<action>\w+)",
-            stmt,
-            re.IGNORECASE,
-        )
+        m = _ALTER_INDEX.match(stmt)
         if not m:
             raise DdlParseError(f"bad ALTER INDEX: {stmt[:120]!r}")
         table = self._get_table(m.group(2), m.group(3))
-        idx = table.indexes.get(self._norm(m.group(1)))
+        idx = table.indexes.get(self._ident(m.group(1)))
         if idx and m.group("action").upper() == "DISABLE":
             idx.disabled = True  # emitted commented-out by the reference (:2841-2844)
 
     # -- views --------------------------------------------------------------
 
     def _create_view(self, stmt: str) -> None:
-        m = re.match(
-            rf"\s*CREATE\s+VIEW\s+{_QIDENT}\s*(?P<cols>\([^)]*\))?\s*AS\s+(?P<body>.*)$",
-            stmt,
-            re.IGNORECASE | re.DOTALL,
-        )
+        m = _VIEW.match(stmt)
         if not m:
             raise DdlParseError(f"bad CREATE VIEW: {stmt[:120]!r}")
         s, v = self._schema_table(m.group(1), m.group(2))
         cols = []
         if m.group("cols"):
-            cols = [self._norm(c.strip()) for c in m.group("cols").strip("()").split(",")]
+            cols = [self._norm(_unbracket(c)) for c in m.group("cols").strip("()").split(",")]
         body = m.group("body").strip()
         sql, unsure = self._translate(body)
         view = View(
@@ -583,25 +626,19 @@ class DdlParser:
     # -- types / schemas / sequences ----------------------------------------
 
     def _create_type(self, stmt: str) -> None:
-        m = re.match(
-            rf"\s*CREATE\s+TYPE\s+{_QIDENT}\s+FROM\s+\[?(\w+)\]?\s*(\([\d,\s]*\))?",
-            stmt,
-            re.IGNORECASE,
-        )
+        m = _DOMAIN.match(stmt)
         if m:  # domain (:1898-1913)
             s, name = self._schema_table(m.group(1), m.group(2))
             self.catalog.schema(s).domains[name] = m.group(3).lower()
             return
-        m = re.match(
-            rf"\s*CREATE\s+TYPE\s+{_QIDENT}\s+AS\s+TABLE\s*\(", stmt, re.IGNORECASE
-        )
+        m = _TABLE_TYPE.match(stmt)
         if m:  # composite/table type (:1917-1972)
             s, name = self._schema_table(m.group(1), m.group(2))
             body, _ = _outer_parens(stmt, m.end() - 1)
             tt = TableType(name=name)
             pos = 0
             for item in _split_top_commas(body):
-                if re.match(r"^(PRIMARY\s+KEY|UNIQUE|CHECK|INDEX)\b", item.strip(), re.IGNORECASE):
+                if _TABLE_TYPE_SKIP.match(item.strip()):
                     continue
                 pos += 1
                 col = self._parse_column(s, name, item, pos)
@@ -612,35 +649,27 @@ class DdlParser:
         raise DdlParseError(f"bad CREATE TYPE: {stmt[:120]!r}")
 
     def _create_schema(self, stmt: str) -> None:
-        m = re.match(rf"\s*CREATE\s+SCHEMA\s+{_IDENT}", stmt, re.IGNORECASE)
+        m = _SCHEMA.match(stmt)
         if not m:
             raise DdlParseError(f"bad CREATE SCHEMA: {stmt[:120]!r}")
-        self.catalog.schema(relabel_schema(m.group(1).lower(), self.opt.relabel))
+        self.catalog.schema(relabel_schema(_unescape(m.group(1)).lower(), self.opt.relabel))
 
     def _create_sequence(self, stmt: str) -> None:
-        m = re.match(rf"\s*CREATE\s+SEQUENCE\s+{_QIDENT}", stmt, re.IGNORECASE)
+        m = _SEQUENCE.match(stmt)
         if not m:
             raise DdlParseError(f"bad CREATE SEQUENCE: {stmt[:120]!r}")
         s, name = self._schema_table(m.group(1), m.group(2))
         seq = Sequence(name=name)
-        for attr, pat in [
-            ("start", r"START\s+WITH\s+(-?\d+)"),
-            ("step", r"INCREMENT\s+BY\s+(-?\d+)"),
-            ("min_value", r"MINVALUE\s+(-?\d+)"),
-            ("max_value", r"MAXVALUE\s+(-?\d+)"),
-            ("cache", r"CACHE\s+(\d+)"),
-        ]:
-            mm = re.search(pat, stmt, re.IGNORECASE)
+        for attr, pat in _SEQUENCE_ATTRS:
+            mm = pat.search(stmt)
             if mm:
                 setattr(seq, attr, int(mm.group(1)))
         self.catalog.schema(s).sequences[name] = seq
 
     # -- extended properties (comments, B16 :2299-2412) ----------------------
 
-    _EP_ARG = re.compile(r"@(\w+)\s*=\s*N?'((?:[^']|'')*)'", re.IGNORECASE)
-
     def _extended_property(self, stmt: str) -> None:
-        args = {k.lower(): v.replace("''", "'") for k, v in self._EP_ARG.findall(stmt)}
+        args = {k.lower(): v.replace("''", "'") for k, v in _EP_ARG.findall(stmt)}
         prop = args.get("name", "")
         if prop not in ("MS_Description", "MS_SSMA_SOURCE", "Dictionary"):
             return  # ~50 GUI property names ignored (:2367-2410)

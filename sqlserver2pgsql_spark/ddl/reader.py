@@ -7,13 +7,16 @@ whole file and strips BOM/CR/block-comments, and unwraps
 
 Statement grouping here is structural rather than line-regex-driven: lines
 are grouped into statements by ``GO`` separators plus statement-start
-keywords at paren depth 0 (string-literal-aware), which handles SSMS dumps
-that omit GO between statements.
+keywords at paren depth 0 (string-literal-aware, see
+:mod:`sqlserver2pgsql_spark.scan`), which handles SSMS dumps that omit GO
+between statements.
 """
 
 from __future__ import annotations
 
 import re
+
+from ..scan import depth_delta, strip_comments
 
 _STMT_START = re.compile(
     r"^\s*(CREATE|ALTER|EXEC(UTE)?|USE|SET|GRANT|DENY|REVOKE|IF|BEGIN|END|"
@@ -23,7 +26,8 @@ _STMT_START = re.compile(
 
 
 def read_dump(path: str) -> str:
-    raw = open(path, "rb").read()
+    with open(path, "rb") as f:
+        raw = f.read()
     if raw.startswith(b"\xff\xfe") or raw.startswith(b"\xfe\xff"):
         return raw.decode("utf-16")
     if raw.startswith(b"\xef\xbb\xbf"):
@@ -37,79 +41,17 @@ def read_dump(path: str) -> str:
         return raw.decode("iso8859-15")  # the reference's fallback (:1522)
 
 
-def _strip_block_comments(text: str) -> str:
-    """Remove /* ... */ (multi-line, non-nested — T-SQL block comments),
-    outside string literals."""
-    out: list[str] = []
-    i, n = 0, len(text)
-    in_str = False
-    in_comment = False
-    while i < n:
-        ch = text[i]
-        if in_comment:
-            if ch == "*" and i + 1 < n and text[i + 1] == "/":
-                in_comment = False
-                i += 2
-                continue
-            i += 1
-            continue
-        if in_str:
-            out.append(ch)
-            if ch == "'":
-                if i + 1 < n and text[i + 1] == "'":
-                    out.append("'")
-                    i += 2
-                    continue
-                in_str = False
-            i += 1
-            continue
-        if ch == "'":
-            in_str = True
-            out.append(ch)
-            i += 1
-            continue
-        if ch == "/" and i + 1 < n and text[i + 1] == "*":
-            in_comment = True
-            i += 2
-            continue
-        out.append(ch)
-        i += 1
-    return "".join(out)
-
-
-def _depth_delta(line: str) -> int:
-    """Net paren depth change, ignoring parens inside string literals."""
-    depth = 0
-    in_str = False
-    i = 0
-    while i < len(line):
-        ch = line[i]
-        if in_str:
-            if ch == "'":
-                if i + 1 < len(line) and line[i + 1] == "'":
-                    i += 2
-                    continue
-                in_str = False
-        elif ch == "'":
-            in_str = True
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        i += 1
-    return depth
-
-
 _SP_EXECUTESQL = re.compile(
     r"^\s*EXEC(UTE)?\s+(sys\.)?sp_executesql\s+N?'(?P<body>.*)'\s*$",
     re.IGNORECASE | re.DOTALL,
 )
+_GO = re.compile(r"GO(\s*;)?", re.IGNORECASE)
 
 
 def clean_statements(text: str) -> list[str]:
     """Cleaned text → list of statement strings (GO separators removed)."""
     text = text.replace("\r\n", "\n").replace("\r", "\n").lstrip("﻿")
-    text = _strip_block_comments(text)
+    text = strip_comments(text)
 
     statements: list[str] = []
     cur: list[str] = []
@@ -128,7 +70,7 @@ def clean_statements(text: str) -> list[str]:
 
     for line in text.split("\n"):
         stripped = line.strip()
-        if re.fullmatch(r"GO(\s*;)?", stripped, re.IGNORECASE):
+        if _GO.fullmatch(stripped):
             flush()
             continue
         if depth == 0 and cur and _STMT_START.match(line):
@@ -136,6 +78,6 @@ def clean_statements(text: str) -> list[str]:
         cur.append(line)
         # clamp at 0: the corpus contains unbalanced parens (reg_tests.sql
         # 'WHERE ((ID) > 10))') that must not poison later statements
-        depth = max(0, depth + _depth_delta(line))
+        depth = max(0, depth + depth_delta(line))
     flush()
     return statements

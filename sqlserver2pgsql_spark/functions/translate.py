@@ -15,13 +15,17 @@ returned with ``unsure=True`` (the reference routes such text to the
 Used for: DEFAULT expressions (B7), CHECK constraint bodies (B8), partial
 index predicates (B9), view bodies (B11). Deliberately regex-based like the
 reference — the input language is the narrow scalar-expression subset that
-appears in SSMS DDL dumps, not arbitrary T-SQL.
+appears in SSMS DDL dumps, not arbitrary T-SQL. Every pattern is compiled
+once at import; paren and separator scanning goes through
+:mod:`sqlserver2pgsql_spark.scan`.
 """
 
 from __future__ import annotations
 
 import re
 from dataclasses import dataclass
+
+from ..scan import paren_group, split_top
 
 
 @dataclass(frozen=True)
@@ -51,117 +55,88 @@ _TYPE_MAP = {
 }
 
 
+_CHAR_TYPE = re.compile(r"(n?var)?char\s*\(\s*(\d+|max)\s*\)|n?(var)?char|n?text")
+_DECIMAL_TYPE = re.compile(r"(decimal|numeric)\s*(\(\s*\d+\s*(,\s*\d+)?\s*\))?")
+_SPACE = re.compile(r"\s")
+
+
 def _map_type(t: str) -> str | None:
     t = t.strip().lower()
-    m = re.fullmatch(r"(n?var)?char\s*\(\s*(\d+|max)\s*\)", t) or re.fullmatch(
-        r"n?(var)?char", t
-    ) or re.fullmatch(r"n?text", t)
-    if m:
+    if _CHAR_TYPE.fullmatch(t):
         return "STRING"
-    m = re.fullmatch(r"(decimal|numeric)\s*(\(\s*\d+\s*(,\s*\d+)?\s*\))?", t)
+    m = _DECIMAL_TYPE.fullmatch(t)
     if m:
-        inner = re.sub(r"\s", "", m.group(2) or "(18,0)")
+        inner = _SPACE.sub("", m.group(2) or "(18,0)")
         return f"DECIMAL{inner}"
     return _TYPE_MAP.get(t)
+
+
+#: ``[Some Ident]`` (``]]`` is a literal ``]``)
+_BRACKETED = re.compile(r"\[((?:[^\]]|\]\])+)\]")
+
+
+def _unbracket(m: re.Match) -> str:
+    return m.group(1).replace("]]", "]").strip().lower().replace(" ", "_")
 
 
 def _strip_brackets(expr: str) -> str:
     # [Some Ident] → some_ident (the reference lowercases identifiers by
     # default, :527-571); inside string literals brackets survive because we
     # protect literals first.
-    return re.sub(r"\[([^\]]+)\]", lambda m: m.group(1).strip().lower().replace(" ", "_"), expr)
+    return _BRACKETED.sub(_unbracket, expr) if "[" in expr else expr
+
+
+#: a ``'…'`` or ``N'…'`` literal; group 1 is its body (``''`` escapes kept).
+#: An unterminated literal runs to the end of the expression.
+_NLITERAL = re.compile(r"[Nn]?'([^']*(?:''[^']*)*)'?")
+_PLACEHOLDER = re.compile(r"\x01(\d+)\x02")
 
 
 def _protect_literals(expr: str) -> tuple[str, list[str]]:
     """Replace 'string literals' (incl. N'...') with placeholders so function
     rewrites never fire inside data."""
-    out: list[str] = []
     lits: list[str] = []
 
-    i = 0
-    n = len(expr)
-    while i < n:
-        ch = expr[i]
-        is_nprefix = ch in "Nn" and i + 1 < n and expr[i + 1] == "'"
-        if ch == "'" or is_nprefix:
-            j = i + (2 if is_nprefix else 1)
-            buf = []
-            while j < n:
-                if expr[j] == "'" and j + 1 < n and expr[j + 1] == "'":
-                    buf.append("''")
-                    j += 2
-                elif expr[j] == "'":
-                    break
-                else:
-                    buf.append(expr[j])
-                    j += 1
-            lits.append("'" + "".join(buf) + "'")
-            out.append(f"\x01{len(lits) - 1}\x02")
-            i = j + 1
-        else:
-            out.append(ch)
-            i += 1
-    return "".join(out), lits
+    def stash(m: re.Match) -> str:
+        lits.append(f"'{m.group(1)}'")
+        return f"\x01{len(lits) - 1}\x02"
+
+    return (_NLITERAL.sub(stash, expr) if "'" in expr else expr), lits
 
 
 def _restore_literals(expr: str, lits: list[str]) -> str:
-    return re.sub(r"\x01(\d+)\x02", lambda m: lits[int(m.group(1))], expr)
+    return _PLACEHOLDER.sub(lambda m: lits[int(m.group(1))], expr) if lits else expr
 
 
 def _split_args(argstr: str) -> list[str]:
     """Split a function argument list on top-level commas."""
-    args, depth, cur = [], 0, []
-    for ch in argstr:
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        if ch == "," and depth == 0:
-            args.append("".join(cur).strip())
-            cur = []
-        else:
-            cur.append(ch)
-    if cur:
-        args.append("".join(cur).strip())
-    return args
-
-
-def _find_call(expr: str, fname: str) -> tuple[int, int, str] | None:
-    """Locate ``fname( args )`` (case-insensitive, word boundary); return
-    (start, end_exclusive, argstr) of the outermost call, or None."""
-    m = re.search(rf"\b{fname}\s*\(", expr, flags=re.IGNORECASE)
-    if not m:
-        return None
-    depth = 1
-    i = m.end()
-    while i < len(expr) and depth:
-        if expr[i] == "(":
-            depth += 1
-        elif expr[i] == ")":
-            depth -= 1
-        i += 1
-    if depth:
-        return None
-    return m.start(), i, expr[m.end() : i - 1]
+    args = split_top(argstr, ",")
+    if not args[-1]:
+        args.pop()
+    return [a.strip() for a in args]
 
 
 def _rewrite_calls(expr: str, fname: str, render) -> tuple[str, bool]:
-    """Repeatedly rewrite fname(...) via render(args)->str|None; returns
-    (expr, unsure_flag)."""
+    """Rewrite every outermost fname(...) via render(args)->str|None; returns
+    (expr, unsure_flag). The search resumes after each rendered call, so an
+    unrenderable call is left in place once and not retried."""
     unsure = False
-    while True:
-        hit = _find_call(expr, fname)
-        if hit is None:
+    pattern = _CALLS[fname]
+    pos = 0
+    while m := pattern.search(expr, pos):
+        group = paren_group(expr, m.end() - 1)
+        if group is None:
             return expr, unsure
-        start, end, argstr = hit
-        args = _split_args(argstr)
+        argstr, end = group
         # translate inner expressions first (args may contain nested calls)
-        args = [_translate_inner(a)[0] for a in args]
+        args = [_translate_inner(a)[0] for a in _split_args(argstr)]
         rendered = render(args)
         if rendered is None:
             unsure = True
             rendered = f"{fname}({', '.join(args)})"
-        expr = expr[:start] + rendered + expr[end:]
+        expr = expr[: m.start()] + rendered + expr[end:]
+        pos = m.start() + len(rendered)
+    return expr, unsure
 
 
 def _render_convert(args: list[str]) -> str | None:
@@ -219,13 +194,13 @@ _SIMPLE_CALLS = {
     "newid": lambda a: "uuid()" if not a else None,
 }
 
-_ZERO_ARG = {
-    r"\bgetdate\s*\(\s*\)": "current_timestamp()",
-    r"\bgetutcdate\s*\(\s*\)": "current_timestamp()",
-    r"\bsysdatetime\s*\(\s*\)": "current_timestamp()",
-    r"\buser_name\s*\(\s*\)": "current_user()",
-    r"\bsuser_sname\s*\(\s*\)": "current_user()",
-}
+_CALLS = {f: re.compile(rf"\b{f}\s*\(", re.IGNORECASE) for f in _SIMPLE_CALLS}
+
+_ZERO_ARG = (
+    (re.compile(r"\b(?:getdate|getutcdate|sysdatetime)\s*\(\s*\)", re.IGNORECASE),
+     "current_timestamp()"),
+    (re.compile(r"\b(?:user_name|suser_sname)\s*\(\s*\)", re.IGNORECASE), "current_user()"),
+)
 
 #: functions we can pass through unchanged (same name/semantics in Spark SQL)
 _PASSTHROUGH = {
@@ -243,6 +218,15 @@ _PASSTHROUGH = {
     "as",
 }
 
+#: names the translation itself produces, plus the type constructors that
+#: appear inside CAST(... AS T(p,s))
+_KNOWN_FUNCS = _PASSTHROUGH | {
+    "current_timestamp", "current_user", "date_format", "timestampadd",
+    "timestampdiff", "extract", "locate", "repeat", "length", "uuid",
+    "decimal", "numeric", "varchar", "char",
+}
+_FUNC_CALL = re.compile(r"\b([a-zA-Z_][a-zA-Z0-9_]*)\s*\(")
+
 
 # NOTE: coalesce/nullif are type-preserving, not string-producing — including
 # them here would wrongly rewrite numeric `C3+ISNULL(x,0)` (V2 fixture,
@@ -253,34 +237,22 @@ _STRINGY_FUNCS = {
 }
 
 
-def _split_top(s: str, sep: str) -> list[str]:
-    parts, depth, cur = [], 0, []
-    for ch in s:
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        if ch == sep and depth == 0:
-            parts.append("".join(cur))
-            cur = []
-        else:
-            cur.append(ch)
-    parts.append("".join(cur))
-    return parts
+_HAS_LITERAL = re.compile(r"\x01\d+\x02")
+_CALL_HEAD = re.compile(r"([a-zA-Z_]\w*)\s*\(")
+_DOTTED_NAME = re.compile(r"[a-zA-Z_][\w.]*")
+_STRING_CAST = re.compile(r"cast\s*\(.*as\s+(string|n?(var)?char)", re.IGNORECASE | re.DOTALL)
 
 
 def _is_stringy(operand: str, string_idents: frozenset[str]) -> bool:
     o = operand.strip()
-    if re.search(r"\x01\d+\x02", o):  # contains a protected string literal
+    if _HAS_LITERAL.search(o):  # contains a protected string literal
         return True
-    m = re.match(r"([a-zA-Z_]\w*)\s*\(", o)
+    m = _CALL_HEAD.match(o)
     if m and m.group(1).lower() in _STRINGY_FUNCS:
         return True
-    if re.fullmatch(r"[a-zA-Z_][\w.]*", o) and o.lower().split(".")[-1] in string_idents:
+    if _DOTTED_NAME.fullmatch(o) and o.lower().split(".")[-1] in string_idents:
         return True  # caller told us this column is a string (catalog types)
-    return bool(
-        re.match(r"cast\s*\(.*as\s+(string|n?(var)?char)", o, re.IGNORECASE | re.DOTALL)
-    )
+    return bool(_STRING_CAST.match(o))
 
 
 def _rewrite_plus(expr: str, string_idents: frozenset[str] = frozenset()) -> str:
@@ -289,26 +261,25 @@ def _rewrite_plus(expr: str, string_idents: frozenset[str] = frozenset()) -> str
     or an identifier the caller declared string-typed (the catalog knows
     column types — reference rewrites + concat for PG, :1857-1876). A chain
     of bare unknown columns stays arithmetic."""
+    if "+" not in expr:
+        return expr
+    # rewrite inside each paren group first
     out: list[str] = []
-    i = 0
-    while i < len(expr):
-        if expr[i] == "(":
-            depth, j = 1, i + 1
-            while j < len(expr) and depth:
-                if expr[j] == "(":
-                    depth += 1
-                elif expr[j] == ")":
-                    depth -= 1
-                j += 1
-            out.append("(" + _rewrite_plus(expr[i + 1 : j - 1], string_idents) + ")")
-            i = j
+    pos = 0
+    while (i := expr.find("(", pos)) >= 0:
+        out.append(expr[pos : i + 1])
+        group = paren_group(expr, i)
+        if group is None:  # an unclosed group runs to the end of the expression
+            out.append(_rewrite_plus(expr[i + 1 :], string_idents))
+            pos = len(expr)
         else:
-            out.append(expr[i])
-            i += 1
+            out += [_rewrite_plus(group[0], string_idents), ")"]
+            pos = group[1]
+    out.append(expr[pos:])
     s = "".join(out)
     segments = []
-    for seg in _split_top(s, ","):
-        ops = _split_top(seg, "+")
+    for seg in split_top(s, ","):
+        ops = split_top(seg, "+")
         if len(ops) > 1 and any(_is_stringy(o, string_idents) for o in ops):
             segments.append("||".join(ops))
         else:
@@ -317,9 +288,11 @@ def _rewrite_plus(expr: str, string_idents: frozenset[str] = frozenset()) -> str
 
 
 def _translate_inner(expr: str) -> tuple[str, bool]:
+    if "(" not in expr:  # every rewrite below matches a call
+        return expr, False
     unsure = False
-    for pat, repl in _ZERO_ARG.items():
-        expr = re.sub(pat, repl, expr, flags=re.IGNORECASE)
+    for pat, repl in _ZERO_ARG:
+        expr = pat.sub(repl, expr)
     for fname, render in _SIMPLE_CALLS.items():
         expr, u = _rewrite_calls(expr, fname, render)
         unsure = unsure or u
@@ -345,14 +318,9 @@ def translate_tsql_expr(
     translated = _rewrite_plus(translated, frozenset(string_idents))
 
     # any remaining unknown function call? (name not in passthrough set)
-    for m in re.finditer(r"\b([a-zA-Z_][a-zA-Z0-9_]*)\s*\(", translated):
+    for m in _FUNC_CALL.finditer(translated):
         name = m.group(1).lower()
-        if name not in _PASSTHROUGH and name not in (
-            "current_timestamp", "current_user", "date_format", "timestampadd",
-            "timestampdiff", "extract", "locate", "repeat", "length", "uuid",
-            # type constructors appearing inside CAST(... AS T(p,s))
-            "decimal", "numeric", "varchar", "char",
-        ):
+        if name not in _KNOWN_FUNCS:
             unsure = True
             notes.append(f"unknown function: {name}")
 
