@@ -16,6 +16,16 @@ _WORD_START = re.compile(r"(.)([A-Z][a-z]+)")
 _CASE_CHANGE = re.compile(r"([a-z0-9])([A-Z])")
 
 
+def pg_quote(name: str) -> str:
+    """A PostgreSQL quoted identifier: ``"name"`` with ``"`` doubled."""
+    return '"' + name.replace('"', '""') + '"'
+
+
+def mssql_quote(name: str) -> str:
+    """A SQL Server bracketed identifier: ``[name]`` with ``]`` doubled."""
+    return "[" + name.replace("]", "]]") + "]"
+
+
 def camel_to_snake(name: str) -> str:
     s = _WORD_START.sub(r"\1_\2", name)
     s = _CASE_CHANGE.sub(r"\1_\2", s)

@@ -130,6 +130,7 @@ class Table:
     triggers: list[Trigger] = field(default_factory=list)
     has_lobs: bool = False  # drives the partitioned-scan heuristic (:949-963)
     comment: str | None = None
+    orig_name: str | None = None  # the SQL Server name, for source scans
 
     def ordered_columns(self) -> list[Column]:
         return sorted(self.columns.values(), key=lambda c: c.position)

@@ -18,6 +18,7 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass
 
+from ..catalog.identifiers import pg_quote
 from ..catalog.model import Catalog, Column, Table
 
 
@@ -88,10 +89,6 @@ def _pg_type(col: Column) -> str:
     return _PG_TYPES.get(st, "text")
 
 
-def _quote(name: str) -> str:
-    return '"' + name.replace('"', '""') + '"'
-
-
 _PLAIN_NAME = re.compile(r"[a-z_][a-z0-9_$]*")
 
 
@@ -99,7 +96,7 @@ def _regclass(schema: str, name: str) -> str:
     """``schema.name`` as regclass text for nextval(): a part PostgreSQL
     would case-fold or split (``ship.mode`` from ``[Ship.Mode]``) is
     double-quoted."""
-    parts = (p if _PLAIN_NAME.fullmatch(p) else _quote(p) for p in (schema, name))
+    parts = (p if _PLAIN_NAME.fullmatch(p) else pg_quote(p) for p in (schema, name))
     return ".".join(parts).replace("'", "''")
 
 
@@ -134,7 +131,7 @@ def emit_before(catalog: Catalog, opts: EmitOptions | None = None) -> str:
         out.append(f"\\set {k} '{v}'")
     for sname in sorted(catalog.schemas):
         if sname != "public":
-            out.append(f"CREATE SCHEMA IF NOT EXISTS {_quote(sname)};")
+            out.append(f"CREATE SCHEMA IF NOT EXISTS {pg_quote(sname)};")
     for sname, table in catalog.all_tables():
         cols = []
         for c in table.ordered_columns():
@@ -142,9 +139,9 @@ def emit_before(catalog: Catalog, opts: EmitOptions | None = None) -> str:
                 continue  # reference declares varchar + comment (:1576-1616);
                 # we keep computed columns virtual (projection-only)
             null = "" if c.nullable else " NOT NULL"
-            cols.append(f"  {_quote(c.name)} {_pg_type(c)}{null}")
+            cols.append(f"  {pg_quote(c.name)} {_pg_type(c)}{null}")
         out.append(
-            f"CREATE TABLE {_quote(sname)}.{_quote(table.name)} (\n"
+            f"CREATE TABLE {pg_quote(sname)}.{pg_quote(table.name)} (\n"
             + ",\n".join(cols)
             + "\n);"
         )
@@ -152,7 +149,7 @@ def emit_before(catalog: Catalog, opts: EmitOptions | None = None) -> str:
         for seq in catalog.schemas[sname].sequences.values():
             if opts.use_identity_column and seq.owner_table:
                 continue  # ALTER COLUMN … ADD GENERATED … goes in the after script
-            parts = [f"CREATE SEQUENCE {_quote(sname)}.{_quote(seq.name)}"]
+            parts = [f"CREATE SEQUENCE {pg_quote(sname)}.{pg_quote(seq.name)}"]
             if seq.step != 1:
                 parts.append(f"INCREMENT BY {seq.step}")
             if seq.step < 0:
@@ -166,7 +163,7 @@ def emit_before(catalog: Catalog, opts: EmitOptions | None = None) -> str:
 def emit_after(catalog: Catalog, opts: EmitOptions | None = None) -> str:
     opts = opts or EmitOptions()
     out: list[str] = ["\\set ON_ERROR_STOP", "BEGIN;"]
-    qual = lambda s, t: f"{_quote(s)}.{_quote(t)}"  # noqa: E731
+    qual = lambda s, t: f"{pg_quote(s)}.{pg_quote(t)}"  # noqa: E731
     if opts.use_identity_column:
         # IDENTITY becomes a true identity column on the owner (:2722-2744)
         for sname in sorted(catalog.schemas):
@@ -174,8 +171,8 @@ def emit_after(catalog: Catalog, opts: EmitOptions | None = None) -> str:
                 if not seq.owner_table:
                     continue
                 stmt = (
-                    f"ALTER TABLE {_quote(sname)}.{_quote(seq.owner_table)} "
-                    f"ALTER COLUMN {_quote(seq.owner_column)} "
+                    f"ALTER TABLE {pg_quote(sname)}.{pg_quote(seq.owner_table)} "
+                    f"ALTER COLUMN {pg_quote(seq.owner_column)} "
                     "ADD GENERATED ALWAYS AS IDENTITY"
                 )
                 details = []
@@ -194,31 +191,31 @@ def emit_after(catalog: Catalog, opts: EmitOptions | None = None) -> str:
                 if not seq.owner_table:
                     continue
                 out.append(
-                    f"ALTER TABLE {_quote(sname)}.{_quote(seq.owner_table)} "
-                    f"ALTER COLUMN {_quote(seq.owner_column)} "
+                    f"ALTER TABLE {pg_quote(sname)}.{pg_quote(seq.owner_table)} "
+                    f"ALTER COLUMN {pg_quote(seq.owner_column)} "
                     f"SET DEFAULT nextval('{_regclass(sname, seq.name)}');"
                 )
     for sname, table in catalog.all_tables():
         tq = qual(sname, table.name)
         if table.primary_key:
-            cols = ", ".join(_quote(c) for c in table.primary_key.cols)
+            cols = ", ".join(pg_quote(c) for c in table.primary_key.cols)
             name = table.primary_key.name or f"{table.name}_pkey"
-            out.append(f"ALTER TABLE {tq} ADD CONSTRAINT {_quote(name)} PRIMARY KEY ({cols});")
+            out.append(f"ALTER TABLE {tq} ADD CONSTRAINT {pg_quote(name)} PRIMARY KEY ({cols});")
         for u in table.uniques:
-            cols = ", ".join(_quote(c) for c in u.cols)
+            cols = ", ".join(pg_quote(c) for c in u.cols)
             name = u.name or f"{table.name}_{'_'.join(u.cols)}_key"
-            out.append(f"ALTER TABLE {tq} ADD CONSTRAINT {_quote(name)} UNIQUE ({cols});")
+            out.append(f"ALTER TABLE {tq} ADD CONSTRAINT {pg_quote(name)} UNIQUE ({cols});")
     for sname, table in catalog.all_tables():
         tq = qual(sname, table.name)
         for idx in table.indexes.values():
             if idx.where_raw is not None:
                 continue  # partial indexes → unsure
             cols = ", ".join(
-                f"{_quote(c.name)}{'' if c.ascending else ' DESC'}" for c in idx.cols
+                f"{pg_quote(c.name)}{'' if c.ascending else ' DESC'}" for c in idx.cols
             )
-            stmt = f"CREATE {'UNIQUE ' if idx.unique else ''}INDEX {_quote(idx.name)} ON {tq} ({cols})"
+            stmt = f"CREATE {'UNIQUE ' if idx.unique else ''}INDEX {pg_quote(idx.name)} ON {tq} ({cols})"
             if idx.include:
-                stmt += " INCLUDE (" + ", ".join(_quote(c) for c in idx.include) + ")"
+                stmt += " INCLUDE (" + ", ".join(pg_quote(c) for c in idx.include) + ")"
             stmt += ";"
             if idx.disabled:
                 stmt = "-- disabled in source: " + stmt  # (:2841-2844)
@@ -226,12 +223,12 @@ def emit_after(catalog: Catalog, opts: EmitOptions | None = None) -> str:
     for sname, table in catalog.all_tables():
         tq = qual(sname, table.name)
         for fk in table.foreign_keys:
-            cols = ", ".join(_quote(c) for c in fk.cols)
-            rcols = ", ".join(_quote(c) for c in fk.ref_cols)
+            cols = ", ".join(pg_quote(c) for c in fk.cols)
+            rcols = ", ".join(pg_quote(c) for c in fk.ref_cols)
             name = fk.name or f"{table.name}_{'_'.join(fk.cols)}_fkey"
             stmt = (
-                f"ALTER TABLE {tq} ADD CONSTRAINT {_quote(name)} FOREIGN KEY ({cols}) "
-                f"REFERENCES {_quote(fk.ref_schema)}.{_quote(fk.ref_table)} ({rcols})"
+                f"ALTER TABLE {tq} ADD CONSTRAINT {pg_quote(name)} FOREIGN KEY ({cols}) "
+                f"REFERENCES {pg_quote(fk.ref_schema)}.{pg_quote(fk.ref_table)} ({rcols})"
             )
             if fk.on_delete:
                 stmt += f" ON DELETE {fk.on_delete}"
@@ -245,11 +242,11 @@ def emit_after(catalog: Catalog, opts: EmitOptions | None = None) -> str:
         for c in table.ordered_columns():
             if c.default is not None and not c.default.unsure:
                 out.append(
-                    f"ALTER TABLE {tq} ALTER COLUMN {_quote(c.name)} SET DEFAULT {_pg_default(c.default.sql)};"
+                    f"ALTER TABLE {tq} ALTER COLUMN {pg_quote(c.name)} SET DEFAULT {_pg_default(c.default.sql)};"
                 )
             if c.comment:
                 out.append(
-                    f"COMMENT ON COLUMN {tq}.{_quote(c.name)} IS '{c.comment.replace(chr(39), chr(39)*2)}';"
+                    f"COMMENT ON COLUMN {tq}.{pg_quote(c.name)} IS '{c.comment.replace(chr(39), chr(39)*2)}';"
                 )
         if table.comment:
             out.append(f"COMMENT ON TABLE {tq} IS '{table.comment.replace(chr(39), chr(39)*2)}';")
@@ -260,32 +257,32 @@ def emit_after(catalog: Catalog, opts: EmitOptions | None = None) -> str:
 def emit_unsure(catalog: Catalog, opts: EmitOptions | None = None) -> str:
     opts = opts or EmitOptions()
     out: list[str] = []
-    qual = lambda s, t: f"{_quote(s)}.{_quote(t)}"  # noqa: E731
+    qual = lambda s, t: f"{pg_quote(s)}.{pg_quote(t)}"  # noqa: E731
     if opts.validate_constraints == "after":
         for sname, table in catalog.all_tables():
             for fk in table.foreign_keys:
                 name = fk.name or f"{table.name}_{'_'.join(fk.cols)}_fkey"
                 out.append(
                     f"ALTER TABLE {qual(sname, table.name)} "
-                    f"VALIDATE CONSTRAINT {_quote(name)};"
+                    f"VALIDATE CONSTRAINT {pg_quote(name)};"
                 )
     for sname, table in catalog.all_tables():
         tq = qual(sname, table.name)
         for ck in table.checks:
             name = ck.name or "check"
-            out.append(f"ALTER TABLE {tq} ADD CONSTRAINT {_quote(name)} CHECK ({ck.sql});")
+            out.append(f"ALTER TABLE {tq} ADD CONSTRAINT {pg_quote(name)} CHECK ({ck.sql});")
         for idx in table.indexes.values():
             if idx.where_raw is None:
                 continue
-            cols = ", ".join(_quote(c.name) for c in idx.cols)
+            cols = ", ".join(pg_quote(c.name) for c in idx.cols)
             out.append(
-                f"CREATE {'UNIQUE ' if idx.unique else ''}INDEX {_quote(idx.name)} "
+                f"CREATE {'UNIQUE ' if idx.unique else ''}INDEX {pg_quote(idx.name)} "
                 f"ON {tq} ({cols}) WHERE {idx.where_sql or idx.where_raw};"
             )
         for c in table.ordered_columns():
             if c.default is not None and c.default.unsure:
                 out.append(
-                    f"ALTER TABLE {tq} ALTER COLUMN {_quote(c.name)} SET DEFAULT {_pg_default(c.default.sql)};"
+                    f"ALTER TABLE {tq} ALTER COLUMN {pg_quote(c.name)} SET DEFAULT {_pg_default(c.default.sql)};"
                 )
             if (
                 not opts.skip_citext_length_check
@@ -296,13 +293,13 @@ def emit_unsure(catalog: Catalog, opts: EmitOptions | None = None) -> str:
                 # citext drops the length qualifier → CHECK instead (:386-418)
                 n = c.type_qual.strip("() ")
                 out.append(
-                    f"ALTER TABLE {tq} ADD CONSTRAINT {_quote(c.name + '_len')} "
-                    f"CHECK (char_length({_quote(c.name)}) <= {n});"
+                    f"ALTER TABLE {tq} ADD CONSTRAINT {pg_quote(c.name + '_len')} "
+                    f"CHECK (char_length({pg_quote(c.name)}) <= {n});"
                 )
     for sname, vname in catalog.view_order:
         v = catalog.schemas[sname].views[vname]
-        cols = f" ({', '.join(_quote(c) for c in v.columns)})" if v.columns else ""
-        out.append(f"CREATE VIEW {_quote(sname)}.{_quote(vname)}{cols} AS {v.sql or v.raw_sql};")
+        cols = f" ({', '.join(pg_quote(c) for c in v.columns)})" if v.columns else ""
+        out.append(f"CREATE VIEW {pg_quote(sname)}.{pg_quote(vname)}{cols} AS {v.sql or v.raw_sql};")
     # trigger functions, then the triggers that bind them (reference
     # :3122-3161 — declared last in the unsure script, after everything they
     # might reference exists)
@@ -310,15 +307,15 @@ def emit_unsure(catalog: Catalog, opts: EmitOptions | None = None) -> str:
         for fname in sorted(catalog.schemas[sname].trig_functions):
             tf = catalog.schemas[sname].trig_functions[fname]
             out.append(
-                f"CREATE FUNCTION {_quote(sname)}.{_quote(tf.name)}() "
+                f"CREATE FUNCTION {pg_quote(sname)}.{pg_quote(tf.name)}() "
                 f"RETURNS trigger LANGUAGE {tf.language} AS $def$\n"
                 f"{tf.body}\n$def$;"
             )
     for sname, table in catalog.all_tables():
         for trg in table.triggers:
             out.append(
-                f"CREATE TRIGGER {_quote(trg.name)} {trg.events} "
+                f"CREATE TRIGGER {pg_quote(trg.name)} {trg.events} "
                 f"ON {qual(sname, table.name)} {trg.when} "
-                f"EXECUTE PROCEDURE {_quote(sname)}.{_quote(trg.function)}();"
+                f"EXECUTE PROCEDURE {pg_quote(sname)}.{pg_quote(trg.function)}();"
             )
     return "\n".join(out) + "\n"

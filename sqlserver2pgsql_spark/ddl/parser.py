@@ -296,7 +296,8 @@ class DdlParser:
         s, t = self._schema_table(schema_raw, name_raw)
         body, _ = _outer_parens(stmt, stmt.index("("))
 
-        table = Table(name=t, orig_schema=_unescape(schema_raw or "dbo"))
+        table = Table(name=t, orig_schema=_unescape(schema_raw or "dbo"),
+                      orig_name=_unescape(name_raw))
         sch = self.catalog.schema(s)
         sch.tables[t] = table
 

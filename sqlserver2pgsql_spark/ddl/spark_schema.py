@@ -9,6 +9,7 @@ and constraints turned into validation queries (operators/constraints.py).
 from __future__ import annotations
 
 import re
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -62,29 +63,6 @@ def _parse_type(ddl: str) -> T.DataType:
     raise ValueError(f"unsupported spark type DDL: {ddl!r}")
 
 
-def create_table_ddl(schema_name: str, table: Table, location_root: str | None = None) -> str:
-    """CREATE TABLE … USING parquet DDL for Spark's own catalog."""
-    cols = ", ".join(
-        f"{c.name} {c.spark_type}{'' if c.nullable else ' NOT NULL'}"
-        for c in table.ordered_columns()
-        if c.computed_expr is None
-    )
-    loc = (
-        f" LOCATION '{location_root}/{schema_name}/{table.name}'"
-        if location_root
-        else ""
-    )
-    comment = f" COMMENT '{table.comment}'" if table.comment else ""
-    return (
-        f"CREATE TABLE IF NOT EXISTS {schema_name}.{table.name} ({cols}) "
-        f"USING parquet{comment}{loc}"
-    )
-
-
-def empty_frame(spark: SparkSession, table: Table) -> DataFrame:
-    return spark.createDataFrame([], schema=to_struct_type(table))
-
-
 def with_computed_columns(df: DataFrame, table: Table) -> DataFrame:
     """Apply computed columns as projections in declaration order."""
     for c in table.ordered_columns():
@@ -93,20 +71,26 @@ def with_computed_columns(df: DataFrame, table: Table) -> DataFrame:
     return df
 
 
-def _rewrite_table_refs(sql: str, catalog: Catalog) -> str:
+def _table_ref_rewriter(catalog: Catalog) -> Callable[[str], str]:
     """View bodies reference ``dbo.X`` / ``schema.X``; Spark temp views are
-    flat — rewrite known qualified names to the normalized table name."""
+    flat — rewrite known qualified names to the normalized table name. One
+    compiled alternation per catalog: a branch per schema prefix (a name's
+    own schema, and ``dbo`` for every name), longest names first."""
+    canon: dict[str, str] = {}
+    by_prefix: dict[str, set[str]] = {}
     for sname, schema in catalog.schemas.items():
-        names = list(schema.tables) + list(schema.views)
-        for t in names:
-            for orig_schema in {sname, "dbo"}:
-                sql = re.sub(
-                    rf"\b{re.escape(orig_schema)}\.\[?{re.escape(t)}\]?\b",
-                    t,
-                    sql,
-                    flags=re.IGNORECASE,
-                )
-    return sql
+        for t in (*schema.tables, *schema.views):
+            canon.setdefault(t.lower(), t)
+            for prefix in (sname, "dbo"):
+                by_prefix.setdefault(prefix, set()).add(t)
+    branches = [
+        rf"{re.escape(prefix)}\.\[?("
+        + "|".join(map(re.escape, sorted(names, key=lambda n: (-len(n), n))))
+        + r")\]?"
+        for prefix, names in by_prefix.items()
+    ]
+    pattern = re.compile(rf"\b(?:{'|'.join(branches)})\b", re.IGNORECASE)
+    return lambda sql: pattern.sub(lambda m: canon[m[m.lastindex].lower()], sql)
 
 
 def register_views(
@@ -115,13 +99,14 @@ def register_views(
     """Create temp views in declaration order (earlier views may be
     referenced by later ones). Returns the names registered."""
     registered = []
+    rewrite = _table_ref_rewriter(catalog)
     for sname, vname in catalog.view_order:
         view = catalog.schemas[sname].views[vname]
         if view.sql is None:
             if skip_unsure:
                 continue
             raise ValueError(f"view {vname} is unsure: {view.raw_sql[:120]}")
-        body = _rewrite_table_refs(view.sql, catalog)
+        body = rewrite(view.sql)
         df = spark.sql(body)
         if view.columns and len(view.columns) == len(df.columns):
             # header column list applies only when arities agree — the corpus

@@ -1,30 +1,3 @@
-from .tsql import (
-    charindex,
-    convert,
-    dateadd,
-    datediff,
-    datepart,
-    getdate,
-    isnull,
-    len_,
-    replicate,
-    space,
-    tsql_concat,
-)
 from .translate import TranslationResult, translate_tsql_expr
 
-__all__ = [
-    "charindex",
-    "convert",
-    "dateadd",
-    "datediff",
-    "datepart",
-    "getdate",
-    "isnull",
-    "len_",
-    "replicate",
-    "space",
-    "tsql_concat",
-    "TranslationResult",
-    "translate_tsql_expr",
-]
+__all__ = ["TranslationResult", "translate_tsql_expr"]

@@ -12,6 +12,12 @@ reference's behavior contract: anything it can't confidently translate is
 returned with ``unsure=True`` (the reference routes such text to the
 "unsure" output file — README.md:77-79) rather than silently guessed.
 
+It is the package's one implementation of T-SQL scalar semantics: the
+schema plane and the queries (q12, q13) render T-SQL through it, and each
+renderer gives SQL Server's answer under the default ``DATEFIRST 7``.
+CONVERT takes its CAST targets from the catalog's type matrix
+(:mod:`sqlserver2pgsql_spark.catalog.types`).
+
 Used for: DEFAULT expressions (B7), CHECK constraint bodies (B8), partial
 index predicates (B9), view bodies (B11). Deliberately regex-based like the
 reference — the input language is the narrow scalar-expression subset that
@@ -25,6 +31,7 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass
 
+from ..catalog.types import convert_type
 from ..scan import paren_group, split_top
 
 
@@ -35,40 +42,26 @@ class TranslationResult:
     notes: tuple[str, ...] = ()
 
 
-_DATEPART_NORM = {
+#: SQL Server datepart names and abbreviations -> one canonical part each
+_DATEPARTS = {
     "yy": "YEAR", "yyyy": "YEAR", "year": "YEAR",
     "qq": "QUARTER", "q": "QUARTER", "quarter": "QUARTER",
     "mm": "MONTH", "m": "MONTH", "month": "MONTH",
+    "dy": "DAYOFYEAR", "y": "DAYOFYEAR", "dayofyear": "DAYOFYEAR",
     "dd": "DAY", "d": "DAY", "day": "DAY",
     "wk": "WEEK", "ww": "WEEK", "week": "WEEK",
+    "dw": "WEEKDAY", "w": "WEEKDAY", "weekday": "WEEKDAY",
     "hh": "HOUR", "hour": "HOUR",
     "mi": "MINUTE", "n": "MINUTE", "minute": "MINUTE",
     "ss": "SECOND", "s": "SECOND", "second": "SECOND",
 }
 
-_TYPE_MAP = {
-    "int": "INT", "integer": "INT", "bigint": "BIGINT", "smallint": "SMALLINT",
-    "tinyint": "SMALLINT", "bit": "BOOLEAN", "float": "DOUBLE", "real": "FLOAT",
-    "date": "DATE", "datetime": "TIMESTAMP", "datetime2": "TIMESTAMP",
-    "smalldatetime": "TIMESTAMP", "money": "DECIMAL(19,4)",
-    "smallmoney": "DECIMAL(10,4)", "uniqueidentifier": "STRING", "sysname": "STRING",
-}
+#: DATEADD and DATEDIFF count dayofyear and weekday in days
+_AS_DAY = {"DAYOFYEAR": "DAY", "WEEKDAY": "DAY"}
 
 
-_CHAR_TYPE = re.compile(r"(n?var)?char\s*\(\s*(\d+|max)\s*\)|n?(var)?char|n?text")
-_DECIMAL_TYPE = re.compile(r"(decimal|numeric)\s*(\(\s*\d+\s*(,\s*\d+)?\s*\))?")
-_SPACE = re.compile(r"\s")
-
-
-def _map_type(t: str) -> str | None:
-    t = t.strip().lower()
-    if _CHAR_TYPE.fullmatch(t):
-        return "STRING"
-    m = _DECIMAL_TYPE.fullmatch(t)
-    if m:
-        inner = _SPACE.sub("", m.group(2) or "(18,0)")
-        return f"DECIMAL{inner}"
-    return _TYPE_MAP.get(t)
+def _datepart(arg: str) -> str | None:
+    return _DATEPARTS.get(arg.strip().lower().strip("'\""))
 
 
 #: ``[Some Ident]`` (``]]`` is a literal ``]``)
@@ -139,43 +132,96 @@ def _rewrite_calls(expr: str, fname: str, render) -> tuple[str, bool]:
     return expr, unsure
 
 
+#: CONVERT targets that are a plain CAST to the catalog's Spark type
+#: (catalog.types). The others (time, datetimeoffset, xml, sql_variant, the
+#: spatial and binary types) change representation there, so stay unsure.
+_CASTABLE = frozenset({
+    "int", "integer", "bigint", "smallint", "tinyint", "bit", "float", "real",
+    "decimal", "numeric", "money", "smallmoney", "date", "datetime",
+    "datetime2", "smalldatetime", "uniqueidentifier", "sysname",
+    "char", "nchar", "varchar", "nvarchar", "text", "ntext",
+})
+#: a CONVERT target: base type, qualifier, and the length if one is given
+_TARGET = re.compile(
+    r"(?P<base>\w+)\s*(?P<qual>\(\s*(?:(?P<n>\d+)|max)\s*(?:,\s*\d+\s*)?\))?",
+    re.IGNORECASE,
+)
+#: CONVERT(char type, datetime, style): ODBC canonical styles
+_STYLES = {"120": "yyyy-MM-dd HH:mm:ss", "121": "yyyy-MM-dd HH:mm:ss.SSS"}
+
+
 def _render_convert(args: list[str]) -> str | None:
+    """CONVERT(type, x[, style]) as SQL Server computes it: a char type of
+    length n keeps n characters (30 when no length is given; char and
+    nchar are blank-padded to n), also after a style."""
     if len(args) not in (2, 3):
         return None
-    target = _map_type(args[0])
-    if target is None:
+    m = _TARGET.fullmatch(args[0])
+    if m is None or m["base"].lower() not in _CASTABLE:
         return None
-    if len(args) == 3 and target == "STRING" and args[2].strip() in ("120", "121"):
-        fmt = "yyyy-MM-dd HH:mm:ss" if args[2].strip() == "120" else "yyyy-MM-dd HH:mm:ss.SSS"
-        return f"date_format({args[1]}, '{fmt}')"
-    return f"CAST({args[1]} AS {target})"
+    base = m["base"].lower()
+    spark_type = convert_type(base, m["qual"]).spark_type.upper()
+    style = args[2] if len(args) == 3 else None
+    if spark_type != "STRING":
+        return f"CAST({args[1]} AS {spark_type})"
+    if style is not None and style not in _STYLES:
+        return None
+    text = (f"date_format({args[1]}, '{_STYLES[style]}')" if style
+            else f"CAST({args[1]} AS STRING)")
+    if base not in ("char", "nchar", "varchar", "nvarchar") or (m["qual"] and not m["n"]):
+        return text  # no length, or (max)
+    fn = "rpad" if base in ("char", "nchar") else "left"
+    return f"{fn}({text}, {m['n'] or 30})"
 
 
 def _render_dateadd(args: list[str]) -> str | None:
-    if len(args) != 3:
+    if len(args) != 3 or (part := _datepart(args[0])) is None:
         return None
-    unit = _DATEPART_NORM.get(args[0].strip().lower().strip("'\""))
-    if unit is None:
-        return None
-    return f"timestampadd({unit}, {args[1]}, {args[2]})"
+    return f"timestampadd({_AS_DAY.get(part, part)}, {args[1]}, {args[2]})"
+
+
+#: DATEDIFF(part, s, e): the part boundaries crossed from s to e, not the
+#: elapsed units; Sunday starts a week (DATEFIRST 7). The result is an INT,
+#: as in SQL Server. No formula holds a ``+``: the string-concatenation
+#: rewrite would turn it into ``||`` next to a literal argument. Spark's
+#: ``date_diff`` is spelled so the DATEDIFF rewrite cannot match it again.
+_DATEDIFF = {
+    "YEAR": "year({e}) - year({s})",
+    "QUARTER": "(year({e}) - year({s})) * 4 - (quarter({s}) - quarter({e}))",
+    "MONTH": "(year({e}) - year({s})) * 12 - (month({s}) - month({e}))",
+    "DAY": "date_diff(to_date({e}), to_date({s}))",
+    "WEEK": "floor(date_diff(to_date({e}), DATE'1900-01-07') / 7)"
+            " - floor(date_diff(to_date({s}), DATE'1900-01-07') / 7)",
+    **{
+        unit: f"(unix_timestamp(date_trunc('{unit}', {{e}}))"
+              f" - unix_timestamp(date_trunc('{unit}', {{s}}))) div {secs}"
+        for unit, secs in (("HOUR", 3600), ("MINUTE", 60), ("SECOND", 1))
+    },
+}
 
 
 def _render_datediff(args: list[str]) -> str | None:
-    if len(args) != 3:
+    if len(args) != 3 or (part := _datepart(args[0])) is None:
         return None
-    unit = _DATEPART_NORM.get(args[0].strip().lower().strip("'\""))
-    if unit is None:
-        return None
-    return f"timestampdiff({unit}, {args[1]}, {args[2]})"
+    formula = _DATEDIFF[_AS_DAY.get(part, part)].format(s=args[1], e=args[2])
+    return f"CAST({formula} AS INT)"
+
+
+#: DATEPART(part, d) where SQL Server's answer is not ``extract(part FROM
+#: d)``: Spark's DAYOFWEEK is already Sunday=1; the week of the year starts
+#: on Sunday with Jan 1 in week 1 (not the ISO week); seconds are whole
+_DATEPART = {
+    "DAYOFYEAR": "extract(DOY FROM {d})",
+    "WEEKDAY": "extract(DAYOFWEEK FROM {d})",
+    "WEEK": "CAST(ceil((dayofyear({d}) - (1 - dayofweek(trunc({d}, 'YEAR')))) / 7) AS INT)",
+    "SECOND": "CAST(extract(SECOND FROM {d}) AS INT)",
+}
 
 
 def _render_datepart(args: list[str]) -> str | None:
-    if len(args) != 2:
+    if len(args) != 2 or (part := _datepart(args[0])) is None:
         return None
-    unit = _DATEPART_NORM.get(args[0].strip().lower().strip("'\""))
-    if unit is None:
-        return None
-    return f"extract({unit} FROM {args[1]})"
+    return _DATEPART.get(part, f"extract({part} FROM {{d}})").format(d=args[1])
 
 
 _SIMPLE_CALLS = {
@@ -222,7 +268,9 @@ _PASSTHROUGH = {
 #: appear inside CAST(... AS T(p,s))
 _KNOWN_FUNCS = _PASSTHROUGH | {
     "current_timestamp", "current_user", "date_format", "timestampadd",
-    "timestampdiff", "extract", "locate", "repeat", "length", "uuid",
+    "extract", "locate", "repeat", "length", "uuid", "rpad", "quarter",
+    "to_date", "date_diff", "ceil", "unix_timestamp", "date_trunc",
+    "dayofyear", "dayofweek", "trunc",
     "decimal", "numeric", "varchar", "char",
 }
 _FUNC_CALL = re.compile(r"\b([a-zA-Z_][a-zA-Z0-9_]*)\s*\(")
@@ -233,7 +281,14 @@ _FUNC_CALL = re.compile(r"\b([a-zA-Z_][a-zA-Z0-9_]*)\s*\(")
 # regression/basic_test/views.sql:90) into string concat.
 _STRINGY_FUNCS = {
     "concat", "repeat", "upper", "lower", "ltrim", "rtrim", "trim",
-    "substring", "replace", "left", "right", "date_format",
+    "substring", "replace", "left", "right", "rpad", "date_format",
+}
+#: calls that never return a string, whatever literal they take
+#: (``CHARINDEX('-', x) + 1`` is arithmetic)
+_NUMERIC_FUNCS = {
+    "locate", "length", "extract", "year", "month", "day",
+    "abs", "round", "floor", "ceiling", "sign", "power", "exp", "log", "sqrt",
+    "count", "sum", "avg",
 }
 
 
@@ -245,14 +300,17 @@ _STRING_CAST = re.compile(r"cast\s*\(.*as\s+(string|n?(var)?char)", re.IGNORECAS
 
 def _is_stringy(operand: str, string_idents: frozenset[str]) -> bool:
     o = operand.strip()
-    if _HAS_LITERAL.search(o):  # contains a protected string literal
-        return True
     m = _CALL_HEAD.match(o)
-    if m and m.group(1).lower() in _STRINGY_FUNCS:
+    head = m.group(1).lower() if m else None
+    if head in _STRINGY_FUNCS or _STRING_CAST.match(o):
+        return True
+    if head in _NUMERIC_FUNCS or head == "cast":
+        return False
+    if _HAS_LITERAL.search(o):  # contains a protected string literal
         return True
     if _DOTTED_NAME.fullmatch(o) and o.lower().split(".")[-1] in string_idents:
         return True  # caller told us this column is a string (catalog types)
-    return bool(_STRING_CAST.match(o))
+    return False
 
 
 def _rewrite_plus(expr: str, string_idents: frozenset[str] = frozenset()) -> str:

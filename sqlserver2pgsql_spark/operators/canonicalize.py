@@ -22,10 +22,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-#: columns named here are treated as uuid-as-string and lower-cased
-#: (reference :446, :471 — ``lower([col])`` on both sides).
-UuidCols = set[str]
-
 
 def _canonical_col(
     field: T.StructField, uuid_cols: set[str], ci_cols: set[str], as_strings: bool

@@ -39,21 +39,6 @@ def exact_dedup(
     return df.join(keepers, on=[*on, id_col], how="left_semi")
 
 
-def word_shingles(col: Column, n: int = 3) -> Column:
-    """Distinct word n-gram shingles of a text column.
-
-    NOTE: pass a pre-materialized token-array COLUMN as ``col``'s source
-    when calling in bulk — referencing a raw text column here re-splits it
-    per shingle (HOF subexpressions aren't CSE'd); ``shingle_postings``
-    does this correctly."""
-    toks = tokens(col)
-    cnt = F.size(toks)
-    idx = F.sequence(F.lit(1), F.greatest(F.lit(1), cnt - n + 1))
-    return F.array_distinct(
-        F.transform(idx, lambda i: F.array_join(F.slice(toks, i, n), " "))
-    )
-
-
 def shingle_postings(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> DataFrame:
     """(id, shingle) posting list — the shared substrate of the exact and
     LSH paths.
@@ -572,36 +557,6 @@ def simhash(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
         )
     )
     return votes.select("doc_id", sig.alias("simhash"))
-
-
-def simhash_candidate_pairs(sig_df: DataFrame, bands: int = 4) -> DataFrame:
-    """Docs sharing any 15-bit band of the simhash → candidate pairs; full
-    recall for Hamming distance ≤ bands-1 (pigeonhole)."""
-    width = SIMHASH_BITS // bands
-    band_rows = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.shiftright(F.col("simhash"), b * width)
-            .bitwiseAND(F.lit((1 << width) - 1))
-            .alias("key"),
-        )
-        for b in range(bands)
-    ]
-    exploded = sig_df.select("doc_id", F.explode(F.array(*band_rows)).alias("bk")).select(
-        "doc_id", "bk.band", "bk.key"
-    )
-    a = exploded.alias("a")
-    b = exploded.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("id1"), F.col("b.doc_id").alias("id2"))
-        .dropDuplicates(["id1", "id2"])
-    )
 
 
 def simhash_neardup_pairs(sig_df: DataFrame, max_distance: int = 3, bands: int = 4) -> DataFrame:

@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..catalog.identifiers import pg_quote
 from .diff import DIFF_FLAG_COL, FLAG_DELETED
 
 
@@ -39,14 +40,18 @@ def merge_sql(
 
     Set-based replacement for the reference's row-at-a-time
     SynchronizeAfterMerge (commit interval 100, sqlserver2pgsql.pl:4650).
+    Column names are double-quoted as emit_pg creates them; the table
+    names are used as given, so they may be schema-qualified.
     """
+    keys, value_cols = [pg_quote(k) for k in keys], [pg_quote(c) for c in value_cols]
+    flag = f"s.{pg_quote(flag_col)}"
     on = " AND ".join(f"t.{k} = s.{k}" for k in keys)
     set_clause = ", ".join(f"{c} = s.{c}" for c in value_cols)
     all_cols = ", ".join(keys + value_cols)
     src_cols = ", ".join(f"s.{c}" for c in keys + value_cols)
     return (
         f"MERGE INTO {target_table} t USING {staging_table} s ON {on} "
-        f"WHEN MATCHED AND s.{flag_col} = 'deleted' THEN DELETE "
-        f"WHEN MATCHED AND s.{flag_col} = 'changed' THEN UPDATE SET {set_clause} "
-        f"WHEN NOT MATCHED AND s.{flag_col} = 'new' THEN INSERT ({all_cols}) VALUES ({src_cols})"
+        f"WHEN MATCHED AND {flag} = 'deleted' THEN DELETE "
+        f"WHEN MATCHED AND {flag} = 'changed' THEN UPDATE SET {set_clause} "
+        f"WHEN NOT MATCHED AND {flag} = 'new' THEN INSERT ({all_cols}) VALUES ({src_cols})"
     )

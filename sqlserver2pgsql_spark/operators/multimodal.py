@@ -28,19 +28,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-#: canonical multimodal schema: payload + typed metadata
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("modality", T.StringType(), False),  # image|audio|video
-        T.StructField("payload", T.BinaryType(), True),
-        T.StructField("mime", T.StringType(), True),
-        T.StructField("width", T.IntegerType(), True),
-        T.StructField("height", T.IntegerType(), True),
-        T.StructField("duration_ms", T.LongType(), True),
-    ]
-)
-
 FEATURE_SCHEMA = (
     "media_id long, modality string, n_bytes long, payload_hash string, "
     "feat_mean double, feat_dim int"
@@ -93,8 +80,6 @@ def decode_bmp(payload: bytes) -> np.ndarray:
 # data behind a fixed header, so a full real decode path is pure struct/
 # numpy. 44-byte canonical header (RIFF + fmt + data chunks) + LE int16.
 # ---------------------------------------------------------------------------
-
-_WAV_HDR = 44
 
 
 def encode_wav(samples: np.ndarray, sample_rate: int = 8000) -> bytes:

@@ -85,11 +85,6 @@ LANG_MARKERS: dict[str, tuple[str, ...]] = {
 _LANG_ORDER = ("en", "es", "fr", "de", "zh")
 
 
-def _lang_score(toks: Column, lang: str) -> Column:
-    markers = LANG_MARKERS[lang]
-    return F.size(F.filter(toks, lambda w: F.lower(w).isin(*markers)))
-
-
 def detect_language(df: DataFrame, text_col: str = "text", out_col: str = "lang_pred") -> DataFrame:
     """Marker-word language ID: argmax of per-language marker counts, 'und'
     when nothing matches. Fixed priority order breaks ties deterministically.

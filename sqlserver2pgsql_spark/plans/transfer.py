@@ -8,7 +8,10 @@ orchestrator is driver-side Python:
 - plan selection mirrors the reference (:1163-1166): PK present →
   incremental (diff+merge) is *possible*; no PK → full reload only.
 - full load = scan → cleanse (A5) → truncate+append sink.
-- incremental = canonicalize both sides → diff (A9) → apply (A10).
+- incremental = scan → cleanse (A5) → diff (A9) against the target as
+  stored → apply (A10). ``operators.canonicalize`` is not called: both
+  sides are parquet stores of the same types, so values compare as
+  stored (a JDBC scan canonicalizes in its SQL, sources.jdbc).
 - hooks = the init/teardown SQL slots (A13; cast install / trigger disable
   have no Spark-side meaning, but sinks may need session SQL).
 - metrics mirror kettle_report.pl (B20): per-table duration + rows/sec,
@@ -46,7 +49,7 @@ from ..operators.cleanse import cleanse_strings
 from ..operators.diff import diff
 from ..operators.merge import apply_diff
 from ..operators.sqltext import ident
-from ..sources.footer import footer_schema
+from ..sources.tables import read_parquet
 
 
 class ParquetStore:
@@ -61,11 +64,10 @@ class ParquetStore:
         return os.path.join(self.root, schema, f"{table}.parquet")
 
     def read(self, schema: str, table: str) -> DataFrame:
-        """The table, with the schema its footer records: no Spark job.
-        The footer is read on every call, so a rewritten table is never
-        read with a stale schema."""
-        path = self.path(schema, table)
-        return self.spark.read.schema(footer_schema(path)).parquet(path)
+        """The table, with the schema its footer records: no Spark job
+        (``sources.tables.read_parquet``). The footer is read on every
+        call, so a rewritten table is never read with a stale schema."""
+        return read_parquet(self.spark, self.path(schema, table))
 
     def write(self, df: DataFrame, schema: str, table: str, mode: str = "overwrite") -> None:
         df.write.mode(mode).parquet(self.path(schema, table))

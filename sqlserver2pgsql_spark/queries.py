@@ -403,6 +403,19 @@ def q10_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
     return both.unionByName(only).orderBy("tag", "n_nationkey")
 
 
+#: q12's columns as T-SQL, the way a migrated view or default spells them
+_Q12_TSQL = (
+    "ISNULL(NULLIF([o_orderpriority], '1-URGENT'), 'DEFAULTED') AS pri",
+    "DATEADD(day, 2, [o_orderdate]) AS ship_by",
+    "DATEPART(month, [o_orderdate]) AS order_month",
+    "CHARINDEX('-', [o_orderpriority]) AS dash_pos",
+    "[o_orderstatus] + SPACE(3) + [o_orderpriority] AS padded",
+    "LEN([o_orderpriority] + '  ') AS len_trim",
+    "DATEDIFF(day, [o_orderdate], '1998-01-01 00:00:00') AS days_to_98",
+    "CONVERT(float, CONVERT(decimal(18,2), [o_totalprice])) AS price_dec",
+)
+
+
 @register(
     "q12_tsql_scalars",
     oracle="""
@@ -420,23 +433,16 @@ def q10_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q12_tsql_scalars(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """T-SQL scalar-function layer (B10, sqlserver2pgsql.pl:587-601):
-    ISNULL, DATEADD, DATEPART, CHARINDEX, SPACE, LEN, DATEDIFF, CONVERT,
-    string ``+`` — all as JVM-side Spark expressions, no UDFs."""
-    from .functions import tsql
+    """T-SQL scalar functions (B10, sqlserver2pgsql.pl:587-601): ISNULL,
+    DATEADD, DATEPART, CHARINDEX, SPACE, LEN, DATEDIFF, CONVERT and string
+    ``+``, each written as T-SQL and rendered by translate_tsql_expr, the
+    path migrated views and defaults take; one ``selectExpr``, no UDFs."""
+    from .functions.translate import translate_tsql_expr
 
+    results = [translate_tsql_expr(e) for e in _Q12_TSQL]
+    assert not any(r.unsure for r in results), [r.notes for r in results]
     o = _t(spark, sf_dir, "orders")
-    return o.select(
-        "o_orderkey",
-        tsql.isnull(F.nullif(F.col("o_orderpriority"), F.lit("1-URGENT")), F.lit("DEFAULTED")).alias("pri"),
-        tsql.dateadd("day", 2, F.col("o_orderdate")).alias("ship_by"),
-        tsql.datepart("month", F.col("o_orderdate")).alias("order_month"),
-        tsql.charindex("-", F.col("o_orderpriority")).alias("dash_pos"),
-        tsql.tsql_concat(F.col("o_orderstatus"), tsql.space(3), F.col("o_orderpriority")).alias("padded"),
-        tsql.len_(tsql.tsql_concat(F.col("o_orderpriority"), F.lit("  "))).alias("len_trim"),
-        tsql.datediff("day", F.col("o_orderdate"), F.lit("1998-01-01 00:00:00").cast("timestamp")).alias("days_to_98"),
-        tsql.convert("decimal(18,2)", F.col("o_totalprice")).cast("double").alias("price_dec"),
-    ).orderBy("o_orderkey")
+    return o.selectExpr("o_orderkey", *(r.sql for r in results)).orderBy("o_orderkey")
 
 
 @register(

@@ -68,7 +68,11 @@ def footer_schema(path: str, nanos_as_long: bool = False) -> T.StructType:
     TIMESTAMP(NANOS) columns raise, as Spark's inference does, unless
     ``nanos_as_long`` reads them as their INT64 nanosecond values (Spark's
     ``spark.sql.legacy.parquet.nanosAsLong``)."""
-    meta = pq.read_metadata(first_data_file(path))
+    return metadata_schema(pq.read_metadata(first_data_file(path)), nanos_as_long)
+
+
+def metadata_schema(meta: pq.FileMetaData, nanos_as_long: bool = False) -> T.StructType:
+    """``footer_schema`` of a footer already read."""
     recorded = (meta.metadata or {}).get(SPARK_ROW_METADATA)
     if recorded is not None:
         return T.StructType.fromJson(_nullable(json.loads(recorded)))

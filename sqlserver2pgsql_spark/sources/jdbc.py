@@ -26,6 +26,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
+from ..catalog.identifiers import mssql_quote, pg_quote
 from ..catalog.model import Column, Table
 
 MSSQL_DRIVER = "com.microsoft.sqlserver.jdbc.SQLServerDriver"
@@ -54,12 +55,12 @@ def mssql_cast_expr(col: Column) -> str:
     """Scan-side canonicalization on SQL Server (reference sql_convert_column,
     :442-460): uuid lower-cased, date/datetimeoffset rendered to fixed styles,
     xml guarded against the driver's empty-document bug."""
-    name = f"[{col.orig_name}]"
+    name = mssql_quote(col.orig_name)
     t = col.type_name
     if t == "uniqueidentifier":
-        return f"lower({name}) AS [{col.orig_name}]"
+        return f"lower({name}) AS {name}"
     if t == "date":
-        return f"convert(varchar(50), {name}, 120) AS [{col.orig_name}]"
+        return f"convert(varchar(50), {name}, 120) AS {name}"
     if t == "datetimeoffset":
         # normalize to UTC and microsecond precision so the rendered string
         # equals pg_cast_expr's 'YYYY-MM-DD HH24:MI:SS.US+00' — style 121 on
@@ -68,13 +69,10 @@ def mssql_cast_expr(col: Column) -> str:
         # 7-digit fraction, which fabricates diffs for identical instants)
         return (
             f"convert(varchar(50), cast(switchoffset({name}, '+00:00') as datetime2(6)), 121)"
-            f" + '+00' AS [{col.orig_name}]"
+            f" + '+00' AS {name}"
         )
     if t == "xml":
-        return (
-            f"case when datalength({name}) > 5 then {name} else null end "
-            f"AS [{col.orig_name}]"
-        )
+        return f"case when datalength({name}) > 5 then {name} else null end AS {name}"
     return name
 
 
@@ -82,7 +80,7 @@ def pg_cast_expr(col: Column) -> str:
     """Read-back canonicalization on PostgreSQL for the incremental diff
     (reference postgres_convert_column, :467-484) — must render the *same
     strings* as mssql_cast_expr or the diff fabricates changed rows."""
-    name = col.name
+    name = pg_quote(col.name)
     t = col.type_name
     if t == "uniqueidentifier":
         return f"lower(cast({name} as varchar)) AS {name}"
@@ -98,19 +96,21 @@ def pg_cast_expr(col: Column) -> str:
 
 def mssql_scan_sql(table: Table, nolock: bool = True) -> str:
     """Projection scan with dirty-read hint (reference :3666: the generated
-    TableInput SQL, WITH(NOLOCK) to avoid blocking the live source)."""
+    TableInput SQL, WITH(NOLOCK) to avoid blocking the live source). The
+    source table and columns go by their SQL Server names, bracketed."""
     cols = ", ".join(
         mssql_cast_expr(c) for c in table.ordered_columns() if c.computed_expr is None
     )
     hint = " WITH(NOLOCK)" if nolock else ""
-    return f"SELECT {cols} FROM [{table.orig_schema}].[{table.name}]{hint}"
+    source = f"{mssql_quote(table.orig_schema)}.{mssql_quote(table.orig_name or table.name)}"
+    return f"SELECT {cols} FROM {source}{hint}"
 
 
 def pg_scan_sql(schema: str, table: Table) -> str:
     cols = ", ".join(
         pg_cast_expr(c) for c in table.ordered_columns() if c.computed_expr is None
     )
-    return f"SELECT {cols} FROM {schema}.{table.name}"
+    return f"SELECT {cols} FROM {pg_quote(schema)}.{pg_quote(table.name)}"
 
 
 #: Spark types whose ORDER BY is collation-independent — the A11 gate

@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.sqltext import ident
-from .footer import first_data_file, footer_schema
+from .footer import first_data_file, metadata_schema
 
 TABLE_NAMES = (
     "region",
@@ -32,16 +32,13 @@ TABLE_NAMES = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = "/root/testdata/sf0.001"
 
-
-def _nano_ts_columns(path: str) -> list[str]:
+def _nano_ts_columns(meta: pq.FileMetaData) -> list[str]:
     """Top-level columns stored as TIMESTAMP(NANOS): physical INT64 with a
     nanosecond Timestamp logical type. Arrow reports legacy INT96
     timestamps as ``timestamp[ns]`` too, but Spark reads those natively,
     so the arrow type cannot tell the two apart; the parquet schema can."""
-    schema = pq.read_metadata(first_data_file(path)).schema
-    cols = (schema.column(i) for i in range(len(schema)))
+    cols = (meta.schema.column(i) for i in range(len(meta.schema)))
     return [
         c.name
         for c in cols
@@ -50,6 +47,21 @@ def _nano_ts_columns(path: str) -> list[str]:
         and c.logical_type.type == "TIMESTAMP"
         and json.loads(c.logical_type.to_json())["timeUnit"] == "nanoseconds"
     ]
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """Parquet scan with the schema read from the file footer
+    (sources.footer), so no schema-inference job runs; the footer is read
+    once. TIMESTAMP(NANOS) columns (which Spark rejects,
+    PARQUET_TYPE_ILLEGAL) are read as nanosecond longs — no session conf
+    is written — and truncated to microsecond timestamps: lossless for
+    micro-aligned data, and integer `div` keeps the conversion exact
+    beyond 2^53."""
+    meta = pq.read_metadata(first_data_file(path))
+    df = spark.read.schema(metadata_schema(meta, nanos_as_long=True)).parquet(path)
+    for c in _nano_ts_columns(meta):
+        df = df.withColumn(c, F.timestamp_micros(F.expr(f"{ident(c)} div 1000")))
+    return df
 
 
 #: (applicationId, sf_dir, table) -> (session, lazy relation DataFrame).
@@ -66,20 +78,12 @@ _RELATIONS: dict[tuple[str, str, str], tuple[SparkSession, DataFrame]] = {}
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Parquet scan with the schema read from the file footer
-    (sources.footer), so no schema-inference job runs. TIMESTAMP(NANOS)
-    columns (which Spark rejects, PARQUET_TYPE_ILLEGAL) are read as
-    nanosecond longs — no session conf is written — and truncated to
-    microsecond timestamps: lossless for micro-aligned data, and integer
-    `div` keeps the conversion exact beyond 2^53."""
+    """A fixture table through ``read_parquet``, memoized per session."""
     key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir), name)
     hit = _RELATIONS.get(key)
     if hit is not None and hit[0] is spark:
         return hit[1]
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    df = spark.read.schema(footer_schema(path, nanos_as_long=True)).parquet(path)
-    for c in _nano_ts_columns(path):
-        df = df.withColumn(c, F.timestamp_micros(F.expr(f"{ident(c)} div 1000")))
+    df = read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
     _RELATIONS[key] = (spark, df)
     return df
 

@@ -15,8 +15,6 @@ local smoke runs (memory sink + processAllAvailable).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -220,9 +218,12 @@ def foreach_batch_upsert(store, schema: str, table: str, keys: list[str]):
     """A10 as a streaming sink: upsert each micro-batch into the target by
     key (insert new, update changed; deletes don't exist in an append-only
     change feed). On Delta this is MERGE INTO; on parquet, rewrite-by-union.
-    Exactly-once across retries comes from the idempotence of the MERGE."""
+    Exactly-once across retries comes from the idempotence of the MERGE.
+    Each batch is staged, then swapped in with the store's crash-safe
+    ``swap_in``; ``recover`` first repairs a swap an earlier batch left cut."""
 
     def apply(batch_df: DataFrame, epoch_id: int) -> None:
+        store.recover(schema, table)
         batch = batch_df.dropDuplicates(keys)
         if store.exists(schema, table):
             tgt = store.read(schema, table)
@@ -233,12 +234,7 @@ def foreach_batch_upsert(store, schema: str, table: str, keys: list[str]):
         # stage-then-swap: never overwrite the file we are reading from
         tmp = store.path(schema, table) + f".epoch{epoch_id}"
         out.write.mode("overwrite").parquet(tmp)
-        import shutil
-
-        final = store.path(schema, table)
-        if os.path.exists(final):
-            shutil.rmtree(final)
-        os.replace(tmp, final)
+        store.swap_in(schema, table, tmp)
 
     return apply
 

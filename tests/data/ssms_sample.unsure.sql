@@ -5,7 +5,7 @@ CREATE UNIQUE INDEX "ix_regions_id" ON "sales"."regions" ("id") WHERE ((ID) > 10
 CREATE VIEW "public"."vfrenchcustomers" AS SELECT customerid, name || ' (' || region || ')' AS label
 FROM dbo.customers WHERE region = 'FR';
 CREATE VIEW "public"."vordertotals" AS SELECT o.customerid, COUNT(*) AS orders, SUM(coalesce(o.amount, 0)) AS total,
-       date_format(MAX(o.placed), 'yyyy-MM-dd HH:mm:ss') AS lastorder
+       left(date_format(MAX(o.placed), 'yyyy-MM-dd HH:mm:ss'), 10) AS lastorder
 FROM dbo.orders AS o
 GROUP BY o.customerid;
 CREATE VIEW "sales"."vregiondates" AS SELECT [ID], DATEDIFF(day, GETDATE(), SYSDATETIME()) AS [Age], SOUNDEX([Code]) AS [Sound]

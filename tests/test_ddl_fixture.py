@@ -6,6 +6,8 @@ The golden scripts next to the dump were produced by the previous parser
 section. The lines for that section (``[Sales Orders]`` and a view over it:
 bracketed names with spaces, dots and ``]]``, which that parser rejected or
 misread) were checked by hand, and test_bracketed_names spells them out.
+One line has changed since: the unsure script's ``lastorder`` column, where
+``CONVERT(varchar(10), …, 120)`` keeps 10 characters, as in SQL Server.
 The dump exercises the reader and parser corners an SSMS export has: a
 block comment holding a quote, a literal holding ``/*``, ``''`` escapes, a
 missing ``GO``, the unbalanced ``WHERE ((ID) > 10))``, ``sp_executesql``
@@ -16,6 +18,7 @@ properties.
 
 from __future__ import annotations
 
+import importlib.util
 import json
 import os
 import re
@@ -23,6 +26,7 @@ import re
 from sqlserver2pgsql_spark.catalog.conflicts import resolve_name_conflicts
 from sqlserver2pgsql_spark.ddl import parse_dump, parse_text
 from sqlserver2pgsql_spark.ddl.emit_pg import emit_after, emit_before, emit_unsure
+from sqlserver2pgsql_spark.ddl.spark_schema import _table_ref_rewriter
 
 DATA = os.path.join(os.path.dirname(os.path.abspath(__file__)), "data")
 DUMP = os.path.join(DATA, "ssms_sample.sql")
@@ -136,3 +140,39 @@ def test_parse_compiles_no_pattern_per_call(monkeypatch):
     resolve_name_conflicts(cat)
     emit_before(cat), emit_after(cat), emit_unsure(cat)
     assert calls == []
+
+
+def _per_name_refs(sql, catalog):
+    """The former view-body rewrite: one pattern per name and schema."""
+    for sname, schema in catalog.schemas.items():
+        for t in list(schema.tables) + list(schema.views):
+            for orig_schema in {sname, "dbo"}:
+                sql = re.sub(rf"\b{re.escape(orig_schema)}\.\[?{re.escape(t)}\]?\b", t, sql,
+                             flags=re.IGNORECASE)
+    return sql
+
+
+def _largest_perfbench_dump() -> str:
+    path = os.path.join(os.path.dirname(DATA), "..", "perfbench", "gen.py")
+    spec = importlib.util.spec_from_file_location("perfbench_gen", path)
+    gen = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(gen)
+    return max((text for text, _ in gen.make_dumps(1)),
+               key=lambda text: (text.count("CREATE VIEW"), len(text)))
+
+
+def test_table_refs_rewrite_equals_per_name_loop():
+    """``register_views`` rewrites ``schema.name`` in view bodies with one
+    alternation per catalog; it gives what the loop over every name gave,
+    on the fixture and on seed 1's largest perfbench dump (61 views over
+    320 tables), raw and translated bodies alike."""
+    for cat in (parse_dump(DUMP), parse_text(_largest_perfbench_dump())):
+        rewrite = _table_ref_rewriter(cat)
+        bodies = [b for s, v in cat.view_order
+                  for b in (cat.schemas[s].views[v].sql, cat.schemas[s].views[v].raw_sql) if b]
+        assert bodies
+        assert [rewrite(b) for b in bodies] == [_per_name_refs(b, cat) for b in bodies]
+    cat = parse_text("CREATE TABLE [dbo].[t]([a] [int] NULL)\nGO\n"
+                     "CREATE TABLE [dbo].[t2]([a] [int] NULL)\nGO\n")
+    assert _table_ref_rewriter(cat)("SELECT * FROM dbo.t2 JOIN DBO.T ON 1=1") \
+        == "SELECT * FROM t2 JOIN t ON 1=1"

@@ -148,8 +148,8 @@ def test_apply_diff_reproduces_source(spark):
 
 def test_merge_sql_shape():
     sql = merge_sql("tgt", "stg", ["id"], ["a", "b"])
-    assert "MERGE INTO tgt t USING stg s ON t.id = s.id" in sql
-    assert "THEN DELETE" in sql and "UPDATE SET a = s.a, b = s.b" in sql
+    assert 'MERGE INTO tgt t USING stg s ON t."id" = s."id"' in sql
+    assert 'THEN DELETE' in sql and 'UPDATE SET "a" = s."a", "b" = s."b"' in sql
 
 
 def test_canonicalize_uuid_and_strings(spark):

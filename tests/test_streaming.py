@@ -3,10 +3,13 @@ foreachBatch upsert sink."""
 
 from __future__ import annotations
 
+import os
+
+import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
-from sqlserver2pgsql_spark.plans import ParquetStore
+from sqlserver2pgsql_spark.plans import ParquetStore, transfer
 from sqlserver2pgsql_spark.sources.tables import load_table
 from sqlserver2pgsql_spark.streaming import (
     foreach_batch_upsert,
@@ -68,6 +71,32 @@ def test_foreach_batch_upsert(spark, tmp_path):
     # idempotent retry (same epoch re-applied)
     upsert(batch, epoch_id=0)
     assert {r.k: r.v for r in store.read("public", "t").collect()} == got
+
+
+def test_foreach_batch_upsert_survives_a_cut_swap(spark, tmp_path, monkeypatch):
+    store = ParquetStore(spark, str(tmp_path))
+    schema = "k int, v string"
+    store.write(spark.createDataFrame([(1, "old"), (2, "keep")], schema), "public", "t")
+    upsert = foreach_batch_upsert(store, "public", "t", keys=["k"])
+    batch = spark.createDataFrame([(1, "new"), (3, "ins")], schema)
+    final = store.path("public", "t")
+    real_replace = os.replace
+
+    def cut(a, b):  # the rename of the staged batch into place fails
+        if a == final + ".epoch0":
+            raise OSError("cut between move-aside and swap")
+        real_replace(a, b)
+
+    monkeypatch.setattr(transfer.os, "replace", cut)
+    with pytest.raises(OSError, match="cut between"):
+        upsert(batch, epoch_id=0)
+    monkeypatch.undo()
+    assert not os.path.exists(final)  # the old copy sits aside, not deleted
+    # the retried batch puts the old copy back, then applies
+    upsert(batch, epoch_id=0)
+    assert {r.k: r.v for r in store.read("public", "t").collect()} == \
+        {1: "new", 2: "keep", 3: "ins"}
+    assert not os.path.exists(final + ".old")
 
 
 def test_stateful_user_totals_matches_batch(spark):

@@ -3,15 +3,17 @@ incremental orchestration end-to-end."""
 
 from __future__ import annotations
 
+import datetime
 import os
 import uuid
 
+import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import Row
 
 from sqlserver2pgsql_spark.catalog.model import Column, Table, UniqueConstraint
-from sqlserver2pgsql_spark.ddl import parse_text
+from sqlserver2pgsql_spark.ddl import parse_dump, parse_text
 from sqlserver2pgsql_spark.plans import (
     Orchestrator,
     ParquetStore,
@@ -30,6 +32,8 @@ from sqlserver2pgsql_spark.sources.jdbc import (
     reader_options,
     writer_options,
 )
+
+FIXTURE = os.path.join(os.path.dirname(os.path.abspath(__file__)), "data", "ssms_sample.sql")
 
 _DDL = """
 CREATE TABLE [dbo].[items](
@@ -67,8 +71,23 @@ def test_mssql_scan_sql_coercions(catalog):
 def test_pg_scan_sql_matches_canonical_forms(catalog):
     t = catalog.schemas["public"].tables["items"]
     sql = pg_scan_sql("public", t)
-    assert "lower(cast(uid as varchar))" in sql  # (:471)
-    assert "to_char(born, 'YYYY-MM-DD')" in sql  # (:472)
+    assert 'lower(cast("uid" as varchar))' in sql  # (:471)
+    assert """to_char("born", 'YYYY-MM-DD')""" in sql  # (:472)
+    assert sql.endswith(' FROM "public"."items"')
+
+
+def test_scan_sql_quotes_bracketed_names():
+    # [dbo].[Sales Orders] of the SSMS fixture: spaces, a dot and ]] in names
+    t = parse_dump(FIXTURE).schemas["public"].tables["sales_orders"]
+    assert t.orig_name == "Sales Orders"
+    assert mssql_scan_sql(t) == (
+        "SELECT [Order Id], [Order Date], [Ship.Mode], [Odd]]Name] "
+        "FROM [dbo].[Sales Orders] WITH(NOLOCK)"
+    )
+    assert pg_scan_sql("public", t) == (
+        'SELECT "order_id", "order_date", "ship.mode", "odd]name" '
+        'FROM "public"."sales_orders"'
+    )
 
 
 def test_partitioned_read_heuristic(catalog):
@@ -284,6 +303,32 @@ def test_bracket_quoted_names_round_trip(spark, tmp_path):
     assert inc.mode == "incremental" and inc.rows == 10
     assert tgt.read("public", "odd").columns == cols
     assert _rows(tgt, "odd") == sorted(second)
+
+
+def test_nanosecond_timestamps_sync(spark, tmp_path):
+    # pyarrow's default timestamp[ns] is INT64 TIMESTAMP(NANOS), which
+    # Spark's reader rejects; the store reads it as microsecond timestamps
+    src, tgt = _stores(spark, tmp_path)
+    path = src.path("public", "ev")
+    os.makedirs(os.path.dirname(path))
+
+    def put(ids, shift):
+        ts = [datetime.datetime(2024, 1, 1, 0, 0, i % 60, 250 * i) for i in ids]
+        pq.write_table(pa.table({
+            "id": pa.array(ids, pa.int32()),
+            "ts": pa.array(ts, pa.timestamp("ns")),
+            "v": [f"v{i + shift}" for i in ids],
+        }), path)
+        return sorted((i, t, f"v{i + shift}") for i, t in zip(ids, ts))
+
+    orch = Orchestrator(src, tgt)
+    first = put(list(range(10)), 0)
+    (full,) = orch.run([_plan("ev", ["id", "ts", "v"], ["id"], "full")])
+    assert full.rows == 10 and _rows(tgt, "ev") == first
+    second = put(list(range(5, 15)), 1)
+    (inc,) = orch.run([_plan("ev", ["id", "ts", "v"], ["id"], "incremental")])
+    assert inc.mode == "incremental" and inc.rows == 10
+    assert _rows(tgt, "ev") == second
 
 
 def test_swap_cut_between_steps_keeps_the_target(spark, catalog, tmp_path, monkeypatch):

@@ -1,70 +1,120 @@
-"""T-SQL function layer (B10) + expression translator unit tests."""
+"""T-SQL expression translator (B10): SQL Server's answers, run on Spark.
+
+Every case is T-SQL text rendered by ``translate_tsql_expr`` and evaluated
+by Spark over a one-row table; the expected value is SQL Server's
+documented result under the default ``DATEFIRST 7`` (Sunday is day 1 and
+starts the week) and ``CONCAT_NULL_YIELDS_NULL ON``.
+"""
 
 from __future__ import annotations
 
 import datetime
+import decimal
 
 import pytest
-from pyspark.sql import Row
-from pyspark.sql import functions as F
 
-from sqlserver2pgsql_spark.functions import tsql
 from sqlserver2pgsql_spark.functions.translate import translate_tsql_expr
 
+#: the probe row: its string columns are passed as ``string_idents``, as the
+#: parser passes a table's string-typed columns from the catalog
+_PROBE = """
+    SELECT 'hello world  ' AS s, 'x' AS a, CAST(NULL AS STRING) AS b, 1.5D AS x,
+           TIMESTAMP'2020-12-31 23:00:00' AS d, TIMESTAMP'2020-01-02 03:04:05' AS t,
+           TIMESTAMP'2020-01-02 03:04:05.9' AS f
+"""
+_STRINGS = frozenset({"s", "a", "b"})
 
-def test_charindex_and_len(spark):
-    df = spark.createDataFrame([Row(s="hello world  ")])
-    row = df.select(
-        tsql.charindex("world", F.col("s")).alias("pos"),
-        tsql.charindex("zzz", F.col("s")).alias("missing"),
-        tsql.len_(F.col("s")).alias("n"),
-    ).collect()[0]
-    assert row.pos == 7
-    assert row.missing == 0  # T-SQL returns 0, not NULL
-    assert row.n == 11  # LEN ignores trailing spaces
+_EARLY, _LATE = "'2020-12-31 23:30:00'", "'2021-01-01 00:10:00'"
+
+CASES = [
+    # DATEDIFF counts boundaries crossed, not elapsed units: 40 minutes
+    # across midnight on New Year's Eve cross a year, quarter, month, day
+    # and hour boundary
+    (f"DATEDIFF(year, {_EARLY}, {_LATE})", 1),
+    (f"DATEDIFF(quarter, {_EARLY}, {_LATE})", 1),
+    (f"DATEDIFF(month, {_EARLY}, {_LATE})", 1),
+    (f"DATEDIFF(day, {_EARLY}, {_LATE})", 1),
+    (f"DATEDIFF(dy, {_EARLY}, {_LATE})", 1),
+    (f"DATEDIFF(hour, {_EARLY}, {_LATE})", 1),
+    (f"DATEDIFF(minute, {_EARLY}, {_LATE})", 40),
+    (f"DATEDIFF(year, {_LATE}, {_EARLY})", -1),
+    ("DATEDIFF(year, [d], '2021-01-01')", 1),
+    ("DATEDIFF(day, [d], '2021-01-01 00:30:00')", 1),
+    ("DATEDIFF(hour, [d], '2020-12-31 23:59:59')", 0),
+    # weeks start on Sunday: Saturday -> Sunday crosses one, Sunday ->
+    # Saturday none
+    ("DATEDIFF(week, '2021-01-02', '2021-01-03')", 1),
+    ("DATEDIFF(week, '2021-01-03', '2021-01-09')", 0),
+    ("DATEDIFF(wk, '2020-12-26', '2021-01-10')", 3),
+    # DATEPART
+    ("DATEPART(dw, '2021-01-03')", 1),  # a Sunday
+    ("DATEPART(weekday, '2021-01-09')", 7),  # a Saturday
+    ("DATEPART(week, '2021-01-02')", 1),  # Jan 1 is in week 1
+    ("DATEPART(week, '2021-01-03')", 2),  # the first Sunday starts week 2
+    ("DATEPART(wk, '2021-12-31')", 53),
+    ("DATEPART(dy, '2021-02-03')", 34),
+    ("DATEPART(quarter, [d])", 4),
+    ("DATEPART(second, [f])", 5),
+    # DATEADD
+    ("DATEADD(day, 2, [d])", datetime.datetime(2021, 1, 2, 23, 0, 0)),
+    ("DATEADD(month, 1, [d])", datetime.datetime(2021, 1, 31, 23, 0, 0)),
+    ("DATEADD(dy, 1, [d])", datetime.datetime(2021, 1, 1, 23, 0, 0)),
+    # CHARINDEX is 0 when absent; LEN ignores trailing spaces
+    ("CHARINDEX('world', [s])", 7),
+    ("CHARINDEX('zzz', [s])", 0),
+    ("LEN([s])", 11),
+    # + is arithmetic next to a function that returns a number
+    ("CHARINDEX('-', 'a-b') + 1", 3),
+    ("LEN('ab ') + 1", 3),
+    ("DATEPART(week, '2021-01-03') + 1", 3),
+    # string + with a NULL operand is NULL
+    ("[a] + [b]", None),
+    ("[a] + 'y'", "xy"),
+    # CONVERT to a char type keeps its length, 30 without one; char pads
+    ("CONVERT(varchar(3), 'abcdef')", "abc"),
+    ("CONVERT(nvarchar(3), N'abcdef')", "abc"),
+    ("CONVERT(char(5), 'ab')", "ab   "),
+    ("CONVERT(varchar, REPLICATE('a', 40))", "a" * 30),
+    ("CONVERT(varchar(max), REPLICATE('a', 40))", "a" * 40),
+    ("CONVERT(varchar, [t], 120)", "2020-01-02 03:04:05"),
+    ("CONVERT(varchar(10), [t], 120)", "2020-01-02"),
+    ("CONVERT(varchar(23), [f], 121)", "2020-01-02 03:04:05.900"),
+    ("CONVERT(int, [x])", 1),
+    ("CONVERT(decimal(18, 2), 1.005)", decimal.Decimal("1.01")),  # rounds
+]
 
 
-def test_dateadd_datediff_datepart(spark):
-    df = spark.createDataFrame([Row(d=datetime.datetime(2020, 12, 31, 23, 0, 0))])
-    row = df.select(
-        tsql.dateadd("day", 2, F.col("d")).alias("plus2d"),
-        tsql.dateadd("month", 1, F.col("d")).alias("plus1m"),
-        tsql.datepart("quarter", F.col("d")).alias("q"),
-        tsql.datediff("year", F.col("d"), F.lit("2021-01-01").cast("timestamp")).alias("ydiff"),
-        tsql.datediff("day", F.col("d"), F.lit("2021-01-01 00:30:00").cast("timestamp")).alias("ddiff"),
-        tsql.datediff("hour", F.col("d"), F.lit("2020-12-31 23:59:59").cast("timestamp")).alias("hdiff"),
-    ).collect()[0]
-    assert row.plus2d == datetime.datetime(2021, 1, 2, 23, 0, 0)
-    assert row.plus1m == datetime.datetime(2021, 1, 31, 23, 0, 0)
-    assert row.q == 4
-    # DATEDIFF counts boundary crossings: 2020-12-31 23:00 → 2021-01-01 is 1 year
-    assert row.ydiff == 1 and row.ddiff == 1 and row.hdiff == 0
+@pytest.mark.parametrize("tsql,expected", CASES, ids=[c[0] for c in CASES])
+def test_tsql_semantics_on_spark(spark, tsql, expected):
+    r = translate_tsql_expr(tsql, _STRINGS)
+    assert not r.unsure, r.notes
+    got = spark.sql(f"SELECT {r.sql} AS v FROM ({_PROBE})").collect()[0].v
+    assert got == expected, r.sql
 
 
-def test_concat_null_semantics(spark):
-    df = spark.createDataFrame([("x", None)], schema="a string, b string")
-    row = df.select(tsql.tsql_concat(F.col("a"), F.col("b")).alias("c")).collect()[0]
-    assert row.c is None  # CONCAT_NULL_YIELDS_NULL ON
+@pytest.mark.parametrize("tsql", [
+    "DATEPART(fortnight, [d])",
+    "DATEADD(fortnight, 1, [d])",
+    "DATEDIFF(fortnight, [d], [t])",
+    "CONVERT(varchar(10), [t], 101)",  # a style with no rendering
+    "CONVERT(time, [t])",  # Spark has no time type: a string in the catalog
+    "CONVERT(xml, [s])",
+])
+def test_untranslatable_is_unsure(tsql):
+    r = translate_tsql_expr(tsql)
+    assert r.unsure
+    assert r.sql.lower().startswith(tsql.split("(")[0].lower())  # left as written
 
 
-def test_convert_styles(spark):
-    df = spark.createDataFrame([Row(d=datetime.datetime(2020, 1, 2, 3, 4, 5), x=1.5)])
-    row = df.select(
-        tsql.convert("varchar", F.col("d"), 120).alias("iso"),
-        tsql.convert("int", F.col("x")).alias("i"),
-        tsql.convert("varchar(3)", F.lit("abcdef")).alias("trunc"),
-    ).collect()[0]
-    assert row.iso == "2020-01-02 03:04:05"
-    assert row.i == 1
-    assert row.trunc == "abc"
+def test_convert_reads_the_catalog_type_matrix():
+    assert translate_tsql_expr("CONVERT(tinyint, [x])").sql == "CAST(x AS SMALLINT)"
+    assert translate_tsql_expr("CONVERT(money, [x])").sql == "CAST(x AS DECIMAL(19,4))"
+    assert translate_tsql_expr("CONVERT(numeric, [x])").sql == "CAST(x AS DECIMAL(18,0))"
+    assert translate_tsql_expr("CONVERT(datetime2(7), [x])").sql == "CAST(x AS TIMESTAMP)"
+    assert translate_tsql_expr("CONVERT(bit, [x])").sql == "CAST(x AS BOOLEAN)"
 
 
-def test_unsupported_datepart_raises():
-    with pytest.raises(ValueError):
-        tsql.datepart("fortnight", F.lit("2020-01-01"))
-
-
-# --- translator -----------------------------------------------------------
+# --- translator text -------------------------------------------------------
 
 
 def test_translate_isnull_getdate():
@@ -75,7 +125,7 @@ def test_translate_isnull_getdate():
 
 def test_translate_nested_and_literals():
     r = translate_tsql_expr("ISNULL(CONVERT(VARCHAR(10), [a]), N'isnull(x)')")
-    assert "CAST(a AS STRING)" in r.sql
+    assert "left(CAST(a AS STRING), 10)" in r.sql  # varchar(10) keeps 10 characters
     # the literal containing 'isnull(' survives untouched (V5 fixture,
     # regression/basic_test/views.sql:96)
     assert "'isnull(x)'" in r.sql
@@ -101,6 +151,13 @@ def test_translate_unknown_function_marks_unsure():
     assert r.unsure
     assert "my_weird_udf" in r.sql  # left intact, not guessed
     assert any("my_weird_udf" in n for n in r.notes)
+
+
+def test_rendered_datediff_is_not_rewritten_again():
+    # a rendering that names a T-SQL function would be matched again
+    r = translate_tsql_expr("CONVERT(varchar, DATEDIFF(day, [a], [b]))")
+    assert not r.unsure, r.notes
+    assert "datediff(" not in r.sql.lower()
 
 
 def test_translate_executes_on_spark(spark):
