@@ -15,7 +15,7 @@ returned with ``unsure=True`` (the reference routes such text to the
 It is the package's one implementation of T-SQL scalar semantics: the
 schema plane and the queries (q12, q13) render T-SQL through it, and each
 renderer gives SQL Server's answer under the default ``DATEFIRST 7``.
-CONVERT takes its CAST targets from the catalog's type matrix
+CAST and CONVERT take their targets from the catalog's type matrix
 (:mod:`sqlserver2pgsql_spark.catalog.types`).
 
 Used for: DEFAULT expressions (B7), CHECK constraint bodies (B8), partial
@@ -174,6 +174,34 @@ def _render_convert(args: list[str]) -> str | None:
     return f"{fn}({text}, {m['n'] or 30})"
 
 
+#: a T-SQL ``CAST`` call, and its argument ``x AS type`` (the last ``AS``)
+_CAST_CALL = re.compile(r"\bcast\s*\(", re.IGNORECASE)
+_CAST_ARG = re.compile(rf"(?P<x>.+)\s+as\s+(?P<t>{_TARGET.pattern})\s*",
+                       re.IGNORECASE | re.DOTALL)
+
+
+def _casts_as_converts(expr: str) -> tuple[str, bool]:
+    """``CAST(x AS type)`` is ``CONVERT(type, x)`` in SQL Server, so every
+    CAST (nested ones included) is rewritten as that CONVERT and its target
+    mapped by the same renderer. A target that is no plain CAST in Spark
+    stays as written, unsure. Runs once, before any call is rendered: the
+    renderings are themselves CASTs."""
+    unsure = False
+    pos = 0
+    while m := _CAST_CALL.search(expr, pos):
+        group = paren_group(expr, m.end() - 1)
+        if group is None:
+            break
+        inner, u = _casts_as_converts(group[0])
+        a = _CAST_ARG.fullmatch(inner)
+        ok = a is not None and a["base"].lower() in _CASTABLE
+        rendered = f"CONVERT({a['t']}, {a['x']})" if ok else f"{m.group()}{inner})"
+        expr = expr[: m.start()] + rendered + expr[group[1]:]
+        pos = m.start() + len(rendered)
+        unsure = unsure or u or not ok
+    return expr, unsure
+
+
 def _render_dateadd(args: list[str]) -> str | None:
     if len(args) != 3 or (part := _datepart(args[0])) is None:
         return None
@@ -293,13 +321,31 @@ _NUMERIC_FUNCS = {
 
 
 _HAS_LITERAL = re.compile(r"\x01\d+\x02")
+_NUMBER = re.compile(r"\d+\.?\d*|\.\d+")
 _CALL_HEAD = re.compile(r"([a-zA-Z_]\w*)\s*\(")
 _DOTTED_NAME = re.compile(r"[a-zA-Z_][\w.]*")
 _STRING_CAST = re.compile(r"cast\s*\(.*as\s+(string|n?(var)?char)", re.IGNORECASE | re.DOTALL)
 
 
+def _is_number(operand: str) -> bool:
+    """A numeric literal, or one call to a function that returns a number."""
+    o = operand.strip()
+    if _NUMBER.fullmatch(o):
+        return True
+    m = _CALL_HEAD.match(o)
+    return (m is not None and m.group(1).lower() in _NUMERIC_FUNCS
+            and (g := paren_group(o, m.end() - 1)) is not None and g[1] == len(o))
+
+
 def _is_stringy(operand: str, string_idents: frozenset[str]) -> bool:
     o = operand.strip()
+    if o.startswith("(") and (g := paren_group(o, 0)) is not None and g[1] == len(o):
+        # ``(…)`` is judged by its own ``+``/``-`` chain: a number in it
+        # makes ``+`` arithmetic, as SQL Server converts the string operand
+        # of ``+`` to the number's type (data type precedence)
+        ops = [q for p in split_top(g[0], "+") for q in split_top(p, "-")]
+        return (not any(map(_is_number, ops))
+                and any(_is_stringy(q, string_idents) for q in ops))
     m = _CALL_HEAD.match(o)
     head = m.group(1).lower() if m else None
     if head in _STRINGY_FUNCS or _STRING_CAST.match(o):
@@ -370,7 +416,9 @@ def translate_tsql_expr(
     """
     protected, lits = _protect_literals(expr)
     protected = _strip_brackets(protected)
+    protected, cast_unsure = _casts_as_converts(protected)
     translated, unsure = _translate_inner(protected)
+    unsure = unsure or cast_unsure
 
     notes: list[str] = []
     translated = _rewrite_plus(translated, frozenset(string_idents))

@@ -24,7 +24,7 @@ LITERAL = r"'[^']*'?"
 
 _COMMENT_OR_LITERAL = re.compile(rf"/\*.*?(?:\*/|\Z)|({LITERAL})", re.DOTALL)
 _LITERALS = re.compile(LITERAL)
-_TOKEN = re.compile(rf"{LITERAL}|[(),+]")
+_TOKEN = re.compile(rf"{LITERAL}|[(),+-]")
 
 
 def strip_comments(text: str) -> str:
@@ -43,8 +43,9 @@ def depth_delta(text: str) -> int:
 
 
 def split_top(text: str, sep: str = ",") -> list[str]:
-    """Split on ``sep`` (``,`` or ``+``) at paren depth 0, outside literals.
-    Parts are returned unstripped, and a trailing empty part is kept."""
+    """Split on ``sep`` (``,``, ``+`` or ``-``) at paren depth 0, outside
+    literals. Parts are returned unstripped, and a trailing empty part is
+    kept."""
     if sep not in text:
         return [text]
     parts: list[str] = []

@@ -10,10 +10,16 @@ import uuid
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import Row
 
 from sqlserver2pgsql_spark.catalog.model import Column, Table, UniqueConstraint
 from sqlserver2pgsql_spark.ddl import parse_dump, parse_text
+from sqlserver2pgsql_spark.operators.cleanse import cleanse_strings
+from sqlserver2pgsql_spark.operators.diff import diff
+from sqlserver2pgsql_spark.operators.merge import apply_diff
+from sqlserver2pgsql_spark.operators.sqltext import ident
 from sqlserver2pgsql_spark.plans import (
     Orchestrator,
     ParquetStore,
@@ -225,7 +231,9 @@ def test_rows_are_the_written_rows(spark, catalog, tmp_path):
         assert m.rows == _written(tgt, m.table)
 
 
-def _jobs(spark, orch, plan) -> int:
+def _cost(spark, orch, plan) -> tuple[int, int, int]:
+    """Spark jobs, stages and shuffle bytes (read plus written) of one
+    transfer, from the status tracker and the status store behind it."""
     sc = spark.sparkContext
     group = f"transfer-{uuid.uuid4().hex}"
     sc.setJobGroup(group, plan.table.name)
@@ -234,15 +242,24 @@ def _jobs(spark, orch, plan) -> int:
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    stages = [s for j in jobs for s in tracker.getJobInfo(j).stageIds]
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # stage metrics are posted async
+    store = sc._jsc.sc().statusStore()
+    shuffle = sum(d.shuffleReadBytes() + d.shuffleWriteBytes()
+                  for d in map(store.lastStageAttempt, stages))
+    return len(jobs), len(stages), shuffle
 
 
 def test_transfer_job_budget(spark, catalog, tmp_path):
-    # measured on Spark 4.1: an incremental PK table runs 3 write jobs
-    # (both join sides and the write), a PK-less full reload 1. Store
-    # reads take their schema from the parquet footer, so neither runs a
-    # schema-inference job (those were 2 more, and 1 more); a re-read of
-    # the target to count its rows would add 3 jobs.
+    # measured on Spark 4.1: a table costs its write job alone in either
+    # mode, one stage with no shuffle. An incremental PK table writes the
+    # cleansed source, the target's post-merge state, so neither reads
+    # the target nor joins it (the diff and merge cost 3 jobs, 5 stages
+    # and a shuffle of both sides). Store reads take their schema from the
+    # parquet footer, so no read runs a schema-inference job; a re-read of
+    # the target to count its rows would add jobs too.
     src, tgt = _stores(spark, tmp_path)
     src.write(_items(spark, range(40)), "public", "items")
     src.write(spark.createDataFrame([Row(a=1, b="x")], schema="a int, b string"),
@@ -251,8 +268,28 @@ def test_transfer_job_budget(spark, catalog, tmp_path):
     orch.run(build_transfer_plans(catalog))
     src.write(_items(spark, range(5, 45)), "public", "items")
     plans = {p.table.name: p for p in build_transfer_plans(catalog, incremental=True)}
-    assert _jobs(spark, orch, plans["items"]) <= 3
-    assert _jobs(spark, orch, plans["nopk"]) <= 1
+    assert plans["items"].mode == "incremental"
+    assert _cost(spark, orch, plans["items"]) == (1, 1, 0)
+    assert _cost(spark, orch, plans["nopk"]) == (1, 1, 0)
+
+
+def test_incremental_sync_does_not_read_the_target(spark, catalog, tmp_path, monkeypatch):
+    src, tgt = _stores(spark, tmp_path)
+    src.write(_items(spark, range(20)), "public", "items")
+    orch = Orchestrator(src, tgt)
+    (plan,) = [p for p in build_transfer_plans(catalog, incremental=True)
+               if p.table.name == "items"]
+    orch.run([plan])  # the first sync finds no target
+    src.write(_items(spark, range(10, 30)), "public", "items")
+
+    def read(*_):
+        raise AssertionError("the target was read")
+
+    monkeypatch.setattr(tgt, "read", read)
+    (m,) = orch.run([plan])
+    assert m.mode == "incremental" and m.rows == 20 == _written(tgt, "items")
+    ids = pq.read_table(tgt.path("public", "items"), columns=["id"]).column("id")
+    assert sorted(ids.to_pylist()) == list(range(10, 30))
 
 
 def _plan(table: str, cols: list[str], pk: list[str], mode: str) -> TableTransfer:
@@ -303,6 +340,58 @@ def test_bracket_quoted_names_round_trip(spark, tmp_path):
     assert inc.mode == "incremental" and inc.rows == 10
     assert tgt.read("public", "odd").columns == cols
     assert _rows(tgt, "odd") == sorted(second)
+
+
+#: table shapes of the sync property: (name, type) columns and the key
+_SHAPES = {
+    "nullable values": ([("id", "int"), ("name", "string"), ("qty", "int")], ["id"]),
+    "key only": ([("a", "int"), ("b", "int")], ["a", "b"]),
+    "multi-column key": ([("k1", "int"), ("k2", "string"), ("v", "string")], ["k1", "k2"]),
+    "bracket-quoted names": (
+        [("Order Id", "int"), ("a.b", "string"), ("we`ird", "int")], ["Order Id", "a.b"]),
+}
+_KEY = {"int": st.integers(0, 5), "string": st.sampled_from(["p", "q", "r s"])}
+_VALUE = {"int": st.none() | st.integers(0, 2),
+          "string": st.none() | st.sampled_from(["", "x", "x\x00", "\x00y"])}
+
+
+@st.composite
+def _table(draw, cols, keys):
+    """Rows with unique keys over a small key space, so two drawn tables
+    share keys with equal, different and NULL values."""
+    key = st.tuples(*(_KEY[t] for n, t in cols if n in keys))
+    value = st.tuples(*(_VALUE[t] for n, t in cols if n not in keys))
+    rows = []
+    for k, v in draw(st.dictionaries(key, value, max_size=8)).items():
+        ks, vs = iter(k), iter(v)
+        rows.append(tuple(next(ks) if n in keys else next(vs) for n, _ in cols))
+    return rows
+
+
+def _sorted_rows(df):
+    return sorted(map(tuple, df.collect()), key=repr)
+
+
+@pytest.mark.parametrize("shape", list(_SHAPES))
+@settings(max_examples=8, deadline=None)
+@given(data=st.data())
+def test_sync_writes_the_merged_state(spark, tmp_path_factory, shape, data):
+    # the synced target is the post-merge state the diff and merge compute
+    # against the target, whatever the drift: rows kept, changed, added and
+    # deleted, NULL values, a key over every column, quoted names
+    cols, keys = _SHAPES[shape]
+    names = [n for n, _ in cols]
+    ddl = ", ".join(f"{ident(n)} {t}" for n, t in cols)
+    src, tgt = _stores(spark, tmp_path_factory.mktemp("sync"))
+    src.write(spark.createDataFrame(data.draw(_table(cols, keys)), ddl), "public", "t")
+    tgt.write(spark.createDataFrame(data.draw(_table(cols, keys)), ddl), "public", "t")
+    merged = apply_diff(diff(cleanse_strings(src.read("public", "t")),
+                             tgt.read("public", "t"), keys))
+    expected = _sorted_rows(merged.selectExpr(*map(ident, names)))
+    (m,) = Orchestrator(src, tgt).run([_plan("t", names, keys, "incremental")])
+    assert m.rows == len(expected)
+    assert tgt.read("public", "t").columns == names
+    assert _sorted_rows(tgt.read("public", "t")) == expected
 
 
 def test_nanosecond_timestamps_sync(spark, tmp_path):

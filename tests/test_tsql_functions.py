@@ -67,6 +67,11 @@ CASES = [
     ("CHARINDEX('-', 'a-b') + 1", 3),
     ("LEN('ab ') + 1", 3),
     ("DATEPART(week, '2021-01-03') + 1", 3),
+    # a parenthesized operand is judged by its own chain: a number in it
+    # keeps + arithmetic, a string literal alone makes it concatenation
+    ("(LEN('abcd') - CHARINDEX('c', 'abcd')) + 1", 2),
+    ("(1 + LEN('ab')) + 1", 4),
+    ("('ab') + 'c'", "abc"),
     # string + with a NULL operand is NULL
     ("[a] + [b]", None),
     ("[a] + 'y'", "xy"),
@@ -81,6 +86,12 @@ CASES = [
     ("CONVERT(varchar(23), [f], 121)", "2020-01-02 03:04:05.900"),
     ("CONVERT(int, [x])", 1),
     ("CONVERT(decimal(18, 2), 1.005)", decimal.Decimal("1.01")),  # rounds
+    # CAST(x AS type) is CONVERT(type, x): the same targets and lengths
+    ("CAST('2020-01-02' AS datetime)", datetime.datetime(2020, 1, 2)),
+    ("CAST([x] AS int) + 1", 2),  # 1.5 truncates to 1
+    ("CAST('abcdef' AS varchar(3))", "abc"),
+    ("CAST(CAST([x] AS int) AS char(3))", "1  "),
+    ("CAST([a] AS nvarchar(max)) + 'y'", "xy"),
 ]
 
 
@@ -99,6 +110,7 @@ def test_tsql_semantics_on_spark(spark, tsql, expected):
     "CONVERT(varchar(10), [t], 101)",  # a style with no rendering
     "CONVERT(time, [t])",  # Spark has no time type: a string in the catalog
     "CONVERT(xml, [s])",
+    "CAST([s] AS xml)",
 ])
 def test_untranslatable_is_unsure(tsql):
     r = translate_tsql_expr(tsql)
@@ -112,6 +124,7 @@ def test_convert_reads_the_catalog_type_matrix():
     assert translate_tsql_expr("CONVERT(numeric, [x])").sql == "CAST(x AS DECIMAL(18,0))"
     assert translate_tsql_expr("CONVERT(datetime2(7), [x])").sql == "CAST(x AS TIMESTAMP)"
     assert translate_tsql_expr("CONVERT(bit, [x])").sql == "CAST(x AS BOOLEAN)"
+    assert translate_tsql_expr("CAST([x] AS tinyint)").sql == "CAST(x AS SMALLINT)"
 
 
 # --- translator text -------------------------------------------------------
