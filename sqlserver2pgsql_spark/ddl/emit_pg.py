@@ -20,6 +20,7 @@ from dataclasses import dataclass
 
 from ..catalog.identifiers import pg_quote
 from ..catalog.model import Catalog, Column, Table
+from ..scan import LITERAL
 
 
 @dataclass
@@ -100,22 +101,37 @@ def _regclass(schema: str, name: str) -> str:
     return ".".join(parts).replace("'", "''")
 
 
-#: Spark-dialect → PostgreSQL spellings for default expressions: the stored
-#: translation targets Spark SQL (current_timestamp() etc.), but PG spells
-#: these as parenthesis-free keywords — current_user() is a syntax error on
-#: PG 15 (caught by the live-PG e2e, tests/test_live_pg.py)
-_PG_DEFAULT_REWRITES = (
-    (re.compile(r"\bcurrent_timestamp\(\)", re.IGNORECASE), "CURRENT_TIMESTAMP"),
-    (re.compile(r"\bcurrent_user\(\)", re.IGNORECASE), "CURRENT_USER"),
-    (re.compile(r"\bcurrent_date\(\)", re.IGNORECASE), "CURRENT_DATE"),
-    (re.compile(r"\buuid\(\)", re.IGNORECASE), "gen_random_uuid()"),
+#: Spark-dialect → PostgreSQL spellings for translated expressions (defaults,
+#: CHECKs, partial-index predicates, views). The translation targets Spark
+#: SQL: PG spells current_timestamp() etc. as parenthesis-free keywords
+#: (current_user() is a syntax error on PG 15, caught by the live-PG e2e,
+#: tests/test_live_pg.py), and a CAST names a Spark type from
+#: catalog.types, spelled here through the column-type table (PG has no
+#: STRING or DOUBLE, and its FLOAT is 8 bytes). The translator writes CAST
+#: types upper-case, so a lower-case alias stays as it is. Literals are
+#: matched first, so their text is never rewritten.
+_PG_FUNCS = {
+    "current_timestamp": "CURRENT_TIMESTAMP",
+    "current_user": "CURRENT_USER",
+    "current_date": "CURRENT_DATE",
+    "uuid": "gen_random_uuid()",
+}
+_PG_SPELLING = re.compile(
+    rf"{LITERAL}|\b(?P<fn>{'|'.join(_PG_FUNCS)})\(\)"
+    rf"|(?P<as>\sAS\s+)(?P<t>(?-i:{'|'.join(map(str.upper, _PG_TYPES))}))\)",
+    re.IGNORECASE,
 )
 
 
-def _pg_default(sql: str) -> str:
-    for pat, rep in _PG_DEFAULT_REWRITES:
-        sql = pat.sub(rep, sql)
-    return sql
+def _pg_expr(sql: str) -> str:
+    def spell(m: re.Match) -> str:
+        if m["fn"]:
+            return _PG_FUNCS[m["fn"].lower()]
+        if m["t"]:
+            return f"{m['as']}{_PG_TYPES[m['t'].lower()]})"
+        return m.group()
+
+    return _PG_SPELLING.sub(spell, sql)
 
 
 def emit_before(catalog: Catalog, opts: EmitOptions | None = None) -> str:
@@ -242,7 +258,7 @@ def emit_after(catalog: Catalog, opts: EmitOptions | None = None) -> str:
         for c in table.ordered_columns():
             if c.default is not None and not c.default.unsure:
                 out.append(
-                    f"ALTER TABLE {tq} ALTER COLUMN {pg_quote(c.name)} SET DEFAULT {_pg_default(c.default.sql)};"
+                    f"ALTER TABLE {tq} ALTER COLUMN {pg_quote(c.name)} SET DEFAULT {_pg_expr(c.default.sql)};"
                 )
             if c.comment:
                 out.append(
@@ -270,19 +286,19 @@ def emit_unsure(catalog: Catalog, opts: EmitOptions | None = None) -> str:
         tq = qual(sname, table.name)
         for ck in table.checks:
             name = ck.name or "check"
-            out.append(f"ALTER TABLE {tq} ADD CONSTRAINT {pg_quote(name)} CHECK ({ck.sql});")
+            out.append(f"ALTER TABLE {tq} ADD CONSTRAINT {pg_quote(name)} CHECK ({_pg_expr(ck.sql)});")
         for idx in table.indexes.values():
             if idx.where_raw is None:
                 continue
             cols = ", ".join(pg_quote(c.name) for c in idx.cols)
             out.append(
                 f"CREATE {'UNIQUE ' if idx.unique else ''}INDEX {pg_quote(idx.name)} "
-                f"ON {tq} ({cols}) WHERE {idx.where_sql or idx.where_raw};"
+                f"ON {tq} ({cols}) WHERE {_pg_expr(idx.where_sql) if idx.where_sql else idx.where_raw};"
             )
         for c in table.ordered_columns():
             if c.default is not None and c.default.unsure:
                 out.append(
-                    f"ALTER TABLE {tq} ALTER COLUMN {pg_quote(c.name)} SET DEFAULT {_pg_default(c.default.sql)};"
+                    f"ALTER TABLE {tq} ALTER COLUMN {pg_quote(c.name)} SET DEFAULT {_pg_expr(c.default.sql)};"
                 )
             if (
                 not opts.skip_citext_length_check
@@ -299,7 +315,7 @@ def emit_unsure(catalog: Catalog, opts: EmitOptions | None = None) -> str:
     for sname, vname in catalog.view_order:
         v = catalog.schemas[sname].views[vname]
         cols = f" ({', '.join(pg_quote(c) for c in v.columns)})" if v.columns else ""
-        out.append(f"CREATE VIEW {pg_quote(sname)}.{pg_quote(vname)}{cols} AS {v.sql or v.raw_sql};")
+        out.append(f"CREATE VIEW {pg_quote(sname)}.{pg_quote(vname)}{cols} AS {_pg_expr(v.sql) if v.sql else v.raw_sql};")
     # trigger functions, then the triggers that bind them (reference
     # :3122-3161 — declared last in the unsure script, after everything they
     # might reference exists)

@@ -7,9 +7,10 @@ changed, delete where deleted, against PostgreSQL with per-key lookups
 Spark-first re-expressions:
 - ``apply_diff``: the *relational* equivalent — the post-merge table state is
   just a projection+filter of the diff output (keep everything except
-  ``deleted``). For file-backed tables (parquet/Delta) this is the correct
-  scalable sink: rewrite-by-union beats per-row upserts at 100 TB, and with
-  Delta it becomes a single ``MERGE INTO``.
+  ``deleted``). That state holds exactly the source's rows with their
+  source-side values, so a file target (parquet) that is rewritten whole
+  needs no diff: ``plans/transfer.py`` writes the cleansed source to it
+  directly. ``apply_diff`` serves q07 and the tests.
 - ``merge_sql``: generates the ANSI ``MERGE INTO`` statement for JDBC
   targets (PG 15+), replacing the reference's per-row synchronize step with
   one set-based statement executed after staging the diff.

@@ -4,6 +4,7 @@ Spark schema application, and end-to-end execution of migrated views."""
 from __future__ import annotations
 
 import glob
+import os
 
 import pytest
 from pyspark.sql import Row
@@ -233,6 +234,34 @@ def test_emit_pg_scripts_and_duckdb_swallows_before(duck):
         if stmt and not stmt.startswith("--"):
             con.execute(stmt)
     assert con.execute("SELECT count(*) FROM public.account").fetchone()[0] == 0
+
+
+CAST_FORMS = os.path.join(os.path.dirname(os.path.abspath(__file__)), "data", "cast_forms.sql")
+
+
+def test_translated_casts_spell_postgres_types():
+    """The translator renders a T-SQL CAST for Spark (``CAST(x AS STRING)``,
+    ``DOUBLE``); the PostgreSQL scripts spell its type for PostgreSQL in a
+    default, a CHECK, a partial-index predicate and a view, and leave the
+    text of a literal alone."""
+    cat = parse_dump(CAST_FORMS)
+    after, unsure = emit_after(cat), emit_unsure(cat)
+    assert 'ALTER COLUMN "code" SET DEFAULT left(CAST((42) AS text), 10);' in after
+    assert "ALTER COLUMN \"price\" SET DEFAULT CAST('1.5' AS double precision);" in after
+    assert (
+        "CHECK ((left(CAST(x AS text), 10)<>'AS STRING)' "
+        "AND CAST(x AS double precision)<(100)));" in unsure
+    )
+    assert 'ON "public"."t" ("x") WHERE (price>CAST((1) AS double precision));' in unsure
+    for column in (
+        "left(CAST(x AS text), 10) AS xs", "CAST(x AS double precision) AS xf",
+        "rpad(CAST(x AS text), 3) AS xc", "CAST(code AS text) AS ct",
+        "CAST(x AS real) AS xr", "CAST(CURRENT_TIMESTAMP AS date) AS today",
+    ):
+        assert column in unsure
+    scripts = (after + unsure).replace("'AS STRING)'", "")
+    for spark_only in ("AS STRING)", "AS DOUBLE)", "AS FLOAT)", "current_timestamp()"):
+        assert spark_only not in scripts
 
 
 def test_validate_constraints_modes_and_identity_column():

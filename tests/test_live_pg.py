@@ -129,6 +129,27 @@ def test_reg_tests_ddl_executes_on_real_postgres(pg, tmp_path):
     assert r2.returncode == 0, r2.stderr[-500:]
 
 
+def test_translated_casts_execute_on_real_postgres(pg, tmp_path):
+    """All three scripts of a dump whose default, CHECK, filtered index and
+    view hold T-SQL CASTs execute on PG 15: the translator's Spark type
+    names (STRING, DOUBLE, FLOAT) are spelled as PostgreSQL types, and the
+    view and default compute SQL Server's values."""
+    from sqlserver2pgsql_spark.ddl import parse_dump
+    from sqlserver2pgsql_spark.ddl.emit_pg import emit_after, emit_before, emit_unsure
+
+    assert pg(sql="CREATE DATABASE cast_e2e").returncode == 0
+    cat = parse_dump(os.path.join(os.path.dirname(__file__), "data", "cast_forms.sql"))
+    for script in (emit_before(cat), emit_after(cat), emit_unsure(cat)):
+        r = _exec_script(pg, script, "cast_e2e", tmp_path)
+        assert r.returncode == 0, r.stderr[-500:]
+    r = pg(sql="INSERT INTO t (id, x) VALUES (1, 12);", db="cast_e2e")
+    assert r.returncode == 0, r.stderr
+    out = pg(sql="SELECT code, price, xs, xf, '[' || xc || ']', xr "
+                 "FROM t JOIN v USING (id)", db="cast_e2e")
+    assert out.returncode == 0, out.stderr
+    assert out.stdout.strip() == "42|1.5|12|12|[12 ]|12"
+
+
 def test_merge_sql_applies_diff_on_real_postgres(pg):
     """A10: the generated MERGE statement performs insert/update/delete on
     a real PG 15 target exactly as the diff flags dictate."""
