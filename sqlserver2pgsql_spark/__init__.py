@@ -5,7 +5,8 @@ The reference (/root/reference/sqlserver2pgsql.pl) is a schema-migration +
 Kettle-job generator; its capability surface is re-expressed here Spark-first:
 
 - ``catalog``   — the data model (§1 of SURVEY.md): schemas/tables/columns/
-                  constraints/indexes/sequences/views + the MSSQL→Spark type matrix.
+                  constraints/indexes/sequences/views + the MSSQL→Spark/PostgreSQL
+                  type matrix.
 - ``ddl``       — the SSMS-dump DDL front-end (reference parse_dump,
                   sqlserver2pgsql.pl:1512-2576) → Catalog, and DDL emitters.
 - ``sources``   — parquet/JDBC readers, incl. the partitioned-read heuristic

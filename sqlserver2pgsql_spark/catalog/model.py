@@ -39,9 +39,11 @@ class DefaultValue:
 class Column:
     name: str
     orig_name: str
-    type_name: str  # normalized mssql base type, e.g. 'varchar'
+    #: normalized mssql base type, e.g. 'varchar' (a domain's base type)
+    type_name: str
     type_qual: str | None = None  # '(35)', '(10, 0)', '(max)' …
     spark_type: str = "string"  # Spark DDL type string
+    pg_type: str = "text"  # PostgreSQL column type (citext when case-insensitive)
     nullable: bool = True
     position: int = 0
     default: DefaultValue | None = None
@@ -185,7 +187,8 @@ class Schema:
     tables: dict[str, Table] = field(default_factory=dict)
     sequences: dict[str, Sequence] = field(default_factory=dict)
     views: dict[str, View] = field(default_factory=dict)
-    domains: dict[str, str] = field(default_factory=dict)  # name → base type
+    #: lower-cased domain name → (base type, qualifier)
+    domains: dict[str, tuple[str, str | None]] = field(default_factory=dict)
     table_types: dict[str, TableType] = field(default_factory=dict)
     trig_functions: dict[str, TriggerFunction] = field(default_factory=dict)
     comment: str | None = None

@@ -19,7 +19,7 @@ import re
 from dataclasses import dataclass
 
 from ..catalog.identifiers import pg_quote
-from ..catalog.model import Catalog, Column, Table
+from ..catalog.model import Catalog, Column
 from ..scan import LITERAL
 
 
@@ -45,51 +45,6 @@ class EmitOptions:
     #: replaces the length qualifier citext drops
     skip_citext_length_check: bool = False
 
-#: spark DDL type → postgres type (targets match the reference's %types
-#: matrix, :261-288, from the Spark side of SURVEY §1.3)
-_PG_TYPES = {
-    "int": "integer",
-    "smallint": "smallint",
-    "bigint": "bigint",
-    "double": "double precision",
-    "float": "real",
-    "boolean": "boolean",
-    "string": "text",
-    "date": "date",
-    "timestamp": "timestamp",
-    "binary": "bytea",
-}
-
-
-def _pg_type(col: Column) -> str:
-    st = col.spark_type
-    if st == "string" and col.case_insensitive:
-        # citext mode (reference :386-418); the length limit becomes a CHECK
-        # (char_length) emitted in the unsure script
-        return "citext"
-    if st.startswith("decimal"):
-        return st.replace("decimal", "numeric")
-    # char(n)/nchar(n) keep blank-padded char semantics (reference %types
-    # :261-288 maps them to char, not varchar)
-    if st == "string" and col.type_name in ("char", "nchar") and col.type_qual:
-        qual = col.type_qual.replace(" ", "")
-        if qual.lower() != "(max)":
-            return f"char{qual}"
-    # varchar(n)/nvarchar(n) limits survive via the original qualifier
-    if st == "string" and col.type_name in ("varchar", "nvarchar", "char", "nchar") and col.type_qual:
-        qual = col.type_qual.replace(" ", "")
-        if qual.lower() != "(max)":
-            return f"varchar{qual}"
-    if st == "string" and col.type_name == "uniqueidentifier":
-        return "uuid"
-    if st == "string" and col.type_name == "xml":
-        return "xml"
-    if st == "string" and col.type_name == "time":
-        # 'HH:MM:SS[.fff]' strings cast cleanly into PG time (reference %types)
-        return "time"
-    return _PG_TYPES.get(st, "text")
-
-
 _PLAIN_NAME = re.compile(r"[a-z_][a-z0-9_$]*")
 
 
@@ -106,9 +61,7 @@ def _regclass(schema: str, name: str) -> str:
 #: SQL: PG spells current_timestamp() etc. as parenthesis-free keywords
 #: (current_user() is a syntax error on PG 15, caught by the live-PG e2e,
 #: tests/test_live_pg.py), and a CAST names a Spark type from
-#: catalog.types, spelled here through the column-type table (PG has no
-#: STRING or DOUBLE, and its FLOAT is 8 bytes). The translator writes CAST
-#: types upper-case, so a lower-case alias stays as it is. Literals are
+#: catalog.types, spelled here through ``_PG_CAST_TYPES``. Literals are
 #: matched first, so their text is never rewritten.
 _PG_FUNCS = {
     "current_timestamp": "CURRENT_TIMESTAMP",
@@ -116,9 +69,35 @@ _PG_FUNCS = {
     "current_date": "CURRENT_DATE",
     "uuid": "gen_random_uuid()",
 }
+#: the Spark type of a translated CAST → its PostgreSQL spelling (PG has no
+#: STRING or DOUBLE, and its FLOAT is 8 bytes). The translator writes CAST
+#: types upper-case, so a lower-case alias stays as it is; a DECIMAL(p,s)
+#: is spelled the same in both.
+_PG_CAST_TYPES = {
+    "INT": "integer",
+    "SMALLINT": "smallint",
+    "BIGINT": "bigint",
+    "DOUBLE": "double precision",
+    "FLOAT": "real",
+    "BOOLEAN": "boolean",
+    "STRING": "text",
+    "DATE": "date",
+    "TIMESTAMP": "timestamp",
+    "BINARY": "bytea",
+}
 _PG_SPELLING = re.compile(
     rf"{LITERAL}|\b(?P<fn>{'|'.join(_PG_FUNCS)})\(\)"
-    rf"|(?P<as>\sAS\s+)(?P<t>(?-i:{'|'.join(map(str.upper, _PG_TYPES))}))\)",
+    rf"|(?P<as>\sAS\s+)(?P<t>(?-i:{'|'.join(_PG_CAST_TYPES)}))\)",
+    re.IGNORECASE,
+)
+#: functions the translator writes that PostgreSQL lacks or reads otherwise
+#: (its to_date takes a format, its trunc a number; it has no year() and no
+#: DAYOFWEEK field): a default that calls one would stop the after script,
+#: so it goes to the unsure script. Literals are matched first, so their
+#: text never counts.
+_SPARK_ONLY = re.compile(
+    rf"{LITERAL}|\b(?P<fn>(?:timestampadd|date_format|locate|date_diff|unix_timestamp"
+    r"|dayofweek|dayofyear|to_date|quarter|trunc|year|month|day)\s*\(|DAYOFWEEK\s+FROM\b)",
     re.IGNORECASE,
 )
 
@@ -128,10 +107,19 @@ def _pg_expr(sql: str) -> str:
         if m["fn"]:
             return _PG_FUNCS[m["fn"].lower()]
         if m["t"]:
-            return f"{m['as']}{_PG_TYPES[m['t'].lower()]})"
+            return f"{m['as']}{_PG_CAST_TYPES[m['t']]})"
         return m.group()
 
     return _PG_SPELLING.sub(spell, sql)
+
+
+def _pg_default(c: Column) -> tuple[str, bool] | None:
+    """The column's default in PostgreSQL, and whether it is sure (the after
+    script) or not (the unsure script)."""
+    if c.default is None:
+        return None
+    sql = _pg_expr(c.default.sql)
+    return sql, not c.default.unsure and not any(m["fn"] for m in _SPARK_ONLY.finditer(sql))
 
 
 def emit_before(catalog: Catalog, opts: EmitOptions | None = None) -> str:
@@ -155,7 +143,7 @@ def emit_before(catalog: Catalog, opts: EmitOptions | None = None) -> str:
                 continue  # reference declares varchar + comment (:1576-1616);
                 # we keep computed columns virtual (projection-only)
             null = "" if c.nullable else " NOT NULL"
-            cols.append(f"  {pg_quote(c.name)} {_pg_type(c)}{null}")
+            cols.append(f"  {pg_quote(c.name)} {c.pg_type}{null}")
         out.append(
             f"CREATE TABLE {pg_quote(sname)}.{pg_quote(table.name)} (\n"
             + ",\n".join(cols)
@@ -256,10 +244,8 @@ def emit_after(catalog: Catalog, opts: EmitOptions | None = None) -> str:
                 stmt += " NOT VALID"
             out.append(stmt + ";")
         for c in table.ordered_columns():
-            if c.default is not None and not c.default.unsure:
-                out.append(
-                    f"ALTER TABLE {tq} ALTER COLUMN {pg_quote(c.name)} SET DEFAULT {_pg_expr(c.default.sql)};"
-                )
+            if (d := _pg_default(c)) and d[1]:
+                out.append(f"ALTER TABLE {tq} ALTER COLUMN {pg_quote(c.name)} SET DEFAULT {d[0]};")
             if c.comment:
                 out.append(
                     f"COMMENT ON COLUMN {tq}.{pg_quote(c.name)} IS '{c.comment.replace(chr(39), chr(39)*2)}';"
@@ -296,10 +282,8 @@ def emit_unsure(catalog: Catalog, opts: EmitOptions | None = None) -> str:
                 f"ON {tq} ({cols}) WHERE {_pg_expr(idx.where_sql) if idx.where_sql else idx.where_raw};"
             )
         for c in table.ordered_columns():
-            if c.default is not None and c.default.unsure:
-                out.append(
-                    f"ALTER TABLE {tq} ALTER COLUMN {pg_quote(c.name)} SET DEFAULT {_pg_expr(c.default.sql)};"
-                )
+            if (d := _pg_default(c)) and not d[1]:
+                out.append(f"ALTER TABLE {tq} ALTER COLUMN {pg_quote(c.name)} SET DEFAULT {d[0]};")
             if (
                 not opts.skip_citext_length_check
                 and c.case_insensitive

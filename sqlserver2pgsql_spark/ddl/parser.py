@@ -41,7 +41,7 @@ from ..catalog.model import (
 from ..catalog.types import convert_type
 from ..functions.translate import translate_tsql_expr
 from .reader import clean_statements, read_dump
-from ..scan import paren_group, split_top
+from ..scan import LITERAL, paren_group, split_top
 
 
 class DdlParseError(Exception):
@@ -53,6 +53,8 @@ class DdlParseError(Exception):
 #: bracketed name from ending anywhere but at its closing bracket.
 _IDENT = r"\[?((?<=\[)[^\]]*(?:\]\][^\]]*)*(?=\])|(?<!\[)[^\[\]\s.(]+)\]?"
 _QIDENT = rf"(?:{_IDENT}\.)?{_IDENT}"  # [schema].[name] or name
+#: a type qualifier: ``(35)``, ``(10, 2)`` or ``(max)``
+_QUAL = r"\(\s*(?:\d+|max)\s*(?:,\s*\d+\s*)?\)"
 
 
 def _unescape(raw: str) -> str:
@@ -111,7 +113,7 @@ _COMPUTED = re.compile(rf"{_IDENT}\s+AS\s+\(", re.IGNORECASE)
 _COLUMN = re.compile(
     rf"^{_IDENT}\s+"  # column name
     r"(?:\[(?P<bt>[a-zA-Z_][^\]]*)\]|(?P<ut>[a-zA-Z_]\w*))"  # [type] | type
-    r"\s*(?P<qual>\(\s*(?:\d+|max)\s*(?:,\s*\d+\s*)?\))?"  # qualifier
+    rf"\s*(?P<qual>{_QUAL})?"
     r"(?P<rest>.*)$",
     re.IGNORECASE | re.DOTALL,
 )
@@ -162,7 +164,7 @@ _VIEW = re.compile(
     re.IGNORECASE | re.DOTALL,
 )
 _DOMAIN = re.compile(
-    rf"\s*CREATE\s+TYPE\s+{_QIDENT}\s+FROM\s+\[?(\w+)\]?\s*(\([\d,\s]*\))?", re.IGNORECASE
+    rf"\s*CREATE\s+TYPE\s+{_QIDENT}\s+FROM\s+\[?(\w+)\]?\s*({_QUAL})?", re.IGNORECASE
 )
 _TABLE_TYPE = re.compile(rf"\s*CREATE\s+TYPE\s+{_QIDENT}\s+AS\s+TABLE\s*\(", re.IGNORECASE)
 _TABLE_TYPE_SKIP = re.compile(r"(PRIMARY\s+KEY|UNIQUE|CHECK|INDEX)\b", re.IGNORECASE)
@@ -179,6 +181,9 @@ _SEQUENCE_ATTRS = tuple(
     ]
 )
 _EP_ARG = re.compile(r"@(\w+)\s*=\s*N?'((?:[^']|'')*)'", re.IGNORECASE)
+#: a qualifier in translated SQL (``dbo`` of ``dbo.customers``), after the
+#: literals, whose text is never relabeled
+_QUALIFIER = re.compile(rf"{LITERAL}|\b(?P<q>[A-Za-z_]\w*)(?=\.[A-Za-z_\"])")
 
 
 def _split_top_commas(s: str) -> list[str]:
@@ -250,13 +255,24 @@ class DdlParser:
             raise DdlParseError(f"ALTER references unknown table {s}.{t}")
         return sch.tables[t]
 
-    def _translate(self, expr: str) -> tuple[str, bool]:
-        r = translate_tsql_expr(expr)
-        return r.sql, r.unsure
-
-    def _translate_with(self, expr: str, string_idents: set[str]) -> tuple[str, bool]:
+    def _translate(
+        self, expr: str, string_idents: frozenset[str] = frozenset()
+    ) -> tuple[str, bool]:
         r = translate_tsql_expr(expr, string_idents)
         return r.sql, r.unsure
+
+    def _relabel_qualifiers(self, sql: str) -> str:
+        """Schema qualifiers of translated SQL, relabeled as table names are
+        (``dbo.customers`` → ``public.customers``, plus ``--relabel``); any
+        other qualifier (a table or alias) keeps its text."""
+        def relabel(m: re.Match) -> str:
+            q = m["q"]
+            if q is None:
+                return m.group()
+            new = relabel_schema(q.lower(), self.opt.relabel)
+            return q if new == q.lower() else new
+
+        return _QUALIFIER.sub(relabel, sql)
 
     # -- entry --------------------------------------------------------------
 
@@ -307,20 +323,12 @@ class DdlParser:
             if not item:
                 continue
             if _TABLE_CONSTRAINT.match(item):
-                self._table_constraint(s, table, item)
+                self._table_constraint(table, item)
             else:
                 pos += 1
                 col = self._parse_column(s, t, item, pos)
                 if col is not None:
                     table.columns[col.name] = col
-        self._update_lob_flag(table)
-
-    def _update_lob_flag(self, table: Table) -> None:
-        table.has_lobs = any(
-            c.type_name in ("text", "ntext", "image", "xml")
-            or (c.type_qual or "").replace(" ", "").lower() == "(max)"
-            for c in table.columns.values()
-        )
 
     def _parse_column(self, schema: str, tname: str, item: str, pos: int) -> Column | None:
         # computed column: [name] AS (expr) [PERSISTED] [NOT NULL] (:1576-1616)
@@ -334,11 +342,11 @@ class DdlParser:
             # this engine evaluates them as projections)
             tbl = self.catalog.schema(schema).tables.get(tname)
             string_cols = (
-                {c.name for c in tbl.columns.values() if c.spark_type == "string"}
+                frozenset(c.name for c in tbl.columns.values() if c.spark_type == "string")
                 if tbl
-                else set()
+                else frozenset()
             )
-            sql, _unsure = self._translate_with(expr, string_cols)
+            sql, _unsure = self._translate(expr, string_cols)
             return Column(
                 name=self._ident(m.group(1)),
                 orig_name=_unescape(m.group(1)),
@@ -362,12 +370,13 @@ class DdlParser:
 
         cname = self._norm(cname_raw)
         sch = self.catalog.schema(schema)
+        if type_raw in sch.domains:  # a domain column is its base type (:1898-1913)
+            type_raw, qual = sch.domains[type_raw]
         conv = convert_type(
             type_raw,
             qual,
             column=cname,
             numeric_as_int=self.opt.numeric_as_int,
-            domains=sch.domains,
             table_types=sch.table_types,
         )
         col = Column(
@@ -376,8 +385,9 @@ class DdlParser:
             type_name=type_raw,
             type_qual=qual,
             spark_type=conv.spark_type,
+            pg_type=conv.pg_type,
             position=pos,
-            check_exprs=list(conv.check_exprs),
+            check_exprs=conv.check_exprs,
         )
         self.catalog.warnings.extend(conv.warnings)
 
@@ -401,12 +411,14 @@ class DdlParser:
         mc = _COLLATE.search(rest)
         if mc:
             col.collation = mc.group(1)
-        if conv.spark_type == "string" and type_raw in (
-            "char", "nchar", "varchar", "nvarchar", "text", "ntext", "sysname",
-        ):
+        if conv.is_character:
             col.case_insensitive = self.opt.case_insensitive or bool(
                 col.collation and "_CI" in col.collation.upper()
             )
+            if col.case_insensitive:
+                # citext (reference :386-418); the length limit becomes a
+                # char_length CHECK in the unsure script
+                col.pg_type = "citext"
         col.nullable = not _NOT_NULL.search(rest)
 
         md = _INLINE_DEFAULT.search(rest)
@@ -416,10 +428,11 @@ class DdlParser:
                 raw_default, md.group(1), col_type=col.type_name
             )
 
-        # inline PRIMARY KEY / UNIQUE (incl. memory-optimized HASH form);
-        # absent for table-type bodies, which aren't registered as tables
-        tbl = self.catalog.schema(schema).tables.get(tname)
+        # LOB flag, inline PRIMARY KEY / UNIQUE (incl. memory-optimized HASH
+        # form); absent for table-type bodies, which aren't registered as tables
+        tbl = sch.tables.get(tname)
         if tbl is not None:
+            tbl.has_lobs = tbl.has_lobs or conv.is_lob
             if _INLINE_PK.search(rest):
                 self._set_pk(tbl, UniqueConstraint(name=None, cols=[cname], is_primary=True))
             elif _INLINE_UNIQUE.search(rest):
@@ -456,7 +469,9 @@ class DdlParser:
     def _set_pk(self, table: Table, pk: UniqueConstraint) -> None:
         table.primary_key = pk
 
-    def _table_constraint(self, schema: str, table: Table, item: str) -> None:
+    def _table_constraint(self, table: Table, item: str) -> None:
+        """``[CONSTRAINT name] PRIMARY KEY | UNIQUE | FOREIGN KEY | CHECK …``,
+        a CREATE TABLE body item or the tail of ``ALTER TABLE … ADD``."""
         name = None
         m = _NAMED_CONSTRAINT.match(item)
         if m:
@@ -527,39 +542,20 @@ class DdlParser:
             return
         table = self._get_table(m.group(1), m.group(2))
         rest = m.group("rest").strip()
-
-        name = None
         mc = _NAMED_CONSTRAINT.match(rest)
-        if mc:
-            name = self._ident(mc.group(1))
-            rest = mc.group("rest").strip()
-
-        if _PRIMARY_KEY.match(rest):
-            inner, _ = _outer_parens(rest)
-            self._set_pk(
-                table,
-                UniqueConstraint(name=name, cols=[c.name for c in _cols_list(inner)], is_primary=True),
-            )
-        elif _UNIQUE.match(rest):
-            inner, _ = _outer_parens(rest)
-            table.uniques.append(
-                UniqueConstraint(name=name, cols=[c.name for c in _cols_list(inner)])
-            )
-        elif _FOREIGN_KEY.match(rest):
-            self._add_fk(table, name, rest)
-        elif _CHECK.match(rest):
-            self._add_check(table, name, rest)
-        elif _DEFAULT.match(rest):
-            # ADD CONSTRAINT df DEFAULT (x) FOR [col] (:2178-2205)
-            raw, end = _outer_parens(rest)
-            mf = _DEFAULT_FOR.search(rest[end:])
-            if not mf:
-                raise DdlParseError(f"DEFAULT without FOR: {rest[:120]!r}")
-            col = table.columns.get(self._ident(mf.group(1)))
-            if col is not None:
-                col.default = self._parse_default(raw, name, col_type=col.type_name)
-        else:
-            raise DdlParseError(f"unknown ALTER TABLE ADD: {rest[:120]!r}")
+        body = mc.group("rest").strip() if mc else rest
+        if not _DEFAULT.match(body):
+            self._table_constraint(table, rest)
+            return
+        # ADD CONSTRAINT df DEFAULT (x) FOR [col] (:2178-2205)
+        raw, end = _outer_parens(body)
+        mf = _DEFAULT_FOR.search(body[end:])
+        if not mf:
+            raise DdlParseError(f"DEFAULT without FOR: {body[:120]!r}")
+        col = table.columns.get(self._ident(mf.group(1)))
+        if col is not None:
+            name = self._ident(mc.group(1)) if mc else None
+            col.default = self._parse_default(raw, name, col_type=col.type_name)
 
     # -- indexes ------------------------------------------------------------
 
@@ -617,7 +613,7 @@ class DdlParser:
         view = View(
             name=v,
             raw_sql=body,
-            sql=None if unsure else sql,
+            sql=None if unsure else self._relabel_qualifiers(sql),
             columns=cols,
             unsure=unsure,
         )
@@ -628,9 +624,10 @@ class DdlParser:
 
     def _create_type(self, stmt: str) -> None:
         m = _DOMAIN.match(stmt)
-        if m:  # domain (:1898-1913)
-            s, name = self._schema_table(m.group(1), m.group(2))
-            self.catalog.schema(s).domains[name] = m.group(3).lower()
+        if m:  # domain (:1898-1913); columns name it as a type, in any case
+            s, _ = self._schema_table(m.group(1), m.group(2))
+            base = (m.group(3).lower(), m.group(4))
+            self.catalog.schema(s).domains[_unescape(m.group(2)).lower()] = base
             return
         m = _TABLE_TYPE.match(stmt)
         if m:  # composite/table type (:1917-1972)

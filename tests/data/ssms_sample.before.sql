@@ -8,7 +8,7 @@ CREATE TABLE "public"."customers" (
   "created" timestamp NOT NULL,
   "score" numeric(10,2),
   "region" char(2),
-  "mobile" text
+  "mobile" varchar(20)
 );
 CREATE TABLE "public"."orders" (
   "orderid" integer NOT NULL,

@@ -5,16 +5,18 @@ from __future__ import annotations
 
 import glob
 import os
+import re
 
 import pytest
 from pyspark.sql import Row
 
-from sqlserver2pgsql_spark.catalog.types import convert_type, numeric_to_int
+from sqlserver2pgsql_spark.catalog.types import _BASE_TYPES, convert_type, numeric_to_int
 from sqlserver2pgsql_spark.catalog.identifiers import camel_to_snake, normalize_identifier
 from sqlserver2pgsql_spark.ddl import parse_dump, parse_text
 from sqlserver2pgsql_spark.ddl.emit_pg import emit_after, emit_before, emit_unsure
 from sqlserver2pgsql_spark.ddl.parser import DdlParseError, ParserOptions
 from sqlserver2pgsql_spark.ddl.spark_schema import (
+    _parse_type,
     register_views,
     to_struct_type,
     validation_plan,
@@ -30,19 +32,88 @@ CORPUS = sorted(
 # --- type matrix -------------------------------------------------------------
 
 
+#: every row of the matrix, unqualified: MSSQL type → (Spark, PostgreSQL)
+_MATRIX = {
+    "int": ("int", "integer"),
+    "integer": ("int", "integer"),
+    "smallint": ("smallint", "smallint"),
+    "tinyint": ("smallint", "smallint"),
+    "bigint": ("bigint", "bigint"),
+    "decimal": ("decimal(18,0)", "numeric(18,0)"),
+    "numeric": ("decimal(18,0)", "numeric(18,0)"),
+    "float": ("double", "double precision"),
+    "real": ("float", "real"),
+    "money": ("decimal(19,4)", "numeric(19,4)"),
+    "smallmoney": ("decimal(10,4)", "numeric(10,4)"),
+    "bit": ("boolean", "boolean"),
+    "char": ("string", "text"),
+    "nchar": ("string", "text"),
+    "varchar": ("string", "text"),
+    "nvarchar": ("string", "text"),
+    "text": ("string", "text"),
+    "ntext": ("string", "text"),
+    "sysname": ("string", "varchar(128)"),
+    "date": ("date", "date"),
+    "datetime": ("timestamp", "timestamp"),
+    "datetime2": ("timestamp", "timestamp"),
+    "smalldatetime": ("timestamp", "timestamp"),
+    "datetimeoffset": ("timestamp", "timestamp with time zone"),
+    "time": ("string", "time"),
+    "timestamp": ("binary", "bytea"),
+    "rowversion": ("binary", "bytea"),
+    "binary": ("binary", "bytea"),
+    "varbinary": ("binary", "bytea"),
+    "image": ("binary", "bytea"),
+    "uniqueidentifier": ("string", "uuid"),
+    "xml": ("string", "xml"),
+    "sql_variant": ("string", "text"),
+    "geometry": ("string", "text"),
+    "geography": ("string", "text"),
+    "hierarchyid": ("string", "text"),
+}
+
+#: qualified forms: (type, qualifier, numeric_as_int) → (Spark, PostgreSQL)
+_QUALIFIED = {
+    ("char", "(2)", False): ("string", "char(2)"),
+    ("nchar", "( 3 )", False): ("string", "char(3)"),
+    ("varchar", "(35)", False): ("string", "varchar(35)"),
+    ("nvarchar", "(20)", False): ("string", "varchar(20)"),
+    ("varchar", "(max)", False): ("string", "text"),
+    ("nvarchar", "(MAX)", False): ("string", "text"),
+    ("decimal", "(10, 2)", False): ("decimal(10,2)", "numeric(10,2)"),
+    ("numeric", "(10, 0)", False): ("decimal(10,0)", "numeric(10,0)"),
+    ("numeric", "(4, 0)", True): ("smallint", "smallint"),
+    ("numeric", "(9)", True): ("int", "integer"),
+    ("numeric", "(10, 0)", True): ("bigint", "bigint"),
+    ("numeric", "(19, 0)", True): ("decimal(19,0)", "numeric(19,0)"),
+    ("numeric", "(21, 7)", True): ("decimal(21,7)", "numeric(21,7)"),
+    ("numeric", None, True): ("decimal(18,0)", "numeric(18,0)"),
+    ("datetime2", "(7)", False): ("timestamp", "timestamp"),
+    ("varbinary", "(max)", False): ("binary", "bytea"),
+    ("binary", "(16)", False): ("binary", "bytea"),
+}
+
+
 def test_type_matrix_basics():
-    assert convert_type("int").spark_type == "int"
-    assert convert_type("tinyint").spark_type == "smallint"
-    assert convert_type("numeric", "(10, 0)").spark_type == "decimal(10,0)"
-    assert convert_type("numeric", "(10, 0)", numeric_as_int=True).spark_type == "bigint"
-    assert convert_type("numeric", "(21, 7)", numeric_as_int=True).spark_type == "decimal(21,7)"
-    assert convert_type("money").spark_type == "decimal(19,4)"
-    assert convert_type("bit").spark_type == "boolean"
-    assert convert_type("rowversion").spark_type == "binary"
-    assert convert_type("datetimeoffset").spark_type == "timestamp"
-    assert convert_type("uniqueidentifier").needs_lower_compare
+    """Every row of the matrix, unqualified and qualified, for both targets."""
+    assert set(_MATRIX) == set(_BASE_TYPES)
+    for mssql, want in _MATRIX.items():
+        conv = convert_type(mssql.upper())
+        assert (conv.spark_type, conv.pg_type) == want, mssql
+        _parse_type(conv.spark_type)  # a Spark type the schema builder reads
+    for (mssql, qual, as_int), want in _QUALIFIED.items():
+        conv = convert_type(mssql, qual, numeric_as_int=as_int)
+        assert (conv.spark_type, conv.pg_type) == want, (mssql, qual, as_int)
+
+
+def test_type_matrix_flags():
     assert convert_type("nvarchar", "(max)").is_lob
+    assert convert_type("xml").is_lob and convert_type("image").is_lob
+    assert not convert_type("nvarchar", "(4000)").is_lob
     assert convert_type("varchar", "(35)", column="bic").check_exprs == ["length(bic) <= 35"]
+    assert convert_type("sysname", column="s").check_exprs == ["length(s) <= 128"]
+    assert {t for t in _BASE_TYPES if convert_type(t).is_character} == {
+        "char", "nchar", "varchar", "nvarchar", "text", "ntext", "sysname"}
     with pytest.raises(ValueError):
         convert_type("no_such_type")
 
@@ -262,6 +333,122 @@ def test_translated_casts_spell_postgres_types():
     scripts = (after + unsure).replace("'AS STRING)'", "")
     for spark_only in ("AS STRING)", "AS DOUBLE)", "AS FLOAT)", "current_timestamp()"):
         assert spark_only not in scripts
+
+
+def test_spark_only_defaults_go_to_unsure():
+    """A default whose translation calls a function PostgreSQL lacks
+    (``timestampadd``, ``date_format``, ``locate``, ``extract(DAYOFWEEK …)``)
+    would stop the after script, which runs as one transaction: it goes to
+    the unsure script. A literal holding such a name does not count."""
+    cat = parse_text(
+        "CREATE TABLE [dbo].[t](\n"
+        "[a] [datetime] NULL DEFAULT (dateadd(day,(1),getdate())),\n"
+        "[b] [varchar](5) NULL DEFAULT (CONVERT([varchar](5),getdate(),(120))),\n"
+        "[c] [int] NULL DEFAULT (charindex('x','abx')),\n"
+        "[d] [int] NULL DEFAULT (datepart(weekday,getdate())),\n"
+        "[e] [varchar](20) NULL DEFAULT ('locate(1)'),\n"
+        "[f] [datetime] NULL DEFAULT (getdate()))\nGO\n"
+    )
+    after, unsure = emit_after(cat), emit_unsure(cat)
+    sets = lambda text: {  # noqa: E731
+        line.split('"')[5] for line in text.splitlines() if " SET DEFAULT " in line}
+    assert sets(after) == {"e", "f"}
+    assert sets(unsure) == {"a", "b", "c", "d"}
+    assert "SET DEFAULT timestampadd(DAY, (1), CURRENT_TIMESTAMP);" in unsure
+
+
+def test_domains_resolve_to_their_base_type():
+    """A domain column is its base type and qualifier from the parse on: the
+    PostgreSQL type, the JDBC scan coercion, citext, the bit default and the
+    LOB flag all read the base type."""
+    from sqlserver2pgsql_spark.sources.jdbc import mssql_cast_expr
+
+    dump = (
+        "CREATE TYPE [dbo].[Phone] FROM [varchar](20) NULL\nGO\n"
+        "CREATE TYPE [dbo].[RowGuid] FROM [uniqueidentifier] NOT NULL\nGO\n"
+        "CREATE TYPE [dbo].[Flag] FROM [bit] NOT NULL\nGO\n"
+        "CREATE TYPE [dbo].[LongNote] FROM [nvarchar](max) NULL\nGO\n"
+        "CREATE TABLE [dbo].[Contact]([Mobile] [Phone] NULL, [Ref] [RowGuid] NOT NULL,\n"
+        "[Active] [Flag] NOT NULL DEFAULT ((1)))\nGO\n"
+        "CREATE TABLE [dbo].[Note]([Body] [LongNote] NULL)\nGO\n"
+    )
+    for mode in ("lower", "snake"):
+        cat = parse_text(dump, ParserOptions(identifier_mode=mode, case_insensitive=True))
+        public = cat.schemas["public"]
+        assert public.domains["phone"] == ("varchar", "(20)")
+        assert public.domains["longnote"] == ("nvarchar", "(max)")
+        cols = public.tables["contact"].columns
+        assert [(c.type_name, c.type_qual, c.pg_type) for c in cols.values()] == [
+            ("varchar", "(20)", "citext"), ("uniqueidentifier", None, "uuid"),
+            ("bit", None, "boolean")]
+        assert cols["active"].default.sql == "true"
+        assert mssql_cast_expr(cols["ref"]) == "lower([Ref]) AS [Ref]"
+        assert 'CHECK (char_length("mobile") <= 20);' in emit_unsure(cat)
+        assert not public.tables["contact"].has_lobs
+        assert public.tables["note"].has_lobs
+    before = emit_before(parse_text(dump))
+    assert '"mobile" varchar(20),\n  "ref" uuid NOT NULL,\n  "active" boolean NOT NULL' in before
+
+
+def test_view_schema_qualifiers_are_relabeled():
+    """View bodies name their tables in the relabeled schema, as the tables
+    are created; literals, aliases and other schemas keep their text."""
+    dump = (
+        "CREATE TABLE [dbo].[t]([a] [int] NULL)\nGO\n"
+        "CREATE TABLE [sales].[r]([a] [int] NULL)\nGO\n"
+        "CREATE VIEW [dbo].[v] AS SELECT o.a, 'dbo.t' AS s FROM [dbo].[t] AS o "
+        "JOIN [sales].[r] ON r.a = o.a JOIN other.x ON 1=1\nGO\n"
+    )
+    v = parse_text(dump).schemas["public"].views["v"]
+    assert v.sql == ("SELECT o.a, 'dbo.t' AS s FROM public.t AS o "
+                     "JOIN sales.r ON r.a = o.a JOIN other.x ON 1=1")
+    v = parse_text(dump, ParserOptions(relabel={"sales": "crm"})).schemas["public"].views["v"]
+    assert "JOIN crm.r ON r.a = o.a" in v.sql
+
+
+def test_alter_table_add_uses_the_table_constraint_parser():
+    cat = parse_text(
+        "CREATE TABLE [dbo].[p]([id] [int] NOT NULL, [c] [char](2) NULL)\nGO\n"
+        "CREATE TABLE [dbo].[k]([id] [int] NOT NULL, [pid] [int] NULL, [n] [int] NULL)\nGO\n"
+        "ALTER TABLE [dbo].[p] ADD CONSTRAINT [PK_p] PRIMARY KEY CLUSTERED ([id] ASC)\nGO\n"
+        "ALTER TABLE [dbo].[p] ADD UNIQUE NONCLUSTERED ([c])\nGO\n"
+        "ALTER TABLE [dbo].[k] WITH CHECK ADD CONSTRAINT [FK_k] FOREIGN KEY([pid])\n"
+        "REFERENCES [dbo].[p] ([id]) ON UPDATE CASCADE\nGO\n"
+        "ALTER TABLE [dbo].[k] WITH NOCHECK ADD CHECK (([n]>(0)))\nGO\n"
+        "ALTER TABLE [dbo].[k] ADD CONSTRAINT [DF_k_n] DEFAULT ((7)) FOR [n]\nGO\n"
+        "ALTER TABLE [dbo].[k] ADD DEFAULT ((8)) FOR [pid]\nGO\n"
+    )
+    p, k = cat.schemas["public"].tables["p"], cat.schemas["public"].tables["k"]
+    assert (p.primary_key.name, p.primary_key.cols) == ("pk_p", ["id"])
+    assert [(u.name, u.cols) for u in p.uniques] == [(None, ["c"])]
+    fk = k.foreign_keys[0]
+    assert (fk.name, fk.ref_table, fk.ref_cols, fk.on_update) == ("fk_k", "p", ["id"], "CASCADE")
+    assert [(c.name, c.sql) for c in k.checks] == [(None, "(n>(0))")]
+    assert (k.columns["n"].default.sql, k.columns["n"].default.constraint_name) == ("7", "df_k_n")
+    assert (k.columns["pid"].default.sql, k.columns["pid"].default.constraint_name) == ("8", None)
+    with pytest.raises(DdlParseError):
+        parse_text("CREATE TABLE [dbo].[p]([id] [int] NULL)\nGO\n"
+                   "ALTER TABLE [dbo].[p] ADD [x] [int] NULL\nGO\n")
+
+
+def test_one_type_table():
+    """Only catalog/types.py maps SQL Server types: the PostgreSQL emitter
+    names none of them, and the parser holds no LOB type list (each was a
+    copy of the matrix once)."""
+    pkg = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+                       "sqlserver2pgsql_spark")
+    checks = {
+        "ddl/emit_pg.py": re.compile(
+            r"\b(?:uniqueidentifier|nvarchar|nchar|sysname|datetimeoffset)\b", re.IGNORECASE),
+        "ddl/parser.py": re.compile(r"""["'](?:ntext|image|xml|\(max\))["']""", re.IGNORECASE),
+    }
+    offenders = [
+        f"{rel}:{lineno}"
+        for rel, pattern in checks.items()
+        for lineno, line in enumerate(open(os.path.join(pkg, rel)).read().splitlines(), 1)
+        if pattern.search(line)
+    ]
+    assert not offenders, f"SQL Server type knowledge outside catalog/types.py: {offenders}"
 
 
 def test_validate_constraints_modes_and_identity_column():

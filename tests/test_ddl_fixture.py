@@ -6,8 +6,13 @@ The golden scripts next to the dump were produced by the previous parser
 section. The lines for that section (``[Sales Orders]`` and a view over it:
 bracketed names with spaces, dots and ``]]``, which that parser rejected or
 misread) were checked by hand, and test_bracketed_names spells them out.
-One line has changed since: the unsure script's ``lastorder`` column, where
-``CONVERT(varchar(10), …, 120)`` keeps 10 characters, as in SQL Server.
+Lines changed since, each by a rule: the unsure script's ``lastorder``
+column, where ``CONVERT(varchar(10), …, 120)`` keeps 10 characters, as in
+SQL Server; ``mobile``, typed by the domain ``Phone``, is its base type
+``varchar(20)`` (it was ``text``); ``placed``'s ``timestampadd`` default
+moved from the after script to the unsure script (PostgreSQL has no
+``timestampadd``); and the view bodies name ``public.…`` tables, as they are
+created (they said ``dbo.…``).
 The dump exercises the reader and parser corners an SSMS export has: a
 block comment holding a quote, a literal holding ``/*``, ``''`` escapes, a
 missing ``GO``, the unbalanced ``WHERE ((ID) > 10))``, ``sp_executesql``

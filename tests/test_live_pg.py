@@ -60,9 +60,10 @@ def pg():
     if start.returncode != 0:
         pytest.skip(f"pg_ctl start failed: {start.stderr[-200:]}")
 
-    def psql(sql: str | None = None, file: str | None = None, db: str = "postgres"):
+    def psql(sql: str | None = None, file: str | None = None, db: str = "postgres",
+             stop: bool = True):
         cmd = ["psql", "-h", sock, "-p", str(SOCK_PORT), "-U", "pg", "-d", db,
-               "-v", "ON_ERROR_STOP=1", "-qAt"]
+               "-v", f"ON_ERROR_STOP={int(stop)}", "-qAt"]
         if file:
             cmd += ["-f", file]
         else:
@@ -78,12 +79,12 @@ def pg():
     shutil.rmtree(base, ignore_errors=True)
 
 
-def _exec_script(pg, text: str, db: str, tmp_path) -> subprocess.CompletedProcess:
+def _exec_script(pg, text: str, db: str, tmp_path, stop: bool = True) -> subprocess.CompletedProcess:
     p = tmp_path / "script.sql"
     p.write_text(text)
     os.chmod(tmp_path, 0o755)
     os.chmod(p, 0o644)
-    return pg(file=str(p), db=db)
+    return pg(file=str(p), db=db, stop=stop)
 
 
 def test_emitted_ddl_executes_on_real_postgres(pg, tmp_path):
@@ -148,6 +149,83 @@ def test_translated_casts_execute_on_real_postgres(pg, tmp_path):
                  "FROM t JOIN v USING (id)", db="cast_e2e")
     assert out.returncode == 0, out.stderr
     assert out.stdout.strip() == "42|1.5|12|12|[12 ]|12"
+
+
+def test_ssms_fixture_scripts_execute_on_real_postgres(pg, tmp_path):
+    """The SSMS fixture's before and after scripts run clean as one
+    transaction each, so its keys, FK and indexes are committed; its
+    unsure script, run statement by statement, creates the two views over
+    ``dbo`` tables with their schema relabeled to ``public``."""
+    from sqlserver2pgsql_spark.catalog.conflicts import resolve_name_conflicts
+    from sqlserver2pgsql_spark.ddl import parse_dump
+    from sqlserver2pgsql_spark.ddl.emit_pg import emit_after, emit_before, emit_unsure
+
+    assert pg(sql="CREATE DATABASE ssms_e2e").returncode == 0
+    cat = parse_dump(os.path.join(os.path.dirname(__file__), "data", "ssms_sample.sql"))
+    resolve_name_conflicts(cat)
+    for script in (emit_before(cat), emit_after(cat)):
+        r = _exec_script(pg, script, "ssms_e2e", tmp_path)
+        assert r.returncode == 0, r.stderr[-500:]
+    out = pg(sql="SELECT conname, contype FROM pg_constraint c "
+                 "JOIN pg_namespace n ON n.oid = c.connamespace "
+                 "WHERE nspname IN ('public', 'sales') ORDER BY conname", db="ssms_e2e")
+    assert out.returncode == 0, out.stderr
+    assert out.stdout.split() == [
+        "fk_orders_customers|f", "pk_customers|p", "pk_orders|p",
+        "pk_sales_orders|p", "uq_customers_name|u",
+    ]
+    out = pg(sql="SELECT indexname FROM pg_indexes "
+                 "WHERE indexname LIKE 'ix%' ORDER BY indexname", db="ssms_e2e")
+    assert out.stdout.split() == [
+        "ix_orders_customer", "ix_regions_code", "ix_sales_orders_order_date"]
+    _exec_script(pg, emit_unsure(cat), "ssms_e2e", tmp_path, stop=False)
+    out = pg(sql="SELECT table_schema || '.' || table_name FROM information_schema.views "
+                 "WHERE table_schema IN ('public', 'sales') ORDER BY 1", db="ssms_e2e")
+    assert {"public.vfrenchcustomers", "public.sales_order_dates"} <= set(out.stdout.split())
+    out = pg(sql="INSERT INTO customers (name, created, region) VALUES ('A', now(), 'FR');"
+                 "SELECT label FROM vfrenchcustomers", db="ssms_e2e")
+    assert out.returncode == 0 and out.stdout.strip() == "A (FR)", out.stderr
+
+
+def test_type_matrix_columns_create_on_real_postgres(pg, tmp_path):
+    """A table with one column per row of the type matrix, plus a varchar(20)
+    domain and a uniqueidentifier domain, is created by the before script,
+    and PostgreSQL reports the matrix's types."""
+    from sqlserver2pgsql_spark.catalog.types import _BASE_TYPES
+    from sqlserver2pgsql_spark.ddl import parse_text
+    from sqlserver2pgsql_spark.ddl.emit_pg import emit_after, emit_before
+
+    cols = ",\n".join(f"[c_{t}] [{t}] NULL" for t in sorted(_BASE_TYPES))
+    dump = (
+        "CREATE TYPE [dbo].[Phone] FROM [varchar](20) NULL\nGO\n"
+        "CREATE TYPE [dbo].[Guid] FROM [uniqueidentifier] NOT NULL\nGO\n"
+        f"CREATE TABLE [dbo].[AllTypes]({cols},\n"
+        "[c_char2] [char](2) NULL, [c_nvarchar40] [nvarchar](40) NULL,\n"
+        "[c_decimal102] [decimal](10, 2) NULL, [c_nvarcharmax] [nvarchar](max) NULL,\n"
+        "[Mobile] [Phone] NULL, [Ref] [Guid] NOT NULL)\nGO\n"
+    )
+    assert pg(sql="CREATE DATABASE types_e2e").returncode == 0
+    cat = parse_text(dump)
+    for script in (emit_before(cat), emit_after(cat)):
+        r = _exec_script(pg, script, "types_e2e", tmp_path)
+        assert r.returncode == 0, r.stderr[-500:]
+    out = pg(sql="SELECT column_name, data_type "
+                 "|| coalesce('(' || character_maximum_length || ')', '') "
+                 "FROM information_schema.columns WHERE table_name = 'alltypes'",
+             db="types_e2e")
+    assert out.returncode == 0, out.stderr
+    got = dict(line.split("|") for line in out.stdout.splitlines())
+    assert len(got) == len(_BASE_TYPES) + 6
+    assert got["c_datetimeoffset"] == "timestamp with time zone"
+    assert got["c_sysname"] == "character varying(128)"
+    assert got["mobile"] == "character varying(20)"
+    assert got["ref"] == "uuid"
+    assert got["c_char2"] == "character(2)"
+    assert got["c_nvarchar40"] == "character varying(40)"
+    assert got["c_nvarcharmax"] == "text"
+    assert got["c_decimal102"] == "numeric"
+    assert got["c_uniqueidentifier"] == "uuid"
+    assert cat.schemas["public"].tables["alltypes"].has_lobs
 
 
 def test_merge_sql_applies_diff_on_real_postgres(pg):
