@@ -113,6 +113,8 @@ _COMPUTED = re.compile(rf"{_IDENT}\s+AS\s+\(", re.IGNORECASE)
 _COLUMN = re.compile(
     rf"^{_IDENT}\s+"  # column name
     r"(?:\[(?P<bt>[a-zA-Z_][^\]]*)\]|(?P<ut>[a-zA-Z_]\w*))"  # [type] | type
+    # .[type] | .type: the first token was the type's schema ([dbo].[Phone])
+    r"(?:\.(?:\[(?P<qbt>[a-zA-Z_][^\]]*)\]|(?P<qut>[a-zA-Z_]\w*)))?"
     rf"\s*(?P<qual>{_QUAL})?"
     r"(?P<rest>.*)$",
     re.IGNORECASE | re.DOTALL,
@@ -233,6 +235,12 @@ class DdlParser:
     def __init__(self, options: ParserOptions | None = None):
         self.opt = options or ParserOptions()
         self.catalog = Catalog()
+        #: where SQL Server's ``dbo`` lands: an unqualified user type not
+        #: in its table's schema is looked up here
+        self._dbo = relabel_schema("dbo", self.opt.relabel)
+        #: the names of every domain and table type in any schema, so a
+        #: column of a system type skips the per-schema lookup
+        self._user_types: set[str] = set()
 
     # -- helpers ------------------------------------------------------------
 
@@ -254,6 +262,24 @@ class DdlParser:
         if t not in sch.tables:
             raise DdlParseError(f"ALTER references unknown table {s}.{t}")
         return sch.tables[t]
+
+    def _user_type_schema(
+        self, table_schema: str, type_schema: str | None, type_name: str
+    ) -> Schema | None:
+        """The schema that defines the user type ``type_name`` (a domain or a
+        table type), or None. A qualified type is looked up in its own
+        schema (relabeled); an unqualified one in its table's schema, then
+        in ``dbo``'s (relabeled: ``public`` by default), SQL Server's default
+        schema."""
+        if type_schema is not None:
+            scopes = (relabel_schema(_unescape(type_schema).lower(), self.opt.relabel),)
+        else:
+            scopes = (table_schema, self._dbo)
+        for name in scopes:
+            sch = self.catalog.schemas.get(name)
+            if sch is not None and (type_name in sch.domains or type_name in sch.table_types):
+                return sch
+        return None
 
     def _translate(
         self, expr: str, string_idents: frozenset[str] = frozenset()
@@ -362,22 +388,37 @@ class DdlParser:
         if not m:
             raise DdlParseError(f"bad column definition: {item[:120]!r}")
         cname_raw = _unescape(m.group(1))
-        type_raw = (m.group("bt") or m.group("ut")).strip().lower()
-        qual = m.group("qual")
-        rest = m.group("rest") or ""
+        bt, ut, qbt, qut, qual, rest = m.group("bt", "ut", "qbt", "qut", "qual", "rest")
+        type_schema, type_raw = None, bt or ut
+        if qbt or qut:
+            type_schema, type_raw = type_raw, qbt or qut
+        type_raw = type_raw.strip().lower()
         if self.opt.drop_rowversion and type_raw in ("rowversion", "timestamp"):
             return None  # reference -drop_rowversion (:1437-1443)
 
+        md = _INLINE_DEFAULT.search(rest)
+        if md:
+            raw_default, end = _outer_parens(rest, rest.index("(", md.end() - 1))
+            # the attribute searches below must not read a keyword in the
+            # default's literal (DEFAULT ('NOT NULL')) as the column's own
+            rest = f"{rest[:md.start()]} {rest[end:]}"
+
         cname = self._norm(cname_raw)
         sch = self.catalog.schema(schema)
-        if type_raw in sch.domains:  # a domain column is its base type (:1898-1913)
-            type_raw, qual = sch.domains[type_raw]
+        table_types = None
+        if type_raw in self._user_types:
+            home = self._user_type_schema(schema, type_schema, type_raw)
+            if home is not None:
+                table_types = home.table_types
+                if type_raw in home.domains:
+                    # a domain column is its base type (:1898-1913)
+                    type_raw, qual = home.domains[type_raw]
         conv = convert_type(
             type_raw,
             qual,
             column=cname,
             numeric_as_int=self.opt.numeric_as_int,
-            table_types=sch.table_types,
+            table_types=table_types,
         )
         col = Column(
             name=cname,
@@ -421,9 +462,7 @@ class DdlParser:
                 col.pg_type = "citext"
         col.nullable = not _NOT_NULL.search(rest)
 
-        md = _INLINE_DEFAULT.search(rest)
         if md:
-            raw_default, _ = _outer_parens(rest, rest.index("(", md.end() - 1))
             col.default = self._parse_default(
                 raw_default, md.group(1), col_type=col.type_name
             )
@@ -627,7 +666,9 @@ class DdlParser:
         if m:  # domain (:1898-1913); columns name it as a type, in any case
             s, _ = self._schema_table(m.group(1), m.group(2))
             base = (m.group(3).lower(), m.group(4))
-            self.catalog.schema(s).domains[_unescape(m.group(2)).lower()] = base
+            name = _unescape(m.group(2)).lower()
+            self.catalog.schema(s).domains[name] = base
+            self._user_types.add(name)
             return
         m = _TABLE_TYPE.match(stmt)
         if m:  # composite/table type (:1917-1972)
@@ -643,6 +684,7 @@ class DdlParser:
                 if col is not None:
                     tt.columns.append(col)
             self.catalog.schema(s).table_types[name] = tt
+            self._user_types.add(name)
             return
         raise DdlParseError(f"bad CREATE TYPE: {stmt[:120]!r}")
 

@@ -4,17 +4,27 @@ The reference's only row-level compute operator is a UserDefinedJavaClass that
 strips NUL bytes (``\\x00``) from every string field, because PostgreSQL text
 columns cannot store them (sqlserver2pgsql.pl:3568-3653, regex at :3597).
 
-Spark-first re-expression: a single JVM-side projection with
-``regexp_replace`` over the StringType columns — whole-stage-codegen'd, no
-Python in the hot path, and column-pruned/pushdown-transparent because it is
-a plain ``select``. The reference runs PARALLELISM_OUT copies of the Java
-class; here parallelism is the DataFrame's partitioning, no knob needed.
+Spark-first re-expression: a single JVM-side projection with Spark's
+``replace(col, <char>, '')`` over the StringType columns — whole-stage-
+codegen'd, no Python in the hot path, and column-pruned/pushdown-transparent
+because it is a plain ``select``. The reference runs PARALLELISM_OUT copies of
+the Java class; here parallelism is the DataFrame's partitioning, no knob
+needed.
+
+``replace`` is ``UTF8String.replace``: it scans the UTF-8 bytes and returns
+its input uncopied when nothing matches. ``regexp_replace`` decodes each value
+to UTF-16 and runs a ``java.util.regex.Matcher`` on it to delete one literal
+character; on 2M rows of two string columns it cost about 4x the time of
+``replace`` (0.28 s against 0.07 s on 4 cores). In valid UTF-8 a byte
+below 0x80 only ever encodes that character, so stripping NUL or CR writes
+byte-for-byte what the regex wrote.
 
 The projection is SQL text in one ``selectExpr`` (operators.sqltext): the
 Column API costs about 60 py4j round trips per column, SQL text about one,
-and the cleanse runs once per synced table. The pattern reaches Spark as
+and the cleanse runs once per synced table. Each character reaches Spark as
 ``decode(unhex(<utf-8 hex>), 'UTF-8')``, a literal with no escapes in it,
-so a session's ``spark.sql.parser.escapedStringLiterals`` cannot change it.
+so a session's ``spark.sql.parser.escapedStringLiterals`` cannot change it;
+the optimizer folds it to a constant.
 """
 
 from __future__ import annotations
@@ -25,15 +35,24 @@ from pyspark.sql.types import StringType
 from .sqltext import ident
 
 
-def cleanse_strings(df: DataFrame, pattern: str = "\x00") -> DataFrame:
-    """Strip ``pattern`` (default NUL byte) from every string column.
+def cleanse_strings(df: DataFrame, chars: str = "\x00") -> DataFrame:
+    """Strip every character in ``chars`` (default: the NUL byte) from every
+    string column. Each character is removed literally, never read as a
+    regex; ``chars=""`` strips nothing (the projection selects each column
+    as it is).
 
     Non-string columns pass through untouched, like the reference's
     ``instanceof String`` guard (sqlserver2pgsql.pl:3620-3630).
     """
-    regex = f"decode(unhex('{pattern.encode().hex()}'), 'UTF-8')"
+    lits = [f"decode(unhex('{c.encode().hex()}'), 'UTF-8')" for c in dict.fromkeys(chars)]
+
+    def stripped(name: str) -> str:
+        expr = name
+        for lit in lits:
+            expr = f"replace({expr}, {lit}, '')"
+        return f"{expr} AS {name}"
+
     return df.selectExpr(*(
-        f"regexp_replace({ident(f.name)}, {regex}, '') AS {ident(f.name)}"
-        if isinstance(f.dataType, StringType) else ident(f.name)
+        stripped(ident(f.name)) if isinstance(f.dataType, StringType) else ident(f.name)
         for f in df.schema.fields
     ))

@@ -7,7 +7,9 @@ orchestrator is driver-side Python:
 
 - plan selection mirrors the reference (:1163-1166): PK present →
   incremental (diff+merge) is *possible*; no PK → full reload only.
-- both modes write scan → cleanse (A5) to the file target. The merge,
+- both modes write scan → cleanse (A5) to the file target. The cleanse
+  strips NUL from every string column with Spark's byte-level ``replace``
+  (operators.cleanse), on every table. The merge,
   ``apply_diff(diff(src, tgt, keys))``, keeps exactly the source's rows
   with their source-side values, so a rewritten target's post-merge state
   is the cleansed source: no target read, no diff join, one Spark job.
@@ -109,7 +111,6 @@ class TableTransfer:
     schema: str
     table: Table
     mode: str  # 'full' | 'incremental'
-    cleanse: bool = True
 
 
 @dataclass
@@ -167,10 +168,10 @@ class Orchestrator:
         t0 = time.time()
         s, tname = plan.schema, plan.table.name
         self.target.recover(s, tname)
-        # either mode writes the post-merge state: the cleansed source
-        out = self.source.read(s, tname)
-        if plan.cleanse:
-            out = cleanse_strings(out)  # A5 — the only row-level transform
+        # either mode writes the post-merge state: the cleansed source. The
+        # cleanse (A5, the only row-level transform) runs on every table:
+        # PostgreSQL text cannot store NUL
+        out = cleanse_strings(self.source.read(s, tname))
         # the row count rides the write as one CollectMetrics node: no
         # extra job, and no re-read of the target
         obs = Observation()

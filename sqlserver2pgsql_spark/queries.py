@@ -553,9 +553,10 @@ def q15_pk_validation(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q16_cleanse(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A5 cleanse (sqlserver2pgsql.pl:3585-3642) over documents: strip NUL
-    and CR from all string columns, JVM-side regexp_replace."""
+    and CR from all string columns in one projection of byte-level
+    ``replace`` calls."""
     d = _t(spark, sf_dir, "documents")
-    cleaned = cleanse_strings(cleanse_strings(d, "\x00"), "\r")
+    cleaned = cleanse_strings(d, "\x00\r")
     return cleaned.select(
         "doc_id",
         F.col("text").alias("text_clean"),

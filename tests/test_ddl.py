@@ -390,6 +390,60 @@ def test_domains_resolve_to_their_base_type():
     assert '"mobile" varchar(20),\n  "ref" uuid NOT NULL,\n  "active" boolean NOT NULL' in before
 
 
+def test_user_types_resolve_by_schema():
+    """A qualified user type is looked up in its own schema (relabeled); an
+    unqualified one in its table's schema, then in ``dbo``'s."""
+    dump = (
+        "CREATE TYPE [dbo].[Phone] FROM [varchar](20) NULL\nGO\n"
+        "CREATE TYPE [sales].[Code] FROM [char](3) NOT NULL\nGO\n"
+        "CREATE TYPE [sales].[Fax] FROM [varchar](30) NULL\nGO\n"
+        "CREATE TYPE [dbo].[Fax] FROM [varchar](10) NULL\nGO\n"
+        "CREATE TABLE [dbo].[c]([m] [dbo].[Phone] NULL, [k] [sales].[Code] NULL,\n"
+        "[n] dbo.Phone NULL, [f] [Fax] NULL, [s] [sys].[sysname] NULL)\nGO\n"
+        "CREATE TABLE [sales].[c]([m] [Phone] NULL, [k] [Code] NULL, [f] [Fax] NULL,\n"
+        "[g] [dbo].[Fax] NULL)\nGO\n"
+    )
+    for opts, sales in ((ParserOptions(), "sales"),
+                        (ParserOptions(relabel={"sales": "crm"}), "crm")):
+        cat = parse_text(dump, opts)
+        types = {s: [(c.name, c.type_name, c.type_qual) for c in
+                     cat.schemas[s].tables["c"].columns.values()]
+                 for s in ("public", sales)}
+        assert types == {
+            "public": [("m", "varchar", "(20)"), ("k", "char", "(3)"),
+                       ("n", "varchar", "(20)"), ("f", "varchar", "(10)"),
+                       ("s", "sysname", None)],
+            sales: [("m", "varchar", "(20)"), ("k", "char", "(3)"),
+                    ("f", "varchar", "(30)"), ("g", "varchar", "(10)")],
+        }
+    assert '"m" varchar(20),\n  "k" char(3),\n  "n" varchar(20)' in emit_before(parse_text(dump))
+    # a qualified type is never looked up outside its schema
+    with pytest.raises(ValueError, match="unknown MSSQL type: 'code'"):
+        parse_text("CREATE TYPE [sales].[Code] FROM [char](3) NOT NULL\nGO\n"
+                   "CREATE TABLE [sales].[t]([k] [dbo].[Code] NULL)\nGO\n")
+
+
+def test_default_literal_is_not_read_as_column_attributes():
+    """NOT NULL, IDENTITY, COLLATE, ROWGUIDCOL, SPARSE, PRIMARY KEY and
+    UNIQUE inside an inline default's literal are not the column's own."""
+    cat = parse_text(
+        "CREATE TABLE [dbo].[t]([c] [varchar](20) NULL DEFAULT ('NOT NULL'),\n"
+        "[d] [varchar](40) NULL CONSTRAINT [df] DEFAULT ('a PRIMARY KEY b'),\n"
+        "[e] [varchar](90) CONSTRAINT [df_e] DEFAULT "
+        "('UNIQUE IDENTITY(1,1) IDENTITY COLLATE x ROWGUIDCOL SPARSE') NOT NULL)\nGO\n"
+    )
+    public = cat.schemas["public"]
+    t = public.tables["t"]
+    c, d, e = t.columns.values()
+    assert (c.nullable, c.default.sql) == (True, "'NOT NULL'")
+    assert d.default.sql == "'a PRIMARY KEY b'" and d.default.constraint_name == "df"
+    assert t.primary_key is None and t.uniques == []
+    assert not e.nullable  # an attribute after the default is still read
+    assert (e.identity, e.collation, e.is_rowguidcol, e.is_sparse) == (None, None, False, False)
+    assert public.sequences == {}
+    assert '"c" varchar(20),' in emit_before(cat)
+
+
 def test_view_schema_qualifiers_are_relabeled():
     """View bodies name their tables in the relabeled schema, as the tables
     are created; literals, aliases and other schemas keep their text."""

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import re
 import threading
 
 from pyspark.sql import Row
@@ -84,15 +85,70 @@ def test_diff_and_cleanse_quote_bracketed_names(spark):
 
 
 def test_cleanse_pattern_ignores_escaped_string_literals(spark):
-    # the pattern reaches Spark as hex, not as a SQL string literal, so a
+    # each character reaches Spark as hex, not as a SQL string literal, so a
     # session that reads literals without escape processing strips the
-    # same characters; the regex \\ (one backslash) shows the difference
+    # same characters; a backslash, which the two modes read differently in
+    # a literal, shows the difference
     df = spark.createDataFrame([Row(a="x\\ny\rz\x00")])
     for flag in ("true", "false"):
         with scoped_conf(spark, {"spark.sql.parser.escapedStringLiterals": flag}):
             assert cleanse_strings(df, "\\\\").first().a == "xny\rz\x00"
             assert cleanse_strings(df, "\r").first().a == "x\\nyz\x00"
             assert cleanse_strings(df).first().a == "x\\ny\rz"
+
+
+#: (chars, input, expected): every character of ``chars`` is stripped
+#: literally, and nothing else
+_CLEANSE_CASES = [
+    ("\x00", "\x00abc", "abc"),
+    ("\x00", "abc\x00", "abc"),
+    ("\x00", "a\x00\x00\x00b\x00\x00", "ab"),
+    ("\x00", "\x00\x00", ""),
+    ("\x00", "é\x00ü", "éü"),
+    ("\x00", "\x00日本", "日本"),
+    ("\x00", "no nul", "no nul"),
+    ("\x00", None, None),
+    ("\x00", "", ""),
+    (".", "a.b*c\\d", "ab*c\\d"),
+    ("*", "a.b*c\\d", "a.bc\\d"),
+    ("\\", "a.b*c\\d", "a.b*cd"),
+    (".*\\", "a.b*c\\d\x00", "abcd\x00"),
+    ("\x00\r", "\r\x00a\r\n\x00", "a\n"),
+]
+
+
+def test_cleanse_strips_each_char_literally(spark):
+    schema = "id int, `[Order Date]` string, s string, n bigint, raw binary"
+    rows = [(i, inp, inp, i * 10, bytearray(b"\x00.")) for i, (_, inp, _) in
+            enumerate(_CLEANSE_CASES)]
+    df = spark.createDataFrame(rows, schema)
+    for chars in dict.fromkeys(c for c, _, _ in _CLEANSE_CASES):
+        out = cleanse_strings(df, chars)
+        assert out.schema == df.schema
+        got = {r.id: r for r in out.collect()}
+        for i, (c, inp, want) in enumerate(_CLEANSE_CASES):
+            r = got[i]
+            # non-string columns keep their values, NUL included
+            assert (r.n, bytes(r.raw)) == (i * 10, b"\x00."), (chars, inp)
+            if c == chars:
+                assert r["[Order Date]"] == r.s == want, (chars, inp)
+
+
+def test_cleanse_empty_chars_strips_nothing(spark):
+    df = spark.createDataFrame([Row(a="x\x00", n=1)])
+    out = cleanse_strings(df, "")
+    assert out.schema == df.schema and out.collect() == df.collect()
+    assert "replace" not in out._jdf.queryExecution().optimizedPlan().toString()
+
+
+def test_cleanse_plan_is_one_byte_level_replace_per_column_and_char(spark):
+    # replace is UTF8String.replace on the bytes; regexp_replace would
+    # decode every value and run a java.util.regex.Matcher over it
+    df = spark.createDataFrame([(1, "a", "b", 1.0)], "id int, a string, `b c` string, x double")
+    for chars, per_col in (("\x00", 1), ("\x00\r", 2), ("\x00\x00", 1)):
+        plan = cleanse_strings(df, chars)._jdf.queryExecution().optimizedPlan().toString()
+        assert "regexp" not in plan.lower(), plan
+        assert len(re.findall(r"\breplace\(", plan)) == 2 * per_col, plan
 
 
 def _round_trips(build) -> int:
