@@ -13,8 +13,8 @@ Kettle-job generator; its capability surface is re-expressed here Spark-first:
                   (reference sqlserver2pgsql.pl:949-963).
 - ``operators`` — dataflow operators A1-A13 (SURVEY.md §2.A) plus the
                   LLM-data-pipeline extensions (dedup, similarity, text).
-- ``functions`` — the T-SQL → Spark SQL expression translator (reference
-                  :587-630), the one home of T-SQL scalar semantics.
+- ``functions`` — the T-SQL → Spark SQL / PostgreSQL expression translator
+                  (reference :587-630), the one home of T-SQL scalar semantics.
 - ``plans``     — per-table transfer-plan builder + orchestrator
                   (reference generate_kettle, :925-1352).
 - ``streaming`` — Structured Streaming re-expression of the incremental sync.

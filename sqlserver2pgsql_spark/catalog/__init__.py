@@ -2,7 +2,6 @@ from .model import (
     Catalog,
     CheckConstraint,
     Column,
-    DefaultValue,
     ForeignKey,
     IdentitySpec,
     Index,
@@ -11,6 +10,7 @@ from .model import (
     Sequence,
     Table,
     TableType,
+    TsqlExpr,
     UniqueConstraint,
     View,
 )
@@ -21,7 +21,6 @@ __all__ = [
     "Catalog",
     "CheckConstraint",
     "Column",
-    "DefaultValue",
     "ForeignKey",
     "IdentitySpec",
     "Index",
@@ -30,6 +29,7 @@ __all__ = [
     "Sequence",
     "Table",
     "TableType",
+    "TsqlExpr",
     "UniqueConstraint",
     "View",
     "TypeConversion",

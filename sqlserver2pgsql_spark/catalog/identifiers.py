@@ -10,6 +10,8 @@ from __future__ import annotations
 
 import re
 
+from ..scan import LITERAL
+
 PG_MAX_IDENT = 63
 
 _WORD_START = re.compile(r"(.)([A-Z][a-z]+)")
@@ -60,6 +62,25 @@ def relabel_schema(schema: str, relabel: dict[str, str] | None = None) -> str:
     if relabel:
         mapping.update(relabel)
     return mapping.get(schema, schema)
+
+
+#: a qualifier in translated SQL (``dbo`` of ``dbo.customers``), after the
+#: literals, whose text is never relabeled
+_QUALIFIER = re.compile(rf"{LITERAL}|\b(?P<q>[A-Za-z_]\w*)(?=\.[A-Za-z_\"])")
+
+
+def relabel_qualifiers(sql: str, relabel: dict[str, str] | None = None) -> str:
+    """Schema qualifiers of translated SQL, relabeled as table names are
+    (``dbo.customers`` → ``public.customers``, plus ``--relabel``); any
+    other qualifier (a table or alias) keeps its text."""
+    def sub(m: re.Match) -> str:
+        q = m["q"]
+        if q is None:
+            return m.group()
+        new = relabel_schema(q.lower(), relabel)
+        return q if new == q.lower() else new
+
+    return _QUALIFIER.sub(sub, sql)
 
 
 def parse_relabel_arg(arg: str) -> dict[str, str]:

@@ -4,7 +4,10 @@ Re-expression of the reference's global ``$objects`` hashref
 (sqlserver2pgsql.pl:21-28, shape documented in SURVEY.md §1.1) as dataclasses:
 SCHEMAS→TABLES→COLS plus CONSTRAINTS/INDEXES/SEQUENCES/VIEWS/DOMAINS/
 TABLE_TYPES, with the per-object attributes the reference tracks (haslobs,
-identity, defaults+unsure, comments, FK actions, partial-index predicates).
+identity, defaults, comments, FK actions, partial-index predicates).
+
+Every T-SQL expression is kept as written (:class:`TsqlExpr`) and rendered
+for Spark or PostgreSQL when a consumer asks.
 
 The catalog is pure metadata — Spark enters via ``spark_schema.to_struct_type``
 and the constraint-validation operator generators (operators/constraints.py).
@@ -12,7 +15,10 @@ and the constraint-validation operator generators (operators/constraints.py).
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
+
+from ..functions import translate  # a module import: translate imports catalog.types
+from .identifiers import relabel_qualifiers
 
 
 @dataclass
@@ -24,15 +30,35 @@ class IdentitySpec:
     step: int = 1
 
 
-@dataclass
-class DefaultValue:
-    """Parsed DEFAULT: the translated expression plus the reference's UNSURE
-    marker for function-call defaults it can't guarantee (:633-683)."""
+@dataclass(eq=False)
+class TsqlExpr:
+    """A T-SQL expression as the dump wrote it, and the context its
+    translation needs. ``render`` translates it for ``"spark"`` or ``"pg"``
+    once per dialect, on first use; ``unsure`` is the reference's UNSURE
+    marker (:633-683)."""
 
-    raw: str
-    sql: str
-    unsure: bool = False
-    constraint_name: str | None = None
+    tsql: str
+    #: columns known to be strings, so ``+`` over them concatenates
+    string_idents: frozenset[str] = frozenset()
+    #: a view body's ``--relabel`` map ({}: ``dbo`` → ``public`` only), which
+    #: its schema qualifiers follow; None leaves qualifiers as written
+    relabel: dict[str, str] | None = None
+    _rendered: dict[str, translate.TranslationResult] = field(
+        default_factory=dict, init=False, repr=False)
+
+    def render(self, dialect: str) -> translate.TranslationResult:
+        r = self._rendered.get(dialect)
+        if r is None:
+            r = translate.translate_tsql_expr(self.tsql, dialect, self.string_idents)
+            if self.relabel is not None:
+                r = replace(r, sql=relabel_qualifiers(r.sql, self.relabel))
+            self._rendered[dialect] = r
+        return r
+
+    def sql(self, dialect: str) -> str | None:
+        """The rendering for ``dialect``, or None when it is unsure."""
+        r = self.render(dialect)
+        return None if r.unsure else r.sql
 
 
 @dataclass
@@ -46,7 +72,9 @@ class Column:
     pg_type: str = "text"  # PostgreSQL column type (citext when case-insensitive)
     nullable: bool = True
     position: int = 0
-    default: DefaultValue | None = None
+    #: DEFAULT: nested parens stripped; a bit column's 0/1 is false/true
+    default: TsqlExpr | None = None
+    default_name: str | None = None  # the DEFAULT constraint's name
     identity: IdentitySpec | None = None
     computed_expr: str | None = None  # AS (expr) — translated, run as projection
     persisted: bool = False
@@ -82,9 +110,7 @@ class ForeignKey:
 @dataclass
 class CheckConstraint:
     name: str | None
-    raw: str  # original T-SQL predicate
-    sql: str  # translated Spark SQL predicate
-    unsure: bool = False
+    expr: TsqlExpr  # the predicate
     comment: str | None = None
 
 
@@ -100,8 +126,7 @@ class Index:
     unique: bool = False
     cols: list[IndexColumn] = field(default_factory=list)
     include: list[str] = field(default_factory=list)
-    where_raw: str | None = None  # partial-index predicate (unsure bucket)
-    where_sql: str | None = None
+    where: TsqlExpr | None = None  # partial-index predicate (unsure bucket)
     disabled: bool = False
     comment: str | None = None
 
@@ -156,10 +181,8 @@ class Sequence:
 @dataclass
 class View:
     name: str
-    raw_sql: str  # original T-SQL body
-    sql: str | None = None  # translated Spark SQL (None → unsure)
+    body: TsqlExpr  # the SELECT, its schema qualifiers relabeled
     columns: list[str] = field(default_factory=list)
-    unsure: bool = False
     comment: str | None = None
 
 
@@ -189,6 +212,7 @@ class Schema:
     views: dict[str, View] = field(default_factory=dict)
     #: lower-cased domain name → (base type, qualifier)
     domains: dict[str, tuple[str, str | None]] = field(default_factory=dict)
+    #: lower-cased table type name → its type
     table_types: dict[str, TableType] = field(default_factory=dict)
     trig_functions: dict[str, TriggerFunction] = field(default_factory=dict)
     comment: str | None = None

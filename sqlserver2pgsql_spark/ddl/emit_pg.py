@@ -7,7 +7,8 @@ Re-expression of the reference's generate_schema (B15, sqlserver2pgsql.pl:
 - after : PKs, uniques, indexes, FKs, defaults, comments (apply post-load —
   the constraint/index deferral policy, README.md:75-77),
 - unsure: views, CHECK constraints, partial indexes — anything whose
-  translated SQL can't be guaranteed.
+  translated SQL (rendered for PostgreSQL by functions.translate) can't be
+  guaranteed.
 
 Emission order matches the reference: schemas → tables → sequences → PK →
 unique → indexes → FK → checks → defaults → comments → views.
@@ -19,8 +20,7 @@ import re
 from dataclasses import dataclass
 
 from ..catalog.identifiers import pg_quote
-from ..catalog.model import Catalog, Column
-from ..scan import LITERAL
+from ..catalog.model import Catalog
 
 
 @dataclass
@@ -54,72 +54,6 @@ def _regclass(schema: str, name: str) -> str:
     double-quoted."""
     parts = (p if _PLAIN_NAME.fullmatch(p) else pg_quote(p) for p in (schema, name))
     return ".".join(parts).replace("'", "''")
-
-
-#: Spark-dialect → PostgreSQL spellings for translated expressions (defaults,
-#: CHECKs, partial-index predicates, views). The translation targets Spark
-#: SQL: PG spells current_timestamp() etc. as parenthesis-free keywords
-#: (current_user() is a syntax error on PG 15, caught by the live-PG e2e,
-#: tests/test_live_pg.py), and a CAST names a Spark type from
-#: catalog.types, spelled here through ``_PG_CAST_TYPES``. Literals are
-#: matched first, so their text is never rewritten.
-_PG_FUNCS = {
-    "current_timestamp": "CURRENT_TIMESTAMP",
-    "current_user": "CURRENT_USER",
-    "current_date": "CURRENT_DATE",
-    "uuid": "gen_random_uuid()",
-}
-#: the Spark type of a translated CAST → its PostgreSQL spelling (PG has no
-#: STRING or DOUBLE, and its FLOAT is 8 bytes). The translator writes CAST
-#: types upper-case, so a lower-case alias stays as it is; a DECIMAL(p,s)
-#: is spelled the same in both.
-_PG_CAST_TYPES = {
-    "INT": "integer",
-    "SMALLINT": "smallint",
-    "BIGINT": "bigint",
-    "DOUBLE": "double precision",
-    "FLOAT": "real",
-    "BOOLEAN": "boolean",
-    "STRING": "text",
-    "DATE": "date",
-    "TIMESTAMP": "timestamp",
-    "BINARY": "bytea",
-}
-_PG_SPELLING = re.compile(
-    rf"{LITERAL}|\b(?P<fn>{'|'.join(_PG_FUNCS)})\(\)"
-    rf"|(?P<as>\sAS\s+)(?P<t>(?-i:{'|'.join(_PG_CAST_TYPES)}))\)",
-    re.IGNORECASE,
-)
-#: functions the translator writes that PostgreSQL lacks or reads otherwise
-#: (its to_date takes a format, its trunc a number; it has no year() and no
-#: DAYOFWEEK field): a default that calls one would stop the after script,
-#: so it goes to the unsure script. Literals are matched first, so their
-#: text never counts.
-_SPARK_ONLY = re.compile(
-    rf"{LITERAL}|\b(?P<fn>(?:timestampadd|date_format|locate|date_diff|unix_timestamp"
-    r"|dayofweek|dayofyear|to_date|quarter|trunc|year|month|day)\s*\(|DAYOFWEEK\s+FROM\b)",
-    re.IGNORECASE,
-)
-
-
-def _pg_expr(sql: str) -> str:
-    def spell(m: re.Match) -> str:
-        if m["fn"]:
-            return _PG_FUNCS[m["fn"].lower()]
-        if m["t"]:
-            return f"{m['as']}{_PG_CAST_TYPES[m['t']]})"
-        return m.group()
-
-    return _PG_SPELLING.sub(spell, sql)
-
-
-def _pg_default(c: Column) -> tuple[str, bool] | None:
-    """The column's default in PostgreSQL, and whether it is sure (the after
-    script) or not (the unsure script)."""
-    if c.default is None:
-        return None
-    sql = _pg_expr(c.default.sql)
-    return sql, not c.default.unsure and not any(m["fn"] for m in _SPARK_ONLY.finditer(sql))
 
 
 def emit_before(catalog: Catalog, opts: EmitOptions | None = None) -> str:
@@ -212,7 +146,7 @@ def emit_after(catalog: Catalog, opts: EmitOptions | None = None) -> str:
     for sname, table in catalog.all_tables():
         tq = qual(sname, table.name)
         for idx in table.indexes.values():
-            if idx.where_raw is not None:
+            if idx.where is not None:
                 continue  # partial indexes → unsure
             cols = ", ".join(
                 f"{pg_quote(c.name)}{'' if c.ascending else ' DESC'}" for c in idx.cols
@@ -244,8 +178,8 @@ def emit_after(catalog: Catalog, opts: EmitOptions | None = None) -> str:
                 stmt += " NOT VALID"
             out.append(stmt + ";")
         for c in table.ordered_columns():
-            if (d := _pg_default(c)) and d[1]:
-                out.append(f"ALTER TABLE {tq} ALTER COLUMN {pg_quote(c.name)} SET DEFAULT {d[0]};")
+            if c.default and not (d := c.default.render("pg")).unsure:  # else unsure script
+                out.append(f"ALTER TABLE {tq} ALTER COLUMN {pg_quote(c.name)} SET DEFAULT {d.sql};")
             if c.comment:
                 out.append(
                     f"COMMENT ON COLUMN {tq}.{pg_quote(c.name)} IS '{c.comment.replace(chr(39), chr(39)*2)}';"
@@ -272,18 +206,18 @@ def emit_unsure(catalog: Catalog, opts: EmitOptions | None = None) -> str:
         tq = qual(sname, table.name)
         for ck in table.checks:
             name = ck.name or "check"
-            out.append(f"ALTER TABLE {tq} ADD CONSTRAINT {pg_quote(name)} CHECK ({_pg_expr(ck.sql)});")
+            out.append(f"ALTER TABLE {tq} ADD CONSTRAINT {pg_quote(name)} CHECK ({ck.expr.render('pg').sql});")
         for idx in table.indexes.values():
-            if idx.where_raw is None:
+            if idx.where is None:
                 continue
             cols = ", ".join(pg_quote(c.name) for c in idx.cols)
             out.append(
                 f"CREATE {'UNIQUE ' if idx.unique else ''}INDEX {pg_quote(idx.name)} "
-                f"ON {tq} ({cols}) WHERE {_pg_expr(idx.where_sql) if idx.where_sql else idx.where_raw};"
+                f"ON {tq} ({cols}) WHERE {idx.where.sql('pg') or idx.where.tsql};"
             )
         for c in table.ordered_columns():
-            if (d := _pg_default(c)) and not d[1]:
-                out.append(f"ALTER TABLE {tq} ALTER COLUMN {pg_quote(c.name)} SET DEFAULT {d[0]};")
+            if c.default and (d := c.default.render("pg")).unsure:
+                out.append(f"ALTER TABLE {tq} ALTER COLUMN {pg_quote(c.name)} SET DEFAULT {d.sql};")
             if (
                 not opts.skip_citext_length_check
                 and c.case_insensitive
@@ -299,7 +233,7 @@ def emit_unsure(catalog: Catalog, opts: EmitOptions | None = None) -> str:
     for sname, vname in catalog.view_order:
         v = catalog.schemas[sname].views[vname]
         cols = f" ({', '.join(pg_quote(c) for c in v.columns)})" if v.columns else ""
-        out.append(f"CREATE VIEW {pg_quote(sname)}.{pg_quote(vname)}{cols} AS {_pg_expr(v.sql) if v.sql else v.raw_sql};")
+        out.append(f"CREATE VIEW {pg_quote(sname)}.{pg_quote(vname)}{cols} AS {v.body.sql('pg') or v.body.tsql};")
     # trigger functions, then the triggers that bind them (reference
     # :3122-3161 — declared last in the unsure script, after everything they
     # might reference exists)

@@ -26,7 +26,6 @@ from ..catalog.model import (
     Catalog,
     CheckConstraint,
     Column,
-    DefaultValue,
     ForeignKey,
     IdentitySpec,
     Index,
@@ -35,13 +34,14 @@ from ..catalog.model import (
     Sequence,
     Table,
     TableType,
+    TsqlExpr,
     UniqueConstraint,
     View,
 )
 from ..catalog.types import convert_type
 from ..functions.translate import translate_tsql_expr
 from .reader import clean_statements, read_dump
-from ..scan import LITERAL, paren_group, split_top
+from ..scan import paren_group, split_top
 
 
 class DdlParseError(Exception):
@@ -129,8 +129,6 @@ _COLLATE = re.compile(r"\bCOLLATE\s+(\S+)", re.IGNORECASE)
 _INLINE_DEFAULT = re.compile(rf"(?:CONSTRAINT\s+{_IDENT}\s+)?DEFAULT\s*\(", re.IGNORECASE)
 _INLINE_PK = re.compile(r"\bPRIMARY\s+KEY\b", re.IGNORECASE)
 _INLINE_UNIQUE = re.compile(r"\bUNIQUE\b", re.IGNORECASE)
-_NUMBER = re.compile(r"-?\d+(\.\d+)?")
-_STRING = re.compile(r"N?('(?:[^']|'')*')")
 _NAMED_CONSTRAINT = re.compile(
     rf"^CONSTRAINT\s+{_IDENT}\s+(?P<rest>.*)$", re.IGNORECASE | re.DOTALL
 )
@@ -183,9 +181,6 @@ _SEQUENCE_ATTRS = tuple(
     ]
 )
 _EP_ARG = re.compile(r"@(\w+)\s*=\s*N?'((?:[^']|'')*)'", re.IGNORECASE)
-#: a qualifier in translated SQL (``dbo`` of ``dbo.customers``), after the
-#: literals, whose text is never relabeled
-_QUALIFIER = re.compile(rf"{LITERAL}|\b(?P<q>[A-Za-z_]\w*)(?=\.[A-Za-z_\"])")
 
 
 def _split_top_commas(s: str) -> list[str]:
@@ -218,6 +213,23 @@ def _cols_list(inner: str) -> list[IndexColumn]:
             )
         )
     return out
+
+
+def _string_cols(table: Table) -> frozenset[str]:
+    """The table's string-typed columns, over which T-SQL ``+`` concatenates."""
+    return frozenset(c.name for c in table.columns.values() if c.spark_type == "string")
+
+
+def _default(raw: str, col_type: str) -> TsqlExpr:
+    """A DEFAULT's expression (reference B7, :633-683), nested parens
+    stripped. A bit column's 0/1 becomes false/true: PG rejects an integer
+    default on a boolean column (tests/test_live_pg.py)."""
+    inner = raw.strip()
+    while inner.startswith("(") and inner.endswith(")"):
+        inner = inner[1:-1].strip()
+    if col_type == "bit" and inner in ("0", "1"):
+        inner = "true" if inner == "1" else "false"
+    return TsqlExpr(inner)
 
 
 @dataclass
@@ -280,25 +292,6 @@ class DdlParser:
             if sch is not None and (type_name in sch.domains or type_name in sch.table_types):
                 return sch
         return None
-
-    def _translate(
-        self, expr: str, string_idents: frozenset[str] = frozenset()
-    ) -> tuple[str, bool]:
-        r = translate_tsql_expr(expr, string_idents)
-        return r.sql, r.unsure
-
-    def _relabel_qualifiers(self, sql: str) -> str:
-        """Schema qualifiers of translated SQL, relabeled as table names are
-        (``dbo.customers`` → ``public.customers``, plus ``--relabel``); any
-        other qualifier (a table or alias) keeps its text."""
-        def relabel(m: re.Match) -> str:
-            q = m["q"]
-            if q is None:
-                return m.group()
-            new = relabel_schema(q.lower(), self.opt.relabel)
-            return q if new == q.lower() else new
-
-        return _QUALIFIER.sub(relabel, sql)
 
     # -- entry --------------------------------------------------------------
 
@@ -366,19 +359,15 @@ class DdlParser:
             # T-SQL `+` translates to concat for them (FIXTURES.md F6: the
             # reference punts computed columns to comments, :1576-1616 —
             # this engine evaluates them as projections)
+            # only Spark reads them, so they are rendered for it here
             tbl = self.catalog.schema(schema).tables.get(tname)
-            string_cols = (
-                frozenset(c.name for c in tbl.columns.values() if c.spark_type == "string")
-                if tbl
-                else frozenset()
-            )
-            sql, _unsure = self._translate(expr, string_cols)
+            string_cols = _string_cols(tbl) if tbl else frozenset()
             return Column(
                 name=self._ident(m.group(1)),
                 orig_name=_unescape(m.group(1)),
                 type_name="computed",
                 spark_type="string",
-                computed_expr=sql,
+                computed_expr=translate_tsql_expr(expr, "spark", string_cols).sql,
                 persisted=bool(_PERSISTED.search(rest)),
                 nullable=not _NOT_NULL.search(rest),
                 position=pos,
@@ -463,9 +452,8 @@ class DdlParser:
         col.nullable = not _NOT_NULL.search(rest)
 
         if md:
-            col.default = self._parse_default(
-                raw_default, md.group(1), col_type=col.type_name
-            )
+            col.default = _default(raw_default, col.type_name)
+            col.default_name = md.group(1)
 
         # LOB flag, inline PRIMARY KEY / UNIQUE (incl. memory-optimized HASH
         # form); absent for table-type bodies, which aren't registered as tables
@@ -473,40 +461,10 @@ class DdlParser:
         if tbl is not None:
             tbl.has_lobs = tbl.has_lobs or conv.is_lob
             if _INLINE_PK.search(rest):
-                self._set_pk(tbl, UniqueConstraint(name=None, cols=[cname], is_primary=True))
+                tbl.primary_key = UniqueConstraint(name=None, cols=[cname], is_primary=True)
             elif _INLINE_UNIQUE.search(rest):
                 tbl.uniques.append(UniqueConstraint(name=None, cols=[cname]))
         return col
-
-    def _parse_default(
-        self, raw: str, cons_name: str | None, col_type: str | None = None
-    ) -> DefaultValue:
-        """Default-value normalizer (reference B7, :633-683): strip nested
-        parens; numeric / bit-boolean / NULL / N'str' are sure; anything else
-        is a function call → translated and possibly UNSURE. A bit column's
-        0/1 default becomes false/true — PG rejects an integer default on a
-        boolean column (caught by the live-PG e2e, tests/test_live_pg.py)."""
-        inner = raw.strip()
-        while inner.startswith("(") and inner.endswith(")"):
-            inner = inner[1:-1].strip()
-        if _NUMBER.fullmatch(inner):
-            if col_type == "bit" and inner in ("0", "1"):
-                return DefaultValue(
-                    raw=raw,
-                    sql="true" if inner == "1" else "false",
-                    constraint_name=cons_name,
-                )
-            return DefaultValue(raw=raw, sql=inner, constraint_name=cons_name)
-        if inner.upper() == "NULL":
-            return DefaultValue(raw=raw, sql="NULL", constraint_name=cons_name)
-        ms = _STRING.fullmatch(inner)
-        if ms:
-            return DefaultValue(raw=raw, sql=ms.group(1), constraint_name=cons_name)
-        sql, unsure = self._translate(inner)
-        return DefaultValue(raw=raw, sql=sql, unsure=unsure, constraint_name=cons_name)
-
-    def _set_pk(self, table: Table, pk: UniqueConstraint) -> None:
-        table.primary_key = pk
 
     def _table_constraint(self, table: Table, item: str) -> None:
         """``[CONSTRAINT name] PRIMARY KEY | UNIQUE | FOREIGN KEY | CHECK …``,
@@ -519,11 +477,8 @@ class DdlParser:
 
         if _PRIMARY_KEY.match(item):
             inner, _ = _outer_parens(item)
-            self._set_pk(
-                table,
-                UniqueConstraint(
-                    name=name, cols=[c.name for c in _cols_list(inner)], is_primary=True
-                ),
+            table.primary_key = UniqueConstraint(
+                name=name, cols=[c.name for c in _cols_list(inner)], is_primary=True
             )
         elif _UNIQUE.match(item):
             inner, _ = _outer_parens(item)
@@ -565,10 +520,7 @@ class DdlParser:
     def _add_check(self, table: Table, name: str | None, item: str) -> None:
         # CHECK [NOT FOR REPLICATION] (expr)
         raw, _ = _outer_parens(item)
-        sql, unsure = self._translate(raw)
-        table.checks.append(
-            CheckConstraint(name=name, raw=raw, sql=sql, unsure=unsure)
-        )
+        table.checks.append(CheckConstraint(name=name, expr=TsqlExpr(raw, _string_cols(table))))
 
     # -- ALTER TABLE --------------------------------------------------------
 
@@ -593,8 +545,8 @@ class DdlParser:
             raise DdlParseError(f"DEFAULT without FOR: {body[:120]!r}")
         col = table.columns.get(self._ident(mf.group(1)))
         if col is not None:
-            name = self._ident(mc.group(1)) if mc else None
-            col.default = self._parse_default(raw, name, col_type=col.type_name)
+            col.default = _default(raw, col.type_name)
+            col.default_name = self._ident(mc.group(1)) if mc else None
 
     # -- indexes ------------------------------------------------------------
 
@@ -623,9 +575,7 @@ class DdlParser:
             opens, closes = pred.count("("), pred.count(")")
             if opens > closes:
                 pred += ")" * (opens - closes)
-            idx.where_raw = pred
-            sql, unsure = self._translate(pred)
-            idx.where_sql = None if unsure else sql
+            idx.where = TsqlExpr(pred, _string_cols(table))
         table.indexes[idx.name] = idx
 
     def _alter_index(self, stmt: str) -> None:
@@ -647,32 +597,26 @@ class DdlParser:
         cols = []
         if m.group("cols"):
             cols = [self._norm(_unbracket(c)) for c in m.group("cols").strip("()").split(",")]
-        body = m.group("body").strip()
-        sql, unsure = self._translate(body)
-        view = View(
-            name=v,
-            raw_sql=body,
-            sql=None if unsure else self._relabel_qualifiers(sql),
-            columns=cols,
-            unsure=unsure,
-        )
-        self.catalog.schema(s).views[v] = view
+        body = TsqlExpr(m.group("body").strip(), relabel=self.opt.relabel or {})
+        self.catalog.schema(s).views[v] = View(name=v, body=body, columns=cols)
         self.catalog.view_order.append((s, v))  # dependency order (:75, :1890)
 
     # -- types / schemas / sequences ----------------------------------------
 
     def _create_type(self, stmt: str) -> None:
+        # domains and table types are keyed by their lower-cased name, which
+        # is how a column names them, in any case and identifier mode
         m = _DOMAIN.match(stmt)
-        if m:  # domain (:1898-1913); columns name it as a type, in any case
+        if m:  # domain (:1898-1913)
             s, _ = self._schema_table(m.group(1), m.group(2))
-            base = (m.group(3).lower(), m.group(4))
-            name = _unescape(m.group(2)).lower()
-            self.catalog.schema(s).domains[name] = base
-            self._user_types.add(name)
+            key = _unescape(m.group(2)).lower()
+            self.catalog.schema(s).domains[key] = (m.group(3).lower(), m.group(4))
+            self._user_types.add(key)
             return
         m = _TABLE_TYPE.match(stmt)
         if m:  # composite/table type (:1917-1972)
             s, name = self._schema_table(m.group(1), m.group(2))
+            key = _unescape(m.group(2)).lower()
             body, _ = _outer_parens(stmt, m.end() - 1)
             tt = TableType(name=name)
             pos = 0
@@ -683,8 +627,8 @@ class DdlParser:
                 col = self._parse_column(s, name, item, pos)
                 if col is not None:
                     tt.columns.append(col)
-            self.catalog.schema(s).table_types[name] = tt
-            self._user_types.add(name)
+            self.catalog.schema(s).table_types[key] = tt
+            self._user_types.add(key)
             return
         raise DdlParseError(f"bad CREATE TYPE: {stmt[:120]!r}")
 

@@ -93,21 +93,17 @@ def _table_ref_rewriter(catalog: Catalog) -> Callable[[str], str]:
     return lambda sql: pattern.sub(lambda m: canon[m[m.lastindex].lower()], sql)
 
 
-def register_views(
-    spark: SparkSession, catalog: Catalog, skip_unsure: bool = True
-) -> list[str]:
+def register_views(spark: SparkSession, catalog: Catalog) -> list[str]:
     """Create temp views in declaration order (earlier views may be
-    referenced by later ones). Returns the names registered."""
+    referenced by later ones), each rendered for Spark; a view the
+    translator is unsure of is skipped. Returns the names registered."""
     registered = []
     rewrite = _table_ref_rewriter(catalog)
     for sname, vname in catalog.view_order:
         view = catalog.schemas[sname].views[vname]
-        if view.sql is None:
-            if skip_unsure:
-                continue
-            raise ValueError(f"view {vname} is unsure: {view.raw_sql[:120]}")
-        body = rewrite(view.sql)
-        df = spark.sql(body)
+        if (sql := view.body.sql("spark")) is None:
+            continue
+        df = spark.sql(rewrite(sql))
         if view.columns and len(view.columns) == len(df.columns):
             # header column list applies only when arities agree — the corpus
             # contains views (V5) whose declared list is stale; PG would
@@ -142,8 +138,8 @@ def validation_plan(table: Table) -> list[tuple[str, str, dict]]:
             )
         )
     for ck in table.checks:
-        if not ck.unsure:
-            plan.append(("check", ck.name or "check", {"expr": ck.sql}))
+        if (sql := ck.expr.sql("spark")) is not None:
+            plan.append(("check", ck.name or "check", {"expr": sql}))
     for c in table.ordered_columns():
         for expr in c.check_exprs:
             plan.append(("check", f"{c.name}_len", {"expr": expr}))

@@ -1,4 +1,4 @@
-"""B10 — T-SQL → Spark SQL scalar-expression translator.
+"""B10 — T-SQL scalar-expression translator, one rendering per dialect.
 
 The reference does this with regexes targeting PostgreSQL
 (sqlserver2pgsql.pl:587-630): ISNULL→COALESCE, getdate()→CURRENT_TIMESTAMP,
@@ -7,16 +7,20 @@ datepart(x,y)→date_part, DATEADD(u,n,d)→d+INTERVAL, three CONVERT
 forms→CAST, [ident]→renamed identifier, and a recursive AND/OR splitter for
 CHECK-constraint bodies.
 
-This implementation targets the Spark SQL dialect instead and keeps the
-reference's behavior contract: anything it can't confidently translate is
-returned with ``unsure=True`` (the reference routes such text to the
-"unsure" output file — README.md:77-79) rather than silently guessed.
+This implementation renders T-SQL for the dialect its caller names:
+``"spark"`` (Spark SQL) or ``"pg"`` (PostgreSQL, the emitted scripts).
+Whether a ``+`` concatenates and whether a call is unknown are decided once,
+on the T-SQL. It keeps the reference's behavior contract: anything it can't
+confidently translate for a dialect is returned with ``unsure=True`` (the
+reference routes such text to the "unsure" output file — README.md:77-79)
+rather than silently guessed.
 
 It is the package's one implementation of T-SQL scalar semantics: the
-schema plane and the queries (q12, q13) render T-SQL through it, and each
-renderer gives SQL Server's answer under the default ``DATEFIRST 7``.
-CAST and CONVERT take their targets from the catalog's type matrix
-(:mod:`sqlserver2pgsql_spark.catalog.types`).
+schema plane, the emitted PostgreSQL and the queries (q12, q13) render T-SQL
+through it, and each renderer gives SQL Server's answer under the default
+``DATEFIRST 7``. CAST and CONVERT take their targets from the catalog's type
+matrix (:mod:`sqlserver2pgsql_spark.catalog.types`), whose rows name both
+dialects' types.
 
 Used for: DEFAULT expressions (B7), CHECK constraint bodies (B8), partial
 index predicates (B9), view bodies (B11). Deliberately regex-based like the
@@ -109,12 +113,22 @@ def _split_args(argstr: str) -> list[str]:
     return [a.strip() for a in args]
 
 
-def _rewrite_calls(expr: str, fname: str, render) -> tuple[str, bool]:
-    """Rewrite every outermost fname(...) via render(args)->str|None; returns
-    (expr, unsure_flag). The search resumes after each rendered call, so an
-    unrenderable call is left in place once and not retried."""
+def _datetime(arg: str, dialect: str) -> str:
+    """A date argument: PostgreSQL does not read a string literal as a
+    timestamp by itself (``extract(YEAR FROM '2021-01-01')`` is ambiguous
+    there), so a literal is cast."""
+    if dialect == "pg" and _PLACEHOLDER.fullmatch(arg):
+        return f"CAST({arg} AS timestamp)"
+    return arg
+
+
+def _rewrite_calls(expr: str, fname: str, dialect: str) -> tuple[str, bool]:
+    """Rewrite every outermost fname(...) via its renderer (args, dialect)
+    -> str|None; returns (expr, unsure_flag). The search resumes after each
+    rendered call, so an unrenderable call is left in place once and not
+    retried."""
     unsure = False
-    pattern = _CALLS[fname]
+    pattern, render = _CALLS[fname], _RENDERERS[fname]
     pos = 0
     while m := pattern.search(expr, pos):
         group = paren_group(expr, m.end() - 1)
@@ -122,52 +136,71 @@ def _rewrite_calls(expr: str, fname: str, render) -> tuple[str, bool]:
             return expr, unsure
         argstr, end = group
         # translate inner expressions first (args may contain nested calls)
-        args = [_translate_inner(a)[0] for a in _split_args(argstr)]
-        rendered = render(args)
+        inner = [_translate_inner(a, dialect) for a in _split_args(argstr)]
+        args = [a for a, _ in inner]
+        rendered = render(args, dialect)
+        unsure = unsure or rendered is None or any(u for _, u in inner)
         if rendered is None:
-            unsure = True
             rendered = f"{fname}({', '.join(args)})"
         expr = expr[: m.start()] + rendered + expr[end:]
         pos = m.start() + len(rendered)
     return expr, unsure
 
 
-#: CONVERT targets that are a plain CAST to the catalog's Spark type
-#: (catalog.types). The others (time, datetimeoffset, xml, sql_variant, the
-#: spatial and binary types) change representation there, so stay unsure.
+#: CONVERT targets that are a plain CAST to the catalog's type (catalog.types)
+#: in both dialects. The others (time, datetimeoffset, xml, sql_variant, the
+#: spatial and binary types) change representation in Spark, so stay unsure.
 _CASTABLE = frozenset({
     "int", "integer", "bigint", "smallint", "tinyint", "bit", "float", "real",
     "decimal", "numeric", "money", "smallmoney", "date", "datetime",
     "datetime2", "smalldatetime", "uniqueidentifier", "sysname",
     "char", "nchar", "varchar", "nvarchar", "text", "ntext",
 })
+#: castable targets whose Spark type is a string: CONVERT to one returns text
+_STRING_TARGETS = frozenset(t for t in _CASTABLE if convert_type(t).spark_type == "string")
+#: targets SQL Server truncates a fraction for, where PostgreSQL's CAST rounds
+_INTEGRAL = frozenset({"int", "integer", "bigint", "smallint", "tinyint"})
+#: the character types, which keep n characters: the cast goes to the
+#: dialect's unbounded text type, then is cut or padded to n
+_CHARS = frozenset({"char", "nchar", "varchar", "nvarchar", "text", "ntext"})
+_TEXT = {"spark": "STRING", "pg": "text"}
 #: a CONVERT target: base type, qualifier, and the length if one is given
 _TARGET = re.compile(
     r"(?P<base>\w+)\s*(?P<qual>\(\s*(?:(?P<n>\d+)|max)\s*(?:,\s*\d+\s*)?\))?",
     re.IGNORECASE,
 )
-#: CONVERT(char type, datetime, style): ODBC canonical styles
-_STYLES = {"120": "yyyy-MM-dd HH:mm:ss", "121": "yyyy-MM-dd HH:mm:ss.SSS"}
+#: CONVERT(char type, datetime, style): ODBC canonical styles, in each
+#: dialect's date-formatting call
+_STYLES = {"120": {"spark": "yyyy-MM-dd HH:mm:ss", "pg": "YYYY-MM-DD HH24:MI:SS"},
+           "121": {"spark": "yyyy-MM-dd HH:mm:ss.SSS", "pg": "YYYY-MM-DD HH24:MI:SS.MS"}}
+_DATE_FORMAT = {"spark": "date_format", "pg": "to_char"}
 
 
-def _render_convert(args: list[str]) -> str | None:
+def _render_convert(args: list[str], dialect: str) -> str | None:
     """CONVERT(type, x[, style]) as SQL Server computes it: a char type of
     length n keeps n characters (30 when no length is given; char and
-    nchar are blank-padded to n), also after a style."""
+    nchar are blank-padded to n), also after a style; an integer type
+    drops the fraction."""
     if len(args) not in (2, 3):
         return None
     m = _TARGET.fullmatch(args[0])
     if m is None or m["base"].lower() not in _CASTABLE:
         return None
     base = m["base"].lower()
-    spark_type = convert_type(base, m["qual"]).spark_type.upper()
-    style = args[2] if len(args) == 3 else None
-    if spark_type != "STRING":
-        return f"CAST({args[1]} AS {spark_type})"
+    conv = convert_type(base, m["qual"])
+    # SSMS writes the style parenthesized: (120)
+    x, style = args[1], args[2].strip("() ") if len(args) == 3 else None
+    target = conv.spark_type.upper() if dialect == "spark" else conv.pg_type
+    if conv.spark_type != "string":
+        if dialect == "pg" and base in _INTEGRAL:
+            x = f"trunc(CAST({x} AS numeric))"
+        return f"CAST({x} AS {target})"
     if style is not None and style not in _STYLES:
         return None
-    text = (f"date_format({args[1]}, '{_STYLES[style]}')" if style
-            else f"CAST({args[1]} AS STRING)")
+    if style:
+        text = f"{_DATE_FORMAT[dialect]}({_datetime(x, dialect)}, '{_STYLES[style][dialect]}')"
+    else:
+        text = f"CAST({x} AS {_TEXT[dialect] if base in _CHARS else target})"
     if base not in ("char", "nchar", "varchar", "nvarchar") or (m["qual"] and not m["n"]):
         return text  # no length, or (max)
     fn = "rpad" if base in ("char", "nchar") else "left"
@@ -183,9 +216,9 @@ _CAST_ARG = re.compile(rf"(?P<x>.+)\s+as\s+(?P<t>{_TARGET.pattern})\s*",
 def _casts_as_converts(expr: str) -> tuple[str, bool]:
     """``CAST(x AS type)`` is ``CONVERT(type, x)`` in SQL Server, so every
     CAST (nested ones included) is rewritten as that CONVERT and its target
-    mapped by the same renderer. A target that is no plain CAST in Spark
-    stays as written, unsure. Runs once, before any call is rendered: the
-    renderings are themselves CASTs."""
+    mapped by the same renderer. A target that is no plain CAST stays as
+    written, unsure. Runs once, on the T-SQL, before any call is rendered:
+    the renderings are themselves CASTs."""
     unsure = False
     pos = 0
     while m := _CAST_CALL.search(expr, pos):
@@ -202,85 +235,126 @@ def _casts_as_converts(expr: str) -> tuple[str, bool]:
     return expr, unsure
 
 
-def _render_dateadd(args: list[str]) -> str | None:
+def _render_dateadd(args: list[str], dialect: str) -> str | None:
     if len(args) != 3 or (part := _datepart(args[0])) is None:
         return None
-    return f"timestampadd({_AS_DAY.get(part, part)}, {args[1]}, {args[2]})"
+    part, n = _AS_DAY.get(part, part), args[1]
+    if dialect == "spark":
+        return f"timestampadd({part}, {n}, {args[2]})"
+    if not (_NUMBER.fullmatch(n) or n[:1] == "(" and (g := paren_group(n, 0)) and g[1] == len(n)):
+        n = f"({n})"  # one operand of the ``*``
+    unit = "3 months" if part == "QUARTER" else f"1 {part.lower()}"  # a PostgreSQL interval
+    return f"({_datetime(args[2], dialect)} + {n} * INTERVAL '{unit}')"
 
 
 #: DATEDIFF(part, s, e): the part boundaries crossed from s to e, not the
 #: elapsed units; Sunday starts a week (DATEFIRST 7). The result is an INT,
-#: as in SQL Server. No formula holds a ``+``: the string-concatenation
-#: rewrite would turn it into ``||`` next to a literal argument. Spark's
-#: ``date_diff`` is spelled so the DATEDIFF rewrite cannot match it again.
+#: as in SQL Server. No rendering names a T-SQL function (YEAR, DATEDIFF),
+#: which a later rewrite would match again.
+_YEARS = "(extract(YEAR FROM {e}) - extract(YEAR FROM {s}))"
+_DATEDIFF_BOTH = {
+    "YEAR": _YEARS,
+    **{part: f"{_YEARS} * {n} - (extract({part} FROM {{s}}) - extract({part} FROM {{e}}))"
+       for part, n in (("QUARTER", 4), ("MONTH", 12))},
+}
 _DATEDIFF = {
-    "YEAR": "year({e}) - year({s})",
-    "QUARTER": "(year({e}) - year({s})) * 4 - (quarter({s}) - quarter({e}))",
-    "MONTH": "(year({e}) - year({s})) * 12 - (month({s}) - month({e}))",
-    "DAY": "date_diff(to_date({e}), to_date({s}))",
-    "WEEK": "floor(date_diff(to_date({e}), DATE'1900-01-07') / 7)"
-            " - floor(date_diff(to_date({s}), DATE'1900-01-07') / 7)",
-    **{
-        unit: f"(unix_timestamp(date_trunc('{unit}', {{e}}))"
-              f" - unix_timestamp(date_trunc('{unit}', {{s}}))) div {secs}"
-        for unit, secs in (("HOUR", 3600), ("MINUTE", 60), ("SECOND", 1))
+    "spark": {
+        **_DATEDIFF_BOTH,
+        "DAY": "date_diff(to_date({e}), to_date({s}))",
+        "WEEK": "floor(date_diff(to_date({e}), DATE'1900-01-07') / 7)"
+                " - floor(date_diff(to_date({s}), DATE'1900-01-07') / 7)",
+        **{
+            unit: f"(unix_timestamp(date_trunc('{unit}', {{e}}))"
+                  f" - unix_timestamp(date_trunc('{unit}', {{s}}))) div {secs}"
+            for unit, secs in (("HOUR", 3600), ("MINUTE", 60), ("SECOND", 1))
+        },
+    },
+    "pg": {
+        **_DATEDIFF_BOTH,
+        "DAY": "CAST({e} AS date) - CAST({s} AS date)",
+        "WEEK": "floor((CAST({e} AS date) - DATE '1900-01-07') / 7.0)"
+                " - floor((CAST({s} AS date) - DATE '1900-01-07') / 7.0)",
+        **{
+            unit: f"div(extract(EPOCH FROM date_trunc('{unit}', {{e}}))"
+                  f" - extract(EPOCH FROM date_trunc('{unit}', {{s}})), {secs})"
+            for unit, secs in (("HOUR", 3600), ("MINUTE", 60), ("SECOND", 1))
+        },
     },
 }
 
 
-def _render_datediff(args: list[str]) -> str | None:
+def _render_datediff(args: list[str], dialect: str) -> str | None:
     if len(args) != 3 or (part := _datepart(args[0])) is None:
         return None
-    formula = _DATEDIFF[_AS_DAY.get(part, part)].format(s=args[1], e=args[2])
-    return f"CAST({formula} AS INT)"
+    s, e = (_datetime(a, dialect) for a in args[1:])
+    formula = _DATEDIFF[dialect][_AS_DAY.get(part, part)].format(s=s, e=e)
+    return f"CAST({formula} AS {'INT' if dialect == 'spark' else 'integer'})"
 
 
 #: DATEPART(part, d) where SQL Server's answer is not ``extract(part FROM
-#: d)``: Spark's DAYOFWEEK is already Sunday=1; the week of the year starts
-#: on Sunday with Jan 1 in week 1 (not the ISO week); seconds are whole
+#: d)``: Spark's DAYOFWEEK is already Sunday=1, PostgreSQL's DOW Sunday=0;
+#: the week of the year starts on Sunday with Jan 1 in week 1 (not the ISO
+#: week); seconds are whole. PostgreSQL's extract returns a numeric, so its
+#: answer is cast to an integer, as SQL Server returns one.
 _DATEPART = {
-    "DAYOFYEAR": "extract(DOY FROM {d})",
-    "WEEKDAY": "extract(DAYOFWEEK FROM {d})",
-    "WEEK": "CAST(ceil((dayofyear({d}) - (1 - dayofweek(trunc({d}, 'YEAR')))) / 7) AS INT)",
-    "SECOND": "CAST(extract(SECOND FROM {d}) AS INT)",
+    "spark": {
+        "DAYOFYEAR": "extract(DOY FROM {d})",
+        "WEEKDAY": "extract(DAYOFWEEK FROM {d})",
+        "WEEK": "CAST(ceil((dayofyear({d}) - (1 - dayofweek(trunc({d}, 'YEAR')))) / 7) AS INT)",
+        "SECOND": "CAST(extract(SECOND FROM {d}) AS INT)",
+    },
+    "pg": {
+        "DAYOFYEAR": "extract(DOY FROM {d})",
+        "WEEKDAY": "extract(DOW FROM {d}) + 1",
+        "WEEK": "ceil((extract(DOY FROM {d}) + extract(DOW FROM date_trunc('year', {d}))) / 7)",
+        "SECOND": "floor(extract(SECOND FROM {d}))",
+    },
 }
 
 
-def _render_datepart(args: list[str]) -> str | None:
+def _render_datepart(args: list[str], dialect: str) -> str | None:
     if len(args) != 2 or (part := _datepart(args[0])) is None:
         return None
-    return _DATEPART.get(part, f"extract({part} FROM {{d}})").format(d=args[1])
+    d = _datetime(args[1], dialect)
+    sql = _DATEPART[dialect].get(part, f"extract({part} FROM {{d}})").format(d=d)
+    return sql if dialect == "spark" else f"CAST({sql} AS integer)"
 
 
-_SIMPLE_CALLS = {
-    "isnull": lambda a: f"coalesce({', '.join(a)})" if len(a) == 2 else None,
-    "space": lambda a: f"repeat(' ', {a[0]})" if len(a) == 1 else None,
-    "charindex": lambda a: (
-        f"locate({a[0]}, {a[1]})" if len(a) == 2
-        else f"locate({a[0]}, {a[1]}, {a[2]})" if len(a) == 3 else None
-    ),
-    "len": lambda a: f"length(rtrim({a[0]}))" if len(a) == 1 else None,
+#: T-SQL function → its renderer(args, dialect), applied in this order;
+#: one that ignores the dialect is the form both share
+_RENDERERS = {
+    "isnull": lambda a, _: f"coalesce({', '.join(a)})" if len(a) == 2 else None,
+    "space": lambda a, _: f"repeat(' ', {a[0]})" if len(a) == 1 else None,
+    # PostgreSQL's strpos takes no start position
+    "charindex": lambda a, d: (f"locate({', '.join(a)})" if d == "spark" and len(a) in (2, 3)
+                               else f"strpos({a[1]}, {a[0]})" if len(a) == 2 else None),
+    "len": lambda a, _: f"length(rtrim({a[0]}))" if len(a) == 1 else None,
     "convert": _render_convert,
     "dateadd": _render_dateadd,
     "datediff": _render_datediff,
     "datepart": _render_datepart,
-    "replicate": lambda a: f"repeat({a[0]}, {a[1]})" if len(a) == 2 else None,
-    "newid": lambda a: "uuid()" if not a else None,
+    "replicate": lambda a, _: f"repeat({a[0]}, {a[1]})" if len(a) == 2 else None,
+    "newid": lambda a, d: None if a else "uuid()" if d == "spark" else "gen_random_uuid()",
+    # YEAR(d) is DATEPART(year, d)
+    **{part.lower(): lambda a, d, part=part: _render_datepart([part, *a], d)
+       for part in ("YEAR", "MONTH", "DAY")},
 }
 
-_CALLS = {f: re.compile(rf"\b{f}\s*\(", re.IGNORECASE) for f in _SIMPLE_CALLS}
+_CALLS = {f: re.compile(rf"\b{f}\s*\(", re.IGNORECASE) for f in _RENDERERS}
 
 _ZERO_ARG = (
     (re.compile(r"\b(?:getdate|getutcdate|sysdatetime)\s*\(\s*\)", re.IGNORECASE),
-     "current_timestamp()"),
-    (re.compile(r"\b(?:user_name|suser_sname)\s*\(\s*\)", re.IGNORECASE), "current_user()"),
+     {"spark": "current_timestamp()", "pg": "CURRENT_TIMESTAMP"}),
+    (re.compile(r"\b(?:user_name|suser_sname)\s*\(\s*\)", re.IGNORECASE),
+     {"spark": "current_user()", "pg": "CURRENT_USER"}),
 )
 
-#: functions we can pass through unchanged (same name/semantics in Spark SQL)
+#: functions we can pass through unchanged (same name/semantics in Spark SQL
+#: and PostgreSQL)
 _PASSTHROUGH = {
     "coalesce", "nullif", "upper", "lower", "ltrim", "rtrim", "trim", "abs",
     "round", "floor", "ceiling", "substring", "replace", "concat", "left",
-    "right", "year", "month", "day", "cast", "case", "when", "then", "else",
+    "right", "cast", "case", "when", "then", "else",
     "end", "and", "or", "not", "in", "like", "between", "is", "null",
     "sign", "power", "exp", "log", "sqrt",
     # aggregates / window functions valid in both dialects
@@ -292,39 +366,38 @@ _PASSTHROUGH = {
     "as",
 }
 
-#: names the translation itself produces, plus the type constructors that
-#: appear inside CAST(... AS T(p,s))
-_KNOWN_FUNCS = _PASSTHROUGH | {
-    "current_timestamp", "current_user", "date_format", "timestampadd",
-    "extract", "locate", "repeat", "length", "uuid", "rpad", "quarter",
-    "to_date", "date_diff", "ceil", "unix_timestamp", "date_trunc",
-    "dayofyear", "dayofweek", "trunc",
-    "decimal", "numeric", "varchar", "char",
+#: the T-SQL functions a rendering exists for (CHAR(n) is Spark's char)
+_KNOWN_FUNCS = _PASSTHROUGH | set(_RENDERERS) | {
+    "getdate", "getutcdate", "sysdatetime", "user_name", "suser_sname", "char",
 }
-_FUNC_CALL = re.compile(r"\b([a-zA-Z_][a-zA-Z0-9_]*)\s*\(")
+#: a call; a CONVERT's type argument (``varchar(10)``) is matched with it,
+#: so its qualifier does not read as a call
+_FUNC_CALL = re.compile(r"\b([a-zA-Z_][a-zA-Z0-9_]*)\s*\((?:(?<=convert\()\s*\w+\s*\()?",
+                        re.IGNORECASE)
 
 
-# NOTE: coalesce/nullif are type-preserving, not string-producing — including
-# them here would wrongly rewrite numeric `C3+ISNULL(x,0)` (V2 fixture,
-# regression/basic_test/views.sql:90) into string concat.
+# NOTE: coalesce/nullif/isnull are type-preserving, not string-producing —
+# including them here would wrongly rewrite numeric `C3+ISNULL(x,0)` (V2
+# fixture, regression/basic_test/views.sql:90) into string concat.
 _STRINGY_FUNCS = {
-    "concat", "repeat", "upper", "lower", "ltrim", "rtrim", "trim",
-    "substring", "replace", "left", "right", "rpad", "date_format",
+    "concat", "space", "replicate", "upper", "lower", "ltrim", "rtrim", "trim",
+    "substring", "replace", "left", "right",
 }
 #: calls that never return a string, whatever literal they take
 #: (``CHARINDEX('-', x) + 1`` is arithmetic)
 _NUMERIC_FUNCS = {
-    "locate", "length", "extract", "year", "month", "day",
+    "charindex", "len", "datepart", "datediff", "year", "month", "day",
     "abs", "round", "floor", "ceiling", "sign", "power", "exp", "log", "sqrt",
     "count", "sum", "avg",
 }
 
 
+#: a character some rewrite starts from (call, [name], ``+``, literal)
+_REWRITTEN = re.compile(r"[(\[+']")
 _HAS_LITERAL = re.compile(r"\x01\d+\x02")
 _NUMBER = re.compile(r"\d+\.?\d*|\.\d+")
 _CALL_HEAD = re.compile(r"([a-zA-Z_]\w*)\s*\(")
 _DOTTED_NAME = re.compile(r"[a-zA-Z_][\w.]*")
-_STRING_CAST = re.compile(r"cast\s*\(.*as\s+(string|n?(var)?char)", re.IGNORECASE | re.DOTALL)
 
 
 def _is_number(operand: str) -> bool:
@@ -348,8 +421,11 @@ def _is_stringy(operand: str, string_idents: frozenset[str]) -> bool:
                 and any(_is_stringy(q, string_idents) for q in ops))
     m = _CALL_HEAD.match(o)
     head = m.group(1).lower() if m else None
-    if head in _STRINGY_FUNCS or _STRING_CAST.match(o):
+    if head in _STRINGY_FUNCS:
         return True
+    if head == "convert":  # the target's type decides (CASTs are CONVERTs here)
+        t = _TARGET.match(o[m.end():].lstrip())
+        return t is not None and t["base"].lower() in _STRING_TARGETS
     if head in _NUMERIC_FUNCS or head == "cast":
         return False
     if _HAS_LITERAL.search(o):  # contains a protected string literal
@@ -391,22 +467,23 @@ def _rewrite_plus(expr: str, string_idents: frozenset[str] = frozenset()) -> str
     return ",".join(segments)
 
 
-def _translate_inner(expr: str) -> tuple[str, bool]:
+def _translate_inner(expr: str, dialect: str) -> tuple[str, bool]:
     if "(" not in expr:  # every rewrite below matches a call
         return expr, False
     unsure = False
     for pat, repl in _ZERO_ARG:
-        expr = pat.sub(repl, expr)
-    for fname, render in _SIMPLE_CALLS.items():
-        expr, u = _rewrite_calls(expr, fname, render)
+        expr = pat.sub(repl[dialect], expr)
+    for fname in _RENDERERS:
+        expr, u = _rewrite_calls(expr, fname, dialect)
         unsure = unsure or u
     return expr, unsure
 
 
 def translate_tsql_expr(
-    expr: str, string_idents: frozenset[str] | set[str] = frozenset()
+    expr: str, dialect: str, string_idents: frozenset[str] | set[str] = frozenset()
 ) -> TranslationResult:
-    """Translate a T-SQL scalar expression to Spark SQL.
+    """Translate a T-SQL scalar expression to ``dialect``: ``"spark"`` (Spark
+    SQL) or ``"pg"`` (PostgreSQL).
 
     ``string_idents``: identifiers known (from the catalog) to be
     string-typed, so ``+`` over them becomes concat. Unknown function calls
@@ -414,24 +491,24 @@ def translate_tsql_expr(
     decides whether to route the object to an 'unsure' bucket (reference
     behavior) or fail fast.
     """
+    if not _REWRITTEN.search(expr):  # a number, a name, NULL: nothing to rewrite
+        return TranslationResult(expr.strip())
     protected, lits = _protect_literals(expr)
     protected = _strip_brackets(protected)
-    protected, cast_unsure = _casts_as_converts(protected)
-    translated, unsure = _translate_inner(protected)
-    unsure = unsure or cast_unsure
+    protected, unsure = _casts_as_converts(protected)
+    protected = _rewrite_plus(protected, frozenset(string_idents))
 
+    # any unknown function call? (a name no renderer or passthrough knows)
     notes: list[str] = []
-    translated = _rewrite_plus(translated, frozenset(string_idents))
-
-    # any remaining unknown function call? (name not in passthrough set)
-    for m in _FUNC_CALL.finditer(translated):
+    for m in _FUNC_CALL.finditer(protected):
         name = m.group(1).lower()
         if name not in _KNOWN_FUNCS:
             unsure = True
             notes.append(f"unknown function: {name}")
 
+    translated, u = _translate_inner(protected, dialect)
     return TranslationResult(
         sql=_restore_literals(translated, lits).strip(),
-        unsure=unsure,
+        unsure=unsure or u,
         notes=tuple(notes),
     )

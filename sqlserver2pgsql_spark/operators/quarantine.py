@@ -32,8 +32,8 @@ def validation_predicates(table: Table) -> dict[str, Column]:
         for i, expr in enumerate(c.check_exprs):
             preds[f"{c.name}_check{i}"] = F.coalesce(F.expr(expr), F.lit(True))
     for ck in table.checks:
-        if not ck.unsure:
-            preds[ck.name or "check"] = F.coalesce(F.expr(ck.sql), F.lit(True))
+        if (sql := ck.expr.sql("spark")) is not None:
+            preds[ck.name or "check"] = F.coalesce(F.expr(sql), F.lit(True))
     return preds
 
 

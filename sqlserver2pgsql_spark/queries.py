@@ -439,7 +439,7 @@ def q12_tsql_scalars(spark: SparkSession, sf_dir: str) -> DataFrame:
     path migrated views and defaults take; one ``selectExpr``, no UDFs."""
     from .functions.translate import translate_tsql_expr
 
-    results = [translate_tsql_expr(e) for e in _Q12_TSQL]
+    results = [translate_tsql_expr(e, "spark") for e in _Q12_TSQL]
     assert not any(r.unsure for r in results), [r.notes for r in results]
     o = _t(spark, sf_dir, "orders")
     return o.selectExpr("o_orderkey", *(r.sql for r in results)).orderBy("o_orderkey")
@@ -472,7 +472,7 @@ def q13_translated_view(spark: SparkSession, sf_dir: str) -> DataFrame:
         "CASE WHEN c.[c_acctbal] < 0 THEN 'overdrawn' ELSE 'ok' END AS status "
         "FROM customer c JOIN nation n ON c.[c_nationkey] = n.[n_nationkey]"
     )
-    result = translate_tsql_expr(tsql_body)
+    result = translate_tsql_expr(tsql_body, "spark")
     assert not result.unsure, result.notes
     return (
         spark.sql(result.sql)

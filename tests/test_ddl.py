@@ -148,12 +148,12 @@ def test_reg_tests_catalog_fidelity():
     tt = cat.schemas["public"].tables["testtable"]
     assert [c.name for c in tt.ordered_columns()][:2] == ["num_folio", "folio_id"]
     assert tt.primary_key.cols == ["num_folio"]
-    assert len(tt.checks) == 3 and not any(c.unsure for c in tt.checks)
+    assert len(tt.checks) == 3 and not any(c.expr.render("spark").unsure for c in tt.checks)
     assert tt.foreign_keys[0].ref_table == "adjudicaciones"
-    assert tt.indexes["idx_folio_id"].where_sql is not None  # partial index
+    assert tt.indexes["idx_folio_id"].where.sql("spark") is not None  # partial index
 
     dp = cat.schemas["public"].tables["dealer_profile"]
-    defaults = {c.name: c.default.sql for c in dp.ordered_columns() if c.default}
+    defaults = {c.name: c.default.sql("spark") for c in dp.ordered_columns() if c.default}
     assert defaults["modifiedby"] == "current_user()"
     assert defaults["modifieddate"] == "current_timestamp()"
 
@@ -311,10 +311,11 @@ CAST_FORMS = os.path.join(os.path.dirname(os.path.abspath(__file__)), "data", "c
 
 
 def test_translated_casts_spell_postgres_types():
-    """The translator renders a T-SQL CAST for Spark (``CAST(x AS STRING)``,
-    ``DOUBLE``); the PostgreSQL scripts spell its type for PostgreSQL in a
-    default, a CHECK, a partial-index predicate and a view, and leave the
-    text of a literal alone."""
+    """The PostgreSQL scripts hold each T-SQL CAST rendered for PostgreSQL,
+    with the matrix's PostgreSQL type (``text``, ``double precision``, not
+    Spark's ``STRING`` and ``DOUBLE``) in a default, a CHECK, a
+    partial-index predicate and a view, and the text of a literal left
+    alone; a char(n) target is cut or padded to n as in SQL Server."""
     cat = parse_dump(CAST_FORMS)
     after, unsure = emit_after(cat), emit_unsure(cat)
     assert 'ALTER COLUMN "code" SET DEFAULT left(CAST((42) AS text), 10);' in after
@@ -335,26 +336,41 @@ def test_translated_casts_spell_postgres_types():
         assert spark_only not in scripts
 
 
-def test_spark_only_defaults_go_to_unsure():
-    """A default whose translation calls a function PostgreSQL lacks
-    (``timestampadd``, ``date_format``, ``locate``, ``extract(DAYOFWEEK …)``)
-    would stop the after script, which runs as one transaction: it goes to
-    the unsure script. A literal holding such a name does not count."""
+def test_each_expression_is_rendered_once_per_dialect(monkeypatch):
+    """The catalog keeps each default, CHECK, partial-index predicate and
+    view as T-SQL and renders it on demand: emitting all three scripts
+    translates each expression once, for PostgreSQL only, though the after
+    and the unsure script both look at every default."""
+    from sqlserver2pgsql_spark.functions import translate
+
+    cat = parse_dump(os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                                  "data", "ssms_sample.sql"))
+    exprs = [e for _, t in cat.all_tables() for e in (
+        *(c.default for c in t.columns.values() if c.default),
+        *(ck.expr for ck in t.checks),
+        *(i.where for i in t.indexes.values() if i.where))]
+    exprs += [cat.schemas[s].views[v].body for s, v in cat.view_order]
+    calls = []
+    real = translate.translate_tsql_expr
+    monkeypatch.setattr(translate, "translate_tsql_expr",
+                        lambda tsql, dialect, *a: calls.append((tsql, dialect)) or real(tsql, dialect, *a))
+    emit_before(cat), emit_after(cat), emit_unsure(cat), emit_unsure(cat)
+    assert sorted(calls) == sorted((e.tsql, "pg") for e in exprs)
+    assert len(calls) == 14
+
+
+def test_check_plus_over_string_columns_concatenates():
+    """A CHECK and a partial-index predicate know their table's string
+    columns, so T-SQL ``+`` over them concatenates, in both dialects."""
     cat = parse_text(
-        "CREATE TABLE [dbo].[t](\n"
-        "[a] [datetime] NULL DEFAULT (dateadd(day,(1),getdate())),\n"
-        "[b] [varchar](5) NULL DEFAULT (CONVERT([varchar](5),getdate(),(120))),\n"
-        "[c] [int] NULL DEFAULT (charindex('x','abx')),\n"
-        "[d] [int] NULL DEFAULT (datepart(weekday,getdate())),\n"
-        "[e] [varchar](20) NULL DEFAULT ('locate(1)'),\n"
-        "[f] [datetime] NULL DEFAULT (getdate()))\nGO\n"
+        "CREATE TABLE [dbo].[p]([first] [varchar](10) NULL, [last] [nvarchar](10) NULL,\n"
+        "[n] [int] NULL, CONSTRAINT [ck_p] CHECK (([first] + [last] <> '')))\nGO\n"
+        "CREATE INDEX [ix_p] ON [dbo].[p] ([n]) WHERE ([first] + [last] IS NOT NULL)\nGO\n"
     )
-    after, unsure = emit_after(cat), emit_unsure(cat)
-    sets = lambda text: {  # noqa: E731
-        line.split('"')[5] for line in text.splitlines() if " SET DEFAULT " in line}
-    assert sets(after) == {"e", "f"}
-    assert sets(unsure) == {"a", "b", "c", "d"}
-    assert "SET DEFAULT timestampadd(DAY, (1), CURRENT_TIMESTAMP);" in unsure
+    p = cat.schemas["public"].tables["p"]
+    for dialect in ("spark", "pg"):
+        assert p.checks[0].expr.sql(dialect) == "(first || last <> '')"
+        assert p.indexes["ix_p"].where.sql(dialect) == "(first || last IS NOT NULL)"
 
 
 def test_domains_resolve_to_their_base_type():
@@ -381,7 +397,7 @@ def test_domains_resolve_to_their_base_type():
         assert [(c.type_name, c.type_qual, c.pg_type) for c in cols.values()] == [
             ("varchar", "(20)", "citext"), ("uniqueidentifier", None, "uuid"),
             ("bit", None, "boolean")]
-        assert cols["active"].default.sql == "true"
+        assert cols["active"].default.tsql == "true"
         assert mssql_cast_expr(cols["ref"]) == "lower([Ref]) AS [Ref]"
         assert 'CHECK (char_length("mobile") <= 20);' in emit_unsure(cat)
         assert not public.tables["contact"].has_lobs
@@ -417,6 +433,13 @@ def test_user_types_resolve_by_schema():
                     ("f", "varchar", "(30)"), ("g", "varchar", "(10)")],
         }
     assert '"m" varchar(20),\n  "k" char(3),\n  "n" varchar(20)' in emit_before(parse_text(dump))
+    # a table type is found by the name a column gives it, in any identifier mode
+    dump = ("CREATE TYPE [dbo].[OrderLines] AS TABLE([id] [int] NULL, [qty] [int] NULL)\nGO\n"
+            "CREATE TABLE [dbo].[o]([lines] [OrderLines] NULL)\nGO\n")
+    for mode in ("lower", "snake"):
+        cat = parse_text(dump, ParserOptions(identifier_mode=mode))
+        assert cat.schemas["public"].tables["o"].columns["lines"].spark_type \
+            == "array<struct<id: int, qty: int>>"
     # a qualified type is never looked up outside its schema
     with pytest.raises(ValueError, match="unknown MSSQL type: 'code'"):
         parse_text("CREATE TYPE [sales].[Code] FROM [char](3) NOT NULL\nGO\n"
@@ -435,8 +458,8 @@ def test_default_literal_is_not_read_as_column_attributes():
     public = cat.schemas["public"]
     t = public.tables["t"]
     c, d, e = t.columns.values()
-    assert (c.nullable, c.default.sql) == (True, "'NOT NULL'")
-    assert d.default.sql == "'a PRIMARY KEY b'" and d.default.constraint_name == "df"
+    assert (c.nullable, c.default.tsql) == (True, "'NOT NULL'")
+    assert d.default.tsql == "'a PRIMARY KEY b'" and d.default_name == "df"
     assert t.primary_key is None and t.uniques == []
     assert not e.nullable  # an attribute after the default is still read
     assert (e.identity, e.collation, e.is_rowguidcol, e.is_sparse) == (None, None, False, False)
@@ -454,10 +477,12 @@ def test_view_schema_qualifiers_are_relabeled():
         "JOIN [sales].[r] ON r.a = o.a JOIN other.x ON 1=1\nGO\n"
     )
     v = parse_text(dump).schemas["public"].views["v"]
-    assert v.sql == ("SELECT o.a, 'dbo.t' AS s FROM public.t AS o "
-                     "JOIN sales.r ON r.a = o.a JOIN other.x ON 1=1")
+    for dialect in ("spark", "pg"):
+        assert v.body.sql(dialect) == ("SELECT o.a, 'dbo.t' AS s FROM public.t AS o "
+                                       "JOIN sales.r ON r.a = o.a JOIN other.x ON 1=1")
     v = parse_text(dump, ParserOptions(relabel={"sales": "crm"})).schemas["public"].views["v"]
-    assert "JOIN crm.r ON r.a = o.a" in v.sql
+    for dialect in ("spark", "pg"):
+        assert "JOIN crm.r ON r.a = o.a" in v.body.sql(dialect)
 
 
 def test_alter_table_add_uses_the_table_constraint_parser():
@@ -477,9 +502,9 @@ def test_alter_table_add_uses_the_table_constraint_parser():
     assert [(u.name, u.cols) for u in p.uniques] == [(None, ["c"])]
     fk = k.foreign_keys[0]
     assert (fk.name, fk.ref_table, fk.ref_cols, fk.on_update) == ("fk_k", "p", ["id"], "CASCADE")
-    assert [(c.name, c.sql) for c in k.checks] == [(None, "(n>(0))")]
-    assert (k.columns["n"].default.sql, k.columns["n"].default.constraint_name) == ("7", "df_k_n")
-    assert (k.columns["pid"].default.sql, k.columns["pid"].default.constraint_name) == ("8", None)
+    assert [(c.name, c.expr.sql("spark")) for c in k.checks] == [(None, "(n>(0))")]
+    assert (k.columns["n"].default.tsql, k.columns["n"].default_name) == ("7", "df_k_n")
+    assert (k.columns["pid"].default.tsql, k.columns["pid"].default_name) == ("8", None)
     with pytest.raises(DdlParseError):
         parse_text("CREATE TABLE [dbo].[p]([id] [int] NULL)\nGO\n"
                    "ALTER TABLE [dbo].[p] ADD [x] [int] NULL\nGO\n")

@@ -9,10 +9,12 @@ misread) were checked by hand, and test_bracketed_names spells them out.
 Lines changed since, each by a rule: the unsure script's ``lastorder``
 column, where ``CONVERT(varchar(10), …, 120)`` keeps 10 characters, as in
 SQL Server; ``mobile``, typed by the domain ``Phone``, is its base type
-``varchar(20)`` (it was ``text``); ``placed``'s ``timestampadd`` default
-moved from the after script to the unsure script (PostgreSQL has no
-``timestampadd``); and the view bodies name ``public.…`` tables, as they are
-created (they said ``dbo.…``).
+``varchar(20)`` (it was ``text``); the view bodies name ``public.…`` tables,
+as they are created (they said ``dbo.…``); and the translator renders
+PostgreSQL for the scripts, so ``placed``'s DATEADD default is interval
+arithmetic in the after script (it was Spark's ``timestampadd``, in the
+unsure script) and ``lastorder`` calls ``to_char`` (it called Spark's
+``date_format``).
 The dump exercises the reader and parser corners an SSMS export has: a
 block comment holding a quote, a literal holding ``/*``, ``''`` escapes, a
 missing ``GO``, the unbalanced ``WHERE ((ID) > 10))``, ``sp_executesql``
@@ -56,19 +58,19 @@ def test_fixture_catalog_corners():
     public, sales = cat.schemas["public"], cat.schemas["sales"]
     customers = public.tables["customers"]
     # the literal holding /* and a paren survives comment stripping and grouping
-    assert customers.columns["note"].default.sql == "'it''s /* not a comment */ (really'"
+    assert customers.columns["note"].default.tsql == "'it''s /* not a comment */ (really'"
     assert customers.columns["fulllabel"].computed_expr is not None
     assert customers.comment == "Customer's master record"
     # the missing GO before [sales].[Regions], and after the unbalanced WHERE
     assert set(sales.tables["regions"].indexes) == {"ix_regions_id", "ix_regions_code"}
-    assert sales.tables["regions"].indexes["ix_regions_id"].where_raw == "((ID) > 10)"
+    assert sales.tables["regions"].indexes["ix_regions_id"].where.tsql == "((ID) > 10)"
     orders = public.tables["orders"]
     assert orders.indexes["ix_orders_customer"].include == ["amount", "status"]
     assert orders.foreign_keys[0].on_delete == "CASCADE"
     assert [c.name for c in public.table_types["orderlines"].columns] == ["lineno", "sku", "qty"]
     seq = public.sequences["invoiceno"]
     assert (seq.start, seq.step, seq.min_value, seq.max_value, seq.cache) == (1000, 5, 1, 9999999, 20)
-    assert public.views["vfrenchcustomers"].raw_sql.endswith("WHERE [Region] = N'FR'")
+    assert public.views["vfrenchcustomers"].body.tsql.endswith("WHERE [Region] = N'FR'")
 
 
 def test_bracketed_names():
@@ -86,7 +88,8 @@ def test_bracketed_names():
     ]
     assert table.primary_key.name == "pk_sales_orders"
     assert table.primary_key.cols == ["order_id"]
-    assert table.columns["order_date"].default.sql == "current_timestamp()"
+    assert table.columns["order_date"].default.sql("spark") == "current_timestamp()"
+    assert table.columns["order_date"].default.sql("pg") == "CURRENT_TIMESTAMP"
     assert table.columns["order_date"].comment == "When the order was taken"
     idx = table.indexes["ix_sales_orders_order_date"]
     assert [(c.name, c.ascending) for c in idx.cols] == [("order_date", False)]
@@ -174,7 +177,8 @@ def test_table_refs_rewrite_equals_per_name_loop():
     for cat in (parse_dump(DUMP), parse_text(_largest_perfbench_dump())):
         rewrite = _table_ref_rewriter(cat)
         bodies = [b for s, v in cat.view_order
-                  for b in (cat.schemas[s].views[v].sql, cat.schemas[s].views[v].raw_sql) if b]
+                  for b in (cat.schemas[s].views[v].body.sql("spark"),
+                            cat.schemas[s].views[v].body.tsql) if b]
         assert bodies
         assert [rewrite(b) for b in bodies] == [_per_name_refs(b, cat) for b in bodies]
     cat = parse_text("CREATE TABLE [dbo].[t]([a] [int] NULL)\nGO\n"

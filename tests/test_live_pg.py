@@ -10,73 +10,15 @@ run for real, and does here, is every piece of SQL this engine generates:
 - the A10 MERGE statement applies a staged diff with real
   insert/update/delete semantics.
 
-The server runs as `nobody` (postgres refuses root) on a private unix
-socket under /tmp; everything skips cleanly if the binaries or su are
-unavailable.
+The server (the ``pg`` fixture, tests/conftest.py) runs as `nobody`
+(postgres refuses root) on a private unix socket under /tmp; everything
+skips cleanly if the binaries or su are unavailable.
 """
 
 from __future__ import annotations
 
 import os
-import shutil
 import subprocess
-import tempfile
-
-import pytest
-
-PG_BIN = "/usr/local/bin"
-SOCK_PORT = 54329
-
-
-def _run(cmd: list[str], **kw) -> subprocess.CompletedProcess:
-    return subprocess.run(cmd, capture_output=True, text=True, timeout=120, **kw)
-
-
-@pytest.fixture(scope="module")
-def pg():
-    if not (os.path.exists(f"{PG_BIN}/initdb") and shutil.which("psql") and shutil.which("su")):
-        pytest.skip("no PostgreSQL binaries in environment")
-    base = tempfile.mkdtemp(prefix="spark_graft_livepg_")
-    data = os.path.join(base, "data")
-    sock = os.path.join(base, "sock")
-    os.makedirs(data)
-    os.makedirs(sock)
-    shutil.chown(base, user="nobody")
-    shutil.chown(data, user="nobody")
-    shutil.chown(sock, user="nobody")
-    init = _run(
-        ["su", "-s", "/bin/sh", "nobody", "-c",
-         f"{PG_BIN}/initdb -D {data} -U pg --no-sync -A trust"],
-        cwd="/tmp",
-    )
-    if init.returncode != 0:
-        pytest.skip(f"initdb failed: {init.stderr[-200:]}")
-    start = _run(
-        ["su", "-s", "/bin/sh", "nobody", "-c",
-         f"{PG_BIN}/pg_ctl -D {data} -l {data}/log -o "
-         f"'-k {sock} -p {SOCK_PORT} -c listen_addresses= -F' start"],
-        cwd="/tmp",
-    )
-    if start.returncode != 0:
-        pytest.skip(f"pg_ctl start failed: {start.stderr[-200:]}")
-
-    def psql(sql: str | None = None, file: str | None = None, db: str = "postgres",
-             stop: bool = True):
-        cmd = ["psql", "-h", sock, "-p", str(SOCK_PORT), "-U", "pg", "-d", db,
-               "-v", f"ON_ERROR_STOP={int(stop)}", "-qAt"]
-        if file:
-            cmd += ["-f", file]
-        else:
-            cmd += ["-c", sql]
-        return _run(cmd, cwd="/tmp")
-
-    yield psql
-    _run(
-        ["su", "-s", "/bin/sh", "nobody", "-c",
-         f"{PG_BIN}/pg_ctl -D {data} -m immediate stop"],
-        cwd="/tmp",
-    )
-    shutil.rmtree(base, ignore_errors=True)
 
 
 def _exec_script(pg, text: str, db: str, tmp_path, stop: bool = True) -> subprocess.CompletedProcess:
@@ -153,9 +95,11 @@ def test_translated_casts_execute_on_real_postgres(pg, tmp_path):
 
 def test_ssms_fixture_scripts_execute_on_real_postgres(pg, tmp_path):
     """The SSMS fixture's before and after scripts run clean as one
-    transaction each, so its keys, FK and indexes are committed; its
-    unsure script, run statement by statement, creates the two views over
-    ``dbo`` tables with their schema relabeled to ``public``."""
+    transaction each, so its keys, FK, indexes and its DATEADD default are
+    committed; its unsure script, run statement by statement, creates the
+    three views over ``dbo`` tables with their schema relabeled to
+    ``public`` (``vregiondates`` calls SOUNDEX, which the translator does
+    not render, and stays T-SQL)."""
     from sqlserver2pgsql_spark.catalog.conflicts import resolve_name_conflicts
     from sqlserver2pgsql_spark.ddl import parse_dump
     from sqlserver2pgsql_spark.ddl.emit_pg import emit_after, emit_before, emit_unsure
@@ -178,13 +122,84 @@ def test_ssms_fixture_scripts_execute_on_real_postgres(pg, tmp_path):
                  "WHERE indexname LIKE 'ix%' ORDER BY indexname", db="ssms_e2e")
     assert out.stdout.split() == [
         "ix_orders_customer", "ix_regions_code", "ix_sales_orders_order_date"]
+    out = pg(sql="SELECT column_default FROM information_schema.columns "
+                 "WHERE table_name = 'orders' AND column_name = 'placed'", db="ssms_e2e")
+    assert out.stdout.strip() == "(CURRENT_TIMESTAMP + ((1)::double precision * '1 day'::interval))"
     _exec_script(pg, emit_unsure(cat), "ssms_e2e", tmp_path, stop=False)
     out = pg(sql="SELECT table_schema || '.' || table_name FROM information_schema.views "
                  "WHERE table_schema IN ('public', 'sales') ORDER BY 1", db="ssms_e2e")
-    assert {"public.vfrenchcustomers", "public.sales_order_dates"} <= set(out.stdout.split())
+    assert out.stdout.split() == [
+        "public.sales_order_dates", "public.vfrenchcustomers", "public.vordertotals"]
     out = pg(sql="INSERT INTO customers (name, created, region) VALUES ('A', now(), 'FR');"
                  "SELECT label FROM vfrenchcustomers", db="ssms_e2e")
     assert out.returncode == 0 and out.stdout.strip() == "A (FR)", out.stderr
+    out = pg(sql="INSERT INTO orders (orderid, customerid, amount, placed) "
+                 "VALUES (1, 1, 10, '2024-05-06 07:08:09');"
+                 "SELECT orders, total, lastorder FROM vordertotals", db="ssms_e2e")
+    assert out.returncode == 0 and out.stdout.strip() == "1|10.0000|2024-05-06", out.stderr
+
+
+def test_tsql_function_defaults_commit_in_after_script(pg, tmp_path):
+    """A default that calls a T-SQL function is rendered for PostgreSQL, so
+    it lands in the after script, which commits, and a row inserted with
+    no values gets SQL Server's answers. A call PostgreSQL has no exact form
+    for (CHARINDEX with a start position) goes to the unsure script."""
+    from sqlserver2pgsql_spark.ddl import parse_text
+    from sqlserver2pgsql_spark.ddl.emit_pg import emit_after, emit_before, emit_unsure
+
+    cat = parse_text(
+        "CREATE TABLE [dbo].[t](\n"
+        "[a] [datetime] NULL DEFAULT (dateadd(day,(1),getdate())),\n"
+        "[b] [varchar](5) NULL DEFAULT (CONVERT([varchar](5),getdate(),(120))),\n"
+        "[c] [int] NULL DEFAULT (charindex('x','abx')),\n"
+        "[d] [int] NULL DEFAULT (datepart(weekday,getdate())),\n"
+        "[e] [varchar](20) NULL DEFAULT ('locate(1)'),\n"
+        "[f] [datetime] NULL DEFAULT (getdate()),\n"
+        "[g] [int] NULL DEFAULT (charindex('x','abxx',(4))))\nGO\n"
+    )
+    after, unsure = emit_after(cat), emit_unsure(cat)
+    sets = lambda text: {  # noqa: E731
+        line.split('"')[5] for line in text.splitlines() if " SET DEFAULT " in line}
+    assert sets(after) == {"a", "b", "c", "d", "e", "f"}
+    assert sets(unsure) == {"g"}
+    assert "SET DEFAULT (CURRENT_TIMESTAMP + (1) * INTERVAL '1 day');" in after
+    assert pg(sql="CREATE DATABASE defaults_e2e").returncode == 0
+    for script in (emit_before(cat), after):
+        r = _exec_script(pg, script, "defaults_e2e", tmp_path)
+        assert r.returncode == 0, r.stderr[-500:]
+    out = pg(sql="INSERT INTO t DEFAULT VALUES; SELECT a - f = interval '1 day', "
+                 "b = to_char(now(), 'YYYY-'), c, d = extract(DOW FROM now()) + 1, e, g FROM t",
+             db="defaults_e2e")
+    assert out.returncode == 0, out.stderr
+    assert out.stdout.strip() == "t|t|3|t|locate(1)|"
+
+
+def test_perfbench_dumps_run_clean_on_real_postgres(pg, tmp_path):
+    """All three scripts of seed 1's 20 generated SSMS dumps (2,320 tables,
+    their defaults, CHECKs, partial indexes and views over DATEDIFF,
+    CONVERT styles, LEN, ISNULL and +) run on PostgreSQL 15 with no error:
+    before and after under ON_ERROR_STOP, unsure statement by statement."""
+    import importlib.util
+
+    from sqlserver2pgsql_spark.catalog.conflicts import resolve_name_conflicts
+    from sqlserver2pgsql_spark.ddl import parse_text
+    from sqlserver2pgsql_spark.ddl.emit_pg import emit_after, emit_before, emit_unsure
+
+    path = os.path.join(os.path.dirname(__file__), "..", "perfbench", "gen.py")
+    spec = importlib.util.spec_from_file_location("perfbench_gen", path)
+    gen = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(gen)
+    for k, (text, _) in enumerate(gen.make_dumps(1)):
+        cat = parse_text(text)
+        resolve_name_conflicts(cat)
+        db = f"perfbench_{k}"
+        assert pg(sql=f"CREATE DATABASE {db}").returncode == 0
+        for script, stop in ((emit_before(cat), True), (emit_after(cat), True),
+                             (emit_unsure(cat), False)):
+            r = _exec_script(pg, script, db, tmp_path, stop=stop)
+            errors = [line for line in r.stderr.splitlines() if "ERROR" in line]
+            assert r.returncode == 0 and not errors, (db, errors[:3])
+        pg(sql=f"DROP DATABASE {db}")
 
 
 def test_type_matrix_columns_create_on_real_postgres(pg, tmp_path):

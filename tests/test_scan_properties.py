@@ -364,9 +364,9 @@ def test_unrenderable_call_is_left_once_not_retried():
     # an unsure render (wrong arity, unmapped CONVERT target) used to be
     # re-found and re-rendered forever
     for expr in ("isnull(a)", "CONVERT(xml, [doc])", "ISNULL(ISNULL(a), b)"):
-        r = translate.translate_tsql_expr(expr)
+        r = translate.translate_tsql_expr(expr, "spark")
         assert r.unsure
-    assert translate.translate_tsql_expr("ISNULL(ISNULL(a), b)").sql == "coalesce(isnull(a), b)"
+    assert translate.translate_tsql_expr("ISNULL(ISNULL(a), b)", "spark").sql == "coalesce(isnull(a), b)"
 
 
 # --- statement dispatch -------------------------------------------------------
